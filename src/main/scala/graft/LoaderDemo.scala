@@ -45,7 +45,7 @@ object LoaderDemo {
     val metrics = new LoaderPipeline.Metrics
     LoaderPipeline.runBatch(raw, cfg, store, metrics)
     println(s"[demo] good=${metrics.count.get()} bad=${metrics.badCount.get()} " +
-      s"objects=${metrics.actions.size()}")
+      s"objects=${metrics.objectsWritten.get()}")
     spark.stop()
   }
 
@@ -137,9 +137,9 @@ object LoaderDemo {
     LoaderPipeline.runBatch(raw, cfg, store, metrics)
 
     println(s"[demo] good=${metrics.count.get()} bad=${metrics.badCount.get()} " +
-      s"objects=${metrics.actions.size()} " +
+      s"objects=${metrics.objectsWritten.get()} " +
       s"e2eLatencyMillis=${metrics.e2eLatencyMillis.get()}")
-    metrics.actions.forEach(a =>
+    metrics.lastActions.get().foreach(a =>
       println(s"[demo] wrote ${a.path} records=${a.recordCount} bytes=${a.compressedBytes}"))
     spark.stop()
   }

@@ -33,13 +33,24 @@ trait BlobStore extends Serializable {
   * part, and re-completes — same at-least-once ⇒ exactly-once-content
   * contract as the single-PUT path, fault-injected in
   * FaultInjectionSpec.
+  *
+  * The Hadoop `Configuration` (with `confSerde` applied) is built once per
+  * store instance, not per put: a fresh one re-parses Hadoop's default
+  * XML resources on first lookup, about as costly as a small put. It is
+  * transient, so each deserialized copy in a task builds its own. The
+  * `FileSystem` is still resolved per path: good and bad paths may use
+  * different schemes.
   */
 final class HadoopBlobStore(confSerde: Map[String, String],
     maxSinglePutBytes: Long = HadoopBlobStore.S3SinglePutLimit)
     extends BlobStore {
+  @transient private lazy val conf: Configuration = {
+    val c = new Configuration()
+    confSerde.foreach { case (k, v) => c.set(k, v) }
+    c
+  }
+
   def write(path: String, bytes: Array[Byte]): Unit = {
-    val conf = new Configuration()
-    confSerde.foreach { case (k, v) => conf.set(k, v) }
     val p = new Path(new URI(path))
     val fs = FileSystem.get(p.toUri, conf)
     def put(target: Path, slice: Array[Byte], off: Int, len: Int): Unit = {

@@ -25,12 +25,12 @@ import graft.sources.Decompression
   *  - parseBytes          → [[EventParser.parse]] (codegen'd column ops)
   *  - batchUpAndCompress  → micro-batch boundary + RollingGzipWriter
   *    (maxDelay ⇒ Trigger.ProcessingTime; maxBytes ⇒ compressed rolling)
-  *  - writeToStorage      → salted repartition on (schema, salt) +
-  *    per-partition rolling writes — the distributed analogue of the
-  *    reference's parTraverse per group (Processing.scala:287-289), with
-  *    the fan-out sized to the batch volume so one hot schema key (the
-  *    enriched path maps EVERY event to atomic) cannot serialize the
-  *    write stage on a single task
+  *  - writeToStorage      → salted repartition on (schema, salt) into
+  *    `defaultParallelism` partitions + per-partition rolling writes — the
+  *    distributed analogue of the reference's parTraverse per group
+  *    (Processing.scala:287-289): a batch's schema groups spread over every
+  *    core, and the salt splits one hot schema key (the enriched path maps
+  *    EVERY event to atomic) once its volume passes maxBytes
   *  - sendBadEvents       → size-capped bad-row JSON to the bad store
   *  - emitTokens          → Structured Streaming checkpoint commit: offsets
   *    commit only after foreachBatch returns ⇒ same at-least-once contract
@@ -45,14 +45,18 @@ object LoaderPipeline {
   /** Pluggable metrics (reference Metrics.scala:35-49): counts, stream
     * latency (micro-batch triggerExecution, via
     * [[MetricsEmitter.StreamLatencyListener]]) and e2e lag. Emission to
-    * statsd/prometheus is [[MetricsEmitter]]'s job.
+    * statsd/prometheus is [[MetricsEmitter]]'s job. Good objects are
+    * counted over the life of the metrics; only the last batch's
+    * [[RollingGzipWriter.WriteAction]]s are kept, so a long-running stream
+    * holds a bounded amount.
     */
   final class Metrics extends Serializable {
     val count = new AtomicLong(0)
     val badCount = new AtomicLong(0)
+    val objectsWritten = new AtomicLong(0)
+    val lastActions = new AtomicReference[Seq[RollingGzipWriter.WriteAction]](Seq.empty)
     val latencyMillis = new AtomicReference[Option[Long]](None)
     val e2eLatencyMillis = new AtomicReference[Option[Long]](None)
-    val actions = new java.util.concurrent.ConcurrentLinkedQueue[RollingGzipWriter.WriteAction]()
   }
 
   final case class RawRecord(payload: Array[Byte], decompressError: String)
@@ -117,13 +121,16 @@ object LoaderPipeline {
         cfg.output.path, cfg.output.prefix, cfg.output.partitionFormat,
         cfg.batching.maxBytes, timestampedNames = nameSeed.isEmpty)
 
-      // Size-adaptive write parallelism. Enriched batches all map to ONE
-      // schema key (SURVEY §1.2), so keying the shuffle on schema alone
-      // would funnel the whole batch through a single task — the defining
-      // scale failure on a 1000-executor cluster. Instead, one cheap agg
-      // over the (already persisted) batch estimates the compressed output
-      // volume, and the shuffle key gains a salt sized so each task writes
-      // roughly maxBytes. Small batches keep targetFiles=1, preserving the
+      // Write parallelism. The shuffle always has `maxTasks` partitions:
+      // an explicit count is one adaptive execution does not coalesce, so
+      // a batch's schema groups hash over every core even when the batch is
+      // small (left to coalesce, a small batch's shuffle collapses to one
+      // task that makes every put in turn).
+      // Enriched batches all map to ONE schema key (SURVEY §1.2), which
+      // would still funnel through a single task, so one cheap agg over the
+      // (already persisted) batch estimates the compressed output volume,
+      // and the shuffle key gains a salt sized so each task writes roughly
+      // maxBytes. Small batches keep targetFiles=1, preserving the
       // reference's one-object-per-group-per-window behavior (T2/F14).
       val totalLineBytes: Long = Option(
         good.agg(sum(octet_length(col("line")))).first().get(0))
@@ -145,8 +152,8 @@ object LoaderPipeline {
         try {
           val a = good
             .withColumn("salt", pmod(hash(col("line")), lit(targetFiles)))
-            .repartition(col("vendor"), col("name"), col("format"), col("model"),
-              col("salt"))
+            .repartition(maxTasks, col("vendor"), col("name"), col("format"),
+              col("model"), col("salt"))
             .sortWithinPartitions("vendor", "name", "format", "model")
             .mapPartitions { rows =>
               writePartition(rows, store, sinkCfg, wallClock, nameSeed)
@@ -159,7 +166,8 @@ object LoaderPipeline {
           throw e
         }
 
-      actions.foreach(metrics.actions.add)
+      metrics.objectsWritten.addAndGet(actions.length.toLong)
+      metrics.lastActions.set(actions.toSeq)
       metrics.count.addAndGet(actions.map(_.recordCount).sum)
       val earliest = actions.flatMap(_.minTstampMicros)
       if (earliest.nonEmpty) {
@@ -181,13 +189,12 @@ object LoaderPipeline {
     */
   private val EstGzipRatio = 3L
 
-  /** Stream one shuffle partition (sorted by schema key) into the rolling
-    * writer: consecutive same-key runs each become their own writeGroup
-    * call, so memory stays one gzip buffer regardless of partition size.
-    */
   /** Deterministic per-run UUID factory for idempotent naming: named from
     * (seed=batchId, shuffle partition, schema key, file ordinal). Same
-    * batch data + same partitioning ⇒ same names on replay.
+    * batch data + same partitioning ⇒ same names on replay. The write
+    * shuffle's partition count and `targetFiles` both follow
+    * `defaultParallelism`, so names are stable across replays only while
+    * it stays fixed.
     */
   private def uuidFactory(
       nameSeed: Option[String],
@@ -204,6 +211,10 @@ object LoaderPipeline {
       case None => () => java.util.UUID.randomUUID()
     }
 
+  /** Stream one shuffle partition (sorted by schema key) into the rolling
+    * writer: consecutive same-key runs each become their own writeGroup
+    * call, so memory stays one gzip buffer regardless of partition size.
+    */
   private def writePartition(
       rows: Iterator[Row],
       store: BlobStore,

@@ -2,15 +2,19 @@ package graft
 
 import java.io.ByteArrayInputStream
 import java.time.Instant
+import java.util.concurrent.ConcurrentHashMap
 import java.util.zip.GZIPInputStream
 
+import scala.concurrent.duration._
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config._
-import graft.sinks.InMemoryBlobStore
+import graft.sinks.{BlobStore, InMemoryBlobStore}
 import graft.streaming.LoaderPipeline
 
 /** End-to-end pipeline goldens — ports of reference ProcessingSpec e1–e4
@@ -151,12 +155,46 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(metrics.e2eLatencyMillis.get().contains(0L)) // min ts = epoch
   }
 
+  /** SDJ lines over `schemas` distinct Iglu schema keys, one line each. */
+  private def sdjLines(schemas: Int): Seq[String] = (0 until schemas).map(i =>
+    s"""{"schema":"iglu:com.example/event$i/jsonschema/1-0-0","data":{"i":$i}}""")
+
+  test("write fan-out: a small many-schema batch puts its objects from several tasks") {
+    val cfg = LoaderConfig.validate(LoaderConfig(
+      Purpose.Sdj, Output("mem://path"), BadOutput("mem://bad"))).toOption.get
+    PipelineSpec.goodPutPartitions.clear()
+    val inner = new InMemoryBlobStore
+    val metrics = new LoaderPipeline.Metrics
+    LoaderPipeline.runBatch(rawDf(sdjLines(16)), cfg,
+      new PipelineSpec.PartitionRecordingStore(inner), metrics, () => fixedNow)
+
+    assert(inner.paths.count(_.startsWith("mem://path")) == 16) // one per schema
+    assert(metrics.count.get() == 16)
+    // a small batch must not collapse to one write task
+    assert(PipelineSpec.goodPutPartitions.size > 1,
+      s"good puts came from partitions ${PipelineSpec.goodPutPartitions}")
+  }
+
+  test("metrics hold only the last batch's write actions; the object counter sums all") {
+    val cfg = LoaderConfig.validate(LoaderConfig(
+      Purpose.Sdj, Output("mem://path"), BadOutput("mem://bad"))).toOption.get
+    val metrics = new LoaderPipeline.Metrics
+    val stores = (1 to 3).map { n =>
+      val store = new InMemoryBlobStore
+      LoaderPipeline.runBatch(rawDf(sdjLines(n)), cfg, store, metrics, () => fixedNow)
+      store
+    }
+    assert(metrics.objectsWritten.get() == 1 + 2 + 3)
+    assert(metrics.lastActions.get().map(_.path).sorted ==
+      stores.last.paths.filter(_.startsWith("mem://path")))
+  }
+
   test("e4/streaming: MemoryStream micro-batches flush through foreachBatch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Array[Byte]]
     val cfg = LoaderConfig(Purpose.Enriched, Output("mem://path"),
-      BadOutput("mem://bad"),
+      BadOutput("mem://bad"), Batching(maxDelay = 50.millis),
       checkpointLocation = Some(
         java.nio.file.Files.createTempDirectory("ckpt").toString))
     val store = new InMemoryBlobStore
@@ -183,7 +221,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val mem = MemoryStream[Array[Byte]]
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt-replay").toString
     val cfg = LoaderConfig(Purpose.Enriched, Output("mem://path"),
-      BadOutput("mem://bad"), checkpointLocation = Some(ckpt))
+      BadOutput("mem://bad"), Batching(maxDelay = 50.millis),
+      checkpointLocation = Some(ckpt))
     val store = new InMemoryBlobStore
     val metrics = new LoaderPipeline.Metrics
 
@@ -273,5 +312,22 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val badContent = store.paths.filter(_.startsWith("mem://bad"))
       .map(p => gunzip(store.objects.get(p))).mkString
     assert(badContent.contains("Could not decompress"))
+  }
+}
+
+object PipelineSpec {
+  /** Shuffle partitions that made a good put, JVM-wide (local mode only). */
+  val goodPutPartitions: java.util.Set[Integer] = ConcurrentHashMap.newKeySet[Integer]()
+
+  /** Records which task partition puts each good object, then delegates.
+    * The wrapped [[InMemoryBlobStore]] routes its deserialized copies back
+    * to the original, so the test reads what the tasks wrote.
+    */
+  final class PartitionRecordingStore(inner: InMemoryBlobStore) extends BlobStore {
+    def write(path: String, bytes: Array[Byte]): Unit = {
+      if (path.startsWith("mem://path"))
+        goodPutPartitions.add(TaskContext.getPartitionId())
+      inner.write(path, bytes)
+    }
   }
 }
