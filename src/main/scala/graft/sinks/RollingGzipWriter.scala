@@ -1,6 +1,7 @@
 package graft.sinks
 
-import java.io.ByteArrayOutputStream
+import java.io.{BufferedOutputStream, ByteArrayOutputStream, OutputStream}
+import java.nio.charset.StandardCharsets
 import java.time.Instant
 import java.util.UUID
 import java.util.zip.GZIPOutputStream
@@ -16,9 +17,18 @@ import graft.model.SchemaKey
   *    gzip-compressed (CompressedStream.scala:27-33; golden
   *    ProcessingSpec.scala:71 expects "line\nline\n")
   *  - the size bound is a soft limit on COMPRESSED bytes, checked after
-  *    append — a file may overshoot by one record (Processing.scala:249)
+  *    append — a file may overshoot by one record (Processing.scala:249).
+  *    The check is exact: deflate is sync-flushed on demand, only when the
+  *    bytes compressed since the last flush could carry the stream past the
+  *    bound, so a file rolls after the first record at which its own
+  *    flushed size passes the bound
   *  - every file gets a templated partition path + UUID filename
   *    (DynamicPath.scala:54-108)
+  *
+  * The reference sync-flushes after every record, which makes each line its
+  * own deflate block; here blocks span many records, so the object bytes
+  * differ from the reference's (and are smaller) while the gunzipped
+  * content is identical.
   *
   * Scale note: the reference bounds the whole in-flight batch because it
   * is a single-node loader; here each (schema-group × task) rolls its own
@@ -48,7 +58,8 @@ object RollingGzipWriter {
 
   /** Write one schema-group's lines, rolling to a new object whenever the
     * current gzip stream's byte count passes maxBytes. Returns one action
-    * per object written.
+    * per object written. Each object's stream opens at its first record and
+    * is closed even when a put throws.
     *
     * Count and min-event-time metrics accumulate in this same pass (the
     * second element of each record; null = no event time), so the caller
@@ -64,18 +75,22 @@ object RollingGzipWriter {
       newUuid: () => UUID = () => UUID.randomUUID()): Seq[WriteAction] = {
     val actions = ArrayBuffer.empty[WriteAction]
     var buf: ByteArrayOutputStream = null
-    var gz: GZIPOutputStream = null
+    var out: OutputStream = null // null between objects
+    var pending = 0L // raw bytes written since the last sync flush
     var count = 0L
     var minTs = Long.MaxValue
 
     def open(): Unit = {
       buf = new ByteArrayOutputStream(64 * 1024)
-      gz = new GZIPOutputStream(buf, true)
+      // the buffer turns a record's line and '\n' into one deflate call
+      out = new BufferedOutputStream(new GZIPOutputStream(buf, true), 8 * 1024)
+      pending = 0L
       count = 0L
       minTs = Long.MaxValue
     }
-    def flush(): Unit = if (count > 0) {
-      gz.close()
+    def emit(): Unit = {
+      out.close()
+      out = null
       val bytes = buf.toByteArray
       val path = DynamicPath.getFullPath(
         cfg.basePath, cfg.prefix, cfg.partitionFormat, now, schema, newUuid(),
@@ -85,18 +100,34 @@ object RollingGzipWriter {
         if (minTs == Long.MaxValue) None else Some(minTs))
     }
 
-    open()
-    records.foreach { case (line, tsUs) =>
-      gz.write(line.getBytes("UTF-8"))
-      gz.write('\n')
-      gz.flush() // syncFlush — keeps buf.size() an honest compressed count
-      count += 1
-      if (tsUs != null && tsUs < minTs) minTs = tsUs
-      if (buf.size() > cfg.maxBytes || count >= cfg.maxRecords) { flush(); open() }
-    }
-    flush()
+    try {
+      records.foreach { case (line, tsUs) =>
+        if (out == null) open()
+        val bytes = line.getBytes(StandardCharsets.UTF_8)
+        out.write(bytes)
+        out.write('\n')
+        pending += bytes.length + 1
+        count += 1
+        if (tsUs != null && tsUs < minTs) minTs = tsUs
+        // buf.size() + deflateBound(pending) bounds the size a sync flush
+        // would reach, so below maxBytes the flush cannot change the roll
+        // decision and is skipped; otherwise flush, and buf.size() is exact
+        if (buf.size() + deflateBound(pending) > cfg.maxBytes) {
+          out.flush()
+          pending = 0L
+        }
+        if (buf.size() > cfg.maxBytes || count >= cfg.maxRecords) emit()
+      }
+      if (out != null) emit()
+    } finally if (out != null) out.close()
     actions.toSeq
   }
+
+  /** Upper bound on the deflate output for `n` input bytes, sync flush
+    * included: zlib's worst case (stored blocks) adds about 5 bytes per
+    * 16 KiB block plus a few bytes of block and flush framing.
+    */
+  private def deflateBound(n: Long): Long = n + (n >>> 10) + 64
 
   /** Convenience for callers without per-record event time. */
   def writeLines(

@@ -25,12 +25,13 @@ import graft.sources.Decompression
   *  - parseBytes          → [[EventParser.parse]] (codegen'd column ops)
   *  - batchUpAndCompress  → micro-batch boundary + RollingGzipWriter
   *    (maxDelay ⇒ Trigger.ProcessingTime; maxBytes ⇒ compressed rolling)
-  *  - writeToStorage      → salted repartition on (schema, salt) into
-  *    `defaultParallelism` partitions + per-partition rolling writes — the
-  *    distributed analogue of the reference's parTraverse per group
+  *  - writeToStorage      → `repartitionById` into `defaultParallelism`
+  *    partitions, id = hash(schema) + salt, + per-partition rolling writes —
+  *    the distributed analogue of the reference's parTraverse per group
   *    (Processing.scala:287-289): a batch's schema groups spread over every
   *    core, and the salt splits one hot schema key (the enriched path maps
-  *    EVERY event to atomic) once its volume passes maxBytes
+  *    EVERY event to atomic) over distinct partitions once its volume
+  *    passes maxBytes
   *  - sendBadEvents       → size-capped bad-row JSON to the bad store
   *  - emitTokens          → Structured Streaming checkpoint commit: offsets
   *    commit only after foreachBatch returns ⇒ same at-least-once contract
@@ -129,9 +130,16 @@ object LoaderPipeline {
       // Enriched batches all map to ONE schema key (SURVEY §1.2), which
       // would still funnel through a single task, so one cheap agg over the
       // (already persisted) batch estimates the compressed output volume,
-      // and the shuffle key gains a salt sized so each task writes roughly
+      // and each row gains a salt sized so each task writes roughly
       // maxBytes. Small batches keep targetFiles=1, preserving the
       // reference's one-object-per-group-per-window behavior (T2/F14).
+      // `repartitionById` places salt s of a key at partition
+      // (hash(key, 0) + s) mod maxTasks, so the targetFiles ≤ maxTasks salts
+      // of one key land on distinct partitions (hash partitioning on the
+      // salt column could collide them). hash(key, lit(0)) is the hash
+      // partitioner's own murmur3 of (key, salt = 0), so salt 0 — every
+      // small group — keeps the partition, and with it the idempotent
+      // object names, that plain hash partitioning gave it.
       val totalLineBytes: Long = Option(
         good.agg(sum(octet_length(col("line")))).first().get(0))
         .fold(0L)(_.asInstanceOf[Long])
@@ -150,10 +158,12 @@ object LoaderPipeline {
       // a later success marks it healthy again.
       val actions: Array[RollingGzipWriter.WriteAction] =
         try {
+          val keyHash = hash(col("vendor"), col("name"), col("format"),
+            col("model"), lit(0)).cast("long")
+          val salt = pmod(hash(col("line")), lit(targetFiles))
           val a = good
-            .withColumn("salt", pmod(hash(col("line")), lit(targetFiles)))
-            .repartition(maxTasks, col("vendor"), col("name"), col("format"),
-              col("model"), col("salt"))
+            .repartitionById(maxTasks,
+              pmod(keyHash + salt, lit(maxTasks)).cast("int"))
             .sortWithinPartitions("vendor", "name", "format", "model")
             .mapPartitions { rows =>
               writePartition(rows, store, sinkCfg, wallClock, nameSeed)

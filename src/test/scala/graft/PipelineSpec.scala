@@ -143,11 +143,19 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       BadOutput("mem://bad"), Batching(maxBytes = 2000))
     val lines = (0 until 200).map(i =>
       tsv(f"1970-01-01 00:${i / 60}%02d:${i % 60}%02d.000") + s"-pad-${i * 7919}")
-    val (store, metrics) = run(cfg, lines)
+    PipelineSpec.goodPutPartitions.clear()
+    val store = new InMemoryBlobStore
+    val metrics = new LoaderPipeline.Metrics
+    LoaderPipeline.runBatch(rawDf(lines), cfg,
+      new PipelineSpec.PartitionRecordingStore(store), metrics, () => fixedNow)
 
-    // every event maps to the atomic schema, yet >1 object was written —
-    // the enriched hot key no longer serializes on one task
+    // every event maps to the atomic schema, yet its objects were put from
+    // several tasks — the enriched hot key no longer serializes on one task
     assert(store.paths.size > 1)
+    assert(PipelineSpec.goodPutPartitions.size >= 2,
+      s"good puts came from partitions ${PipelineSpec.goodPutPartitions}")
+    // no object reached the size bound, so no extra object is a roll
+    assert(store.paths.forall(p => store.objects.get(p).length <= cfg.batching.maxBytes))
     val all = store.paths.flatMap(p => gunzip(store.objects.get(p)).linesIterator)
     assert(all.toSet == lines.toSet) // no loss, no duplication across salts
     assert(all.size == 200)
