@@ -7,11 +7,12 @@ import java.nio.charset.StandardCharsets
 /** Bad-row ADT — the engine's error record type, serialized as
   * self-describing JSON.
   *
-  * Mirrors the three variants the reference produces:
+  * Two variants:
   *  - GenericError for unparsable self-describing JSON
-  *    (reference: Processing.scala:189-204)
-  *  - LoaderParsingError for decompression failures
-  *    (reference: Processing.scala:156-165)
+  *    (reference: Processing.scala:189-204) and for frames that fail to
+  *    decompress, with the decompression message as the error (the
+  *    reference writes those as loader_parsing_error,
+  *    Processing.scala:156-165)
   *  - SizeViolation for oversize serialized bad rows, with the payload
   *    trimmed to the first maxSize/10 characters
   *    (reference: BadRowsSerializer.scala:24-44)
@@ -43,7 +44,8 @@ object BadRow {
   final case class Processor(artifact: String, version: String)
 
   /** A self-describing JSON that failed to parse or whose `schema` field
-    * is not a valid iglu URI. Payload is Base64 of the raw bytes.
+    * is not a valid iglu URI, or a frame that failed to decompress.
+    * Payload is Base64 of the raw bytes.
     */
   final case class GenericError(
       processor: Processor,
@@ -57,21 +59,6 @@ object BadRow {
       val b64 = Base64.getEncoder.encodeToString(rawPayload)
       val errs = errors.map(e => "\"" + esc(e) + "\"").mkString(",")
       s"""{"schema":"$schemaUri","data":{"processor":{"artifact":"${esc(processor.artifact)}","version":"${esc(processor.version)}"},"failure":{"timestamp":"$timestamp","errors":[$errs]},"payload":"$b64"}}"""
-    }
-  }
-
-  /** A record whose compressed frame could not be decoded. */
-  final case class LoaderParsingError(
-      processor: Processor,
-      message: String,
-      rawPayload: Array[Byte],
-      timestamp: Instant
-  ) extends BadRow {
-    val schemaUri =
-      "iglu:com.snowplowanalytics.snowplow.badrows/loader_parsing_error/jsonschema/2-0-0"
-    def toJson: String = {
-      val b64 = Base64.getEncoder.encodeToString(rawPayload)
-      s"""{"schema":"$schemaUri","data":{"processor":{"artifact":"${esc(processor.artifact)}","version":"${esc(processor.version)}"},"failure":"${esc(message)}","payload":"$b64"}}"""
     }
   }
 

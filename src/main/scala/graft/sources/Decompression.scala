@@ -16,9 +16,9 @@ import com.github.luben.zstd.ZstdInputStreamNoFinalizer
   * modules/core/src/main/resources/reference.conf:26-29). Uncompressed
   * inputs are a single record passed through unchanged.
   *
-  * Corrupt streams yield a [[FrameError]] instead of throwing, which the
-  * pipeline turns into a BadRow.LoaderParsingError (reference
-  * Processing.scala:156-165).
+  * Corrupt streams yield an error message in [[Decoded]] instead of
+  * throwing, which the pipeline writes as a BadRow.GenericError carrying
+  * that message and the raw payload (reference Processing.scala:156-165).
   */
 object Decompression {
 

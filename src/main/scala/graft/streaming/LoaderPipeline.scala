@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.time.Instant
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
@@ -21,8 +21,11 @@ import graft.sources.Decompression
   *   decompress → parse → good/bad split → grouped gzip write → metrics
   *
   * Stage mapping:
-  *  - decompressedStream  → [[decode]] (Dataset.flatMap over binary rows)
-  *  - parseBytes          → [[EventParser.parse]] (codegen'd column ops)
+  *  - decompressedStream + parseBytes → `classify`, one pass per record:
+  *    `decode` (Dataset.flatMap over binary rows), then
+  *    [[EventParser.parse]] (codegen'd column ops) over every decoded row;
+  *    a decompression error takes the place of the parser's `bad_error`,
+  *    so both failure kinds reach the same bad-row output
   *  - batchUpAndCompress  → micro-batch boundary + RollingGzipWriter
   *    (maxDelay ⇒ Trigger.ProcessingTime; maxBytes ⇒ compressed rolling)
   *  - writeToStorage      → `repartitionById` into `defaultParallelism`
@@ -60,35 +63,30 @@ object LoaderPipeline {
     val e2eLatencyMillis = new AtomicReference[Option[Long]](None)
   }
 
-  final case class RawRecord(payload: Array[Byte], decompressError: String)
-
   /** Decompression front-end: binary `value` column → one row per framed
-    * record; corrupt frames become rows with a non-null error.
+    * record (`payload`, `decompressError`); a corrupt frame becomes one row
+    * of its raw bytes with a non-null error.
     */
-  def decode(df: DataFrame, limits: Decompression.Limits): Dataset[RawRecord] = {
+  private def decode(df: DataFrame, limits: Decompression.Limits): DataFrame = {
     import df.sparkSession.implicits._
     df.select(col("value").cast("binary")).as[Array[Byte]].flatMap { bytes =>
       val d = Decompression.decode(bytes, limits)
-      d.records.map(RawRecord(_, null)) ++
-        d.error.map(e => RawRecord(bytes, e))
-    }
+      d.records.map((_, null: String)) ++ d.error.map((bytes, _))
+    }.toDF("payload", "decompressError")
   }
 
-  /** Full parse stage: decoded records → classified lines. */
-  def parse(records: Dataset[RawRecord], purpose: Purpose): DataFrame = {
-    val lines = records
-      .withColumn("line", col("payload").cast("string"))
-    val parsed = EventParser.parse(
-      lines.filter(col("decompressError").isNull), purpose == Purpose.Enriched)
-    val decompBad = lines.filter(col("decompressError").isNotNull)
-      .withColumn("bad_error", col("decompressError"))
-      .withColumn("vendor", lit(null).cast("string"))
-      .withColumn("name", lit(null).cast("string"))
-      .withColumn("format", lit(null).cast("string"))
-      .withColumn("model", lit(null).cast("int"))
-      .withColumn("collector_tstamp", lit(null).cast("timestamp"))
-    parsed.unionByName(decompBad.select(parsed.columns.map(col).toSeq: _*))
-  }
+  /** Decode and classify each record in one pass: every decoded row is
+    * parsed once, and a decompression error takes the place of the
+    * parser's verdict (reference Processing.scala:101-134,156-165: one
+    * fold, one bad-row output). A corrupt frame starts with gzip or zstd
+    * magic bytes, never `{`, so the SDJ parser cannot call it good either.
+    */
+  private def classify(df: DataFrame, cfg: LoaderConfig): DataFrame =
+    EventParser.parse(
+        decode(df, cfg.decompression).withColumn("line", col("payload").cast("string")),
+        cfg.purpose == Purpose.Enriched)
+      .withColumn("bad_error", coalesce(col("decompressError"), col("bad_error")))
+      .drop("decompressError")
 
   /** One micro-batch (or one whole batch run): write grouped gzip objects,
     * bad rows, update metrics. `now` is injectable for deterministic tests
@@ -284,25 +282,20 @@ object LoaderPipeline {
       badPath, "bad-", None,
       math.min(cfg.batching.maxBytes, cfg.bad.byteLimit),
       cfg.bad.recordLimit.toLong, timestampedNames = nameSeed.isEmpty)
+    // the payload column, not `line`: a corrupt frame's bytes are not
+    // UTF-8, and a bad row must carry them unchanged to be replayable
     val badWritten = EventParser.bad(parsed)
-      .select(col("line"), col("bad_error"))
-      .as[(String, String)]
+      .select(col("payload"), col("bad_error"))
+      .as[(Array[Byte], String)]
       .mapPartitions { rows =>
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val jsons = rows.map { case (line, err) =>
-            val row = BadRow.GenericError(
-              processor, List(err),
-              line.getBytes(StandardCharsets.UTF_8), wallClock)
-            BadRow.sizeCapped(row, maxSize, wallClock, processor)
-          }
-          var n = 0L
-          RollingGzipWriter.writeLines(
-            store, badSinkCfg, SchemaKey.Atomic, wallClock,
-            jsons.map { j => n += 1; j },
-            uuidFactory(nameSeed, ("bad", "", "", 0)))
-          Iterator.single(n)
+        val jsons = rows.map { case (payload, err) =>
+          BadRow.sizeCapped(BadRow.GenericError(processor, List(err), payload, wallClock),
+            maxSize, wallClock, processor)
         }
+        val actions = RollingGzipWriter.writeLines(
+          store, badSinkCfg, SchemaKey.Atomic, wallClock, jsons,
+          uuidFactory(nameSeed, ("bad", "", "", 0)))
+        Iterator.single(actions.map(_.recordCount).sum)
       }
       .collect()
     metrics.badCount.addAndGet(badWritten.sum)
@@ -316,8 +309,7 @@ object LoaderPipeline {
       metrics: Metrics,
       now: () => Instant = () => Instant.now(),
       batchId: Option[Long] = None): Unit =
-    writeBatch(parse(decode(df, cfg.decompression), cfg.purpose), cfg, store,
-      metrics, now, batchId = batchId)
+    writeBatch(classify(df, cfg), cfg, store, metrics, now, batchId = batchId)
 
   /** Streaming entry: micro-batches flush at maxDelay — the reference's
     * time-bound batch emission (T3); offsets commit after each batch ⇒
@@ -332,8 +324,8 @@ object LoaderPipeline {
       health: ServiceHealth = new ServiceHealth): DataStreamWriter[Row] = {
     val w = df.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        writeBatch(parse(decode(batch, cfg.decompression), cfg.purpose),
-          cfg, store, metrics, now, health, batchId = Some(id))
+        writeBatch(classify(batch, cfg), cfg, store, metrics, now, health,
+          batchId = Some(id))
       }
       .trigger(Trigger.ProcessingTime(cfg.batching.maxDelay.toMillis))
     cfg.checkpointLocation.fold(w)(p => w.option("checkpointLocation", p))

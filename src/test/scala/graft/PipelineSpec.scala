@@ -9,6 +9,7 @@ import scala.concurrent.duration._
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,6 +39,22 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def gunzip(b: Array[Byte]): String =
     new String(new GZIPInputStream(new ByteArrayInputStream(b)).readAllBytes())
+
+  /** Gzip of a Snowplow frame: 2 version bytes, then per record a 4-byte
+    * big-endian length and the record's UTF-8 bytes.
+    */
+  private def gzipFrame(records: Seq[String]): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(new java.util.zip.GZIPOutputStream(bos))
+    out.write(Array[Byte](1, 1))
+    records.foreach { r =>
+      val b = r.getBytes("UTF-8")
+      out.writeInt(b.length)
+      out.write(b)
+    }
+    out.close()
+    bos.toByteArray
+  }
 
   /** 131-column-ish minimal enriched TSV with collector_tstamp at index 3
     * (FIXTURES.md §1).
@@ -320,6 +337,44 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val badContent = store.paths.filter(_.startsWith("mem://bad"))
       .map(p => gunzip(store.objects.get(p))).mkString
     assert(badContent.contains("Could not decompress"))
+    // the bad row carries the frame's own bytes, so it can be replayed
+    val b64 = "\"payload\":\"([^\"]*)\"".r.findFirstMatchIn(badContent).get.group(1)
+    assert(java.util.Base64.getDecoder.decode(b64).toSeq == junk.toSeq)
+  }
+
+  test("single pass: each source row is read and decoded once, corrupt frames included") {
+    val n = 40
+    // two records per frame; row 0 is a corrupt frame, and in SDJ every
+    // 4th row's second record is not JSON
+    def lines(purpose: Purpose, i: Long): Seq[String] = purpose match {
+      case Purpose.Enriched => Seq(0, 1).map(j => tsv(s"1970-01-01 00:00:0$j.000") + s"-$i")
+      case Purpose.Sdj => Seq(
+        s"""{"schema":"iglu:com.example/event${i % 3}/jsonschema/1-0-0","data":{"i":$i}}""",
+        if (i % 4 == 0) s"not json $i"
+        else s"""{"schema":"iglu:com.example/event${i % 3}/jsonschema/1-0-0","data":{"j":$i}}""")
+    }
+    val sdjBad = (1 until n).count(_ % 4 == 0)
+    for ((purpose, good, bad) <- Seq(
+        (Purpose.Enriched, 2 * (n - 1), 1),
+        (Purpose.Sdj, 2 * (n - 1) - sdjBad, 1 + sdjBad))) {
+      val reads = spark.sparkContext.longAccumulator(s"frames-$purpose")
+      val corruptGzip: Array[Byte] = Array(0x1f, 0x8b.toByte, 8, 0, 9, 9, 9)
+      val payloads = corruptGzip +: (1L until n).map(i => gzipFrame(lines(purpose, i)))
+      val framed = udf { (i: Long) => reads.add(1); payloads(i.toInt) }
+      val df = spark.range(0, n, 1, 4).select(framed(col("id")).as("value"))
+      val cfg = LoaderConfig.validate(LoaderConfig(
+        purpose, Output("mem://path"), BadOutput("mem://bad"))).toOption.get
+      val store = new InMemoryBlobStore
+      val metrics = new LoaderPipeline.Metrics
+      LoaderPipeline.runBatch(df, cfg, store, metrics, () => fixedNow)
+
+      assert(reads.value == n, s"$purpose: source rows evaluated ${reads.value} times")
+      assert(metrics.count.get() == good, purpose)
+      assert(metrics.badCount.get() == bad, purpose)
+      val badContent = store.paths.filter(_.startsWith("mem://bad"))
+        .map(p => gunzip(store.objects.get(p))).mkString
+      assert(badContent.split("Could not decompress", -1).length == 2, purpose)
+    }
   }
 }
 
