@@ -1,11 +1,13 @@
 package graft.sinks
 
-import java.io.{ByteArrayOutputStream, OutputStream}
+import java.io.OutputStream
 import java.net.URI
+import java.nio.file.{Files, StandardCopyOption, Path => JPath}
+import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 
 /** Blob-store abstraction (reference operator S3 — BlobSink.scala:16-21):
   * one object PUT per (schema, batch) group. Implementations must be
@@ -17,13 +19,32 @@ trait BlobStore extends Serializable {
 
 /** Hadoop-FS-backed store — covers file://, hdfs:// and s3a:// URIs with
   * the standard connectors; the production path. One create-write-close
-  * per object, no rename ceremony (objects are uniquely named by UUID, so
+  * per object, no commit protocol (objects are uniquely named by UUID, so
   * task retries at-least-once overwrite idempotently — same contract as
   * the reference's S3 PUT, S3Sink.scala:29-41).
   *
-  * Objects larger than `maxSinglePutBytes` take a MULTIPART route (the
-  * reference uploads one buffer per object — at 100 TB a batch shard can
-  * exceed the object store's single-PUT limit, 5 GiB on S3): the buffer
+  * LOCAL BRANCH. When the path resolves to Hadoop's checksummed
+  * `LocalFileSystem` (the `file://` default; the Spark distribution
+  * registers Hive's `ProxyLocalFileSystem`, a subclass that changes only
+  * `rename`), the object is written with plain NIO instead: without the
+  * Hadoop native library, `LocalFileSystem.create` writes a `.crc` sidecar
+  * beside every object and `RawLocalFileSystem.setPermission` forks a
+  * `chmod` process for each of the two files — about 11 ms per put against
+  * 0.2 ms for one NIO write of a small object. The bytes go to a hidden
+  * sibling, `.<name>.<uuid>.tmp`, which is then renamed over the target
+  * with `ATOMIC_MOVE`, so a local put appears whole or not at all, like an
+  * S3 PUT: a task killed mid-write leaves only a dot-prefixed `.tmp` file,
+  * which Hadoop and Spark input formats skip and no `*.gz` glob matches,
+  * never a truncated object under the real name. The uuid keeps
+  * concurrent attempts at the same idempotent name apart. Every other
+  * filesystem — s3a, hdfs, an `fs.file.impl` that is not a
+  * `LocalFileSystem` (e.g. `RawLocalFileSystem`), the `s3x://` test
+  * double — takes the Hadoop code below, unchanged.
+  *
+  * Objects larger than `maxSinglePutBytes` take a MULTIPART route on
+  * those non-local stores (the reference uploads one buffer per object —
+  * at 100 TB a batch shard can exceed the object store's single-PUT limit,
+  * 5 GiB on S3; a local file has no such cap): the buffer
   * is staged as `<path>.mpu/part-NNNNN` chunks, each within the cap,
   * then completed by assembling the parts into the final object and
   * deleting the staging dir (the assembly copy models S3's server-side
@@ -52,7 +73,14 @@ final class HadoopBlobStore(confSerde: Map[String, String],
 
   def write(path: String, bytes: Array[Byte]): Unit = {
     val p = new Path(new URI(path))
-    val fs = FileSystem.get(p.toUri, conf)
+    FileSystem.get(p.toUri, conf) match {
+      case local: LocalFileSystem =>
+        HadoopBlobStore.putLocal(local.pathToFile(p).toPath, bytes)
+      case fs => hadoopWrite(fs, p, bytes)
+    }
+  }
+
+  private def hadoopWrite(fs: FileSystem, p: Path, bytes: Array[Byte]): Unit = {
     def put(target: Path, slice: Array[Byte], off: Int, len: Int): Unit = {
       var out: OutputStream = null
       try { out = fs.create(target, true); out.write(slice, off, len) }
@@ -93,6 +121,23 @@ final class HadoopBlobStore(confSerde: Map[String, String],
 object HadoopBlobStore {
   /** S3's published single-PUT object limit. */
   val S3SinglePutLimit: Long = 5L * 1024 * 1024 * 1024
+
+  /** Write `bytes` to a hidden sibling of `target`, then rename it over
+    * `target` atomically; a failed write removes its temp file.
+    */
+  private def putLocal(target: JPath, bytes: Array[Byte]): Unit = {
+    val dir = target.getParent
+    Files.createDirectories(dir)
+    val tmp = dir.resolve(s".${target.getFileName}.${UUID.randomUUID()}.tmp")
+    try {
+      Files.write(tmp, bytes)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } catch { case e: Throwable =>
+      Files.deleteIfExists(tmp)
+      throw e
+    }
+  }
 }
 
 /** In-memory recording store for tests (the analogue of the reference's

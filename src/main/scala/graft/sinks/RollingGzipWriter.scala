@@ -37,11 +37,15 @@ import graft.model.SchemaKey
   */
 object RollingGzipWriter {
 
+  /** One object written. `putMillis` is the wall time of its
+    * `store.write` call, measured in the writing task.
+    */
   final case class WriteAction(
       path: String,
       recordCount: Long,
       compressedBytes: Long,
-      minTstampMicros: Option[Long] = None)
+      minTstampMicros: Option[Long] = None,
+      putMillis: Double = 0.0)
 
   final case class SinkConfig(
       basePath: String,
@@ -95,9 +99,11 @@ object RollingGzipWriter {
       val path = DynamicPath.getFullPath(
         cfg.basePath, cfg.prefix, cfg.partitionFormat, now, schema, newUuid(),
         cfg.timestampedNames)
+      val t0 = System.nanoTime()
       store.write(path, bytes)
+      val putMillis = (System.nanoTime() - t0) / 1e6
       actions += WriteAction(path, count, bytes.length.toLong,
-        if (minTs == Long.MaxValue) None else Some(minTs))
+        if (minTs == Long.MaxValue) None else Some(minTs), putMillis)
     }
 
     try {

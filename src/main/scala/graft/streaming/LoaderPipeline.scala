@@ -52,12 +52,17 @@ object LoaderPipeline {
     * statsd/prometheus is [[MetricsEmitter]]'s job. Good objects are
     * counted over the life of the metrics; only the last batch's
     * [[RollingGzipWriter.WriteAction]]s are kept, so a long-running stream
-    * holds a bounded amount.
+    * holds a bounded amount. `putMillis` and `badPutMillis` total the
+    * good and bad sinks' put time in whole milliseconds (each batch's sum
+    * rounded); the driver sums them from the actions its write tasks
+    * return, so they hold on a multi-JVM cluster too.
     */
   final class Metrics extends Serializable {
     val count = new AtomicLong(0)
     val badCount = new AtomicLong(0)
     val objectsWritten = new AtomicLong(0)
+    val putMillis = new AtomicLong(0)
+    val badPutMillis = new AtomicLong(0)
     val lastActions = new AtomicReference[Seq[RollingGzipWriter.WriteAction]](Seq.empty)
     val latencyMillis = new AtomicReference[Option[Long]](None)
     val e2eLatencyMillis = new AtomicReference[Option[Long]](None)
@@ -175,6 +180,7 @@ object LoaderPipeline {
         }
 
       metrics.objectsWritten.addAndGet(actions.length.toLong)
+      metrics.putMillis.addAndGet(math.round(actions.map(_.putMillis).sum))
       metrics.lastActions.set(actions.toSeq)
       metrics.count.addAndGet(actions.map(_.recordCount).sum)
       val earliest = actions.flatMap(_.minTstampMicros)
@@ -295,10 +301,11 @@ object LoaderPipeline {
         val actions = RollingGzipWriter.writeLines(
           store, badSinkCfg, SchemaKey.Atomic, wallClock, jsons,
           uuidFactory(nameSeed, ("bad", "", "", 0)))
-        Iterator.single(actions.map(_.recordCount).sum)
+        Iterator.single((actions.map(_.recordCount).sum, actions.map(_.putMillis).sum))
       }
       .collect()
-    metrics.badCount.addAndGet(badWritten.sum)
+    metrics.badCount.addAndGet(badWritten.map(_._1).sum)
+    metrics.badPutMillis.addAndGet(math.round(badWritten.map(_._2).sum))
   }
 
   /** Batch-mode entry: run the whole pipeline over a static DataFrame. */

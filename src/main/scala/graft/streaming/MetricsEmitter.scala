@@ -26,6 +26,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * StreamingQueryProgress — how long the batch's records waited inside the
   * engine, the closest analogue of the reference's
   * `sourceAndAck.currentStreamLatency` (Metrics.scala:40).
+  *
+  * Beyond the reference's set, the sink counters `objects_written` (good
+  * objects), `put_millis` and `bad_put_millis` (time spent in the good and
+  * bad sinks' puts) say how much of a batch the store's puts cost.
   */
 object MetricsEmitter {
 
@@ -44,28 +48,39 @@ object MetricsEmitter {
     else tags.toSeq.sorted.map { case (k, v) => s"$k:$v" }
       .mkString("|#", ",", "")
 
-  /** One report's datagrams. Counters are DELTAS vs the passed snapshots
-    * (statsd `|c` semantics); the snapshots are updated in place.
+  /** The sink counters (`objects_written`, `put_millis`,
+    * `bad_put_millis`) are reported once the loader has written an object,
+    * good or bad: before that there is no put to count or time.
+    */
+  private def hasWritten(m: LoaderPipeline.Metrics): Boolean =
+    m.objectsWritten.get() > 0 || m.badCount.get() > 0
+
+  /** One report's datagrams. Counters are DELTAS vs `last`, the counter
+    * values at the previous report (statsd `|c` semantics), which are
+    * updated in place.
     */
   def statsdDatagrams(
       m: LoaderPipeline.Metrics,
       cfg: StatsdConfig,
-      lastCount: AtomicLong,
-      lastBad: AtomicLong): Seq[String] = {
+      last: LoaderPipeline.Metrics): Seq[String] = {
     val t = tagSuffix(cfg.tags)
     val p = cfg.prefix
-    val count = m.count.get()
-    val bad = m.badCount.get()
-    val deltaCount = count - lastCount.getAndSet(count)
-    val deltaBad = bad - lastBad.getAndSet(bad)
-    Seq(s"$p.count:$deltaCount|c$t", s"$p.bad_count:$deltaBad|c$t") ++
+    def counter(name: String, of: LoaderPipeline.Metrics => AtomicLong): String = {
+      val v = of(m).get()
+      s"$p.$name:${v - of(last).getAndSet(v)}|c$t"
+    }
+    Seq(counter("count", _.count), counter("bad_count", _.badCount)) ++
       m.latencyMillis.get().map(v => s"$p.latency_millis:$v|ms$t") ++
       m.e2eLatencyMillis.get().toSeq.flatMap { v =>
         Seq(
           s"$p.e2e_latency_millis:$v|ms$t",
           // legacy gauge, seconds (reference Metrics.scala:43)
           s"$p.latency_collector_to_load:${v / 1000}|g$t")
-      }
+      } ++
+      (if (!hasWritten(m)) Nil
+       else Seq(counter("objects_written", _.objectsWritten),
+         counter("put_millis", _.putMillis),
+         counter("bad_put_millis", _.badPutMillis)))
   }
 
   /** Prometheus text exposition of the same metrics (cumulative values). */
@@ -88,6 +103,11 @@ object MetricsEmitter {
       metric("graft_e2e_latency_millis", "gauge", v)
       metric("graft_latency_collector_to_load", "gauge", v / 1000)
     }
+    if (hasWritten(m)) {
+      metric("graft_objects_written", "counter", m.objectsWritten.get())
+      metric("graft_put_millis", "counter", m.putMillis.get())
+      metric("graft_bad_put_millis", "counter", m.badPutMillis.get())
+    }
     sb.toString
   }
 
@@ -101,12 +121,11 @@ object MetricsEmitter {
       cfg: StatsdConfig) extends AutoCloseable {
     private val socket = new DatagramSocket()
     private val address = InetAddress.getByName(cfg.hostname)
-    private val lastCount = new AtomicLong(0)
-    private val lastBad = new AtomicLong(0)
+    private val last = new LoaderPipeline.Metrics
     @volatile private var running = true
 
     def flush(): Unit =
-      statsdDatagrams(m, cfg, lastCount, lastBad).foreach { line =>
+      statsdDatagrams(m, cfg, last).foreach { line =>
         val bytes = line.getBytes(StandardCharsets.UTF_8)
         socket.send(new DatagramPacket(bytes, bytes.length, address, cfg.port))
       }

@@ -2,7 +2,6 @@ package graft
 
 import java.net.{DatagramPacket, DatagramSocket}
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.concurrent.duration._
 
@@ -30,23 +29,30 @@ class MetricsSpec extends AnyFunSuite {
     val m = metricsWith(10, 2, Some(120), Some(9500))
     val cfg = StatsdConfig("localhost", 8125,
       tags = Map("env" -> "prod"), prefix = "graft.loader")
-    val lastCount = new AtomicLong(4)
-    val lastBad = new AtomicLong(0)
-    val lines = MetricsEmitter.statsdDatagrams(m, cfg, lastCount, lastBad)
+    m.objectsWritten.set(7); m.putMillis.set(30); m.badPutMillis.set(3)
+    val last = new LoaderPipeline.Metrics // counter values at the last report
+    last.count.set(4); last.putMillis.set(12)
+    val lines = MetricsEmitter.statsdDatagrams(m, cfg, last)
     assert(lines.contains("graft.loader.count:6|c|#env:prod")) // 10 - 4
     assert(lines.contains("graft.loader.bad_count:2|c|#env:prod"))
     assert(lines.contains("graft.loader.latency_millis:120|ms|#env:prod"))
     assert(lines.contains("graft.loader.e2e_latency_millis:9500|ms|#env:prod"))
     assert(lines.contains("graft.loader.latency_collector_to_load:9|g|#env:prod"))
+    assert(lines.contains("graft.loader.objects_written:7|c|#env:prod"))
+    assert(lines.contains("graft.loader.put_millis:18|c|#env:prod")) // 30 - 12
+    assert(lines.contains("graft.loader.bad_put_millis:3|c|#env:prod"))
     // snapshots advanced: an immediately following report sends zero deltas
-    val again = MetricsEmitter.statsdDatagrams(m, cfg, lastCount, lastBad)
+    m.putMillis.addAndGet(5)
+    val again = MetricsEmitter.statsdDatagrams(m, cfg, last)
     assert(again.contains("graft.loader.count:0|c|#env:prod"))
+    assert(again.contains("graft.loader.objects_written:0|c|#env:prod"))
+    assert(again.contains("graft.loader.put_millis:5|c|#env:prod"))
   }
 
   test("unset latencies are omitted; no tags means no suffix") {
     val m = metricsWith(1, 0, None, None)
     val lines = MetricsEmitter.statsdDatagrams(m,
-      StatsdConfig("localhost"), new AtomicLong(0), new AtomicLong(0))
+      StatsdConfig("localhost"), new LoaderPipeline.Metrics)
     assert(lines == Seq("graft.loader.count:1|c", "graft.loader.bad_count:0|c"))
   }
 
@@ -70,6 +76,7 @@ class MetricsSpec extends AnyFunSuite {
 
   test("prometheus scrape: cumulative counters, labels, latency gauges") {
     val m = metricsWith(100, 5, Some(80), Some(12000))
+    m.objectsWritten.set(9); m.putMillis.set(40); m.badPutMillis.set(2)
     val text = MetricsEmitter.prometheusScrape(m, Map("env" -> "prod"))
     assert(text.contains("# TYPE graft_count counter"))
     assert(text.contains("""graft_count{env="prod"} 100"""))
@@ -77,6 +84,12 @@ class MetricsSpec extends AnyFunSuite {
     assert(text.contains("""graft_latency_millis{env="prod"} 80"""))
     assert(text.contains("""graft_e2e_latency_millis{env="prod"} 12000"""))
     assert(text.contains("""graft_latency_collector_to_load{env="prod"} 12"""))
+    assert(text.contains("# TYPE graft_objects_written counter"))
+    assert(text.contains("""graft_objects_written{env="prod"} 9"""))
+    assert(text.contains("# TYPE graft_put_millis counter"))
+    assert(text.contains("""graft_put_millis{env="prod"} 40"""))
+    assert(text.contains("# TYPE graft_bad_put_millis counter"))
+    assert(text.contains("""graft_bad_put_millis{env="prod"} 2"""))
   }
 
   test("monitoring.metrics.statsd HOCON block parses to StatsdConfig") {
