@@ -41,8 +41,10 @@ final case class Output(
 final case class BadOutput(
     path: String,
     maxRecordSize: Int = 1000000,
-    // per-emission chunk bounds (reference PutRecords limits,
-    // config.aws.reference.hocon output.bad)
+    // per-object chunk bounds (reference PutRecords limits,
+    // config.aws.reference.hocon output.bad): recordLimit records, and
+    // byteLimit bytes of the object's gzip-COMPRESSED size (a soft bound,
+    // like maxBytes; the raw content may exceed it by the gzip ratio)
     recordLimit: Int = 500,
     byteLimit: Long = 5242880L)
 

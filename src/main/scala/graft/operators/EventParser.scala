@@ -79,9 +79,8 @@ object EventParser {
   def parse(lines: DataFrame, enriched: Boolean): DataFrame =
     if (enriched) parseEnriched(lines) else parseSdj(lines)
 
-  /** Good/bad routing — two filters over one parsed plan (reference P4,
-    * Processing.scala:118-134). Catalyst shares the scan via plan reuse.
+  /** The good rows of a parsed plan (reference P4, Processing.scala:118-134):
+    * those with a null `bad_error`.
     */
   def good(parsed: DataFrame): DataFrame = parsed.filter(col("bad_error").isNull)
-  def bad(parsed: DataFrame): DataFrame = parsed.filter(col("bad_error").isNotNull)
 }

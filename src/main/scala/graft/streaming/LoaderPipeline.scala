@@ -28,14 +28,17 @@ import graft.sources.Decompression
   *    so both failure kinds reach the same bad-row output
   *  - batchUpAndCompress  → micro-batch boundary + RollingGzipWriter
   *    (maxDelay ⇒ Trigger.ProcessingTime; maxBytes ⇒ compressed rolling)
-  *  - writeToStorage      → `repartitionById` into `defaultParallelism`
-  *    partitions, id = hash(schema) + salt, + per-partition rolling writes —
-  *    the distributed analogue of the reference's parTraverse per group
-  *    (Processing.scala:287-289): a batch's schema groups spread over every
-  *    core, and the salt splits one hot schema key (the enriched path maps
-  *    EVERY event to atomic) over distinct partitions once its volume
-  *    passes maxBytes
-  *  - sendBadEvents       → size-capped bad-row JSON to the bad store
+  *  - writeToStorage + sendBadEvents → one shared write, 3 Spark jobs per
+  *    batch: a size pre-pass job sizes the salt, then good and bad rows
+  *    share one `repartitionById` shuffle (map job, then write job) into
+  *    `defaultParallelism` partitions — a good row at hash(schema) + salt,
+  *    a bad row at hash(payload) — and each partition writes its schema
+  *    runs as rolling gzip objects and its bad rows as size-capped bad-row
+  *    JSON to the bad store. The distributed analogue of the reference's
+  *    parTraverse per group (Processing.scala:287-289): a batch's schema
+  *    groups spread over every core, and the salt splits one hot schema key
+  *    (the enriched path maps EVERY event to atomic) over distinct
+  *    partitions once its volume passes maxBytes
   *  - emitTokens          → Structured Streaming checkpoint commit: offsets
   *    commit only after foreachBatch returns ⇒ same at-least-once contract
   *    (reference Processing.scala:74-77,333-336)
@@ -93,9 +96,9 @@ object LoaderPipeline {
       .withColumn("bad_error", coalesce(col("decompressError"), col("bad_error")))
       .drop("decompressError")
 
-  /** One micro-batch (or one whole batch run): write grouped gzip objects,
-    * bad rows, update metrics. `now` is injectable for deterministic tests
-    * (reference tests pin the clock, ProcessingSpec e4).
+  /** One micro-batch (or one whole batch run): write grouped gzip objects
+    * and bad rows in one write job, update metrics. `now` is injectable for
+    * deterministic tests (reference tests pin the clock, ProcessingSpec e4).
     */
   def writeBatch(
       parsed: DataFrame,
@@ -112,18 +115,25 @@ object LoaderPipeline {
     val nameSeed: Option[String] =
       if (cfg.output.idempotentNames) batchId.map(id => s"b$id") else None
 
-    // One decode+parse materialization serves both writer jobs — without
-    // this, the good write, and the bad write would each re-scan and
-    // re-parse the entire batch (at 100 TB: two full extra passes).
+    // One decode+parse materialization serves the size pre-pass and the
+    // write — without this, the write would re-scan and re-parse the
+    // entire batch (at 100 TB: a full extra pass).
     parsed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val good = EventParser.good(parsed)
-        .select(col("vendor"), col("name"), col("format"), col("model"),
-          col("line"), unix_micros(col("collector_tstamp")).as("ts_us"))
-
       val sinkCfg = RollingGzipWriter.SinkConfig(
         cfg.output.path, cfg.output.prefix, cfg.output.partitionFormat,
         cfg.batching.maxBytes, timestampedNames = nameSeed.isEmpty)
+      // Chunking contract (reference Processing.scala:315-331): the bad sink
+      // bounds each emission to recordLimit records / byteLimit bytes — the
+      // Kinesis PutRecords limits (config.aws.reference.hocon). Here each
+      // chunk is one object: the record bound is exact, and the byte bound
+      // applies to the object's COMPRESSED size (soft, like maxBytes: it may
+      // overshoot by one record), so an object's raw content can exceed
+      // byteLimit by the gzip ratio.
+      val badSinkCfg = RollingGzipWriter.SinkConfig(
+        cfg.bad.path, "bad-", None,
+        math.min(cfg.batching.maxBytes, cfg.bad.byteLimit),
+        cfg.bad.recordLimit.toLong, timestampedNames = nameSeed.isEmpty)
 
       // Write parallelism. The shuffle always has `maxTasks` partitions:
       // an explicit count is one adaptive execution does not coalesce, so
@@ -131,69 +141,91 @@ object LoaderPipeline {
       // small (left to coalesce, a small batch's shuffle collapses to one
       // task that makes every put in turn).
       // Enriched batches all map to ONE schema key (SURVEY §1.2), which
-      // would still funnel through a single task, so one cheap agg over the
-      // (already persisted) batch estimates the compressed output volume,
-      // and each row gains a salt sized so each task writes roughly
-      // maxBytes. Small batches keep targetFiles=1, preserving the
-      // reference's one-object-per-group-per-window behavior (T2/F14).
-      // `repartitionById` places salt s of a key at partition
-      // (hash(key, 0) + s) mod maxTasks, so the targetFiles ≤ maxTasks salts
-      // of one key land on distinct partitions (hash partitioning on the
-      // salt column could collide them). hash(key, lit(0)) is the hash
-      // partitioner's own murmur3 of (key, salt = 0), so salt 0 — every
-      // small group — keeps the partition, and with it the idempotent
-      // object names, that plain hash partitioning gave it.
-      val totalLineBytes: Long = Option(
-        good.agg(sum(octet_length(col("line")))).first().get(0))
-        .fold(0L)(_.asInstanceOf[Long])
+      // would still funnel through a single task, so one pass over the
+      // (persisted) batch sums its good line bytes — per-partition sums
+      // collected to the driver, one job with no exchange — to estimate
+      // the compressed output volume, and each good row gains a salt sized
+      // so each task writes roughly maxBytes. Small batches keep
+      // targetFiles=1, preserving the reference's one-object-per-group-per-
+      // window behavior (T2/F14).
+      val totalLineBytes: Long = EventParser.good(parsed)
+        .select(octet_length(col("line")).cast("long")).as[Long]
+        .mapPartitions(lens => Iterator.single(lens.sum))
+        .collect().sum
       val maxTasks = math.max(1, parsed.sparkSession.sparkContext.defaultParallelism)
       val targetFiles: Int = math.min(
         maxTasks.toLong,
         totalLineBytes / EstGzipRatio / math.max(1L, cfg.batching.maxBytes) + 1).toInt
 
-      // Count + earliest tstamp accumulate inside the write pass itself
-      // (reference A2/A3, Processing.scala:108,167-173) — no stats pre-job.
-      // The shuffle keys are plain columns (codegen'd hash partitioning, no
-      // row-deserializing lambda); each partition then streams consecutive
-      // same-schema runs straight into the rolling writer.
+      // Good and bad rows share one shuffle and one write job (reference
+      // Processing.scala:101-134,315-331: one fold writes both). A good row
+      // goes to partition (hash(key, 0) + salt) mod maxTasks: the
+      // targetFiles ≤ maxTasks salts of one key land on distinct partitions
+      // (hash partitioning on the salt column could collide them), and
+      // hash(key, lit(0)) is the hash partitioner's own murmur3 of
+      // (key, salt = 0), so salt 0 — every small group — keeps the
+      // partition, and with it the idempotent object names, that plain hash
+      // partitioning gave it. A bad row goes to hash(payload) mod maxTasks.
+      // The shuffle carries `line` only for good rows and `payload` only for
+      // bad ones (a corrupt frame's bytes are not UTF-8, and a bad row must
+      // carry them unchanged to be replayable). Count + earliest tstamp
+      // accumulate inside the write itself (reference A2/A3,
+      // Processing.scala:108,167-173) — no stats pre-job. Each partition,
+      // sorted with its bad rows last, streams consecutive same-schema runs
+      // straight into the rolling writer and its bad run into the
+      // size-capped bad writer.
+      val isBad = col("bad_error").isNotNull
+      val toWrite = parsed.select(col("vendor"), col("name"), col("format"),
+        col("model"), when(!isBad, col("line")).as("line"),
+        unix_micros(col("collector_tstamp")).as("ts_us"),
+        when(isBad, col("payload")).as("payload"), col("bad_error"))
+      val keyHash = hash(col("vendor"), col("name"), col("format"),
+        col("model"), lit(0)).cast("long")
+      val salt = pmod(hash(col("line")), lit(targetFiles))
+      val partition = when(isBad, pmod(hash(col("payload")), lit(maxTasks)))
+        .otherwise(pmod(keyHash + salt, lit(maxTasks)))
+      val processor = BadRow.Processor("graft-loader", "0.1.0")
+      val maxSize = cfg.bad.maxRecordSize
+      def badJson(payload: Array[Byte], err: String): String =
+        BadRow.sizeCapped(BadRow.GenericError(processor, List(err), payload, wallClock),
+          maxSize, wallClock, processor)
+
       // Per-service health (reference RuntimeService, Processing.scala:
-      // 327-329): a failed write job degrades ONLY its sink's health flag;
-      // a later success marks it healthy again.
-      val actions: Array[RollingGzipWriter.WriteAction] =
+      // 327-329): a put failure degrades ONLY the sink that refused it —
+      // tasks tag it ([[SinkFailure]]) and the tag travels in the job's
+      // SparkException cause chain; a successful write marks both healthy.
+      val actions: Array[(String, RollingGzipWriter.WriteAction)] =
         try {
-          val keyHash = hash(col("vendor"), col("name"), col("format"),
-            col("model"), lit(0)).cast("long")
-          val salt = pmod(hash(col("line")), lit(targetFiles))
-          val a = good
-            .repartitionById(maxTasks,
-              pmod(keyHash + salt, lit(maxTasks)).cast("int"))
-            .sortWithinPartitions("vendor", "name", "format", "model")
+          toWrite
+            .repartitionById(maxTasks, partition.cast("int"))
+            .sortWithinPartitions(isBad, col("vendor"), col("name"),
+              col("format"), col("model"))
             .mapPartitions { rows =>
-              writePartition(rows, store, sinkCfg, wallClock, nameSeed)
+              writePartition(rows, store, sinkCfg, badSinkCfg, badJson,
+                wallClock, nameSeed)
             }
             .collect()
-          health.markHealthy(ServiceHealth.BlobSink)
-          a
         } catch { case e: Throwable =>
-          health.markUnhealthy(ServiceHealth.BlobSink, String.valueOf(e.getMessage))
+          Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+            .collectFirst { case f: SinkFailure => f.sink }
+            .foreach(health.markUnhealthy(_, String.valueOf(e.getMessage)))
           throw e
         }
+      health.markHealthy(ServiceHealth.BlobSink)
+      health.markHealthy(ServiceHealth.BadSink)
 
-      metrics.objectsWritten.addAndGet(actions.length.toLong)
-      metrics.putMillis.addAndGet(math.round(actions.map(_.putMillis).sum))
-      metrics.lastActions.set(actions.toSeq)
-      metrics.count.addAndGet(actions.map(_.recordCount).sum)
-      val earliest = actions.flatMap(_.minTstampMicros)
+      val good = actions.collect { case (ServiceHealth.BlobSink, a) => a }
+      val bad = actions.collect { case (ServiceHealth.BadSink, a) => a }
+      metrics.objectsWritten.addAndGet(good.length.toLong)
+      metrics.putMillis.addAndGet(math.round(good.map(_.putMillis).sum))
+      metrics.lastActions.set(good.toSeq)
+      metrics.count.addAndGet(good.map(_.recordCount).sum)
+      metrics.badCount.addAndGet(bad.map(_.recordCount).sum)
+      metrics.badPutMillis.addAndGet(math.round(bad.map(_.putMillis).sum))
+      val earliest = good.flatMap(_.minTstampMicros)
       if (earliest.nonEmpty) {
         metrics.e2eLatencyMillis.set(
           Some(wallClock.toEpochMilli - earliest.min / 1000))
-      }
-      try {
-        writeBad(parsed, cfg, store, metrics, wallClock, nameSeed)
-        health.markHealthy(ServiceHealth.BadSink)
-      } catch { case e: Throwable =>
-        health.markUnhealthy(ServiceHealth.BadSink, String.valueOf(e.getMessage))
-        throw e
       }
     } finally parsed.unpersist()
   }
@@ -203,12 +235,18 @@ object LoaderPipeline {
     */
   private val EstGzipRatio = 3L
 
+  /** A put that `sink` (a [[ServiceHealth]] service name) refused, thrown
+    * from a write task so the driver can tell which sink failed.
+    */
+  private final class SinkFailure(val sink: String, cause: Throwable)
+      extends java.io.IOException(s"$sink put failed: $cause", cause)
+
   /** Deterministic per-run UUID factory for idempotent naming: named from
-    * (seed=batchId, shuffle partition, schema key, file ordinal). Same
-    * batch data + same partitioning ⇒ same names on replay. The write
-    * shuffle's partition count and `targetFiles` both follow
-    * `defaultParallelism`, so names are stable across replays only while
-    * it stays fixed.
+    * (seed=batchId, shuffle partition, schema key, file ordinal); the bad
+    * run of a partition uses the key ("bad", "", "", 0). Same batch data +
+    * same partitioning ⇒ same names on replay. The write shuffle's
+    * partition count and `targetFiles` both follow `defaultParallelism`,
+    * so names are stable across replays only while it stays fixed.
     */
   private def uuidFactory(
       nameSeed: Option[String],
@@ -225,16 +263,20 @@ object LoaderPipeline {
       case None => () => java.util.UUID.randomUUID()
     }
 
-  /** Stream one shuffle partition (sorted by schema key) into the rolling
-    * writer: consecutive same-key runs each become their own writeGroup
-    * call, so memory stays one gzip buffer regardless of partition size.
+  /** Stream one shuffle partition (good rows sorted by schema key, then the
+    * bad rows) into the writers: each consecutive same-key run becomes its
+    * own writeGroup call, and the bad run one size-capped bad write, so
+    * memory stays one gzip buffer regardless of partition size. Each action
+    * is returned with the sink that wrote it.
     */
   private def writePartition(
       rows: Iterator[Row],
       store: BlobStore,
       sinkCfg: RollingGzipWriter.SinkConfig,
+      badSinkCfg: RollingGzipWriter.SinkConfig,
+      badJson: (Array[Byte], String) => String,
       wallClock: Instant,
-      nameSeed: Option[String]): Iterator[RollingGzipWriter.WriteAction] = {
+      nameSeed: Option[String]): Iterator[(String, RollingGzipWriter.WriteAction)] = {
     if (rows.isEmpty) Iterator.empty
     else {
       val it = rows.buffered
@@ -242,70 +284,39 @@ object LoaderPipeline {
       val vIdx = s.fieldIndex("vendor"); val nIdx = s.fieldIndex("name")
       val fIdx = s.fieldIndex("format"); val mIdx = s.fieldIndex("model")
       val lIdx = s.fieldIndex("line"); val tIdx = s.fieldIndex("ts_us")
-      def keyOf(r: Row) = (r.getString(vIdx), r.getString(nIdx),
-        r.getString(fIdx), r.getInt(mIdx))
+      val pIdx = s.fieldIndex("payload"); val eIdx = s.fieldIndex("bad_error")
+      // a good row's schema key; None for a bad row
+      def keyOf(r: Row) =
+        if (!r.isNullAt(eIdx)) None
+        else Some((r.getString(vIdx), r.getString(nIdx), r.getString(fIdx), r.getInt(mIdx)))
+      def sinkStore(sink: String): BlobStore = new BlobStore {
+        def write(path: String, bytes: Array[Byte]): Unit =
+          try store.write(path, bytes)
+          catch { case scala.util.control.NonFatal(e) => throw new SinkFailure(sink, e) }
+      }
       Iterator.continually(()).takeWhile(_ => it.hasNext).flatMap { _ =>
         val key = keyOf(it.head)
-        val run = new Iterator[(String, java.lang.Long)] {
+        def run[A](f: Row => A): Iterator[A] = new Iterator[A] {
           def hasNext: Boolean = it.hasNext && keyOf(it.head) == key
-          def next(): (String, java.lang.Long) = {
-            val r = it.next()
-            (r.getString(lIdx),
-              if (r.isNullAt(tIdx)) null else java.lang.Long.valueOf(r.getLong(tIdx)))
-          }
+          def next(): A = f(it.next())
         }
-        // writeGroup drains `run` fully before the outer iterator advances
-        RollingGzipWriter.writeGroup(
-          store, sinkCfg, SchemaKey(key._1, key._2, key._3, key._4, 0, 0),
-          wallClock, run, uuidFactory(nameSeed, key))
+        // each writer drains its run fully before the outer iterator advances
+        key match {
+          case None =>
+            RollingGzipWriter.writeLines(
+              sinkStore(ServiceHealth.BadSink), badSinkCfg, SchemaKey.Atomic,
+              wallClock, run(r => badJson(r.getAs[Array[Byte]](pIdx), r.getString(eIdx))),
+              uuidFactory(nameSeed, ("bad", "", "", 0))).map((ServiceHealth.BadSink, _))
+          case Some(k @ (vendor, name, format, model)) =>
+            RollingGzipWriter.writeGroup(
+              sinkStore(ServiceHealth.BlobSink), sinkCfg,
+              SchemaKey(vendor, name, format, model, 0, 0), wallClock,
+              run(r => (r.getString(lIdx),
+                if (r.isNullAt(tIdx)) null else java.lang.Long.valueOf(r.getLong(tIdx)))),
+              uuidFactory(nameSeed, k)).map((ServiceHealth.BlobSink, _))
+        }
       }
     }
-  }
-
-  private def writeBad(
-      parsed: DataFrame,
-      cfg: LoaderConfig,
-      store: BlobStore,
-      metrics: Metrics,
-      wallClock: Instant,
-      nameSeed: Option[String] = None): Unit = {
-    import parsed.sparkSession.implicits._
-
-    // Bad rows: serialize with the size cap (reference P6,
-    // BadRowsSerializer.scala:24-44). Written from executor tasks — one
-    // object per non-empty partition — never collected to the driver
-    // (the reference's bad sink also streams in chunks,
-    // Processing.scala:315-331).
-    val processor = BadRow.Processor("graft-loader", "0.1.0")
-    val maxSize = cfg.bad.maxRecordSize
-    val badPath = cfg.bad.path
-    // Chunking contract (reference Processing.scala:315-331): the bad sink
-    // bounds each emission to recordLimit records / byteLimit bytes — the
-    // Kinesis PutRecords limits (config.aws.reference.hocon). Here each
-    // chunk is one object: the byte bound applies to the compressed stream
-    // (conservative — compressed ≤ raw), the record bound exactly.
-    val badSinkCfg = RollingGzipWriter.SinkConfig(
-      badPath, "bad-", None,
-      math.min(cfg.batching.maxBytes, cfg.bad.byteLimit),
-      cfg.bad.recordLimit.toLong, timestampedNames = nameSeed.isEmpty)
-    // the payload column, not `line`: a corrupt frame's bytes are not
-    // UTF-8, and a bad row must carry them unchanged to be replayable
-    val badWritten = EventParser.bad(parsed)
-      .select(col("payload"), col("bad_error"))
-      .as[(Array[Byte], String)]
-      .mapPartitions { rows =>
-        val jsons = rows.map { case (payload, err) =>
-          BadRow.sizeCapped(BadRow.GenericError(processor, List(err), payload, wallClock),
-            maxSize, wallClock, processor)
-        }
-        val actions = RollingGzipWriter.writeLines(
-          store, badSinkCfg, SchemaKey.Atomic, wallClock, jsons,
-          uuidFactory(nameSeed, ("bad", "", "", 0)))
-        Iterator.single((actions.map(_.recordCount).sum, actions.map(_.putMillis).sum))
-      }
-      .collect()
-    metrics.badCount.addAndGet(badWritten.map(_._1).sum)
-    metrics.badPutMillis.addAndGet(math.round(badWritten.map(_._2).sum))
   }
 
   /** Batch-mode entry: run the whole pipeline over a static DataFrame. */

@@ -8,6 +8,7 @@ import java.util.zip.GZIPInputStream
 import scala.concurrent.duration._
 
 import org.apache.spark.TaskContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -16,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config._
 import graft.sinks.{BlobStore, InMemoryBlobStore}
-import graft.streaming.LoaderPipeline
+import graft.streaming.{LoaderPipeline, ServiceHealth}
 
 /** End-to-end pipeline goldens — ports of reference ProcessingSpec e1–e4
   * against the in-memory recording store (the reference's MockEnvironment
@@ -314,6 +315,24 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       batchId = Some(8L))
     assert(store.paths.size == first.size * 2)
 
+    // bad rows too: a replay of the same batch id gives the same bad-object
+    // names, a new batch id new ones
+    val sdjCfg = LoaderConfig.validate(LoaderConfig(Purpose.Sdj,
+      Output("mem://path", idempotentNames = true), BadOutput("mem://bad"))).toOption.get
+    val sdjStore = new InMemoryBlobStore
+    def badPaths = sdjStore.paths.filter(_.startsWith("mem://bad"))
+    val sdj = sdjLines(3) :+ "not json"
+    LoaderPipeline.runBatch(rawDf(sdj), sdjCfg, sdjStore, metrics, () => fixedNow,
+      batchId = Some(7L))
+    val firstBad = badPaths
+    assert(firstBad.size == 1)
+    LoaderPipeline.runBatch(rawDf(sdj), sdjCfg, sdjStore, metrics, () => fixedNow,
+      batchId = Some(7L))
+    assert(badPaths == firstBad)
+    LoaderPipeline.runBatch(rawDf(sdj), sdjCfg, sdjStore, metrics, () => fixedNow,
+      batchId = Some(8L))
+    assert(badPaths.size == 2 * firstBad.size)
+
     // default (UUID) mode still duplicates on replay — at-least-once
     val cfg2 = cfg.copy(output = cfg.output.copy(idempotentNames = false))
     val store2 = new InMemoryBlobStore
@@ -323,6 +342,64 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     LoaderPipeline.runBatch(rawDf(lines), cfg2, store2, metrics, () => fixedNow,
       batchId = Some(7L))
     assert(store2.paths.size == n2 * 2)
+  }
+
+  test("per-sink health: a refused put degrades only the sink that refused it") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val cfg = LoaderConfig.validate(LoaderConfig(
+      Purpose.Sdj, Output("mem://path"), BadOutput("mem://bad"),
+      Batching(maxDelay = 50.millis))).toOption.get
+    for ((refused, degraded) <- Seq(
+        "mem://bad" -> ServiceHealth.BadSink, "mem://path" -> ServiceHealth.BlobSink)) {
+      val mem = MemoryStream[Array[Byte]]
+      val health = new ServiceHealth
+      val store = new PipelineSpec.RefusingStore(new InMemoryBlobStore, refused)
+      val q = LoaderPipeline.stream(mem.toDF(),
+        cfg.copy(checkpointLocation = Some(
+          java.nio.file.Files.createTempDirectory("ckpt-health").toString)),
+        store, new LoaderPipeline.Metrics, () => fixedNow, health).start()
+      try {
+        mem.addData(sdjLines(1).head.getBytes, "not json".getBytes)
+        intercept[Exception](q.processAllAvailable())
+      } finally q.stop()
+      assert(health.problems.keySet == Set(degraded), s"puts refused under $refused")
+    }
+  }
+
+  test("one write job: a batch with good and bad rows runs at most 3 Spark jobs") {
+    val cfg = LoaderConfig.validate(LoaderConfig(
+      Purpose.Sdj, Output("mem://path"), BadOutput("mem://bad"))).toOption.get
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    // the listener bus delivers events in order, so once the fence job's
+    // start arrives, every job of the batch has been counted
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("loader-batch") => jobs.incrementAndGet()
+          case Some("fence") => fenced.countDown()
+          case _ =>
+        }
+    }
+    val store = new InMemoryBlobStore
+    val metrics = new LoaderPipeline.Metrics
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("loader-batch", "one runBatch")
+      LoaderPipeline.runBatch(rawDf(sdjLines(8) ++ Seq("not json 1", "not json 2")),
+        cfg, store, metrics, () => fixedNow)
+      sc.setJobGroup("fence", "listener bus fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(metrics.count.get() == 8 && metrics.badCount.get() == 2)
+    assert(store.paths.exists(_.startsWith("mem://bad")))
+    assert(jobs.get() > 0 && jobs.get() <= 3, s"${jobs.get()} jobs for one batch")
   }
 
   test("decompression errors become bad rows end-to-end") {
@@ -381,6 +458,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 object PipelineSpec {
   /** Shuffle partitions that made a good put, JVM-wide (local mode only). */
   val goodPutPartitions: java.util.Set[Integer] = ConcurrentHashMap.newKeySet[Integer]()
+
+  /** Refuses every put under `refused`; delegates the rest. */
+  final class RefusingStore(inner: InMemoryBlobStore, refused: String) extends BlobStore {
+    def write(path: String, bytes: Array[Byte]): Unit =
+      if (path.startsWith(refused)) throw new java.io.IOException(s"put refused: $path")
+      else inner.write(path, bytes)
+  }
 
   /** Records which task partition puts each good object, then delegates.
     * The wrapped [[InMemoryBlobStore]] routes its deserialized copies back
