@@ -88,8 +88,6 @@ object Similarity {
     (0 until nProjDims).map(j => dotDuck(col, projRowDuck(j)))
       .mkString("[", ", ", "]")
 
-  private def centroidArraySpark(c: Int): String =
-    centroids(c).map(w => s"${w}D").mkString("array(", ", ", ")")
   private def centroidArrayDuck(c: Int): String =
     centroids(c).mkString("[", ", ", "]")
 

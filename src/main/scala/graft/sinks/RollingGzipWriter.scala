@@ -1,11 +1,14 @@
 package graft.sinks
 
-import java.io.{BufferedOutputStream, ByteArrayOutputStream, OutputStream}
+import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 import java.time.Instant
 import java.util.UUID
-import java.util.zip.GZIPOutputStream
+import java.util.concurrent.{ExecutionException, FutureTask, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import java.util.zip.{CRC32, Deflater}
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 import graft.model.SchemaKey
@@ -25,6 +28,30 @@ import graft.model.SchemaKey
   *  - every file gets a templated partition path + UUID filename
   *    (DynamicPath.scala:54-108)
   *
+  * Block-parallel deflate (pigz's method, https://zlib.net/pigz/): an
+  * object's raw bytes are cut at record boundaries into blocks of at least
+  * [[BlockSize]]. Each block is deflated by its own raw `Deflater`, primed
+  * with the last 32 KiB of input before it (`setDictionary`, so matches
+  * still reach back across the cut) and ended with a sync flush, except the
+  * object's last block, which finishes the stream. The blocks are appended
+  * in order behind one gzip header; the trailer's CRC32 and length are
+  * computed serially over the raw bytes. With `threads` > 1 the blocks are
+  * deflated on a JVM-wide daemon pool, at most 2 × `threads` in flight per
+  * writer; with 1 they are deflated inline, by the same code.
+  *
+  * Near the bound: while the object's size so far plus the worst-case
+  * deflate output of every byte not yet appended (blocks in flight and the
+  * open block) stays within maxBytes, no block can carry the object past
+  * it, so blocks may be deflated anywhere. Once that sum could pass
+  * maxBytes, the blocks in flight are drained and the open block is cut at
+  * this record and deflated inline — the sync flush on demand — so the roll
+  * point stays exact.
+  *
+  * Every cut depends only on the input and the bounds (the near-bound test
+  * drains before it decides), never on the thread count or on timing, so an
+  * object's bytes are the same at any `threads`, and replays with
+  * idempotent names rewrite identical objects.
+  *
   * The reference sync-flushes after every record, which makes each line its
   * own deflate block; here blocks span many records, so the object bytes
   * differ from the reference's (and are smaller) while the gunzipped
@@ -33,7 +60,8 @@ import graft.model.SchemaKey
   * Scale note: the reference bounds the whole in-flight batch because it
   * is a single-node loader; here each (schema-group × task) rolls its own
   * files, which is the property that actually matters at 1000 executors —
-  * no coordination, bounded memory per task (one gzip buffer).
+  * no coordination, bounded memory per task (one object buffer plus the
+  * capped blocks in flight).
   */
 object RollingGzipWriter {
 
@@ -62,8 +90,10 @@ object RollingGzipWriter {
 
   /** Write one schema-group's lines, rolling to a new object whenever the
     * current gzip stream's byte count passes maxBytes. Returns one action
-    * per object written. Each object's stream opens at its first record and
-    * is closed even when a put throws.
+    * per object written. `threads` > 1 deflates blocks of a large group on
+    * the shared pool; the objects are the same at any value. On a failure
+    * the blocks in flight are cancelled or awaited before the exception
+    * propagates.
     *
     * Count and min-event-time metrics accumulate in this same pass (the
     * second element of each record; null = no event time), so the caller
@@ -76,26 +106,17 @@ object RollingGzipWriter {
       schema: SchemaKey,
       now: Instant,
       records: Iterator[(String, java.lang.Long)],
-      newUuid: () => UUID = () => UUID.randomUUID()): Seq[WriteAction] = {
+      newUuid: () => UUID = () => UUID.randomUUID(),
+      threads: Int = 1): Seq[WriteAction] = {
     val actions = ArrayBuffer.empty[WriteAction]
-    var buf: ByteArrayOutputStream = null
-    var out: OutputStream = null // null between objects
-    var pending = 0L // raw bytes written since the last sync flush
+    val pool = if (threads > 1) Some(DeflatePool(threads)) else None
+    var obj: GzipObject = null // null between objects
     var count = 0L
     var minTs = Long.MaxValue
 
-    def open(): Unit = {
-      buf = new ByteArrayOutputStream(64 * 1024)
-      // the buffer turns a record's line and '\n' into one deflate call
-      out = new BufferedOutputStream(new GZIPOutputStream(buf, true), 8 * 1024)
-      pending = 0L
-      count = 0L
-      minTs = Long.MaxValue
-    }
     def emit(): Unit = {
-      out.close()
-      out = null
-      val bytes = buf.toByteArray
+      val bytes = obj.finish()
+      obj = null
       val path = DynamicPath.getFullPath(
         cfg.basePath, cfg.prefix, cfg.partitionFormat, now, schema, newUuid(),
         cfg.timestampedNames)
@@ -108,25 +129,223 @@ object RollingGzipWriter {
 
     try {
       records.foreach { case (line, tsUs) =>
-        if (out == null) open()
-        val bytes = line.getBytes(StandardCharsets.UTF_8)
-        out.write(bytes)
-        out.write('\n')
-        pending += bytes.length + 1
+        if (obj == null) {
+          obj = new GzipObject(cfg.maxBytes, pool, 2 * threads)
+          count = 0L
+          minTs = Long.MaxValue
+        }
+        obj.add(line.getBytes(StandardCharsets.UTF_8))
         count += 1
         if (tsUs != null && tsUs < minTs) minTs = tsUs
-        // buf.size() + deflateBound(pending) bounds the size a sync flush
-        // would reach, so below maxBytes the flush cannot change the roll
-        // decision and is skipped; otherwise flush, and buf.size() is exact
-        if (buf.size() + deflateBound(pending) > cfg.maxBytes) {
-          out.flush()
-          pending = 0L
-        }
-        if (buf.size() > cfg.maxBytes || count >= cfg.maxRecords) emit()
+        if (obj.size > cfg.maxBytes || count >= cfg.maxRecords) emit()
       }
-      if (out != null) emit()
-    } finally if (out != null) out.close()
+      if (obj != null) emit()
+    } finally if (obj != null) obj.cancel()
     actions.toSeq
+  }
+
+  /** Raw bytes per deflate block, at least: a block ends at the first
+    * record boundary past it. Smaller blocks cost compression (each cut
+    * restarts deflate's block statistics), larger ones parallelism.
+    */
+  private val BlockSize = 1 << 20
+
+  /** Deflate's window: the input before a block that its matches can reach. */
+  private val Window = 32 * 1024
+
+  /** The gzip header `GZIPOutputStream` writes: deflate, no flags, no
+    * mtime, unknown OS.
+    */
+  private val Header = Array[Byte](0x1f, 0x8b.toByte, 8, 0, 0, 0, 0, 0, 0, 0xff.toByte)
+
+  /** One gzip object being built: the bytes so far (header and the blocks
+    * appended in order), the open block's raw bytes, the blocks in flight
+    * on `pool` (at most `maxInFlight`), and the last [[Window]] bytes of raw
+    * input before the open block.
+    */
+  private final class GzipObject(
+      maxBytes: Long,
+      pool: Option[ThreadPoolExecutor],
+      maxInFlight: Int) {
+    private val buf = new ByteArrayOutputStream(64 * 1024)
+    buf.write(Header)
+    private val crc = new CRC32
+    private var rawBytes = 0L
+    private var blk = new Array[Byte](8 * 1024)
+    private var blkLen = 0
+    private var window: Array[Byte] = null // allocated at the first cut with a successor
+    private var winLen = 0
+    private val inFlight = mutable.Queue.empty[(FutureTask[ByteArrayOutputStream], Long)]
+    private var inFlightBound = 0L // deflateBound of the blocks in flight
+
+    /** Bytes appended so far: exact whenever it could pass the bound. */
+    def size: Long = buf.size().toLong
+
+    def add(line: Array[Byte]): Unit = {
+      val n = line.length + 1
+      if (blkLen + n > blk.length)
+        blk = java.util.Arrays.copyOf(blk,
+          math.max(blkLen + n, math.min(2 * blk.length, BlockSize + 64 * 1024)))
+      System.arraycopy(line, 0, blk, blkLen, line.length)
+      blk(blkLen + line.length) = '\n'
+      blkLen += n
+      if (couldCross()) cut(finish = false, onPool = false)
+      else if (blkLen >= BlockSize) cut(finish = false, onPool = true)
+    }
+
+    /** Whether flushing every byte not yet appended could carry the object
+      * past maxBytes. Blocks in flight count at their worst case until they
+      * are appended, and are awaited only while that leaves the answer
+      * open, so the answer is the one full knowledge gives: independent of
+      * timing and of the thread count.
+      */
+    private def couldCross(): Boolean = {
+      def upper = buf.size() + inFlightBound + deflateBound(blkLen.toLong)
+      while (upper > maxBytes && inFlight.nonEmpty) appendHead()
+      upper > maxBytes
+    }
+
+    /** End the open block here: deflate it on the pool, or inline while
+      * the blocks in flight finish, and append it after them.
+      */
+    private def cut(finish: Boolean, onPool: Boolean): Unit = {
+      val dict = if (winLen == 0) Array.emptyByteArray else java.util.Arrays.copyOf(window, winLen)
+      val data = blk
+      val len = blkLen
+      crc.update(data, 0, len)
+      rawBytes += len
+      if (!finish) slideWindow(data, len)
+      pool match {
+        case Some(p) if onPool =>
+          if (inFlight.size >= maxInFlight) appendHead()
+          val task = new FutureTask[ByteArrayOutputStream](() =>
+            try deflateBlock(dict, data, len, finish)
+            finally DeflatesPending.decrementAndGet())
+          DeflatesPending.incrementAndGet()
+          p.execute(task)
+          inFlight.enqueue((task, deflateBound(len.toLong)))
+          inFlightBound += deflateBound(len.toLong)
+          blk = new Array[Byte](BlockSize + 64 * 1024)
+        case _ =>
+          val out = deflateBlock(dict, data, len, finish)
+          drain()
+          out.writeTo(buf)
+      }
+      blkLen = 0
+    }
+
+    private def slideWindow(data: Array[Byte], len: Int): Unit = {
+      if (window == null) window = new Array[Byte](Window)
+      if (len >= Window) {
+        System.arraycopy(data, len - Window, window, 0, Window)
+        winLen = Window
+      } else {
+        val keep = math.min(winLen, Window - len)
+        System.arraycopy(window, winLen - keep, window, 0, keep)
+        System.arraycopy(data, 0, window, keep, len)
+        winLen = keep + len
+      }
+    }
+
+    private def appendHead(): Unit = {
+      val (task, bound) = inFlight.dequeue()
+      inFlightBound -= bound
+      val out =
+        try task.get()
+        catch { case e: ExecutionException => throw e.getCause }
+      out.writeTo(buf)
+    }
+
+    private def drain(): Unit = while (inFlight.nonEmpty) appendHead()
+
+    /** The whole object: the last block finishes the stream, then the
+      * trailer (CRC32 and length mod 2^32, little-endian).
+      */
+    def finish(): Array[Byte] = {
+      cut(finish = true, onPool = false)
+      val trailer = java.nio.ByteBuffer.allocate(8).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .putInt(crc.getValue.toInt).putInt(rawBytes.toInt)
+      buf.write(trailer.array())
+      buf.toByteArray
+    }
+
+    /** Drop the blocks in flight: a queued one never starts, a running one
+      * is awaited, so no deflate outlives the writer.
+      */
+    def cancel(): Unit = {
+      inFlight.foreach { case (task, _) =>
+        if (pool.exists(_.remove(task))) DeflatesPending.decrementAndGet()
+        else try task.get() catch { case _: ExecutionException => }
+      }
+      inFlight.clear()
+    }
+  }
+
+  /** Deflate one block with a fresh raw `Deflater` at the default level,
+    * primed with `dict`; sync-flushed, or finishing the stream. Input goes
+    * in 64 KiB slices, which keeps each native call short.
+    */
+  private def deflateBlock(
+      dict: Array[Byte],
+      data: Array[Byte],
+      len: Int,
+      finish: Boolean): ByteArrayOutputStream = {
+    val d = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
+    try {
+      if (dict.nonEmpty) d.setDictionary(dict)
+      val out = new ByteArrayOutputStream(len / 4 + 64)
+      val chunk = new Array[Byte](math.min(64 * 1024, len + 64))
+      var off = 0
+      while (off < len) {
+        val n = math.min(64 * 1024, len - off)
+        d.setInput(data, off, n)
+        while (!d.needsInput()) out.write(chunk, 0, d.deflate(chunk, 0, chunk.length, Deflater.NO_FLUSH))
+        off += n
+      }
+      if (finish) {
+        d.finish()
+        while (!d.finished()) out.write(chunk, 0, d.deflate(chunk))
+      } else {
+        var n = chunk.length
+        while (n == chunk.length) {
+          n = d.deflate(chunk, 0, chunk.length, Deflater.SYNC_FLUSH)
+          out.write(chunk, 0, n)
+        }
+      }
+      out
+    } finally d.end()
+  }
+
+  /** Deflate blocks submitted to the pool and not yet finished or removed:
+    * 0 whenever no writer has blocks in flight.
+    */
+  private[graft] val DeflatesPending = new AtomicInteger
+
+  /** One daemon deflate pool per JVM, shared by every writer, so
+    * concurrent write tasks share its threads instead of multiplying them.
+    * It is resized to each caller's `threads` — the write stage's slots,
+    * read per batch — and idle threads exit after 30 s.
+    */
+  private object DeflatePool {
+    private val ids = new AtomicInteger
+    private val pool = new ThreadPoolExecutor(1, 1, 30, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable], { (r: Runnable) =>
+        val t = new Thread(r, s"gzip-deflate-${ids.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+
+    def apply(threads: Int): ThreadPoolExecutor = synchronized {
+      if (threads > pool.getMaximumPoolSize) {
+        pool.setMaximumPoolSize(threads)
+        pool.setCorePoolSize(threads)
+      } else if (threads < pool.getMaximumPoolSize) {
+        pool.setCorePoolSize(threads)
+        pool.setMaximumPoolSize(threads)
+      }
+      pool
+    }
   }
 
   /** Upper bound on the deflate output for `n` input bytes, sync flush

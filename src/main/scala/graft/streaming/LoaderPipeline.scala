@@ -38,7 +38,8 @@ import graft.sources.Decompression
   *    parTraverse per group (Processing.scala:287-289): a batch's schema
   *    groups spread over every core, and the salt splits one hot schema key
   *    (the enriched path maps EVERY event to atomic) over distinct
-  *    partitions once its volume passes maxBytes
+  *    partitions once its volume passes maxBytes; below that, its one task
+  *    deflates the group's blocks on the slots its siblings leave idle
   *  - emitTokens          → Structured Streaming checkpoint commit: offsets
   *    commit only after foreachBatch returns ⇒ same at-least-once contract
   *    (reference Processing.scala:74-77,333-336)
@@ -156,6 +157,15 @@ object LoaderPipeline {
       val targetFiles: Int = math.min(
         maxTasks.toLong,
         totalLineBytes / EstGzipRatio / math.max(1L, cfg.batching.maxBytes) + 1).toInt
+      // Below maxBytes a hot key still lands in one task (the backfill's
+      // whole good output), so the writer deflates a large group's blocks on
+      // a pool sized to one executor JVM's task slots, shared by its write
+      // tasks: the hot task uses the cores its empty siblings leave idle.
+      // Read per batch, so a local[1] session deflates inline.
+      val sc = parsed.sparkSession.sparkContext
+      val deflateThreads =
+        if (sc.isLocal) maxTasks
+        else sc.getConf.getInt("spark.executor.cores", 1) / sc.getConf.getInt("spark.task.cpus", 1)
 
       // Good and bad rows share one shuffle and one write job (reference
       // Processing.scala:101-134,315-331: one fold writes both). A good row
@@ -202,7 +212,7 @@ object LoaderPipeline {
               col("format"), col("model"))
             .mapPartitions { rows =>
               writePartition(rows, store, sinkCfg, badSinkCfg, badJson,
-                wallClock, nameSeed)
+                wallClock, nameSeed, deflateThreads)
             }
             .collect()
         } catch { case e: Throwable =>
@@ -266,8 +276,10 @@ object LoaderPipeline {
   /** Stream one shuffle partition (good rows sorted by schema key, then the
     * bad rows) into the writers: each consecutive same-key run becomes its
     * own writeGroup call, and the bad run one size-capped bad write, so
-    * memory stays one gzip buffer regardless of partition size. Each action
-    * is returned with the sink that wrote it.
+    * memory stays one object buffer plus the capped blocks in flight
+    * regardless of partition size. Only the good writer deflates on
+    * `deflateThreads`; bad objects are small. Each action is returned with
+    * the sink that wrote it.
     */
   private def writePartition(
       rows: Iterator[Row],
@@ -276,7 +288,8 @@ object LoaderPipeline {
       badSinkCfg: RollingGzipWriter.SinkConfig,
       badJson: (Array[Byte], String) => String,
       wallClock: Instant,
-      nameSeed: Option[String]): Iterator[(String, RollingGzipWriter.WriteAction)] = {
+      nameSeed: Option[String],
+      deflateThreads: Int): Iterator[(String, RollingGzipWriter.WriteAction)] = {
     if (rows.isEmpty) Iterator.empty
     else {
       val it = rows.buffered
@@ -313,7 +326,7 @@ object LoaderPipeline {
               SchemaKey(vendor, name, format, model, 0, 0), wallClock,
               run(r => (r.getString(lIdx),
                 if (r.isNullAt(tIdx)) null else java.lang.Long.valueOf(r.getLong(tIdx)))),
-              uuidFactory(nameSeed, k)).map((ServiceHealth.BlobSink, _))
+              uuidFactory(nameSeed, k), deflateThreads).map((ServiceHealth.BlobSink, _))
         }
       }
     }

@@ -344,6 +344,31 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(store2.paths.size == n2 * 2)
   }
 
+  test("idempotent naming: a multi-block single-schema batch replays to byte-identical objects") {
+    val cfg = LoaderConfig(Purpose.Enriched,
+      Output("mem://path", idempotentNames = true), BadOutput("mem://bad"))
+    // 3.6 MB of one schema key: one write task deflates it as several blocks
+    val lines = (0 until 10000).map(i =>
+      tsv(f"1970-01-01 00:${i / 60 % 60}%02d:${i % 60}%02d.000") +
+        (0 until 80).map(j => (i * 31 + j * j * 7) % 1000).mkString("\t", "\t", ""))
+    assert(lines.map(_.length + 1L).sum > 3L * 1024 * 1024)
+    val store = new InMemoryBlobStore
+    def snapshot = store.paths.map(p => p -> store.objects.get(p)).toMap
+    LoaderPipeline.runBatch(rawDf(lines), cfg, store, new LoaderPipeline.Metrics,
+      () => fixedNow, batchId = Some(7L))
+    val first = snapshot
+    LoaderPipeline.runBatch(rawDf(lines), cfg, store, new LoaderPipeline.Metrics,
+      () => fixedNow, batchId = Some(7L))
+    val second = snapshot
+
+    assert(second.keySet == first.keySet)
+    first.foreach { case (p, bytes) =>
+      assert(java.util.Arrays.equals(second(p), bytes), s"$p differs on replay")
+    }
+    val good = first.collect { case (p, b) if p.startsWith("mem://path") => b }
+    assert(good.toSeq.flatMap(b => gunzip(b).linesIterator).sorted == lines.sorted)
+  }
+
   test("per-sink health: a refused put degrades only the sink that refused it") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

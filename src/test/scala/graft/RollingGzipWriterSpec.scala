@@ -10,7 +10,7 @@ import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.SchemaKey
-import graft.sinks.{InMemoryBlobStore, RollingGzipWriter}
+import graft.sinks.{BlobStore, InMemoryBlobStore, RollingGzipWriter}
 
 /** The rolling gzip writer on its own, without Spark: content, roll
   * points against the compressed size bound and the record bound, per-object
@@ -55,20 +55,18 @@ class RollingGzipWriterSpec extends AnyFunSuite {
     n + (n >>> 10) + 64
   }
 
-  private def write(maxBytes: Long, maxRecords: Long, in: Seq[(String, java.lang.Long)]) = {
+  private def write(maxBytes: Long, maxRecords: Long, in: Seq[(String, java.lang.Long)],
+      threads: Int = 1) = {
     val store = new InMemoryBlobStore
     val cfg = RollingGzipWriter.SinkConfig("mem://out", maxBytes = maxBytes, maxRecords = maxRecords)
-    val actions = RollingGzipWriter.writeGroup(store, cfg, SchemaKey.Atomic, now, in.iterator)
+    val actions = RollingGzipWriter.writeGroup(store, cfg, SchemaKey.Atomic, now, in.iterator,
+      threads = threads)
     (actions, actions.map(a => store.objects.get(a.path)))
   }
 
-  for {
-    maxBytes <- Seq(64L, 150L, 4096L, 64L * 1024 * 1024)
-    maxRecords <- Seq(3L, Long.MaxValue)
-  } test(s"maxBytes=$maxBytes maxRecords=$maxRecords: content, roll points and metrics") {
-    val in = lines(maxBytes * 31 + maxRecords % 1000, 600)
-    val (actions, objects) = write(maxBytes, maxRecords, in)
-
+  /** Content, roll points and per-object metrics of one write of `in`. */
+  private def checkObjects(maxBytes: Long, maxRecords: Long, in: Seq[(String, java.lang.Long)],
+      actions: Seq[RollingGzipWriter.WriteAction], objects: Seq[Array[Byte]]): Unit = {
     assert(objects.map(gunzip).mkString == in.map(_._1 + "\n").mkString)
     assert(actions.map(_.compressedBytes) == objects.map(_.length.toLong))
 
@@ -89,6 +87,15 @@ class RollingGzipWriterSpec extends AnyFunSuite {
       assert(bytes.length <= maxBytes + recordBound(run.last._1) + 32,
         s"object $i (${bytes.length} bytes) rolled late")
     }
+  }
+
+  for {
+    maxBytes <- Seq(64L, 150L, 4096L, 64L * 1024 * 1024)
+    maxRecords <- Seq(3L, Long.MaxValue)
+  } test(s"maxBytes=$maxBytes maxRecords=$maxRecords: content, roll points and metrics") {
+    val in = lines(maxBytes * 31 + maxRecords % 1000, 600)
+    val (actions, objects) = write(maxBytes, maxRecords, in)
+    checkObjects(maxBytes, maxRecords, in, actions, objects)
     if (maxBytes == 64L * 1024 * 1024 && maxRecords == Long.MaxValue) assert(actions.size == 1)
   }
 
@@ -99,5 +106,67 @@ class RollingGzipWriterSpec extends AnyFunSuite {
     val oneShot = oneShotGzip(in.map(_._1 + "\n").mkString).length
     assert(objects.head.length <= oneShot + 64,
       s"${objects.head.length} bytes vs $oneShot for one gzip stream")
+  }
+
+  /** 16 MiB of seeded lines: sixteen deflate blocks, about 3 MB gzipped. */
+  private lazy val bigGroup: Seq[(String, java.lang.Long)] = {
+    val in = lines(11, 40000)
+    val sizes = in.map(_._1.getBytes(UTF_8).length + 1L).scanLeft(0L)(_ + _)
+    in.take(sizes.indexWhere(_ >= 16L * 1024 * 1024))
+  }
+
+  test("a multi-block group: the same bytes at 1, 2 and 4 threads, within 0.1 % of one gzip stream") {
+    val byThreads = Seq(1, 2, 4).map { t =>
+      val (actions, objects) = write(64L * 1024 * 1024, Long.MaxValue, bigGroup, t)
+      assert(actions.size == 1, s"threads=$t")
+      assert(gunzip(objects.head) == bigGroup.map(_._1 + "\n").mkString, s"threads=$t")
+      objects.head
+    }
+    assert(byThreads.forall(java.util.Arrays.equals(_, byThreads.head)))
+    val oneShot = oneShotGzip(bigGroup.map(_._1 + "\n").mkString).length
+    assert(byThreads.head.length <= oneShot * 1.001,
+      s"${byThreads.head.length} bytes vs $oneShot for one gzip stream")
+  }
+
+  test("a multi-block group under a bound inside it: roll points and metrics at 1, 2 and 4 threads") {
+    val maxBytes = 1536L * 1024
+    val byThreads = Seq(1, 2, 4).map { t =>
+      val (actions, objects) = write(maxBytes, Long.MaxValue, bigGroup, t)
+      assert(actions.size >= 2, s"threads=$t")
+      checkObjects(maxBytes, Long.MaxValue, bigGroup, actions, objects)
+      (actions.map(_.recordCount), objects)
+    }
+    byThreads.tail.foreach { case (counts, objects) =>
+      assert(counts == byThreads.head._1)
+      assert(objects.zip(byThreads.head._2).forall { case (a, b) => java.util.Arrays.equals(a, b) })
+    }
+  }
+
+  test("a failure with blocks in flight: the same exception, no deflate left behind, the pool reusable") {
+    val refused = new java.io.IOException("put refused")
+    val refusing = new BlobStore {
+      def write(path: String, bytes: Array[Byte]): Unit = throw refused
+    }
+    val cfg = RollingGzipWriter.SinkConfig("mem://out")
+    val thrown = intercept[java.io.IOException] {
+      RollingGzipWriter.writeGroup(refusing, cfg, SchemaKey.Atomic, now, bigGroup.iterator,
+        threads = 4)
+    }
+    assert(thrown eq refused)
+    assert(RollingGzipWriter.DeflatesPending.get == 0)
+
+    // the input fails half way, with blocks queued and running
+    val broken = new IllegalStateException("source failed")
+    val half = bigGroup.take(bigGroup.size / 2).iterator ++ Iterator.continually[(String, java.lang.Long)](throw broken)
+    val store = new InMemoryBlobStore
+    assert(intercept[IllegalStateException] {
+      RollingGzipWriter.writeGroup(store, cfg, SchemaKey.Atomic, now, half, threads = 4)
+    } eq broken)
+    assert(RollingGzipWriter.DeflatesPending.get == 0)
+    assert(store.paths.isEmpty)
+
+    val (actions, objects) = write(64L * 1024 * 1024, Long.MaxValue, bigGroup, 4)
+    assert(actions.size == 1)
+    assert(gunzip(objects.head) == bigGroup.map(_._1 + "\n").mkString)
   }
 }
