@@ -21,27 +21,22 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q10_pricing_summary")(spark, "/root/testdata/sf0.001")
 
+  /** Every operator family, in registry order (a later family's entry
+    * would replace an earlier one of the same name; QueryRegistrySpec keeps
+    * the names disjoint).
+    */
+  val families: Seq[QueryFamily] = Seq(
+    RefQueries, Relational, TextAnalysis, Dedup, Similarity, KMeans,
+    Multimodal, Curation, RangeJoin, ProductQuantization, PageRank, ZOrder,
+    Triangles, Perceptron, SuffixRank, Drift, Spectral, TextRank, LabelProp,
+    CorpusStats, Series, GraphCore, Frontier, Placement, AnnGraph, BpeTrain)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RefQueries.queries ++ Relational.queries ++ TextAnalysis.queries ++
-      Dedup.queries ++ Similarity.queries ++ KMeans.queries ++
-      Multimodal.queries ++ Curation.queries ++ RangeJoin.queries ++
-      ProductQuantization.queries ++ PageRank.queries ++ ZOrder.queries ++
-      Triangles.queries ++ Perceptron.queries ++ SuffixRank.queries ++
-      Drift.queries ++ Spectral.queries ++ TextRank.queries ++ LabelProp.queries ++ CorpusStats.queries ++ Series.queries ++
-      GraphCore.queries ++ Frontier.queries ++ Placement.queries ++
-      AnnGraph.queries ++ BpeTrain.queries
+    families.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+    * the same parquet tables.
     */
-  def oracleSql: Map[String, String] =
-    RefQueries.oracle ++ Relational.oracle ++ TextAnalysis.oracle ++
-      Dedup.oracle ++ Similarity.oracle ++ KMeans.oracle ++
-      Multimodal.oracle ++ Curation.oracle ++ RangeJoin.oracle ++
-      ProductQuantization.oracle ++ PageRank.oracle ++ ZOrder.oracle ++
-      Triangles.oracle ++ Perceptron.oracle ++ SuffixRank.oracle ++
-      Drift.oracle ++ Spectral.oracle ++ TextRank.oracle ++ LabelProp.oracle ++ CorpusStats.oracle ++ Series.oracle ++
-      GraphCore.oracle ++ Frontier.oracle ++ Placement.oracle ++
-      AnnGraph.oracle ++ BpeTrain.oracle
+  def oracleSql: Map[String, String] = families.flatMap(_.oracle).toMap
 }

@@ -2,7 +2,7 @@ package graft.config
 
 import scala.concurrent.duration._
 
-import graft.sinks.DynamicPath
+import graft.sinks.{DynamicPath, RollingGzipWriter}
 import graft.sources.Decompression
 
 /** Typed config tree — same shape and defaults as the reference's HOCON
@@ -58,24 +58,30 @@ final case class LoaderConfig(
 
 final case class HealthProbeConfig(
     port: Int = 8000,
-    unhealthyLatency: scala.concurrent.duration.FiniteDuration =
-      scala.concurrent.duration.DurationInt(2).minutes)
+    unhealthyLatency: FiniteDuration = 2.minutes)
 
 object LoaderConfig {
 
   /** Cross-field validation — enriched may only partition by date/time
     * tokens; SDJ defaults to "{vendor}.{schema}" (reference
-    * DynamicPath.scala:38-51, ConfigSpec.scala:42-87).
+    * DynamicPath.scala:38-51, ConfigSpec.scala:42-87). `batching.maxBytes`
+    * may not exceed what one in-memory object can hold
+    * (`RollingGzipWriter.MaxObjectBytes`).
     */
   def validate(c: LoaderConfig): Either[String, LoaderConfig] =
-    DynamicPath
-      .validatePartitionFormat(c.output.partitionFormat, c.purpose == Purpose.Enriched)
-      .map(pf => c.copy(output = c.output.copy(partitionFormat = pf)))
+    for {
+      _ <- Either.cond(c.batching.maxBytes <= RollingGzipWriter.MaxObjectBytes, (),
+        s"batching.maxBytes ${c.batching.maxBytes} exceeds " +
+          s"${RollingGzipWriter.MaxObjectBytes}: each object is built in one " +
+          "in-memory buffer, which cannot hold a larger one")
+      pf <- DynamicPath
+        .validatePartitionFormat(c.output.partitionFormat, c.purpose == Purpose.Enriched)
+    } yield c.copy(output = c.output.copy(partitionFormat = pf))
 
   /** Decode the reference's HOCON surface (config.aws.*.hocon shape) into
     * the typed tree, applying the reference.conf defaults
     * (reference modules/core/src/main/resources/reference.conf:19-42) and
-    * the cross-field validation.
+    * the cross-field validation. Every default is the case classes' own.
     */
   def fromHocon(
       text: String,
@@ -83,6 +89,10 @@ object LoaderConfig {
     val root =
       try Hocon.parse(text, env)
       catch { case e: Exception => return Left(s"HOCON parse error: ${e.getMessage}") }
+    val output = Output("")
+    val bad = BadOutput("")
+    val batching = Batching()
+    val limits = Decompression.Limits()
 
     for {
       purposeStr <- root.str("purpose").toRight("Missing required field: purpose")
@@ -94,29 +104,28 @@ object LoaderConfig {
         purpose = purpose,
         output = Output(
           path = goodPath,
-          prefix = root.str("output", "good", "filenamePrefix").getOrElse(""),
+          prefix = root.str("output", "good", "filenamePrefix").getOrElse(output.prefix),
           partitionFormat = root.str("output", "good", "partitionFormat"),
           idempotentNames = root.bool("output", "good", "idempotentNames")
-            .getOrElse(false)),
+            .getOrElse(output.idempotentNames)),
         bad = BadOutput(
           path = root.str("output", "bad", "path")
             .orElse(root.str("output", "bad", "streamName")).getOrElse(""),
           maxRecordSize = root.num("output", "bad", "maxRecordSize")
-            .map(_.toInt).getOrElse(1000000),
+            .map(_.toInt).getOrElse(bad.maxRecordSize),
           recordLimit = root.num("output", "bad", "recordLimit")
-            .map(_.toInt).getOrElse(500),
+            .map(_.toInt).getOrElse(bad.recordLimit),
           byteLimit = root.num("output", "bad", "byteLimit")
-            .map(_.toLong).getOrElse(5242880L)),
+            .map(_.toLong).getOrElse(bad.byteLimit)),
         batching = Batching(
           maxBytes = root.num("batching", "maxBytes")
-            .map(_.toLong).getOrElse(64L * 1024 * 1024),
-          maxDelay = root.duration("batching", "maxDelay")
-            .getOrElse(scala.concurrent.duration.DurationInt(2).minutes)),
+            .map(_.toLong).getOrElse(batching.maxBytes),
+          maxDelay = root.duration("batching", "maxDelay").getOrElse(batching.maxDelay)),
         decompression = Decompression.Limits(
           maxBytesInBatch = root.num("decompression", "maxBytesInBatch")
-            .map(_.toLong).getOrElse(5242880L),
+            .map(_.toLong).getOrElse(limits.maxBytesInBatch),
           maxBytesSinglePayload = root.num("decompression", "maxBytesSinglePayload")
-            .map(_.toLong).getOrElse(10000000L))))
+            .map(_.toLong).getOrElse(limits.maxBytesSinglePayload))))
     } yield cfg
   }
 
@@ -129,20 +138,18 @@ object LoaderConfig {
       : Option[graft.streaming.MetricsEmitter.StatsdConfig] = {
     val root = Hocon.parse(text, env)
     root.str("monitoring", "metrics", "statsd", "hostname").map { host =>
-      val tags = root.get("monitoring", "metrics", "statsd", "tags") match {
-        case Some(o: Hocon.Obj) =>
-          o.fields.keys.map(k => k -> o.str(k).getOrElse("")).toMap
-        case _ => Map.empty[String, String]
-      }
-      graft.streaming.MetricsEmitter.StatsdConfig(
-        hostname = host,
+      val d = graft.streaming.MetricsEmitter.StatsdConfig(host)
+      d.copy(
         port = root.num("monitoring", "metrics", "statsd", "port")
-          .map(_.toInt).getOrElse(8125),
-        tags = tags,
+          .map(_.toInt).getOrElse(d.port),
+        tags = root.get("monitoring", "metrics", "statsd", "tags") match {
+          case Some(o: Hocon.Obj) =>
+            o.fields.keys.map(k => k -> o.str(k).getOrElse("")).toMap
+          case _ => d.tags
+        },
         period = root.duration("monitoring", "metrics", "statsd", "period")
-          .getOrElse(scala.concurrent.duration.DurationInt(1).minute),
-        prefix = root.str("monitoring", "metrics", "statsd", "prefix")
-          .getOrElse("graft.loader"))
+          .getOrElse(d.period),
+        prefix = root.str("monitoring", "metrics", "statsd", "prefix").getOrElse(d.prefix))
     }
   }
 
@@ -150,9 +157,10 @@ object LoaderConfig {
   def healthProbeFromHocon(text: String,
       env: String => Option[String] = sys.env.get): HealthProbeConfig = {
     val root = Hocon.parse(text, env)
+    val d = HealthProbeConfig()
     HealthProbeConfig(
-      port = root.num("monitoring", "healthProbe", "port").map(_.toInt).getOrElse(8000),
+      port = root.num("monitoring", "healthProbe", "port").map(_.toInt).getOrElse(d.port),
       unhealthyLatency = root.duration("monitoring", "healthProbe", "unhealthyLatency")
-        .getOrElse(scala.concurrent.duration.DurationInt(2).minutes))
+        .getOrElse(d.unhealthyLatency))
   }
 }

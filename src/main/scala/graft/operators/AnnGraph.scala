@@ -65,7 +65,7 @@ import org.apache.spark.sql.functions._
   * floor(dot · 2²⁰) bigints: ranking, ties, and the final report are
   * exact integer arithmetic, hash-identical across engines.
   */
-object AnnGraph {
+object AnnGraph extends QueryFamily {
 
   private val dim = 64
   private val nQueries = 5

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * hash-checked against a DuckDB oracle that replays all rounds as
   * unrolled CTEs.
   */
-object BpeTrain {
+object BpeTrain extends QueryFamily {
 
   private val nMerges = 8
   private val replacePasses = 6

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * contingency counts are one doc-distinct explode + one shuffle, with
   * the two label totals broadcast as a 1-row frame.
   */
-object CorpusStats {
+object CorpusStats extends QueryFamily {
 
   private val chi2MinDf = 10
   private val chi2TopN = 50

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * shingle set — benchmarks are KBs while the corpus is TBs). Nothing
   * shuffles the 100 TB side.
   */
-object Curation {
+object Curation extends QueryFamily {
 
   /** Salted 32-bit uniform from a row key — first 8 md5 hex digits as an
     * integer in [0, 2^32). Identical construction in the DuckDB oracle.

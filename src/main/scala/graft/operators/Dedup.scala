@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * md5 is the shared hash primitive (identical in Spark and DuckDB, and
   * codegen'd by Catalyst), so every signature is oracle-checkable.
   */
-object Dedup {
+object Dedup extends QueryFamily {
 
   private[graft] val toks = "split(trim(text), '\\\\s+')"
 

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * shuffle for the bucket histogram; the totals and the TV numerator are
   * 1-row frames broadcast back over the buckets.
   */
-object Drift {
+object Drift extends QueryFamily {
 
   /** Histogram both slices in one pass: bucket → (n_a, n_b). */
   private def hist(s: SparkSession, dir: String): DataFrame =

@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * correctly-rounded division, max) is IEEE-identical cross-engine, so
   * even the double-valued priorities hash-match.
   */
-object Frontier {
+object Frontier extends QueryFamily {
 
   private val SkyBuckets = 64
   private val SampleK = 100

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * R = 6 returns the true 80-core here while the unrolled oracle stays
   * exact even at scale factors where it wouldn't be.
   */
-object GraphCore {
+object GraphCore extends QueryFamily {
 
   private val K = 80
   private val Rounds = 6

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *    (double sums would). mean = sum / count / 2^20 in double.
   *  - empty cluster: keeps its previous centroid
   */
-object KMeans {
+object KMeans extends QueryFamily {
 
   private val k = 8
   private val iters = 2

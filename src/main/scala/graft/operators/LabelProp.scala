@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * (≤ degree rows). `localCheckpoint` cuts lineage per round. Rounds
   * never touch the corpus — the graph is compacted once.
   */
-object LabelProp {
+object LabelProp extends QueryFamily {
 
   private val rounds = 2
   private val topN = 25

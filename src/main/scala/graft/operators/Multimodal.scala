@@ -29,7 +29,7 @@ final case class MediaFeatures(
   * the map is narrow (no shuffle), and partition sizing is controlled by
   * `spark.sql.files.maxPartitionBytes` exactly as for any other column.
   */
-object Multimodal {
+object Multimodal extends QueryFamily {
 
   private val FrameStride = 64
   private val HeadBytes = 8

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * join ranks on src (shuffle bounded by |edges|), never adjacency
   * matrices.
   */
-object PageRank {
+object PageRank extends QueryFamily {
 
   val Scale = 1000000000000L
 

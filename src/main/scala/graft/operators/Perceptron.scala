@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * the perceptron is the strongest classifier whose training is
   * hash-checkable.)
   */
-object Perceptron {
+object Perceptron extends QueryFamily {
 
   private val epochs = 3
 

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * estimate itself oracle-exact, and the query carries the exact join
   * size next to it so the overshoot is measured, not assumed.
   */
-object Placement {
+object Placement extends QueryFamily {
 
   private val OldShards = 8 // q146: grow 8 -> 9
   private val CmsRows = 3 // q147 grid: 3 hash rows x 1024 buckets

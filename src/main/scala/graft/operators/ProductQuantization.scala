@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions.{array, broadcast, col, count, element_at,
   */
 private[graft] case class PqSub(m: Int, code: Long, rfp: Long)
 
-object ProductQuantization {
+object ProductQuantization extends QueryFamily {
 
   private val dim = 64
   private[operators] val nSub = 8 // subspaces

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * (data-dependent, never |L|·|R|), the join is a plain shuffled/broadcast
   * hash join, and AQE handles skewed bins.
   */
-object RangeJoin {
+object RangeJoin extends QueryFamily {
 
   /** Joins `left` and `right` on `equiKeys` plus `|left.lVal − right.rVal|
     * ≤ radius`. `lVal` / `rVal` are long columns (e.g. unix micros).

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * identically in the Spark plan and the oracle SQL (driver hash-compares
   * after sorting columns by name).
   */
-object RefQueries {
+object RefQueries extends QueryFamily {
 
   /** Common DuckDB renderings of Synth.enrichedLine / Synth.sdjLine. */
   private val DuckEnrichedLine =

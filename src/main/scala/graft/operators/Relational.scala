@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.DecimalType
   * columns are only ever passed through (same bits) or compared (same
   * ordering), never re-accumulated in binary floating point.
   */
-object Relational {
+object Relational extends QueryFamily {
 
   private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 2))
 

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * ordering differs across engines. Ranking is the bounded-heap
   * graft_topk: k rows per probe cross the wire, never a per-probe sort.
   */
-object Series {
+object Series extends QueryFamily {
 
   private val nDays = 30
   private val topK = 10

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   */
 private[operators] case class IdComp(id: Long, comp: Long)
 
-object Similarity {
+object Similarity extends QueryFamily {
 
   private val nPlanes = 8
   private val dim = 64

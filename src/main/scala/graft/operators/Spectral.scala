@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * doubles agree to the bit. Magnitudes here (|x|≲4, dim 64) keep the
   * summed products under 2⁴¹ per row — ~2⁶⁰ headroom at a billion rows.
   */
-object Spectral {
+object Spectral extends QueryFamily {
 
   private val iters = 2
   private val S = 65536L // 2^16

@@ -46,7 +46,7 @@ import org.apache.spark.sql.functions._
   * rounds, the bucketed rank stitching, and the repeated-span
   * extraction end-to-end.
   */
-object SuffixRank {
+object SuffixRank extends QueryFamily {
 
   private val SpanTokens = 16
   private val B = 64L // rank-space range buckets per doubling round

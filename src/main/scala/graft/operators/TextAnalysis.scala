@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * Everything is a narrow projection — no shuffle; at 100 TB this runs
   * map-only at scan speed with full column pruning.
   */
-object TextAnalysis {
+object TextAnalysis extends QueryFamily {
 
   /** Whitespace tokenization shared by every operator (Spark side). */
   private[operators] val toks = "split(trim(text), '\\\\s+')"

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * over that compacted graph, never re-touching the corpus. The corpus
   * is read exactly once.
   */
-object TextRank {
+object TextRank extends QueryFamily {
 
   private val nIters = 3
   private val minEdge = 3

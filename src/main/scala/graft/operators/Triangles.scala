@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * (the lineitem self-join is bounded per order by lines-per-order, ≤7
   * in TPC-H, so edge generation is linear in the log).
   */
-object Triangles {
+object Triangles extends QueryFamily {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q68_triangles" -> { (s, dir) =>

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * `repartitionByRange(zval)` + within-partition sort; the key computation
   * below is the operator — the write is a layout policy.
   */
-object ZOrder {
+object ZOrder extends QueryFamily {
 
   /** Bit-interleave two non-negative ints (x in even bit positions, y in
     * odd): the Morton code. A sum of shift/mask terms — Catalyst folds it

@@ -1,6 +1,5 @@
 package graft.sinks
 
-import java.io.OutputStream
 import java.net.URI
 import java.nio.file.{Files, StandardCopyOption, Path => JPath}
 import java.util.UUID
@@ -18,10 +17,19 @@ trait BlobStore extends Serializable {
 }
 
 /** Hadoop-FS-backed store — covers file://, hdfs:// and s3a:// URIs with
-  * the standard connectors; the production path. One create-write-close
-  * per object, no commit protocol (objects are uniquely named by UUID, so
-  * task retries at-least-once overwrite idempotently — same contract as
-  * the reference's S3 PUT, S3Sink.scala:29-41).
+  * the standard connectors; the production path. One put per object: a
+  * create-write-close, no commit protocol and no staging. Objects are
+  * uniquely named (by UUID, or deterministically under idempotent naming),
+  * so a retried task overwrites its own objects — the same contract as the
+  * reference's single S3 PUT per batch (S3Sink.scala:29-41), where
+  * at-least-once delivery rests on the PUT being atomic and its name
+  * deterministic.
+  *
+  * No multipart route is needed: an object arrives as one JVM array, and
+  * the writer that builds it rolls at `batching.maxBytes`, which
+  * `LoaderConfig.validate` caps at `RollingGzipWriter.MaxObjectBytes`
+  * (1 GiB), far below S3's 5 GiB single-PUT limit. A connector that
+  * prefers parts for large bodies (Hadoop's S3A) splits the upload itself.
   *
   * LOCAL BRANCH. When the path resolves to Hadoop's checksummed
   * `LocalFileSystem` (the `file://` default; the Spark distribution
@@ -39,21 +47,9 @@ trait BlobStore extends Serializable {
   * concurrent attempts at the same idempotent name apart. Every other
   * filesystem — s3a, hdfs, an `fs.file.impl` that is not a
   * `LocalFileSystem` (e.g. `RawLocalFileSystem`), the `s3x://` test
-  * double — takes the Hadoop code below, unchanged.
-  *
-  * Objects larger than `maxSinglePutBytes` take a MULTIPART route on
-  * those non-local stores (the reference uploads one buffer per object —
-  * at 100 TB a batch shard can exceed the object store's single-PUT limit,
-  * 5 GiB on S3; a local file has no such cap): the buffer
-  * is staged as `<path>.mpu/part-NNNNN` chunks, each within the cap,
-  * then completed by assembling the parts into the final object and
-  * deleting the staging dir (the assembly copy models S3's server-side
-  * CompleteMultipartUpload — completion is not itself a client PUT). A
-  * task death anywhere in the sequence leaves only staging garbage or a
-  * partial target; the retry deletes the staging dir, re-stages every
-  * part, and re-completes — same at-least-once ⇒ exactly-once-content
-  * contract as the single-PUT path, fault-injected in
-  * FaultInjectionSpec.
+  * double — takes the Hadoop put; a task death there leaves at most a
+  * partial object under the real name, which the retry overwrites
+  * (fault-injected in FaultInjectionSpec).
   *
   * The Hadoop `Configuration` (with `confSerde` applied) is built once per
   * store instance, not per put: a fresh one re-parses Hadoop's default
@@ -62,9 +58,7 @@ trait BlobStore extends Serializable {
   * `FileSystem` is still resolved per path: good and bad paths may use
   * different schemes.
   */
-final class HadoopBlobStore(confSerde: Map[String, String],
-    maxSinglePutBytes: Long = HadoopBlobStore.S3SinglePutLimit)
-    extends BlobStore {
+final class HadoopBlobStore(confSerde: Map[String, String]) extends BlobStore {
   @transient private lazy val conf: Configuration = {
     val c = new Configuration()
     confSerde.foreach { case (k, v) => c.set(k, v) }
@@ -76,52 +70,14 @@ final class HadoopBlobStore(confSerde: Map[String, String],
     FileSystem.get(p.toUri, conf) match {
       case local: LocalFileSystem =>
         HadoopBlobStore.putLocal(local.pathToFile(p).toPath, bytes)
-      case fs => hadoopWrite(fs, p, bytes)
-    }
-  }
-
-  private def hadoopWrite(fs: FileSystem, p: Path, bytes: Array[Byte]): Unit = {
-    def put(target: Path, slice: Array[Byte], off: Int, len: Int): Unit = {
-      var out: OutputStream = null
-      try { out = fs.create(target, true); out.write(slice, off, len) }
-      finally if (out != null) out.close()
-    }
-    if (bytes.length <= maxSinglePutBytes) {
-      put(p, bytes, 0, bytes.length)
-    } else {
-      val cap = maxSinglePutBytes.min(Int.MaxValue.toLong).toInt
-      val staging = new Path(p.getParent, p.getName + ".mpu")
-      // a failed previous attempt may have left partial parts behind
-      if (fs.exists(staging)) fs.delete(staging, true)
-      // bytes.length > maxSinglePutBytes >= 1 on this branch; compute the
-      // ceiling as (n-1)/cap+1 — the (n+cap-1) form overflows Int when
-      // length + cap exceeds Int.MaxValue, yielding a negative part count
-      // and a silently EMPTY final object.
-      val nParts = (bytes.length - 1) / cap + 1
-      (0 until nParts).foreach { i =>
-        val off = i * cap
-        put(new Path(staging, f"part-$i%05d"), bytes, off,
-          math.min(cap, bytes.length - off))
-      }
-      // complete: assemble parts into the final object, then drop staging
-      var out: OutputStream = null
-      try {
-        out = fs.create(p, true)
-        (0 until nParts).foreach { i =>
-          val in = fs.open(new Path(staging, f"part-$i%05d"))
-          try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-          finally in.close()
-        }
-      } finally if (out != null) out.close()
-      fs.delete(staging, true)
+      case fs =>
+        val out = fs.create(p, true)
+        try out.write(bytes) finally out.close()
     }
   }
 }
 
 object HadoopBlobStore {
-  /** S3's published single-PUT object limit. */
-  val S3SinglePutLimit: Long = 5L * 1024 * 1024 * 1024
-
   /** Write `bytes` to a hidden sibling of `target`, then rename it over
     * `target` atomically; a failed write removes its temp file.
     */

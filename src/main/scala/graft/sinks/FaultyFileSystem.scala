@@ -68,25 +68,17 @@ class FaultyLocalFileSystem extends RawLocalFileSystem {
 }
 
 object FaultyLocalFileSystem {
-  private val skipRemaining = new AtomicInteger(0)
   private val faultsRemaining = new AtomicInteger(0)
   val faultsFired = new AtomicInteger(0)
 
   /** Arm the next `n` creates (JVM-wide — executors share the JVM in
-    * local mode) to fail after writing a partial object. `skipFirst`
-    * lets the first k creates through unharmed — used to land the fault
-    * MID-sequence (e.g. on part 3 of a multipart upload) instead of on
-    * the first write.
+    * local mode) to fail after writing a partial object.
     */
-  def armFaults(n: Int, skipFirst: Int = 0): Unit = {
+  def armFaults(n: Int): Unit = {
     faultsFired.set(0)
-    skipRemaining.set(skipFirst)
     faultsRemaining.set(n)
   }
 
-  private def takeFault(): Boolean = {
-    if (skipRemaining.getAndUpdate(x => math.max(0, x - 1)) > 0) return false
-    val left = faultsRemaining.getAndUpdate(x => math.max(0, x - 1))
-    left > 0
-  }
+  private def takeFault(): Boolean =
+    faultsRemaining.getAndUpdate(x => math.max(0, x - 1)) > 0
 }

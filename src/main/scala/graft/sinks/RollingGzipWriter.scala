@@ -75,6 +75,14 @@ object RollingGzipWriter {
       minTstampMicros: Option[Long] = None,
       putMillis: Double = 0.0)
 
+  /** The largest `maxBytes` a writer can honour. An object is built in one
+    * `ByteArrayOutputStream` and copied once by `toByteArray`, and a JVM
+    * array holds under 2 GiB, so a bound near that fails with
+    * `OutOfMemoryError` instead of rolling. `LoaderConfig.validate`
+    * rejects a larger `batching.maxBytes`.
+    */
+  val MaxObjectBytes: Long = 1L << 30
+
   final case class SinkConfig(
       basePath: String,
       prefix: String = "",

@@ -81,24 +81,24 @@ object RecordSources {
       region: String,
       env: String => Option[String] = sys.env.get): Either[String, Kinesis] = {
     val root = graft.config.Hocon.parse(text, env)
+    val d = Kinesis(streamName = "", region = region)
     for {
       stream <- root.str("input", "streamName")
         .toRight("Missing required field: input.streamName")
-      pos = root.str("input", "initialPosition", "type").getOrElse("LATEST")
+      pos = root.str("input", "initialPosition", "type").getOrElse(d.initialPosition)
       _ <- pos match {
         case "LATEST" | "TRIM_HORIZON" | "AT_TIMESTAMP" => Right(())
         case other => Left(s"Unknown initialPosition.type: $other")
       }
-    } yield Kinesis(
+    } yield d.copy(
       streamName = stream,
-      region = region,
       initialPosition = pos,
       initialTimestamp = root.str("input", "initialPosition", "timestamp"),
       maxRecords = root.num("input", "retrievalMode", "maxRecords")
-        .map(_.toInt).getOrElse(750),
+        .map(_.toInt).getOrElse(d.maxRecords),
       idleTimeBetweenReadsMs =
         root.duration("input", "retrievalMode", "idleTimeBetweenReads")
-          .map(_.toMillis).getOrElse(1500L))
+          .map(_.toMillis).getOrElse(d.idleTimeBetweenReadsMs))
   }
 
   /** Kafka: built-in connector, value column already binary. */

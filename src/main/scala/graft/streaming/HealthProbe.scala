@@ -10,6 +10,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
+import graft.config.HealthProbeConfig
+
 /** Per-service health registry (reference RuntimeService: BlobSink /
   * BadSink / source are marked unhealthy INDIVIDUALLY on failure —
   * Processing.scala:327-329 — and healthy again on recovery). Shared
@@ -47,8 +49,9 @@ object ServiceHealth {
   * Also serves the prometheus scrape at GET /metrics when built with a
   * metrics handle (reference Metrics.scrape).
   */
-final class HealthProbe(unhealthyLatency: FiniteDuration = 2.minutes,
-    port: Int = 8000,
+final class HealthProbe(
+    unhealthyLatency: FiniteDuration = HealthProbeConfig().unhealthyLatency,
+    port: Int = HealthProbeConfig().port,
     services: ServiceHealth = new ServiceHealth,
     metrics: Option[LoaderPipeline.Metrics] = None,
     errors: Option[ErrorReporter] = None)

@@ -45,9 +45,7 @@ class BlobStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a file:// write creates missing parent directories and stores the exact bytes") {
     val dir = Files.createTempDirectory("blob_local")
-    // a cap far below the object: a local file has no single-PUT limit,
-    // so no multipart staging happens
-    val store = new HadoopBlobStore(Map.empty, maxSinglePutBytes = 16)
+    val store = new HadoopBlobStore(Map.empty)
     val bytes = bytesOf(1000, 1)
     val target = dir.resolve("a/b/c/obj.gz")
     store.write(target.toUri.toString, bytes)

@@ -84,84 +84,25 @@ class FaultInjectionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(metrics.count.get() == lines.size)
   }
 
-  test("an object above the single-PUT cap uploads multipart; a mid-chunk death + retry converges") {
-    // r7 verdict task 8: the reference uploads one buffer per object —
-    // at 100 TB a shard exceeds S3's 5 GiB single-PUT limit. With the
-    // cap forced tiny, every loader object takes the multipart route;
-    // the injected fault kills a task in the middle of the part
-    // sequence (partial staging garbage left behind), and the retried
-    // task must re-stage, re-complete, and leave exactly-once content
-    // with no .mpu staging surviving.
-    val dir = Files.createTempDirectory("s3x_multipart").toString
-    val cfg = LoaderConfig(Purpose.Enriched,
-      Output(s"s3x://$dir/good", idempotentNames = true),
-      BadOutput(s"s3x://$dir/bad"))
-    val lines = (1 to 50).map(i => tsv(f"1970-01-01 00:00:$i%02.0f.000", s"id-$i"))
-
-    // cap of 64 bytes: every gzipped object needs several parts
-    val store = new HadoopBlobStore(fsConf, maxSinglePutBytes = 64)
-    val metrics = new LoaderPipeline.Metrics
-    // one fault (a part create dies, partial staging left); the task
-    // retry must re-stage and complete — two faults would kill both
-    // attempts of the same task under local[4, 2]'s single-retry budget
-    FaultyLocalFileSystem.armFaults(1)
-    LoaderPipeline.runBatch(rawDf(lines), cfg, store, metrics, () => fixedNow,
-      batchId = Some(43L))
-    assert(FaultyLocalFileSystem.faultsFired.get() == 1,
-      "expected the injected fault to hit the multipart write path")
-
-    val goodDir = new java.io.File(s"$dir/good")
-    val goodFiles = goodDir.listFiles().toSeq.filter(_.getName.endsWith(".gz"))
-    assert(goodFiles.nonEmpty)
-    // the multipart route genuinely ran: final objects exceed the cap
-    assert(goodFiles.exists(_.length > 64),
-      s"no object above the 64-byte cap — multipart path not exercised")
-    val written = goodFiles
-      .flatMap(f => gunzip(Files.readAllBytes(f.toPath)).linesIterator)
-    assert(written.sorted == lines.sorted,
-      s"expected ${lines.size} unique lines, got ${written.size} " +
-        s"(${written.distinct.size} distinct)")
-    assert(!written.exists(_.contains("partial-garbage")))
-    // no staging dir survived completion or retry
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) :+ f else Seq(f)
-    assert(!walk(new java.io.File(dir)).exists(_.getName.contains(".mpu")),
-      "multipart staging leaked")
-    // part-listing sweep (r8 verdict #7): after retry converges, the
-    // FULL recursive listing holds final objects only — an orphan
-    // part-NNNNN anywhere means an aborted upload leaked storage that
-    // S3 would bill forever (real S3: AbortIncompleteMultipartUpload
-    // lifecycle; here: the retry's staging delete)
-    val orphans = walk(new java.io.File(dir)).filter(f =>
-      f.isFile && (f.getName.startsWith("part-") || f.getName.contains(".mpu")))
-    assert(orphans.isEmpty, s"orphan part objects survived: $orphans")
-    assert(metrics.count.get() == lines.size)
-  }
-
-  test("multipart retry after a MID-sequence part death reuses nothing stale (store-level)") {
-    // deterministic mid-chunk coverage the loader test can't give (task
-    // scheduling interleaves creates): write one 10-part object, fault
-    // part 3 of the first attempt, then retry the same write() — the
-    // retry must discard the first attempt's staging (parts 0-2), not
-    // assemble a mix of generations
-    val dir = Files.createTempDirectory("s3x_mpu_unit").toString
-    val store = new HadoopBlobStore(fsConf, maxSinglePutBytes = 100)
+  test("a store-level mid-PUT death: the retry stores exact bytes") {
+    // the Hadoop put without Spark: the faulted create leaves partial
+    // garbage at the key and throws, and the retried write() must replace
+    // it with the exact bytes, leaving nothing else in the store
+    val dir = Files.createTempDirectory("s3x_put_unit").toString
+    val store = new HadoopBlobStore(fsConf)
     val bytes = Array.tabulate[Byte](1000)(i => (i % 251).toByte)
-    FaultyLocalFileSystem.armFaults(1, skipFirst = 3)
+    val target = java.nio.file.Paths.get(s"$dir/big.bin")
+    FaultyLocalFileSystem.armFaults(1)
     intercept[java.io.IOException] {
       store.write(s"s3x://$dir/big.bin", bytes)
     }
     assert(FaultyLocalFileSystem.faultsFired.get() == 1)
-    // first attempt left staging parts behind (the failure mode)
-    assert(new java.io.File(s"$dir/big.bin.mpu").exists())
+    // the failed attempt left its partial object at the key
+    assert(new String(Files.readAllBytes(target), "UTF-8") == "partial-garbage")
     // at-least-once retry
     store.write(s"s3x://$dir/big.bin", bytes)
-    val got = Files.readAllBytes(java.nio.file.Paths.get(s"$dir/big.bin"))
-    assert(java.util.Arrays.equals(got, bytes), "assembled content differs")
-    assert(!new java.io.File(s"$dir/big.bin.mpu").exists(), "staging leaked")
-    // exhaustive part listing: the converged store holds the final
-    // object and NOTHING else — the aborted first attempt's parts 0-2
-    // must all be gone, not just the staging dir node
+    assert(java.util.Arrays.equals(Files.readAllBytes(target), bytes),
+      "retried content differs")
     def walkAll(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walkAll) else Seq(f)
     val listing = walkAll(new java.io.File(dir)).map(_.getName).sorted

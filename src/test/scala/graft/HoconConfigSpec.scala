@@ -90,6 +90,37 @@ class HoconConfigSpec extends AnyFunSuite {
     assert(c.output.partitionFormat.contains("{vendor}.{schema}"))
   }
 
+  test("batching.maxBytes above 1 GiB is rejected when read; 64 MiB decodes") {
+    def withMaxBytes(n: Long) = LoaderConfig.fromHocon(
+      s"""{"purpose": "ENRICHED_EVENTS", "batching": {"maxBytes": $n},
+         | "output": {"good": {"path": "s3://x/"}, "bad": {"streamName": "b"}}}""".stripMargin)
+    val tooBig = withMaxBytes(1L << 31)
+    assert(tooBig.isLeft)
+    assert(tooBig.left.toOption.get.contains("batching.maxBytes 2147483648"))
+    assert(withMaxBytes(64L << 20).map(_.batching.maxBytes) == Right(64L << 20))
+  }
+
+  test("a config with only the required fields decodes to the case-class defaults") {
+    val text =
+      """{"purpose": "ENRICHED_EVENTS",
+        | "output": {"good": {"path": "s3://x/"}, "bad": {"streamName": "b"}},
+        | "input": {"streamName": "s"},
+        | "monitoring": {"metrics": {"statsd": {"hostname": "h"}}}}""".stripMargin
+    val c = LoaderConfig.fromHocon(text).toOption.get
+    assert(c == LoaderConfig(Purpose.Enriched, Output("s3://x/"), BadOutput("b")))
+    assert(LoaderConfig.healthProbeFromHocon(text) == HealthProbeConfig())
+    assert(LoaderConfig.statsdFromHocon(text).contains(
+      graft.streaming.MetricsEmitter.StatsdConfig("h")))
+    assert(graft.sources.RecordSources.kinesisFromHocon(text, "r") ==
+      Right(graft.sources.RecordSources.Kinesis("s", "r")))
+    // the defaults are the reference.conf values
+    assert(c.batching.maxBytes == 67108864L && c.batching.maxDelay == 2.minutes)
+    assert(c.bad.maxRecordSize == 1000000 && c.bad.recordLimit == 500)
+    assert(c.bad.byteLimit == 5242880L)
+    assert(c.decompression.maxBytesInBatch == 5242880L)
+    assert(HealthProbeConfig() == HealthProbeConfig(8000, 2.minutes))
+  }
+
   test("HOCON subset: comments, key-brace syntax, duplicate-key merge, env substitution") {
     val c = Hocon.parse(
       """{
