@@ -223,7 +223,7 @@ object Bench {
       (name, min, ok, spread, times.map(_._1))
     }
     // Loader-path throughput: the production dataflow end-to-end (decode →
-    // parse → salted repartition → rolling gzip objects on disk), timed as
+    // parse → keyed repartition → rolling gzip objects on disk), timed as
     // its own entry — and run `runsPerQuery` times like every query (its
     // r6 spread was a hard-coded 1.0 that read as "perfectly stable" when
     // max/min was never measured).

@@ -78,9 +78,4 @@ object EventParser {
 
   def parse(lines: DataFrame, enriched: Boolean): DataFrame =
     if (enriched) parseEnriched(lines) else parseSdj(lines)
-
-  /** The good rows of a parsed plan (reference P4, Processing.scala:118-134):
-    * those with a null `bad_error`.
-    */
-  def good(parsed: DataFrame): DataFrame = parsed.filter(col("bad_error").isNull)
 }

@@ -58,10 +58,11 @@ import graft.model.SchemaKey
   * content is identical.
   *
   * Scale note: the reference bounds the whole in-flight batch because it
-  * is a single-node loader; here each (schema-group × task) rolls its own
-  * files, which is the property that actually matters at 1000 executors —
-  * no coordination, bounded memory per task (one object buffer plus the
-  * capped blocks in flight).
+  * is a single-node loader; here each schema group of a batch is written
+  * by one task that rolls its own files at maxBytes, which is the property
+  * that actually matters at 1000 executors — no coordination, bounded
+  * memory per task (one object buffer plus the capped blocks in flight).
+  * A hot group's blocks deflate on the task slots its batch leaves idle.
   */
 object RollingGzipWriter {
 

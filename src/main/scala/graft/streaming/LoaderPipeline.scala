@@ -28,18 +28,17 @@ import graft.sources.Decompression
   *    so both failure kinds reach the same bad-row output
   *  - batchUpAndCompress  → micro-batch boundary + RollingGzipWriter
   *    (maxDelay ⇒ Trigger.ProcessingTime; maxBytes ⇒ compressed rolling)
-  *  - writeToStorage + sendBadEvents → one shared write, 3 Spark jobs per
-  *    batch: a size pre-pass job sizes the salt, then good and bad rows
-  *    share one `repartitionById` shuffle (map job, then write job) into
-  *    `defaultParallelism` partitions — a good row at hash(schema) + salt,
-  *    a bad row at hash(payload) — and each partition writes its schema
-  *    runs as rolling gzip objects and its bad rows as size-capped bad-row
-  *    JSON to the bad store. The distributed analogue of the reference's
-  *    parTraverse per group (Processing.scala:287-289): a batch's schema
-  *    groups spread over every core, and the salt splits one hot schema key
-  *    (the enriched path maps EVERY event to atomic) over distinct
-  *    partitions once its volume passes maxBytes; below that, its one task
-  *    deflates the group's blocks on the slots its siblings leave idle
+  *  - writeToStorage + sendBadEvents → one shared write, 2 Spark jobs per
+  *    batch: good and bad rows share one `repartitionById` shuffle (map
+  *    job, then write job) into `defaultParallelism` partitions — a good
+  *    row at hash(schema), a bad row at hash(payload) — and each partition
+  *    writes its schema runs as rolling gzip objects and its bad rows as
+  *    size-capped bad-row JSON to the bad store. The distributed analogue
+  *    of the reference's parTraverse per group (Processing.scala:287-289):
+  *    a batch's schema groups spread over every core, each group is
+  *    written by one task that rolls at maxBytes, and a hot group (the
+  *    enriched path maps EVERY event to atomic) deflates its blocks on the
+  *    slots its siblings leave idle
   *  - emitTokens          → Structured Streaming checkpoint commit: offsets
   *    commit only after foreachBatch returns ⇒ same at-least-once contract
   *    (reference Processing.scala:74-77,333-336)
@@ -101,14 +100,14 @@ object LoaderPipeline {
     * and bad rows in one write job, update metrics. `now` is injectable for
     * deterministic tests (reference tests pin the clock, ProcessingSpec e4).
     */
-  def writeBatch(
+  private def writeBatch(
       parsed: DataFrame,
       cfg: LoaderConfig,
       store: BlobStore,
       metrics: Metrics,
-      now: () => Instant = () => Instant.now(),
-      health: ServiceHealth = new ServiceHealth,
-      batchId: Option[Long] = None): Unit = {
+      now: () => Instant,
+      health: ServiceHealth,
+      batchId: Option[Long]): Unit = {
     import parsed.sparkSession.implicits._
     val wallClock = now()
     // deterministic object names per (batch, partition, group, file):
@@ -116,134 +115,104 @@ object LoaderPipeline {
     val nameSeed: Option[String] =
       if (cfg.output.idempotentNames) batchId.map(id => s"b$id") else None
 
-    // One decode+parse materialization serves the size pre-pass and the
-    // write — without this, the write would re-scan and re-parse the
-    // entire batch (at 100 TB: a full extra pass).
-    parsed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sinkCfg = RollingGzipWriter.SinkConfig(
-        cfg.output.path, cfg.output.prefix, cfg.output.partitionFormat,
-        cfg.batching.maxBytes, timestampedNames = nameSeed.isEmpty)
-      // Chunking contract (reference Processing.scala:315-331): the bad sink
-      // bounds each emission to recordLimit records / byteLimit bytes — the
-      // Kinesis PutRecords limits (config.aws.reference.hocon). Here each
-      // chunk is one object: the record bound is exact, and the byte bound
-      // applies to the object's COMPRESSED size (soft, like maxBytes: it may
-      // overshoot by one record), so an object's raw content can exceed
-      // byteLimit by the gzip ratio.
-      val badSinkCfg = RollingGzipWriter.SinkConfig(
-        cfg.bad.path, "bad-", None,
-        math.min(cfg.batching.maxBytes, cfg.bad.byteLimit),
-        cfg.bad.recordLimit.toLong, timestampedNames = nameSeed.isEmpty)
+    val sinkCfg = RollingGzipWriter.SinkConfig(
+      cfg.output.path, cfg.output.prefix, cfg.output.partitionFormat,
+      cfg.batching.maxBytes, timestampedNames = nameSeed.isEmpty)
+    // Chunking contract (reference Processing.scala:315-331): the bad sink
+    // bounds each emission to recordLimit records / byteLimit bytes — the
+    // Kinesis PutRecords limits (config.aws.reference.hocon). Here each
+    // chunk is one object: the record bound is exact, and the byte bound
+    // applies to the object's COMPRESSED size (soft, like maxBytes: it may
+    // overshoot by one record), so an object's raw content can exceed
+    // byteLimit by the gzip ratio.
+    val badSinkCfg = RollingGzipWriter.SinkConfig(
+      cfg.bad.path, "bad-", None,
+      math.min(cfg.batching.maxBytes, cfg.bad.byteLimit),
+      cfg.bad.recordLimit.toLong, timestampedNames = nameSeed.isEmpty)
 
-      // Write parallelism. The shuffle always has `maxTasks` partitions:
-      // an explicit count is one adaptive execution does not coalesce, so
-      // a batch's schema groups hash over every core even when the batch is
-      // small (left to coalesce, a small batch's shuffle collapses to one
-      // task that makes every put in turn).
-      // Enriched batches all map to ONE schema key (SURVEY §1.2), which
-      // would still funnel through a single task, so one pass over the
-      // (persisted) batch sums its good line bytes — per-partition sums
-      // collected to the driver, one job with no exchange — to estimate
-      // the compressed output volume, and each good row gains a salt sized
-      // so each task writes roughly maxBytes. Small batches keep
-      // targetFiles=1, preserving the reference's one-object-per-group-per-
-      // window behavior (T2/F14).
-      val totalLineBytes: Long = EventParser.good(parsed)
-        .select(octet_length(col("line")).cast("long")).as[Long]
-        .mapPartitions(lens => Iterator.single(lens.sum))
-        .collect().sum
-      val maxTasks = math.max(1, parsed.sparkSession.sparkContext.defaultParallelism)
-      val targetFiles: Int = math.min(
-        maxTasks.toLong,
-        totalLineBytes / EstGzipRatio / math.max(1L, cfg.batching.maxBytes) + 1).toInt
-      // Below maxBytes a hot key still lands in one task (the backfill's
-      // whole good output), so the writer deflates a large group's blocks on
-      // a pool sized to one executor JVM's task slots, shared by its write
-      // tasks: the hot task uses the cores its empty siblings leave idle.
-      // Read per batch, so a local[1] session deflates inline.
-      val sc = parsed.sparkSession.sparkContext
-      val deflateThreads =
-        if (sc.isLocal) maxTasks
-        else sc.getConf.getInt("spark.executor.cores", 1) / sc.getConf.getInt("spark.task.cpus", 1)
+    // Write parallelism. The shuffle always has `maxTasks` partitions: an
+    // explicit count is one adaptive execution does not coalesce, so a
+    // batch's schema groups hash over every core even when the batch is
+    // small (left to coalesce, a small batch's shuffle collapses to one
+    // task that makes every put in turn). Each schema group is one task's
+    // run, rolling at maxBytes like the reference's one writer per group
+    // per window; a hot group (the enriched path maps EVERY event to one
+    // key, SURVEY §1.2) deflates its blocks on a pool sized to one
+    // executor JVM's task slots, shared by its write tasks, so it uses the
+    // cores its empty siblings leave idle. Read per batch, so a local[1]
+    // session deflates inline.
+    val sc = parsed.sparkSession.sparkContext
+    val maxTasks = math.max(1, sc.defaultParallelism)
+    val deflateThreads =
+      if (sc.isLocal) maxTasks
+      else sc.getConf.getInt("spark.executor.cores", 1) / sc.getConf.getInt("spark.task.cpus", 1)
 
-      // Good and bad rows share one shuffle and one write job (reference
-      // Processing.scala:101-134,315-331: one fold writes both). A good row
-      // goes to partition (hash(key, 0) + salt) mod maxTasks: the
-      // targetFiles ≤ maxTasks salts of one key land on distinct partitions
-      // (hash partitioning on the salt column could collide them), and
-      // hash(key, lit(0)) is the hash partitioner's own murmur3 of
-      // (key, salt = 0), so salt 0 — every small group — keeps the
-      // partition, and with it the idempotent object names, that plain hash
-      // partitioning gave it. A bad row goes to hash(payload) mod maxTasks.
-      // The shuffle carries `line` only for good rows and `payload` only for
-      // bad ones (a corrupt frame's bytes are not UTF-8, and a bad row must
-      // carry them unchanged to be replayable). Count + earliest tstamp
-      // accumulate inside the write itself (reference A2/A3,
-      // Processing.scala:108,167-173) — no stats pre-job. Each partition,
-      // sorted with its bad rows last, streams consecutive same-schema runs
-      // straight into the rolling writer and its bad run into the
-      // size-capped bad writer.
-      val isBad = col("bad_error").isNotNull
-      val toWrite = parsed.select(col("vendor"), col("name"), col("format"),
-        col("model"), when(!isBad, col("line")).as("line"),
-        unix_micros(col("collector_tstamp")).as("ts_us"),
-        when(isBad, col("payload")).as("payload"), col("bad_error"))
-      val keyHash = hash(col("vendor"), col("name"), col("format"),
-        col("model"), lit(0)).cast("long")
-      val salt = pmod(hash(col("line")), lit(targetFiles))
-      val partition = when(isBad, pmod(hash(col("payload")), lit(maxTasks)))
-        .otherwise(pmod(keyHash + salt, lit(maxTasks)))
-      val processor = BadRow.Processor("graft-loader", "0.1.0")
-      val maxSize = cfg.bad.maxRecordSize
-      def badJson(payload: Array[Byte], err: String): String =
-        BadRow.sizeCapped(BadRow.GenericError(processor, List(err), payload, wallClock),
-          maxSize, wallClock, processor)
+    // Good and bad rows share one shuffle and one write job (reference
+    // Processing.scala:101-134,315-331: one fold writes both), so a batch
+    // runs 2 Spark jobs — the shuffle-map job, which decodes and parses
+    // each record once, then the write job. A good row goes to
+    // hash(schema key) mod maxTasks, a bad row to hash(payload) mod
+    // maxTasks. The shuffle carries `line` only for good rows and `payload`
+    // only for bad ones (a corrupt frame's bytes are not UTF-8, and a bad
+    // row must carry them unchanged to be replayable). Count + earliest
+    // tstamp accumulate inside the write itself (reference A2/A3,
+    // Processing.scala:108,167-173) — no stats pre-job. Each partition,
+    // sorted with its bad rows last, streams consecutive same-schema runs
+    // straight into the rolling writer and its bad run into the
+    // size-capped bad writer.
+    val isBad = col("bad_error").isNotNull
+    val toWrite = parsed.select(col("vendor"), col("name"), col("format"),
+      col("model"), when(!isBad, col("line")).as("line"),
+      unix_micros(col("collector_tstamp")).as("ts_us"),
+      when(isBad, col("payload")).as("payload"), col("bad_error"))
+    val partition = pmod(
+      when(isBad, hash(col("payload")))
+        .otherwise(hash(col("vendor"), col("name"), col("format"), col("model"))),
+      lit(maxTasks))
+    val processor = BadRow.Processor("graft-loader", "0.1.0")
+    val maxSize = cfg.bad.maxRecordSize
+    def badJson(payload: Array[Byte], err: String): String =
+      BadRow.sizeCapped(BadRow.GenericError(processor, List(err), payload, wallClock),
+        maxSize, wallClock, processor)
 
-      // Per-service health (reference RuntimeService, Processing.scala:
-      // 327-329): a put failure degrades ONLY the sink that refused it —
-      // tasks tag it ([[SinkFailure]]) and the tag travels in the job's
-      // SparkException cause chain; a successful write marks both healthy.
-      val actions: Array[(String, RollingGzipWriter.WriteAction)] =
-        try {
-          toWrite
-            .repartitionById(maxTasks, partition.cast("int"))
-            .sortWithinPartitions(isBad, col("vendor"), col("name"),
-              col("format"), col("model"))
-            .mapPartitions { rows =>
-              writePartition(rows, store, sinkCfg, badSinkCfg, badJson,
-                wallClock, nameSeed, deflateThreads)
-            }
-            .collect()
-        } catch { case e: Throwable =>
-          Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-            .collectFirst { case f: SinkFailure => f.sink }
-            .foreach(health.markUnhealthy(_, String.valueOf(e.getMessage)))
-          throw e
-        }
-      health.markHealthy(ServiceHealth.BlobSink)
-      health.markHealthy(ServiceHealth.BadSink)
-
-      val good = actions.collect { case (ServiceHealth.BlobSink, a) => a }
-      val bad = actions.collect { case (ServiceHealth.BadSink, a) => a }
-      metrics.objectsWritten.addAndGet(good.length.toLong)
-      metrics.putMillis.addAndGet(math.round(good.map(_.putMillis).sum))
-      metrics.lastActions.set(good.toSeq)
-      metrics.count.addAndGet(good.map(_.recordCount).sum)
-      metrics.badCount.addAndGet(bad.map(_.recordCount).sum)
-      metrics.badPutMillis.addAndGet(math.round(bad.map(_.putMillis).sum))
-      val earliest = good.flatMap(_.minTstampMicros)
-      if (earliest.nonEmpty) {
-        metrics.e2eLatencyMillis.set(
-          Some(wallClock.toEpochMilli - earliest.min / 1000))
+    // Per-service health (reference RuntimeService, Processing.scala:
+    // 327-329): a put failure degrades ONLY the sink that refused it —
+    // tasks tag it ([[SinkFailure]]) and the tag travels in the job's
+    // SparkException cause chain; a successful write marks both healthy.
+    val actions: Array[(String, RollingGzipWriter.WriteAction)] =
+      try {
+        toWrite
+          .repartitionById(maxTasks, partition)
+          .sortWithinPartitions(isBad, col("vendor"), col("name"),
+            col("format"), col("model"))
+          .mapPartitions { rows =>
+            writePartition(rows, store, sinkCfg, badSinkCfg, badJson,
+              wallClock, nameSeed, deflateThreads)
+          }
+          .collect()
+      } catch { case e: Throwable =>
+        Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case f: SinkFailure => f.sink }
+          .foreach(health.markUnhealthy(_, String.valueOf(e.getMessage)))
+        throw e
       }
-    } finally parsed.unpersist()
-  }
+    health.markHealthy(ServiceHealth.BlobSink)
+    health.markHealthy(ServiceHealth.BadSink)
 
-  /** Conservative gzip ratio for sizing the write fan-out: underestimating
-    * compression means slightly more, smaller tasks — never a single fat one.
-    */
-  private val EstGzipRatio = 3L
+    val good = actions.collect { case (ServiceHealth.BlobSink, a) => a }
+    val bad = actions.collect { case (ServiceHealth.BadSink, a) => a }
+    metrics.objectsWritten.addAndGet(good.length.toLong)
+    metrics.putMillis.addAndGet(math.round(good.map(_.putMillis).sum))
+    metrics.lastActions.set(good.toSeq)
+    metrics.count.addAndGet(good.map(_.recordCount).sum)
+    metrics.badCount.addAndGet(bad.map(_.recordCount).sum)
+    metrics.badPutMillis.addAndGet(math.round(bad.map(_.putMillis).sum))
+    val earliest = good.flatMap(_.minTstampMicros)
+    if (earliest.nonEmpty) {
+      metrics.e2eLatencyMillis.set(
+        Some(wallClock.toEpochMilli - earliest.min / 1000))
+    }
+  }
 
   /** A put that `sink` (a [[ServiceHealth]] service name) refused, thrown
     * from a write task so the driver can tell which sink failed.
@@ -255,8 +224,8 @@ object LoaderPipeline {
     * (seed=batchId, shuffle partition, schema key, file ordinal); the bad
     * run of a partition uses the key ("bad", "", "", 0). Same batch data +
     * same partitioning ⇒ same names on replay. The write shuffle's
-    * partition count and `targetFiles` both follow `defaultParallelism`,
-    * so names are stable across replays only while it stays fixed.
+    * partition count follows `defaultParallelism`, so names are stable
+    * across replays only while it stays fixed.
     */
   private def uuidFactory(
       nameSeed: Option[String],
@@ -340,7 +309,7 @@ object LoaderPipeline {
       metrics: Metrics,
       now: () => Instant = () => Instant.now(),
       batchId: Option[Long] = None): Unit =
-    writeBatch(classify(df, cfg), cfg, store, metrics, now, batchId = batchId)
+    writeBatch(classify(df, cfg), cfg, store, metrics, now, new ServiceHealth, batchId)
 
   /** Streaming entry: micro-batches flush at maxDelay — the reference's
     * time-bound batch emission (T3); offsets commit after each batch ⇒
@@ -355,8 +324,7 @@ object LoaderPipeline {
       health: ServiceHealth = new ServiceHealth): DataStreamWriter[Row] = {
     val w = df.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        writeBatch(classify(batch, cfg), cfg, store, metrics, now, health,
-          batchId = Some(id))
+        writeBatch(classify(batch, cfg), cfg, store, metrics, now, health, Some(id))
       }
       .trigger(Trigger.ProcessingTime(cfg.batching.maxDelay.toMillis))
     cfg.checkpointLocation.fold(w)(p => w.option("checkpointLocation", p))

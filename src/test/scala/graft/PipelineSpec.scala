@@ -154,29 +154,36 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(metrics.count.get() == 8)
   }
 
-  test("salted write fan-out: a large single-schema batch writes from multiple tasks") {
-    // maxBytes high enough that the rolling writer alone would emit ONE
-    // object — any extra objects can only come from the salted fan-out.
+  test("a large single-schema batch rolls at maxBytes from one write task") {
+    // 200 lines of one schema key, each padded with 32 hex digits that do
+    // not compress, come to several times maxBytes: the group's one writer
+    // must roll
     val cfg = LoaderConfig(Purpose.Enriched, Output("mem://path"),
       BadOutput("mem://bad"), Batching(maxBytes = 2000))
     val lines = (0 until 200).map(i =>
-      tsv(f"1970-01-01 00:${i / 60}%02d:${i % 60}%02d.000") + s"-pad-${i * 7919}")
+      tsv(f"1970-01-01 00:${i / 60}%02d:${i % 60}%02d.000") +
+        s"-pad-${java.util.UUID.nameUUIDFromBytes(s"$i".getBytes("UTF-8"))}")
     PipelineSpec.goodPutPartitions.clear()
     val store = new InMemoryBlobStore
     val metrics = new LoaderPipeline.Metrics
     LoaderPipeline.runBatch(rawDf(lines), cfg,
       new PipelineSpec.PartitionRecordingStore(store), metrics, () => fixedNow)
 
-    // every event maps to the atomic schema, yet its objects were put from
-    // several tasks — the enriched hot key no longer serializes on one task
-    assert(store.paths.size > 1)
-    assert(PipelineSpec.goodPutPartitions.size >= 2,
+    // every event maps to the atomic schema: one task writes the group
+    assert(PipelineSpec.goodPutPartitions.size == 1,
       s"good puts came from partitions ${PipelineSpec.goodPutPartitions}")
-    // no object reached the size bound, so no extra object is a roll
-    assert(store.paths.forall(p => store.objects.get(p).length <= cfg.batching.maxBytes))
-    val all = store.paths.flatMap(p => gunzip(store.objects.get(p)).linesIterator)
-    assert(all.toSet == lines.toSet) // no loss, no duplication across salts
-    assert(all.size == 200)
+    // objects come back in write order (uuid names sort randomly)
+    val objects = metrics.lastActions.get().map(a => store.objects.get(a.path))
+    assert(objects.size > 1)
+    // each object but the last passed maxBytes (it rolled there), and none
+    // passed it by more than one record plus gzip framing
+    val maxLine = lines.map(_.length + 1).max
+    assert(objects.init.forall(_.length > cfg.batching.maxBytes),
+      s"object sizes ${objects.map(_.length)}")
+    assert(objects.forall(_.length <= cfg.batching.maxBytes + maxLine + 64),
+      s"object sizes ${objects.map(_.length)}")
+    val all = objects.flatMap(b => gunzip(b).linesIterator)
+    assert(all.sorted == lines.sorted) // each line exactly once
     assert(metrics.count.get() == 200)
     assert(metrics.e2eLatencyMillis.get().contains(0L)) // min ts = epoch
   }
@@ -392,7 +399,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("one write job: a batch with good and bad rows runs at most 3 Spark jobs") {
+  test("one write job: a batch with good and bad rows runs at most 2 Spark jobs") {
     val cfg = LoaderConfig.validate(LoaderConfig(
       Purpose.Sdj, Output("mem://path"), BadOutput("mem://bad"))).toOption.get
     val sc = spark.sparkContext
@@ -424,7 +431,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(metrics.count.get() == 8 && metrics.badCount.get() == 2)
     assert(store.paths.exists(_.startsWith("mem://bad")))
-    assert(jobs.get() > 0 && jobs.get() <= 3, s"${jobs.get()} jobs for one batch")
+    assert(jobs.get() > 0 && jobs.get() <= 2, s"${jobs.get()} jobs for one batch")
   }
 
   test("decompression errors become bad rows end-to-end") {
