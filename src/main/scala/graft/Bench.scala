@@ -1,17 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Bench entry: runs the query surface on SPARK_GRAFT_SF_DIR and prints,
-  * as its LAST stdout line, the driver contract line — ONE JSON object
-  * with "metric"/"value"/"unit"/"queries"/"sf" carrying the complete
+/** Bench entry: runs the query surface on SPARK_GRAFT_SF_DIR and prints
+  * one stdout line, the driver contract line — ONE JSON object with
+  * "metric"/"value"/"unit"/"queries"/"sf" carrying the complete
   * name-keyed per-query map (r12; reaches the driver RAW because
   * build.sbt sets run/outputStrategy := StdoutOutput — sbt's default
   * "[info] " logger prefix is what made every previous round's output
-  * unparseable driver-side, r1's exact contract line included). Compact
-  * chunked/positional diagnostic lines still print before it for
-  * tail-window readers, and the full artifact (runs arrays, sentinel
-  * series, resweep, scaling) goes to BENCH_FULL.json. Optional env:
+  * unparseable driver-side, r1's exact contract line included). The full
+  * artifact (spreads, runs arrays, sentinel series, resweep, top-5
+  * isolated, scaling) goes to BENCH_FULL.json. Optional env:
   *   SPARK_GRAFT_QUERIES=q01,q02  — run a subset (profiling aid)
   *   SPARK_GRAFT_RUNS=N           — base runs per query (default 2)
   *   SPARK_GRAFT_EXPLAIN=1        — print each formatted plan to stderr
@@ -42,16 +39,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.Extensions)
     // PrefixSum's offsets window (q06/q63) runs over #blocks rows by
     // design; Spark's blanket single-partition-window warning is noise
     // for it and would otherwise land in the recorded bench tail.
@@ -473,29 +461,6 @@ object Bench {
     val total = all.collect { case (_, v, true, _, _) => v }.sum
     val failed = all.count(!_._3)
 
-    // The driver records only the process TAIL and json-parses the last
-    // line. r6/r7 both lost timings to oversized lines (r7: one ~5 KB
-    // summary line, truncated mid-map — 126 of 205 timings gone). So:
-    // (1) every map is chunked into ≤ ~2 KB lines, (2) the LAST line is
-    // a SHORT all-scalar totals line that always survives and parses,
-    // (3) the complete single-object artifact goes to a file for full
-    // fidelity regardless of tail size.
-    def chunks(es: Seq[String], cap: Int = 1800): Seq[String] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[StringBuilder]
-      es.foreach { e =>
-        if (out.isEmpty || out.last.length + e.length + 1 > cap)
-          out += new StringBuilder(e)
-        else out.last.append(',').append(e)
-      }
-      out.map(_.result()).toSeq
-    }
-    def emitChunked(metric: String, key: String, es: Seq[String]): Int = {
-      val cs = chunks(es)
-      cs.zipWithIndex.foreach { case (c, i) =>
-        println(s"""{"metric":"${metric}_${i + 1}of${cs.size}","$key":{$c},"sf":"$sfDir"}""")
-      }
-      cs.size
-    }
     val (sentinelMedian, contended) = contentionStamp(sentinelSeries.toSeq)
     if (contended) System.err.println(
       s"[bench] CONTENDED run: sentinel median ${num(sentinelMedian)} s > " +
@@ -520,55 +485,8 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $fullPath: ${e.getMessage}")
     }
-    emitChunked("spread", "spread", spEntries)
-    emitChunked("queries", "queries", qEntries)
-    // sentinel + top5 print BEFORE the tail block below: they are
-    // diagnostics, not the record — anything after this point is sized
-    // to survive the driver's real capture window
-    println(s"""{"metric":"sentinel","series":$sentinelJson,"sf":"$sfDir"}""")
-    println(s"""{"metric":"top5_isolated","queries":$top5Json,"sf":"$sfDir"}""")
-    println(s"""{"metric":"scaling","value":$scalingJson,"sf":"$sfDir"}""")
-    // Tail-proof rendering, round 3 (r9 verdict #4): the driver's REAL
-    // capture window measured 2000 chars (r9 artifact) — including sbt's
-    // "[info] " prefixes and its trailing "[success] ..." line (~75
-    // chars), so the short-key name:value copy (~2.5 KB) could never
-    // fully fit and chunk 1of2 was truncated in r7, r8 AND r9. What DOES
-    // fit: a POSITIONAL centisecond array over the canonical entry order
-    // (query names sorted ascending, loader_batch_sink last — the same
-    // order as every map in this output and the artifact) is ~1 KB for
-    // 220 entries. It prints immediately before the totals line, so the
-    // last ~1.3 KB of the log reconstructs every entry exactly; the
-    // name-keyed chunks above and the artifact file carry the names.
-    // -1 centiseconds marks a failed query (never a timing).
-    val shortOf: Map[String, String] = {
-      val cands = all.map { case (k, _, _, _, _) => k -> k.takeWhile(_ != '_') }
-      val collide = cands.groupBy(_._2).filter(_._2.size > 1).keySet
-      cands.map { case (k, sh) => k -> (if (collide(sh)) k else sh) }.toMap
-    }
-    val qShort = all.map { case (k, v, ok, _, _) =>
-      "\"" + shortOf(k) + "\":" + (if (ok) num(v) else "\"failed\"") }
-    val nChunks = emitChunked("queries_short", "queries", qShort)
-    val qcs = all.map { case (_, v, ok, _, _) =>
-      if (ok) math.round(v * 100).toString else "-1" }
-    // 900-char cap: even at double today's query count the qcs block +
-    // totals line + sbt's success line stay inside a 2000-char capture
-    val csChunks = chunks(qcs, cap = 900)
-    csChunks.zipWithIndex.foreach { case (c, i) =>
-      println(s"""{"metric":"qcs_${i + 1}of${csChunks.size}","unit":"centisec",""" +
-        s""""order":"name-sorted+loader","v":[$c]}""")
-    }
-    println(s"""{"metric":"total","value":${num(total)},"unit":"sec","failed":$failed,""" +
-      s""""runs_per_query":$runsPerQuery,"n_queries":${all.size},"contended":$contended,""" +
-      s""""query_chunks":$nChunks,"full_artifact":"$fullPath","sf":"$sfDir"}""")
-    // THE driver contract line (r12 measurement fix, documented in
-    // OPTIMIZATION_r12.md): ONE JSON line carrying the COMPLETE name-keyed
-    // queries map, printed LAST so a scan-for-the-last-JSON-line reader
-    // lands on it. r11's PERF artifact proved the driver parsed NO chunked
-    // variant (per_query came back empty; "parsed":null in every BENCH_r*
-    // record back to r1, whose single line matched this shape already and
-    // differed only by sbt's "[info] " prefix — removed via
-    // run/outputStrategy in build.sbt). The chunked/positional diagnostics
-    // above are kept unchanged for tail-window readers and tools/.
+    // The contract line (r12, OPTIMIZATION_r12.md): the only stdout line,
+    // ONE raw JSON object carrying the complete name-keyed queries map.
     println(s"""{"metric":"total","value":${num(total)},"unit":"sec","failed":$failed,""" +
       s""""runs_per_query":$runsPerQuery,"n_queries":${all.size},"contended":$contended,""" +
       s""""sentinel_median":${num(sentinelMedian)},"full_artifact":"$fullPath",""" +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.config._
@@ -38,7 +37,7 @@ object LoaderDemo {
     println(s"[demo] config: purpose=${cfg.purpose} out=${cfg.output.path} " +
       s"partition=${cfg.output.partitionFormat} maxBytes=${cfg.batching.maxBytes} " +
       s"maxDelay=${cfg.batching.maxDelay}")
-    val spark = session()
+    val spark = GraftSession()
     val line = if (cfg.purpose == Purpose.Enriched) Synth.enrichedLine() else Synth.sdjLine()
     val raw = Synth.events(spark, sfDir).select(encode(line, "utf-8").as("value"))
     val store = new HadoopBlobStore(Map.empty)
@@ -49,24 +48,13 @@ object LoaderDemo {
     spark.stop()
   }
 
-  private def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   private def streamMain(args: Array[String]): Unit = {
     val inDir = args.headOption.getOrElse("/tmp/loader_in")
     val outDir = if (args.length > 1) args(1) else "/tmp/loader_stream"
     val purpose = Purpose.parse(
       if (args.length > 2) args(2) else "SELF_DESCRIBING"
     ).fold(e => throw new IllegalArgumentException(e), identity)
-    val spark = session()
+    val spark = GraftSession()
 
     // full monitoring stack: per-service health + /health + /metrics
     // scrape, stream latency from query progress, optional statsd push
@@ -121,7 +109,7 @@ object LoaderDemo {
       if (args.length > 2) args(2) else "SELF_DESCRIBING"
     ).fold(e => throw new IllegalArgumentException(e), identity)
 
-    val spark = session()
+    val spark = GraftSession()
 
     val line = if (purpose == Purpose.Enriched) Synth.enrichedLine() else Synth.sdjLine()
     val raw = Synth.events(spark, sfDir)

@@ -7,9 +7,8 @@ import org.apache.spark.sql.functions._
   * Kinesis via the KCL (config surface at
   * config/config.aws.reference.hocon:7-64); in Spark the same stream
   * arrives as a streaming DataFrame with a binary `value` column — the
-  * shape shared by the Kafka source, Kinesis DSv2 connectors, and the
-  * in-repo file/memory sources. Everything downstream of [[build]] is
-  * source-agnostic.
+  * shape shared by Kinesis DSv2 connectors and the in-repo file/memory
+  * sources. Everything downstream of [[build]] is source-agnostic.
   */
 object RecordSources {
 
@@ -101,15 +100,10 @@ object RecordSources {
           .map(_.toMillis).getOrElse(d.idleTimeBetweenReadsMs))
   }
 
-  /** Kafka: built-in connector, value column already binary. */
-  final case class Kafka(bootstrapServers: String, topic: String)
-      extends SourceConfig
-
-  /** Line files (text): each line becomes one record payload — the batch
-    * backfill / replay path.
+  /** Line files (text): each line of a file dropped into `path` becomes
+    * one record payload — the replay path.
     */
-  final case class TextFiles(path: String, streaming: Boolean = true)
-      extends SourceConfig
+  final case class TextFiles(path: String) extends SourceConfig
 
   def build(spark: SparkSession, conf: SourceConfig): DataFrame = conf match {
     case k: Kinesis =>
@@ -118,17 +112,8 @@ object RecordSources {
         .options(kinesisOptions(k))
         .load()
         .select(col("data").cast("binary").as("value"))
-    case k: Kafka =>
-      spark.readStream
-        .format("kafka")
-        .option("kafka.bootstrap.servers", k.bootstrapServers)
-        .option("subscribe", k.topic)
-        .load()
-        .select(col("value"))
     case t: TextFiles =>
-      val reader =
-        if (t.streaming) spark.readStream.format("text").load(t.path)
-        else spark.read.format("text").load(t.path)
-      reader.select(encode(col("value"), "utf-8").as("value"))
+      spark.readStream.format("text").load(t.path)
+        .select(encode(col("value"), "utf-8").as("value"))
   }
 }

@@ -92,9 +92,7 @@ final class ErrorReporter(
     val tags = cfg.tags ++ Map(
       "query" -> r.queryName.replaceAll("[,|#:]", "_"),
       "exception" -> r.exceptionClass.replaceAll("[,|#:]", "_"))
-    val suffix = tags.toSeq.sorted.map { case (k, v) => s"$k:$v" }
-      .mkString("|#", ",", "")
-    val line = s"${cfg.prefix}.stream_error:1|c$suffix"
+    val line = s"${cfg.prefix}.stream_error:1|c${MetricsEmitter.tagSuffix(tags)}"
     val bytes = line.getBytes(StandardCharsets.UTF_8)
     socket.send(new DatagramPacket(
       bytes, bytes.length, InetAddress.getByName(cfg.hostname), cfg.port))

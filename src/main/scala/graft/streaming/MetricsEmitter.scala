@@ -43,7 +43,8 @@ object MetricsEmitter {
       period: FiniteDuration = 1.minute,
       prefix: String = "graft.loader")
 
-  private def tagSuffix(tags: Map[String, String]): String =
+  /** DogStatsD `|#k:v,...` tags, sorted by key; empty for no tags. */
+  private[streaming] def tagSuffix(tags: Map[String, String]): String =
     if (tags.isEmpty) ""
     else tags.toSeq.sorted.map { case (k, v) => s"$k:$v" }
       .mkString("|#", ",", "")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Runtime (AQE) plan properties that the static PlanSpec session
@@ -9,22 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * whose two sides share a lineage must REUSE the materialized exchange
   * at execution, not recompute the subtree per side.
   */
-class AdaptiveReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AdaptiveReuseSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = sys.props.get("graft.testdata")
     .orElse(sys.env.get("GRAFT_TESTDATA"))
     .getOrElse("/root/testdata") + "/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sparkConf = Map(GraftSession.Extensions)
 
   test("q31b: one prefix pass feeds the posting arrays; the verify attaches via hash joins") {
     // r7 asserted ReusedExchange on the posting SELF-JOIN's shared

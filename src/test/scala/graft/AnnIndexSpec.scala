@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.AnnIndex
@@ -15,19 +13,12 @@ import graft.operators.AnnIndex
   * and never shuffle the index side — the property that makes a recurring
   * ANN probe O(probed clusters), not O(index).
   */
-class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnnIndexSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val warehouse = Files.createTempDirectory("wh_ann").toString
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sparkConf =
+    Map("spark.sql.warehouse.dir" -> warehouse, NoAqe)
 
   private lazy val probed = {
     import spark.implicits._

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.AsOfJoin
@@ -10,16 +8,9 @@ import graft.operators.AsOfJoin
 /** AsOfJoin semantics: latest right row with right.ts <= left.ts per key,
   * inclusive at equal ts, NULL when nothing precedes.
   */
-class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AsOfJoinSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def cores = 2
 
   test("asof picks latest prior right row, inclusive ties, null when none") {
     import spark.implicits._

@@ -7,8 +7,6 @@ import java.util.zip.GZIPInputStream
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config._
@@ -20,17 +18,9 @@ import graft.streaming.LoaderPipeline
   * object is whole or absent and no `.crc` sidecar or temp file is left
   * behind. Non-local stores keep the Hadoop path (FaultInjectionSpec).
   */
-class BlobStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BlobStoreSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("blob-store-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sparkConf = Map("spark.app.name" -> "blob-store-spec")
 
   private def files(root: Path): Seq[Path] = {
     val s = Files.walk(root)

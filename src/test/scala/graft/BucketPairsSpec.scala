@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
@@ -17,15 +15,7 @@ import graft.operators.Dedup
   * r7's plan review flagged that the band/block families still streamed
   * every pair twice; these are the r8 replacements.
   */
-class BucketPairsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BucketPairsSpec extends AnyFunSuite with SparkSuite {
 
   private def naivePairs(rows: Seq[(Int, Long)]): Set[(Long, Long)] =
     rows.groupBy(_._1).values.flatMap { bucket =>

@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bucketing = the persistent co-located-join layout: both sides
@@ -13,21 +11,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * recurring 100 TB fact-fact join from two full shuffles into a local
   * merge per bucket.
   */
-class BucketedJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BucketedJoinSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val warehouse = Files.createTempDirectory("wh").toString
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-    // static plans: AQE's wrapper hides the join subtree from plan.collect
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sparkConf = Map(
+    "spark.sql.warehouse.dir" -> warehouse,
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force SMJ path
+    NoAqe)
 
   test("join of two tables bucketed on the key plans with no shuffle") {
     import spark.implicits._

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The materialized MinHash cluster map: built ONCE per (warehouse,
@@ -10,24 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * makes q61/q125/q140/q161 share one band→verify→CC execution instead
   * of four.
   */
-class ClusterMapSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ClusterMapSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = sys.props.get("graft.testdata")
     .orElse(sys.env.get("GRAFT_TESTDATA"))
     .getOrElse("/root/testdata") + "/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    // static plans: AQE's AdaptiveSparkPlanExec hides children from
-    // executedPlan.collect until execution (the PlanSpec convention)
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sparkConf = Map(GraftSession.Extensions, NoAqe)
 
   test("the cluster map materializes once; consumers probe the bucketed table") {
     // first consumer triggers the build

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions
@@ -27,15 +26,9 @@ import graft.functions.GraftFunctions
   * Each run is then value-compared against NO_CODEGEN interpreted eval,
   * so compiled and interpreted paths are also proven equivalent.
   */
-class CodegenGateSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CodegenGateSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def cores = 2
 
   /** Runs `build(spark)` twice — compiled-only, then interpreted-only —
     * and asserts identical sorted results. A janino compile failure in

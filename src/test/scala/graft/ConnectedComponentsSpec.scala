@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ConnectedComponents
@@ -16,16 +14,7 @@ import graft.operators.ConnectedComponents
   * oracle gate checks the same fixpoints end-to-end at corpus scale;
   * this pins the loop on adversarial shapes the corpus doesn't carry.
   */
-class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
 
   private def components(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, SuffixRank}
@@ -17,18 +15,11 @@ import graft.operators.{Dedup, SuffixRank}
   * two families (cluster map via q61, suffix ranks via q111); all six
   * families share the same tableName + prepareBuild code path.
   */
-class CorpusRebuildSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CorpusRebuildSpec extends AnyFunSuite with SparkSuite {
 
   private val warehouse = Files.createTempDirectory("rebuild_wh").toString
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sparkConf = Map("spark.sql.warehouse.dir" -> warehouse)
 
   /** Writes a documents.parquet of near-dup pairs derived from `tag`. */
   private def writeCorpus(dir: String, tag: String, nDocs: Int): Unit = {

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.RangeJoin
@@ -13,19 +11,11 @@ import graft.operators.RangeJoin
   * directly, plus the plan property that makes the range join scale —
   * it must never degrade to a nested-loop/cartesian comparison.
   */
-class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CurationSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sparkConf = Map(NoAqe)
 
   private def run(q: String) = SparkEntry.queries(q)(spark, sf)
 

@@ -2,11 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.DedupIndex
@@ -17,22 +15,15 @@ import graft.operators.DedupIndex
   * daily dedup batch O(batch + collisions) instead of re-shuffling the
   * corpus index every run.
   */
-class DedupIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DedupIndexSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val warehouse = Files.createTempDirectory("wh_dedup").toString
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.sql.adaptive.enabled", "false")
+  override protected def sparkConf = Map(
+    "spark.sql.warehouse.dir" -> warehouse, NoAqe,
     // keep the small batch side from broadcasting: the point is the
     // bucketed sort-merge path a TB-scale index side would force anyway
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   import scala.jdk.CollectionConverters._
 

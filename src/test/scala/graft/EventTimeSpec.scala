@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.EventTimeAggregates
@@ -14,16 +12,9 @@ import graft.streaming.EventTimeAggregates._
   * mode and drop late data; the stateful sessionizer splits on gaps and
   * carries state across micro-batches.
   */
-class EventTimeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EventTimeSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def cores = 2
 
   test("watermarked tumbling window finalizes closed windows, drops late rows") {
     import spark.implicits._

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{IntersectSize, VectorCosine, VectorDot}
@@ -15,16 +14,10 @@ import graft.functions.{IntersectSize, VectorCosine, VectorDot}
   * Inputs are derived from range(...)'s id so ConstantFolding can't collapse
   * the projection into a LocalRelation before the pattern is visible.
   */
-class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExtensionsSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def cores = 2
+  override protected def sparkConf = Map(GraftSession.Extensions)
 
   private def hasVectorDot(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.expressions

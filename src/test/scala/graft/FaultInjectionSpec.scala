@@ -5,8 +5,7 @@ import java.nio.file.Files
 import java.time.Instant
 import java.util.zip.GZIPInputStream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config._
@@ -23,19 +22,12 @@ import graft.streaming.LoaderPipeline
   * tested beyond file:// — the `s3x://` scheme goes through the same
   * `fs.<scheme>.impl` registration a production S3 connector uses.
   */
-class FaultInjectionSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FaultInjectionSpec extends AnyFunSuite with SparkSuite {
 
   // local[4, 2]: allow ONE task retry — the fault must fail the attempt,
   // not the job.
-  private lazy val spark = SparkSession.builder()
-    .master("local[4, 2]")
-    .appName("fault-injection-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sparkConf = Map(
+    "spark.master" -> "local[4, 2]", "spark.app.name" -> "fault-injection-spec")
 
   private val fixedNow = Instant.parse("1970-01-01T00:00:00Z")
 

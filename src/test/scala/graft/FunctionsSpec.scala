@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions
@@ -10,15 +8,9 @@ import graft.functions.GraftFunctions
   * (length mismatch ⇒ NULL, matching the zip_with/list_zip composed form),
   * and graft_shingles' distinct-3-gram output.
   */
-class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FunctionsSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def cores = 2
 
   private def dotOf(a: Seq[Float], b: Seq[Float]): Option[Double] = {
     import spark.implicits._

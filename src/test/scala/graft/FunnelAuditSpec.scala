@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TextAnalysis
@@ -10,19 +8,10 @@ import graft.operators.TextAnalysis
   * the funnel's own job (CollectMetrics accumulators — no per-stage
   * re-scan) and reconcile with the input table and the output count.
   */
-class FunnelAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FunnelAuditSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = sys.props.get("graft.testdata")
     .orElse(sys.env.get("GRAFT_TESTDATA")).getOrElse("/root/testdata/sf0.001")
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("stage counts ride the funnel job and reconcile monotonically") {
     val (df, obs) = TextAnalysis.auditedCuration(spark, sf)

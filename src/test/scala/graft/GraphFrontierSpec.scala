@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Frontier, GraphCore}
@@ -13,16 +11,7 @@ import graft.operators.{Frontier, GraphCore}
   * match is the end-to-end check; these pin the corner cases the
   * synthetic corpus may not exercise.
   */
-class GraphFrontierSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GraphFrontierSpec extends AnyFunSuite with SparkSuite {
 
   private def edges(pairs: (Long, Long)*) = {
     import spark.implicits._

@@ -12,7 +12,9 @@ import graft.streaming.{ErrorReporter, HealthProbe, LoaderPipeline, MetricsEmitt
   * events keep arriving within unhealthyLatency; HTTP surface returns
   * 200/503 accordingly.
   */
-class HealthProbeSpec extends AnyFunSuite {
+class HealthProbeSpec extends AnyFunSuite with SparkSuite {
+
+  override protected def cores = 2
 
   private def get(port: Int): (Int, String) = {
     val conn = new URL(s"http://localhost:$port/health")
@@ -71,11 +73,6 @@ class HealthProbeSpec extends AnyFunSuite {
       "localhost", udp.getLocalPort)))
     val probe = new HealthProbe(unhealthyLatency = 1.hour, port = port,
       errors = Some(reporter)).start()
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     spark.streams.addListener(reporter)
     spark.streams.addListener(probe)
     try {
@@ -113,17 +110,13 @@ class HealthProbeSpec extends AnyFunSuite {
       assert(line.contains("query:failing-loader"))
       assert(line.contains("exception:"))
     } finally {
-      probe.stop(); reporter.close(); udp.close(); spark.stop()
+      spark.streams.removeListener(reporter); spark.streams.removeListener(probe)
+      probe.stop(); reporter.close(); udp.close()
     }
   }
 
   test("error-report hook: restarting the failed query clears lastError") {
     val reporter = new ErrorReporter()
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     spark.streams.addListener(reporter)
     try {
       import spark.implicits._
@@ -152,7 +145,7 @@ class HealthProbeSpec extends AnyFunSuite {
         System.currentTimeMillis() < d2) Thread.sleep(50)
       assert(reporter.lastError.get().isEmpty)
       q2.stop()
-    } finally { reporter.close(); spark.stop() }
+    } finally { spark.streams.removeListener(reporter); reporter.close() }
   }
 
   test("GET /metrics serves the prometheus scrape when built with metrics") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.GraphCore
@@ -16,16 +14,7 @@ import graft.operators.GraphCore
   *  - under the production caps, TPC-H-sized keys are untouched
   *    (capped ≡ uncapped), which is what keeps the oracle hashes valid.
   */
-class HubCapSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class HubCapSpec extends AnyFunSuite with SparkSuite {
 
   // 20 orders; part 99 is the hub (in every order); parts 1-3 co-occur
   // in small pockets

@@ -6,8 +6,6 @@ import java.time.Instant
 
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config._
@@ -22,20 +20,14 @@ import graft.streaming.{LoaderPipeline, ServiceHealth}
   * mapping (initialPosition, maxFetchRecordsPerShard admission control),
   * multi-shard reads, at-least-once checkpoint replay, and sink health.
   */
-class KinesisSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class KinesisSourceSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("kinesis-source-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def sparkConf = Map("spark.app.name" -> "kinesis-source-spec")
 
   private val tmpRoots = scala.collection.mutable.ListBuffer.empty[Path]
 
   override def afterAll(): Unit = {
-    spark.stop()
+    super.afterAll()
     import scala.reflect.io.Directory
     tmpRoots.foreach(p => new Directory(p.toFile).deleteRecursively())
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
@@ -11,15 +9,9 @@ import graft.operators._
   * in Multimodal.decodeAndExtract (decoded plane for image/bmp, byte
   * stand-in otherwise, graceful fallback on a corrupt payload).
   */
-class MediaCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MediaCodecSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def cores = 2
 
   private def px(n: Int): Array[Byte] =
     Array.tabulate(n)(i => ((i * 7 + 3) % 251).toByte)

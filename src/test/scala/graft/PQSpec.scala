@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Product-quantization ANN (q48): structural guarantees of the ADC
@@ -10,18 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * score — the sanity property distinguishing a correct encode/lookup
   * wiring from a plausible-looking but shuffled one.
   */
-class PQSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PQSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private lazy val rows = SparkEntry.queries("q48_pq_ann")(spark, sf)
     .collect()

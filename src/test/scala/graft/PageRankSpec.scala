@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.PageRank
@@ -11,15 +9,7 @@ import graft.operators.PageRank
   * mass never exceeds SCALE (integer floors + dangling nodes only ever
   * lose mass).
   */
-class PageRankSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PageRankSpec extends AnyFunSuite with SparkSuite {
 
   private def ranksOf(vs: Seq[String], es: Seq[(String, String)]): Map[String, Long] = {
     import spark.implicits._

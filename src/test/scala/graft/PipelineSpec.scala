@@ -9,32 +9,24 @@ import scala.concurrent.duration._
 
 import org.apache.spark.TaskContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config._
 import graft.sinks.{BlobStore, InMemoryBlobStore}
-import graft.streaming.{LoaderPipeline, ServiceHealth}
+import graft.streaming.{LoaderPipeline, MetricsEmitter, ServiceHealth}
 
 /** End-to-end pipeline goldens — ports of reference ProcessingSpec e1–e4
   * against the in-memory recording store (the reference's MockEnvironment
   * analogue): written paths, decompressed content, counts, bad rows,
   * size-bound rolling.
   */
-class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PipelineSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("pipeline-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sparkConf = Map("spark.app.name" -> "pipeline-spec")
 
   private val fixedNow = Instant.parse("1970-01-01T00:00:00Z")
 
@@ -246,6 +238,29 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(metrics.count.get() == 2)
       assert(store.paths.size > afterFirst) // second batch → new object
     } finally q.stop()
+  }
+
+  test("stream latency: the progress listener sets latencyMillis from each micro-batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Array[Byte]]
+    val cfg = LoaderConfig(Purpose.Enriched, Output("mem://path"),
+      BadOutput("mem://bad"), Batching(maxDelay = 50.millis),
+      checkpointLocation = Some(
+        java.nio.file.Files.createTempDirectory("ckpt").toString))
+    val metrics = new LoaderPipeline.Metrics
+    val listener = new MetricsEmitter.StreamLatencyListener(metrics)
+    spark.streams.addListener(listener)
+    val q = LoaderPipeline.stream(
+      mem.toDF(), cfg, new InMemoryBlobStore, metrics, () => fixedNow).start()
+    try {
+      mem.addData(tsv("1970-01-01 00:00:01.000").getBytes)
+      q.processAllAvailable()
+      // the listener bus delivers progress events asynchronously
+      eventually(timeout(10.seconds)) {
+        assert(metrics.latencyMillis.get().exists(_ >= 0))
+      }
+    } finally { q.stop(); spark.streams.removeListener(listener) }
   }
 
   test("T7 ack contract: restart from checkpoint skips committed batches; replay duplicates, never gaps") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Placement
@@ -11,18 +9,9 @@ import graft.operators.Placement
   * 1/(N+1) of them), and the sketch join-size estimate never
   * undercounts.
   */
-class PlacementSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlacementSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("q146: minimal disruption — movers land only on the new shard, ~1/9 of docs") {
     val rows = Placement.queries("q146_rendezvous_shards")(spark, sf)

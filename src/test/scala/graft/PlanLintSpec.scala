@@ -1,13 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The TOTAL plan-lint gate (r8 verdict #1): every entry of
@@ -30,19 +28,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * path, the graft_hamming_pairs generator, a memo-table scan, or the
   * documented ReusedExchange self-join) — [[pairMarkers]].
   */
-class PlanLintSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanLintSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def cores = 8
+  override protected def sparkConf = Map(NoAqe)
 
   /** Flags a classification may grant. Empty set = fully strict. */
   private val OracleCross = "oracle_cross" // documented exact-truth oracle: bounded broadcast side
@@ -383,6 +374,10 @@ class PlanLintSpec extends AnyFunSuite with BeforeAndAfterAll {
         out += s"pair family lacks blocked-candidate markers ${markers.mkString(" | ")}"
     }
     out.toSeq
+  }
+
+  test("driver smoke: SparkEntry.entry returns rows on sf0.001") {
+    assert(SparkEntry.entry(spark).count() > 0)
   }
 
   test("classification is total: every SparkEntry query is classified, no stale entries") {

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, PrefixSum, RangeJoin, SuffixRank}
@@ -15,15 +13,7 @@ import graft.operators.{Dedup, PrefixSum, RangeJoin, SuffixRank}
   * come from ScalaCheck generators sampled under FIXED seeds, so a
   * failure reproduces exactly.
   */
-class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PropertySpec extends AnyFunSuite with SparkSuite {
 
   private def samples[A](g: Gen[A], n: Int): Seq[(Long, A)] =
     (0L until n.toLong).flatMap { seed =>

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.EventTimeAggregates
@@ -20,17 +18,11 @@ import graft.streaming.EventTimeAggregates
   * `RocksDBStateStoreProvider`, including across a checkpoint restart —
   * so the production backend is a config swap, not a code change.
   */
-class RocksDbStateSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RocksDbStateSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.streaming.stateStore.providerClass",
+  override protected def sparkConf = Map(
+    "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("CDC chunker + chunk dedup run on RocksDB state, restart included, same results") {
     import spark.implicits._

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Dynamic partition pruning — the runtime scan-skipping that carries
@@ -12,19 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * layout written with `partitionBy` (the loader's templated layout is
   * exactly that shape).
   */
-class RuntimeFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RuntimeFilterSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = java.nio.file.Files.createTempDirectory("dpp").toString
 
   override def afterAll(): Unit = {
-    spark.stop()
+    super.afterAll()
     // clean the parquet fixture — createTempDirectory does not auto-delete
     import scala.reflect.io.Directory
     new Directory(new java.io.File(dir)).deleteRecursively()

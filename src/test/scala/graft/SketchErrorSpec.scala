@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Quantitative error gates for the five sketch queries (q44, q83b,
@@ -28,22 +27,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *    convention) — a value-space window would spuriously fail whenever
   *    consecutive order statistics are far apart.
   */
-class SketchErrorSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SketchErrorSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = sys.props.get("graft.testdata")
     .orElse(sys.env.get("GRAFT_TESTDATA"))
     .getOrElse("/root/testdata") + "/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sparkConf = Map(GraftSession.Extensions)
 
   private def run(q: String): DataFrame = SparkEntry.queries(q)(spark, sf)
 

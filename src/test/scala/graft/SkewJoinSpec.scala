@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SkewJoin
@@ -10,15 +8,9 @@ import graft.operators.SkewJoin
 /** Salted skew join: result-identical to the plain join, with the hot
   * key's rows spread across salt buckets.
   */
-class SkewJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SkewJoinSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sparkConf = Map("spark.sql.shuffle.partitions" -> "8")
 
   test("salted join equals the plain join on a skewed fact table") {
     import spark.implicits._

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Spectral, Synth}
@@ -13,21 +11,13 @@ import graft.operators.{Spectral, Synth}
   * across runs (the fixed-point contract that makes the oracle replay
   * possible).
   */
-class SpectralSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SpectralSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = sys.props.get("graft.testdata")
     .orElse(sys.env.get("GRAFT_TESTDATA"))
     .getOrElse("/root/testdata") + "/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sparkConf = Map(GraftSession.Extensions)
 
   private def embeddings() =
     Synth.embeddings(spark, sf).select(col("vec_id"), col("embedding"))

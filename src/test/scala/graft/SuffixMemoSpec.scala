@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The memoized suffix-rank frame: the 4-round prefix-doubling pipeline
@@ -12,24 +10,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * rank-bucketed table — the r6 punch item (q111b used to re-run q111's
   * whole pipeline, 16.6 s combined at sf0.1).
   */
-class SuffixMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SuffixMemoSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = sys.props.get("graft.testdata")
     .orElse(sys.env.get("GRAFT_TESTDATA"))
     .getOrElse("/root/testdata") + "/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    // static plans: AQE's AdaptiveSparkPlanExec hides children from
-    // executedPlan.collect until execution (the PlanSpec convention)
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sparkConf = Map(GraftSession.Extensions, NoAqe)
 
   test("suffix ranks materialize once; q111/q111b probe the bucketed table") {
     // first consumer triggers the build

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graft_topk: the bounded-heap aggregate must equal the window idiom on
@@ -10,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * groups smaller than k, merge across partitions — and must plan as an
   * aggregate, not a sort.
   */
-class TopKSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TopKSpec extends AnyFunSuite with SparkSuite {
 
   private def viaAgg(df: org.apache.spark.sql.DataFrame, k: Int) = {
     graft.functions.GraftFunctions.register(spark)

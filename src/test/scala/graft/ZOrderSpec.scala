@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ZOrder
@@ -11,18 +9,13 @@ import graft.operators.ZOrder
   * z-sorted table bounds BOTH dimensions per chunk — the property parquet
   * min/max file skipping prunes on.
   */
-class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ZOrderSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
+  override protected def sparkConf = Map(
+    "spark.sql.shuffle.partitions" -> "8",
     // static plans: the layout test reads scan metrics directly off the
     // FileSourceScanExec node (AQE would wrap it in query stages)
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+    NoAqe)
 
   test("interleave is a bijection on the 8-bit x 8-bit grid") {
     import spark.implicits._

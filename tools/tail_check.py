@@ -5,29 +5,22 @@ The round driver json-parses the bench process's output. r11's PERF
 artifact proved that NO chunked variant ever parsed driver-side
 ("parsed": null in every BENCH_r*.json back to r1, whose output was the
 exact one-line contract differing only by sbt's "[info] " logger
-prefix). Since r12 the bench therefore prints, as its LAST stdout line
-and with the logger prefix removed (build.sbt run/outputStrategy :=
-StdoutOutput), ONE raw JSON line:
+prefix). Since r12 the bench therefore prints, with the logger prefix
+removed (build.sbt run/outputStrategy := StdoutOutput), ONE raw JSON
+line:
 
-    {"metric":"total","value":N,"unit":"sec",...,
+    {"metric":"total","value":N,"unit":"sec",...,"contended":B,
      "queries":{"<name>":sec,...},"sf":"..."}
 
 This script proves that contract against a bench log:
 
-    python3 tools/tail_check.py <bench_log> [capture_chars=10000]
+    python3 tools/tail_check.py <bench_log>
 
-1. PRIMARY: the last parseable JSON line of the log must carry
-   metric/value/unit/queries/sf, its queries map must match
-   BENCH_FULL.json exactly, and it must parse RAW (no sbt prefix).
-2. SECONDARY (legacy tail-window instrument): within the last
-   `capture_chars` characters — after appending a worst-case sbt
-   success line — the positional centisecond ("qcs_*") chunks plus the
-   compact totals line must reconstruct every per-query timing. The
-   default window is 10000 chars: the 2000-char window of r7–r11 can no
-   longer hold 230+ entries AND the contract line, and the contract
-   line is now the primary record.
+The last parseable JSON line of the log must carry
+metric/value/unit/queries/sf and the `contended` stamp, parse RAW (no
+sbt prefix), and its queries map must match BENCH_FULL.json exactly.
 
-Exit 0 = both checks pass.
+Exit 0 = the check passes.
 """
 import json
 import re
@@ -44,7 +37,7 @@ def parse_json_lines(text):
         try:
             yield json.loads(stripped), stripped != line.strip()
         except json.JSONDecodeError:
-            continue  # a truncated line — expected inside small windows
+            continue  # not JSON after all
 
 
 def check_contract(raw, full):
@@ -73,55 +66,10 @@ def check_contract(raw, full):
     return None
 
 
-def check_tail_window(raw, cap, full):
-    """Legacy instrument: qcs chunks + compact totals reconstruct every
-    timing from the last `cap` chars alone."""
-    raw = raw + "[success] Total time: 600 s (10:00), completed XXX XX, XXXX\n"
-    tail = raw[-cap:]
-    totals = None
-    qcs_chunks = {}
-    n_chunks = None
-    for obj, _ in parse_json_lines(tail):
-        m = obj.get("metric", "")
-        if m == "total":
-            totals = totals or obj  # compact line (first) suffices
-        elif m.startswith("qcs_"):
-            idx, total = m[len("qcs_"):].split("of")
-            qcs_chunks[int(idx)] = obj["v"]
-            n_chunks = int(total)
-    if totals is None:
-        return "totals line not in tail window"
-    if n_chunks is None or sorted(qcs_chunks) != list(range(1, n_chunks + 1)):
-        return (f"qcs chunks incomplete in tail window: have "
-                f"{sorted(qcs_chunks)} of {n_chunks}")
-    values = [v for i in range(1, n_chunks + 1) for v in qcs_chunks[i]]
-    if len(values) != totals["n_queries"]:
-        return f"{len(values)} values vs n_queries={totals['n_queries']}"
-    names = sorted(k for k in full["queries"] if k != "loader_batch_sink")
-    if "loader_batch_sink" in full["queries"]:
-        names.append("loader_batch_sink")
-    if len(names) != len(values):
-        return f"artifact has {len(names)} queries, tail has {len(values)}"
-    bad = []
-    for name, cs in zip(names, values):
-        want = full["queries"][name]
-        got = "failed" if cs == -1 else cs
-        want_cs = "failed" if want == "failed" else round(want * 100)
-        if got != want_cs:
-            bad.append((name, got, want_cs))
-    if bad:
-        return f"{len(bad)} mismatches, e.g. {bad[:5]}"
-    if "contended" not in totals:
-        return "totals line missing the 'contended' stamp"
-    return None
-
-
 def main() -> int:
-    log_path = sys.argv[1]
-    cap = int(sys.argv[2]) if len(sys.argv) > 2 else 10000
-    raw = open(log_path, encoding="utf-8", errors="replace").read()
+    raw = open(sys.argv[1], encoding="utf-8", errors="replace").read()
 
-    # locate the artifact via the compact totals line (any parseable one)
+    # locate the artifact via the contract line (any parseable one)
     full_path = None
     contended = False
     for obj, _ in parse_json_lines(raw):
@@ -129,7 +77,7 @@ def main() -> int:
             full_path = obj.get("full_artifact", full_path)
             contended = obj.get("contended", contended)
     if full_path is None:
-        print("FAIL: no totals line found at all")
+        print("FAIL: no contract line found at all")
         return 1
     full = json.load(open(full_path, encoding="utf-8"))
 
@@ -137,14 +85,8 @@ def main() -> int:
     if err:
         print(f"FAIL (contract line): {err}")
         return 1
-    err = check_tail_window(raw, cap, full)
-    if err:
-        print(f"FAIL (tail window {cap}): {err}")
-        return 1
     flag = " [CONTENDED]" if contended else ""
-    n = len(full["queries"])
-    print(f"OK: contract line carries all {n} entries raw; tail window "
-          f"({cap} chars) reconstructs them independently{flag}")
+    print(f"OK: contract line carries all {len(full['queries'])} entries raw{flag}")
     return 0
 
 
