@@ -57,12 +57,18 @@ import graft.model.SchemaKey
   * differ from the reference's (and are smaller) while the gunzipped
   * content is identical.
   *
-  * Scale note: the reference bounds the whole in-flight batch because it
-  * is a single-node loader; here each schema group of a batch is written
-  * by one task that rolls its own files at maxBytes, which is the property
-  * that actually matters at 1000 executors — no coordination, bounded
-  * memory per task (one object buffer plus the capped blocks in flight).
-  * A hot group's blocks deflate on the task slots its batch leaves idle.
+  * Scale and memory: the reference bounds the whole in-flight batch
+  * because it is a single-node loader, and keeps one open writer per schema
+  * group per window (Processing.scala:69-77). Here a write task keeps one
+  * open [[GroupWriter]] per schema key of its partition, plus one for its
+  * bad rows, and pushes each row to its key's writer as it arrives — the
+  * partition is never sorted. A writer holds at most one object: its gzip
+  * bytes so far, the open block's raw bytes (up to [[BlockSize]]), and for
+  * a hot group the capped blocks in flight. A task's memory is that, summed
+  * over the keys it holds open, which is the reference's memory model; each
+  * group still rolls its own files at maxBytes with no coordination, which
+  * is what matters at 1000 executors. A hot group's blocks deflate on the
+  * task slots its batch leaves idle.
   */
 object RollingGzipWriter {
 
@@ -97,33 +103,60 @@ object RollingGzipWriter {
       // (deterministic) uuid alone names the object
       timestampedNames: Boolean = true)
 
-  /** Write one schema-group's lines, rolling to a new object whenever the
-    * current gzip stream's byte count passes maxBytes. Returns one action
-    * per object written. `threads` > 1 deflates blocks of a large group on
-    * the shared pool; the objects are the same at any value. On a failure
-    * the blocks in flight are cancelled or awaited before the exception
-    * propagates.
+  /** One schema group's rolling writer, fed one record at a time: `add`
+    * each record in arrival order, then `finish` to put the last object and
+    * get one action per object written; after a failure, `cancel` drops the
+    * open object and its blocks in flight. An object is put as soon as its
+    * gzip stream's byte count passes maxBytes (or it holds maxRecords), so
+    * the writer holds at most one object at a time. `threads` > 1 deflates
+    * blocks of a large group on the shared pool; the objects are the same at
+    * any value.
     *
-    * Count and min-event-time metrics accumulate in this same pass (the
-    * second element of each record; null = no event time), so the caller
-    * never needs a separate aggregation job over the batch — at 100 TB a
-    * stats pre-pass would be a second full scan+parse of the input.
+    * Count and min-event-time metrics accumulate as records arrive, so the
+    * caller never needs a separate aggregation job over the batch — at
+    * 100 TB a stats pre-pass would be a second full scan+parse of the input.
     */
-  def writeGroup(
+  final class GroupWriter(
       store: BlobStore,
       cfg: SinkConfig,
       schema: SchemaKey,
       now: Instant,
-      records: Iterator[(String, java.lang.Long)],
       newUuid: () => UUID = () => UUID.randomUUID(),
-      threads: Int = 1): Seq[WriteAction] = {
-    val actions = ArrayBuffer.empty[WriteAction]
-    val pool = if (threads > 1) Some(DeflatePool(threads)) else None
-    var obj: GzipObject = null // null between objects
-    var count = 0L
-    var minTs = Long.MaxValue
+      threads: Int = 1) {
+    private val pool = if (threads > 1) Some(DeflatePool(threads)) else None
+    private val actions = ArrayBuffer.empty[WriteAction]
+    private var obj: GzipObject = null // null between objects
+    private var count = 0L
+    private var minTs = Long.MaxValue
 
-    def emit(): Unit = {
+    /** Append one record: its UTF-8 line (without '\n') and its event
+      * time in microseconds, or [[NoTstamp]].
+      */
+    def add(line: Array[Byte], tsUs: Long): Unit = {
+      if (obj == null) {
+        obj = new GzipObject(cfg.maxBytes, pool, 2 * threads)
+        count = 0L
+        minTs = Long.MaxValue
+      }
+      obj.add(line)
+      count += 1
+      if (tsUs < minTs) minTs = tsUs
+      if (obj.size > cfg.maxBytes || count >= cfg.maxRecords) emit()
+    }
+
+    /** Put the open object, if any; the actions of every object written. */
+    def finish(): Seq[WriteAction] = {
+      if (obj != null) emit()
+      actions.toSeq
+    }
+
+    /** Drop the open object, if any, and its blocks in flight. */
+    def cancel(): Unit = if (obj != null) {
+      obj.cancel()
+      obj = null
+    }
+
+    private def emit(): Unit = {
       val bytes = obj.finish()
       obj = null
       val path = DynamicPath.getFullPath(
@@ -133,24 +166,33 @@ object RollingGzipWriter {
       store.write(path, bytes)
       val putMillis = (System.nanoTime() - t0) / 1e6
       actions += WriteAction(path, count, bytes.length.toLong,
-        if (minTs == Long.MaxValue) None else Some(minTs), putMillis)
+        if (minTs == NoTstamp) None else Some(minTs), putMillis)
     }
+  }
 
+  /** The event time of a record that has none. */
+  val NoTstamp: Long = Long.MaxValue
+
+  /** Write one schema group's lines through a [[GroupWriter]]; each
+    * record's second element is its event time in microseconds, or null.
+    * On a failure the blocks in flight are cancelled or awaited before the
+    * exception propagates.
+    */
+  def writeGroup(
+      store: BlobStore,
+      cfg: SinkConfig,
+      schema: SchemaKey,
+      now: Instant,
+      records: Iterator[(String, java.lang.Long)],
+      newUuid: () => UUID = () => UUID.randomUUID(),
+      threads: Int = 1): Seq[WriteAction] = {
+    val writer = new GroupWriter(store, cfg, schema, now, newUuid, threads)
     try {
       records.foreach { case (line, tsUs) =>
-        if (obj == null) {
-          obj = new GzipObject(cfg.maxBytes, pool, 2 * threads)
-          count = 0L
-          minTs = Long.MaxValue
-        }
-        obj.add(line.getBytes(StandardCharsets.UTF_8))
-        count += 1
-        if (tsUs != null && tsUs < minTs) minTs = tsUs
-        if (obj.size > cfg.maxBytes || count >= cfg.maxRecords) emit()
+        writer.add(line.getBytes(StandardCharsets.UTF_8), if (tsUs == null) NoTstamp else tsUs)
       }
-      if (obj != null) emit()
-    } finally if (obj != null) obj.cancel()
-    actions.toSeq
+      writer.finish()
+    } catch { case e: Throwable => writer.cancel(); throw e }
   }
 
   /** Raw bytes per deflate block, at least: a block ends at the first
@@ -170,17 +212,19 @@ object RollingGzipWriter {
   /** One gzip object being built: the bytes so far (header and the blocks
     * appended in order), the open block's raw bytes, the blocks in flight
     * on `pool` (at most `maxInFlight`), and the last [[Window]] bytes of raw
-    * input before the open block.
+    * input before the open block. Buffers start at 1 KiB and double as
+    * they fill, since a partition holds one open object per schema key and
+    * most keys of a small batch hold a few records.
     */
   private final class GzipObject(
       maxBytes: Long,
       pool: Option[ThreadPoolExecutor],
       maxInFlight: Int) {
-    private val buf = new ByteArrayOutputStream(64 * 1024)
+    private val buf = new ByteArrayOutputStream(1024)
     buf.write(Header)
     private val crc = new CRC32
     private var rawBytes = 0L
-    private var blk = new Array[Byte](8 * 1024)
+    private var blk = new Array[Byte](1024)
     private var blkLen = 0
     private var window: Array[Byte] = null // allocated at the first cut with a successor
     private var winLen = 0

@@ -4,10 +4,16 @@ import java.nio.charset.StandardCharsets
 import java.time.Instant
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.ShuffledRDD
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.UnsafeRowSerializer
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.config.{LoaderConfig, Purpose}
 import graft.model.{BadRow, SchemaKey}
@@ -21,24 +27,28 @@ import graft.sources.Decompression
   *   decompress → parse → good/bad split → grouped gzip write → metrics
   *
   * Stage mapping:
-  *  - decompressedStream + parseBytes → `classify`, one pass per record:
-  *    `decode` (Dataset.flatMap over binary rows), then
-  *    [[EventParser.parse]] (codegen'd column ops) over every decoded row;
-  *    a decompression error takes the place of the parser's `bad_error`,
-  *    so both failure kinds reach the same bad-row output
+  *  - decompressedStream + parseBytes → [[writeRows]], one pass per
+  *    record: `decode` (Dataset.flatMap over binary rows), then
+  *    [[EventParser.parse]] (codegen'd column ops, one select per level of
+  *    dependency) over every decoded row, then the select that adds each
+  *    row's shuffle partition; a decompression error takes the place of the
+  *    parser's `bad_error`, so both failure kinds reach the same bad-row
+  *    output. The batch is planned once
   *  - batchUpAndCompress  → micro-batch boundary + RollingGzipWriter
   *    (maxDelay ⇒ Trigger.ProcessingTime; maxBytes ⇒ compressed rolling)
-  *  - writeToStorage + sendBadEvents → one shared write, 2 Spark jobs per
-  *    batch: good and bad rows share one `repartitionById` shuffle (map
-  *    job, then write job) into `defaultParallelism` partitions — a good
-  *    row at hash(schema), a bad row at hash(payload) — and each partition
-  *    writes its schema runs as rolling gzip objects and its bad rows as
-  *    size-capped bad-row JSON to the bad store. The distributed analogue
-  *    of the reference's parTraverse per group (Processing.scala:287-289):
-  *    a batch's schema groups spread over every core, each group is
-  *    written by one task that rolls at maxBytes, and a hot group (the
-  *    enriched path maps EVERY event to atomic) deflates its blocks on the
-  *    slots its siblings leave idle
+  *  - writeToStorage + sendBadEvents → one shared write, 1 Spark job per
+  *    batch: good and bad rows share one shuffle by the partition id they
+  *    carry (map stage, then write stage) into `defaultParallelism`
+  *    partitions — a good row at hash(schema), a bad row at hash(payload).
+  *    Each write task, without sorting, keeps one open rolling gzip writer
+  *    per schema key of its partition plus one size-capped bad-row writer,
+  *    and pushes each row to its writer, like the reference's one open
+  *    writer per group per window. The distributed analogue of the
+  *    reference's parTraverse per group (Processing.scala:287-289): a
+  *    batch's schema groups spread over every core, each group is written
+  *    by one task that rolls at maxBytes, and a hot group (the enriched
+  *    path maps EVERY event to atomic) deflates its blocks on the slots its
+  *    siblings leave idle
   *  - emitTokens          → Structured Streaming checkpoint commit: offsets
   *    commit only after foreachBatch returns ⇒ same at-least-once contract
   *    (reference Processing.scala:74-77,333-336)
@@ -72,43 +82,71 @@ object LoaderPipeline {
   }
 
   /** Decompression front-end: binary `value` column → one row per framed
-    * record (`payload`, `decompressError`); a corrupt frame becomes one row
-    * of its raw bytes with a non-null error.
+    * record (`payload`, `decompressError`, and `line`, the payload read as
+    * UTF-8); a corrupt frame becomes one row of its raw bytes with a
+    * non-null error.
     */
-  private def decode(df: DataFrame, limits: Decompression.Limits): DataFrame = {
-    import df.sparkSession.implicits._
-    df.select(col("value").cast("binary")).as[Array[Byte]].flatMap { bytes =>
+  private def decode(df: DataFrame, limits: Decompression.Limits): DataFrame =
+    df.select(col("value").cast("binary")).as(Encoders.BINARY).flatMap { bytes =>
       val d = Decompression.decode(bytes, limits)
       d.records.map((_, null: String)) ++ d.error.map((bytes, _))
-    }.toDF("payload", "decompressError")
+    }(Decoded).select(col("_1").as("payload"), col("_2").as("decompressError"),
+      col("_1").cast("string").as("line"))
+
+  /** The encoder of [[decode]]'s records, derived once. */
+  private val Decoded = Encoders.tuple(Encoders.BINARY, Encoders.STRING)
+
+  /** The rows one batch writes, each with the shuffle partition it goes
+    * to: decode, then [[EventParser.parse]], then this select, which the
+    * optimizer folds into the parser's last layer. Every decoded row is
+    * parsed once, and a decompression error takes the place of the parser's
+    * verdict (reference Processing.scala:101-134,156-165: one fold, one
+    * bad-row output); a corrupt frame starts with gzip or zstd magic bytes,
+    * never `{`, so the SDJ parser cannot call it good either.
+    *
+    * A good row goes to hash(schema key) mod `maxTasks`, a bad row to
+    * hash(payload) mod `maxTasks`. A row carries `line` only if good and
+    * `payload` only if bad (a corrupt frame's bytes are not UTF-8, and a bad
+    * row must carry them unchanged to be replayable). The columns are in
+    * [[WriteRow]]'s order.
+    */
+  private[graft] def writeRows(df: DataFrame, cfg: LoaderConfig, maxTasks: Int): DataFrame = {
+    val parsed = EventParser.parse(decode(df, cfg.decompression), cfg.purpose == Purpose.Enriched)
+    val badError = coalesce(col("decompressError"), col("bad_error"))
+    val isBad = badError.isNotNull
+    val key = Seq(col("vendor"), col("name"), col("format"), col("model"))
+    parsed.select(key ++ Seq(
+      when(!isBad, col("line")).as("line"),
+      unix_micros(col("collector_tstamp")).as("ts_us"),
+      when(isBad, col("payload")).as("payload"),
+      badError.as("bad_error"),
+      pmod(when(isBad, hash(col("payload"))).otherwise(hash(key: _*)), lit(maxTasks))
+        .as("partition")): _*)
   }
 
-  /** Decode and classify each record in one pass: every decoded row is
-    * parsed once, and a decompression error takes the place of the
-    * parser's verdict (reference Processing.scala:101-134,156-165: one
-    * fold, one bad-row output). A corrupt frame starts with gzip or zstd
-    * magic bytes, never `{`, so the SDJ parser cannot call it good either.
-    */
-  private def classify(df: DataFrame, cfg: LoaderConfig): DataFrame =
-    EventParser.parse(
-        decode(df, cfg.decompression).withColumn("line", col("payload").cast("string")),
-        cfg.purpose == Purpose.Enriched)
-      .withColumn("bad_error", coalesce(col("decompressError"), col("bad_error")))
-      .drop("decompressError")
+  /** Column ordinals of a [[writeRows]] row. */
+  private object WriteRow {
+    val Vendor = 0; val Name = 1; val Format = 2; val Model = 3; val Line = 4
+    val TsUs = 5; val Payload = 6; val BadError = 7; val Partition = 8
+  }
+
+  /** Sends each row to the partition id it carries. */
+  private final class PartitionIdPassthrough(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  }
 
   /** One micro-batch (or one whole batch run): write grouped gzip objects
-    * and bad rows in one write job, update metrics. `now` is injectable for
+    * and bad rows in one Spark job, update metrics. `now` is injectable for
     * deterministic tests (reference tests pin the clock, ProcessingSpec e4).
     */
   private def writeBatch(
-      parsed: DataFrame,
+      df: DataFrame,
       cfg: LoaderConfig,
       store: BlobStore,
       metrics: Metrics,
       now: () => Instant,
       health: ServiceHealth,
       batchId: Option[Long]): Unit = {
-    import parsed.sparkSession.implicits._
     val wallClock = now()
     // deterministic object names per (batch, partition, group, file):
     // replays overwrite instead of duplicating (Output.idempotentNames)
@@ -130,63 +168,49 @@ object LoaderPipeline {
       math.min(cfg.batching.maxBytes, cfg.bad.byteLimit),
       cfg.bad.recordLimit.toLong, timestampedNames = nameSeed.isEmpty)
 
-    // Write parallelism. The shuffle always has `maxTasks` partitions: an
-    // explicit count is one adaptive execution does not coalesce, so a
+    // Write parallelism. The shuffle always has `maxTasks` partitions, so a
     // batch's schema groups hash over every core even when the batch is
-    // small (left to coalesce, a small batch's shuffle collapses to one
-    // task that makes every put in turn). Each schema group is one task's
-    // run, rolling at maxBytes like the reference's one writer per group
-    // per window; a hot group (the enriched path maps EVERY event to one
-    // key, SURVEY §1.2) deflates its blocks on a pool sized to one
-    // executor JVM's task slots, shared by its write tasks, so it uses the
-    // cores its empty siblings leave idle. Read per batch, so a local[1]
-    // session deflates inline.
-    val sc = parsed.sparkSession.sparkContext
+    // small. Each schema group is one task's run, rolling at maxBytes like
+    // the reference's one writer per group per window; a hot group (the
+    // enriched path maps EVERY event to one key, SURVEY §1.2) deflates its
+    // blocks on a pool sized to one executor JVM's task slots, shared by
+    // its write tasks, so it uses the cores its empty siblings leave idle.
+    // Read per batch, so a local[1] session deflates inline.
+    val sc = df.sparkSession.sparkContext
     val maxTasks = math.max(1, sc.defaultParallelism)
     val deflateThreads =
       if (sc.isLocal) maxTasks
       else sc.getConf.getInt("spark.executor.cores", 1) / sc.getConf.getInt("spark.task.cpus", 1)
 
-    // Good and bad rows share one shuffle and one write job (reference
-    // Processing.scala:101-134,315-331: one fold writes both), so a batch
-    // runs 2 Spark jobs — the shuffle-map job, which decodes and parses
-    // each record once, then the write job. A good row goes to
-    // hash(schema key) mod maxTasks, a bad row to hash(payload) mod
-    // maxTasks. The shuffle carries `line` only for good rows and `payload`
-    // only for bad ones (a corrupt frame's bytes are not UTF-8, and a bad
-    // row must carry them unchanged to be replayable). Count + earliest
-    // tstamp accumulate inside the write itself (reference A2/A3,
-    // Processing.scala:108,167-173) — no stats pre-job. Each partition,
-    // sorted with its bad rows last, streams consecutive same-schema runs
-    // straight into the rolling writer and its bad run into the
-    // size-capped bad writer.
-    val isBad = col("bad_error").isNotNull
-    val toWrite = parsed.select(col("vendor"), col("name"), col("format"),
-      col("model"), when(!isBad, col("line")).as("line"),
-      unix_micros(col("collector_tstamp")).as("ts_us"),
-      when(isBad, col("payload")).as("payload"), col("bad_error"))
-    val partition = pmod(
-      when(isBad, hash(col("payload")))
-        .otherwise(hash(col("vendor"), col("name"), col("format"), col("model"))),
-      lit(maxTasks))
     val processor = BadRow.Processor("graft-loader", "0.1.0")
     val maxSize = cfg.bad.maxRecordSize
     def badJson(payload: Array[Byte], err: String): String =
       BadRow.sizeCapped(BadRow.GenericError(processor, List(err), payload, wallClock),
         maxSize, wallClock, processor)
 
+    // Good and bad rows share one shuffle and one Spark job (reference
+    // Processing.scala:101-134,315-331: one fold writes both): the map
+    // stage decodes and parses each record once, the result stage writes.
+    // The planned rows are shuffled as an RDD by the partition id they
+    // carry, so adaptive execution, whatever the session's setting, has no
+    // exchange to re-plan and submits no job of its own. The rows stay
+    // UnsafeRows end to end; each is serialized as the shuffle writer takes
+    // it (bypass or serialized sort), so the reused row need not be copied.
+    // Count + earliest tstamp accumulate inside the write itself (reference
+    // A2/A3, Processing.scala:108,167-173) — no stats pre-job.
+    //
     // Per-service health (reference RuntimeService, Processing.scala:
     // 327-329): a put failure degrades ONLY the sink that refused it —
     // tasks tag it ([[SinkFailure]]) and the tag travels in the job's
     // SparkException cause chain; a successful write marks both healthy.
     val actions: Array[(String, RollingGzipWriter.WriteAction)] =
       try {
-        toWrite
-          .repartitionById(maxTasks, partition)
-          .sortWithinPartitions(isBad, col("vendor"), col("name"),
-            col("format"), col("model"))
+        val rows = writeRows(df, cfg, maxTasks).queryExecution.toRdd
+          .map(r => (r.getInt(WriteRow.Partition), r))
+        new ShuffledRDD[Int, InternalRow, InternalRow](rows, new PartitionIdPassthrough(maxTasks))
+          .setSerializer(new UnsafeRowSerializer(WriteRow.Partition + 1))
           .mapPartitions { rows =>
-            writePartition(rows, store, sinkCfg, badSinkCfg, badJson,
+            writePartition(rows.map(_._2), store, sinkCfg, badSinkCfg, badJson,
               wallClock, nameSeed, deflateThreads)
           }
           .collect()
@@ -220,9 +244,9 @@ object LoaderPipeline {
   private final class SinkFailure(val sink: String, cause: Throwable)
       extends java.io.IOException(s"$sink put failed: $cause", cause)
 
-  /** Deterministic per-run UUID factory for idempotent naming: named from
+  /** Deterministic per-writer UUID factory for idempotent naming: named from
     * (seed=batchId, shuffle partition, schema key, file ordinal); the bad
-    * run of a partition uses the key ("bad", "", "", 0). Same batch data +
+    * writer of a partition uses the key ("bad", "", "", 0). Same batch data +
     * same partitioning ⇒ same names on replay. The write shuffle's
     * partition count follows `defaultParallelism`, so names are stable
     * across replays only while it stays fixed.
@@ -242,16 +266,18 @@ object LoaderPipeline {
       case None => () => java.util.UUID.randomUUID()
     }
 
-  /** Stream one shuffle partition (good rows sorted by schema key, then the
-    * bad rows) into the writers: each consecutive same-key run becomes its
-    * own writeGroup call, and the bad run one size-capped bad write, so
-    * memory stays one object buffer plus the capped blocks in flight
-    * regardless of partition size. Only the good writer deflates on
-    * `deflateThreads`; bad objects are small. Each action is returned with
-    * the sink that wrote it.
+  /** Write one shuffle partition, unsorted: each good row is pushed to
+    * its schema key's open [[RollingGzipWriter.GroupWriter]], and each bad
+    * row, as size-capped bad-row JSON, to the partition's bad writer. A
+    * writer puts each object as it passes its bound and the last ones when
+    * the partition ends, so memory is one open object per key held (the
+    * reference's one writer per group per window). Only the good writers
+    * deflate on `deflateThreads`; bad objects are small. Each action is
+    * returned with the sink that wrote it; on a failure every open writer
+    * is cancelled.
     */
   private def writePartition(
-      rows: Iterator[Row],
+      rows: Iterator[InternalRow],
       store: BlobStore,
       sinkCfg: RollingGzipWriter.SinkConfig,
       badSinkCfg: RollingGzipWriter.SinkConfig,
@@ -259,45 +285,45 @@ object LoaderPipeline {
       wallClock: Instant,
       nameSeed: Option[String],
       deflateThreads: Int): Iterator[(String, RollingGzipWriter.WriteAction)] = {
-    if (rows.isEmpty) Iterator.empty
-    else {
-      val it = rows.buffered
-      val s = it.head.schema
-      val vIdx = s.fieldIndex("vendor"); val nIdx = s.fieldIndex("name")
-      val fIdx = s.fieldIndex("format"); val mIdx = s.fieldIndex("model")
-      val lIdx = s.fieldIndex("line"); val tIdx = s.fieldIndex("ts_us")
-      val pIdx = s.fieldIndex("payload"); val eIdx = s.fieldIndex("bad_error")
-      // a good row's schema key; None for a bad row
-      def keyOf(r: Row) =
-        if (!r.isNullAt(eIdx)) None
-        else Some((r.getString(vIdx), r.getString(nIdx), r.getString(fIdx), r.getInt(mIdx)))
-      def sinkStore(sink: String): BlobStore = new BlobStore {
-        def write(path: String, bytes: Array[Byte]): Unit =
-          try store.write(path, bytes)
-          catch { case scala.util.control.NonFatal(e) => throw new SinkFailure(sink, e) }
-      }
-      Iterator.continually(()).takeWhile(_ => it.hasNext).flatMap { _ =>
-        val key = keyOf(it.head)
-        def run[A](f: Row => A): Iterator[A] = new Iterator[A] {
-          def hasNext: Boolean = it.hasNext && keyOf(it.head) == key
-          def next(): A = f(it.next())
-        }
-        // each writer drains its run fully before the outer iterator advances
-        key match {
-          case None =>
-            RollingGzipWriter.writeLines(
-              sinkStore(ServiceHealth.BadSink), badSinkCfg, SchemaKey.Atomic,
-              wallClock, run(r => badJson(r.getAs[Array[Byte]](pIdx), r.getString(eIdx))),
-              uuidFactory(nameSeed, ("bad", "", "", 0))).map((ServiceHealth.BadSink, _))
-          case Some(k @ (vendor, name, format, model)) =>
-            RollingGzipWriter.writeGroup(
-              sinkStore(ServiceHealth.BlobSink), sinkCfg,
-              SchemaKey(vendor, name, format, model, 0, 0), wallClock,
-              run(r => (r.getString(lIdx),
-                if (r.isNullAt(tIdx)) null else java.lang.Long.valueOf(r.getLong(tIdx)))),
-              uuidFactory(nameSeed, k), deflateThreads).map((ServiceHealth.BlobSink, _))
+    import WriteRow._
+    def sinkStore(sink: String): BlobStore = new BlobStore {
+      def write(path: String, bytes: Array[Byte]): Unit =
+        try store.write(path, bytes)
+        catch { case scala.util.control.NonFatal(e) => throw new SinkFailure(sink, e) }
+    }
+    val goodStore = sinkStore(ServiceHealth.BlobSink)
+    // keyed by the row's own strings while looking up, by copies once stored
+    val writers = new java.util.HashMap[(UTF8String, UTF8String, UTF8String, Int),
+      RollingGzipWriter.GroupWriter]
+    var badWriter: RollingGzipWriter.GroupWriter = null
+    try {
+      rows.foreach { r =>
+        if (r.isNullAt(BadError)) {
+          val key = (r.getUTF8String(Vendor), r.getUTF8String(Name),
+            r.getUTF8String(Format), r.getInt(Model))
+          var w = writers.get(key)
+          if (w == null) {
+            val k = (key._1.toString, key._2.toString, key._3.toString, key._4)
+            w = new RollingGzipWriter.GroupWriter(goodStore, sinkCfg,
+              SchemaKey(k._1, k._2, k._3, k._4, 0, 0), wallClock,
+              uuidFactory(nameSeed, k), deflateThreads)
+            writers.put((key._1.clone(), key._2.clone(), key._3.clone(), key._4), w)
+          }
+          w.add(r.getUTF8String(Line).getBytes,
+            if (r.isNullAt(TsUs)) RollingGzipWriter.NoTstamp else r.getLong(TsUs))
+        } else {
+          if (badWriter == null) badWriter = new RollingGzipWriter.GroupWriter(
+            sinkStore(ServiceHealth.BadSink), badSinkCfg, SchemaKey.Atomic, wallClock,
+            uuidFactory(nameSeed, ("bad", "", "", 0)))
+          badWriter.add(badJson(r.getBinary(Payload), r.getUTF8String(BadError).toString)
+            .getBytes(StandardCharsets.UTF_8), RollingGzipWriter.NoTstamp)
         }
       }
+      val actions = writers.values.asScala.toVector.flatMap(_.finish().map((ServiceHealth.BlobSink, _)))
+      (actions ++ Option(badWriter).toSeq.flatMap(_.finish().map((ServiceHealth.BadSink, _)))).iterator
+    } catch { case e: Throwable =>
+      (writers.values.asScala ++ Option(badWriter)).foreach(_.cancel())
+      throw e
     }
   }
 
@@ -309,7 +335,7 @@ object LoaderPipeline {
       metrics: Metrics,
       now: () => Instant = () => Instant.now(),
       batchId: Option[Long] = None): Unit =
-    writeBatch(classify(df, cfg), cfg, store, metrics, now, new ServiceHealth, batchId)
+    writeBatch(df, cfg, store, metrics, now, new ServiceHealth, batchId)
 
   /** Streaming entry: micro-batches flush at maxDelay — the reference's
     * time-bound batch emission (T3); offsets commit after each batch ⇒
@@ -324,7 +350,7 @@ object LoaderPipeline {
       health: ServiceHealth = new ServiceHealth): DataStreamWriter[Row] = {
     val w = df.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        writeBatch(classify(batch, cfg), cfg, store, metrics, now, health, Some(id))
+        writeBatch(batch, cfg, store, metrics, now, health, Some(id))
       }
       .trigger(Trigger.ProcessingTime(cfg.batching.maxDelay.toMillis))
     cfg.checkpointLocation.fold(w)(p => w.option("checkpointLocation", p))

@@ -10,12 +10,14 @@ import scala.concurrent.duration._
 import org.apache.spark.TaskContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject, Literal, RLike}
+import org.apache.spark.sql.functions.{col, udf, unix_micros}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config._
+import graft.operators.EventParser
 import graft.sinks.{BlobStore, InMemoryBlobStore}
 import graft.streaming.{LoaderPipeline, MetricsEmitter, ServiceHealth}
 
@@ -102,6 +104,43 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     val content = store.paths.filter(_.startsWith("mem://path"))
       .map(p => gunzip(store.objects.get(p))).mkString
     assert(content.linesIterator.size == 5)
+  }
+
+  test("enriched field 3: short lines keep a NULL tstamp and stay good; only the 4th field is read") {
+    import spark.implicits._
+    val cfg = LoaderConfig(Purpose.Enriched, Output("mem://path"), BadOutput("mem://bad"))
+    val early = "1970-01-01 00:00:01.000" // in a field other than the 4th
+    val expected = Seq(
+      "no tabs at all" -> None,
+      s"one\t$early" -> None,
+      s"a\tb\t$early" -> None,                                // 3 fields
+      "a\tb\tc\t1970-01-01 00:00:09.000" -> Some(9000000L),     // 4 fields, no trailing tab
+      s"a\tb\tc\t\t$early" -> None,                           // empty 4th field
+      s"a\tb\tc\t" -> None)                                   // 3 tabs, empty 4th field
+    val parsed = EventParser.parse(expected.map(_._1).toDF("line"), enriched = true)
+      .select(col("line"), unix_micros(col("collector_tstamp")))
+      .as[(String, Option[Long])].collect().toMap
+    assert(parsed == expected.toMap)
+
+    val (store, metrics) = run(cfg, expected.map(_._1))
+    assert(metrics.count.get() == expected.size)
+    assert(metrics.badCount.get() == 0)
+    assert(metrics.e2eLatencyMillis.get().contains(-9000L))
+    assert(store.paths.flatMap(p => gunzip(store.objects.get(p)).linesIterator).sorted ==
+      expected.map(_._1).sorted)
+  }
+
+  test("plan guard: an SDJ batch reads $.schema once and runs the Iglu regex once per row") {
+    val cfg = LoaderConfig.validate(LoaderConfig(
+      Purpose.Sdj, Output("mem://path"), BadOutput("mem://bad"))).toOption.get
+    val plan = LoaderPipeline.writeRows(rawDf(sdjLines(3) :+ "not json"), cfg, 4)
+      .queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions)
+    def count(pf: PartialFunction[Expression, Expression]) = exprs.map(_.collect(pf).size).sum
+    assert(count { case e: GetJsonObject => e } == 1, plan.treeString)
+    assert(count {
+      case e @ RLike(_, Literal(p, _)) if String.valueOf(p) == EventParser.IgluRegex => e
+    } == 1, plan.treeString)
   }
 
   test("e2: SDJ grouping by schema + bad rows (reference ProcessingSpec:80-101)") {
@@ -414,7 +453,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("one write job: a batch with good and bad rows runs at most 2 Spark jobs") {
+  test("one write job: a batch with good and bad rows runs exactly 1 Spark job") {
     val cfg = LoaderConfig.validate(LoaderConfig(
       Purpose.Sdj, Output("mem://path"), BadOutput("mem://bad"))).toOption.get
     val sc = spark.sparkContext
@@ -446,7 +485,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     }
     assert(metrics.count.get() == 8 && metrics.badCount.get() == 2)
     assert(store.paths.exists(_.startsWith("mem://bad")))
-    assert(jobs.get() > 0 && jobs.get() <= 2, s"${jobs.get()} jobs for one batch")
+    assert(jobs.get() == 1, s"${jobs.get()} jobs for one batch")
   }
 
   test("decompression errors become bad rows end-to-end") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** A suite's session: [[GraftSession]] at `cores` slots plus the suite's
@@ -18,6 +19,13 @@ trait SparkSuite extends BeforeAndAfterAll { this: Suite =>
   protected lazy val spark: SparkSession =
     GraftSession.local(cores, sparkConf.toSeq: _*)
 
+  /** Stops the session, then the JVM-wide state store: its maintenance
+    * thread would otherwise keep this session's loaded providers and report
+    * to their stopped coordinator while the next suite runs.
+    */
   override protected def afterAll(): Unit =
-    try spark.stop() finally super.afterAll()
+    try {
+      spark.stop()
+      StateStore.stop()
+    } finally super.afterAll()
 }
