@@ -7,11 +7,13 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession(GraftSession.Extensions)
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_QUERIES=q48,q64 — dump a subset (iteration aid, same
-    // contract as Bench; the driver runs without it and gets everything)
+    // SPARK_GRAFT_QUERIES=q48,q64 — dump a subset and only its oracle
+    // entries, so tools/check.py compares just those (iteration aid, same
+    // contract as Bench; without it, everything is written)
     val subset = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSet)
+    def selected(name: String) = subset.forall(_.exists(name.startsWith))
     SparkEntry.queries
-      .filter { case (name, _) => subset.forall(_.exists(name.startsWith)) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -32,6 +34,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => selected(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -1,37 +1,16 @@
 package graft.model
 
-/** Iglu schema key — the grouping/partitioning key of the engine.
-  *
-  * The reference extracts this from the `schema` field of self-describing
-  * JSONs (reference: modules/core/src/main/scala/.../core/Processing.scala:175-187)
-  * and uses its components for output-path templating
-  * (reference: modules/core/src/main/scala/.../core/DynamicPath.scala:24-30).
+/** Iglu schema key — the grouping/partitioning key of the engine: the
+  * components an output path can name (reference DynamicPath.scala:24-30).
+  * The key is cut from a self-describing JSON's `schema` field by
+  * [[graft.operators.EventParser.parseSdj]] (reference
+  * modules/core/src/main/scala/.../core/Processing.scala:175-187).
   */
-final case class SchemaKey(
-    vendor: String,
-    name: String,
-    format: String,
-    model: Int,
-    revision: Int,
-    addition: Int
-) {
-  def toIgluUri: String = s"iglu:$vendor/$name/$format/$model-$revision-$addition"
-}
+final case class SchemaKey(vendor: String, name: String, format: String, model: Int)
 
 object SchemaKey {
-  /** `iglu:<vendor>/<name>/<format>/<model>-<revision>-<addition>` */
-  val IgluUriRegex = "^iglu:([^/]+)/([^/]+)/([^/]+)/(\\d+)-(\\d+)-(\\d+)$".r
-
-  def parse(uri: String): Option[SchemaKey] = uri match {
-    case IgluUriRegex(v, n, f, m, r, a) =>
-      try Some(SchemaKey(v, n, f, m.toInt, r.toInt, a.toInt))
-      catch { case _: NumberFormatException => None }
-    case _ => None
-  }
-
   /** Sentinel key for enriched (atomic) events.
     * Reference: modules/core/src/main/scala/.../core/package.scala:16.
     */
-  val Atomic: SchemaKey =
-    SchemaKey("com.snowplowanalytics.snowplow", "atomic", "jsonschema", 1, 0, 0)
+  val Atomic: SchemaKey = SchemaKey("com.snowplowanalytics.snowplow", "atomic", "jsonschema", 1)
 }

@@ -7,7 +7,9 @@ import graft.model.SchemaKey
 
 /** Line classification + key/timestamp extraction (reference operators
   * P1–P5), expressed as declarative column transforms so Catalyst codegens
-  * the whole parse stage.
+  * the whole parse stage. The one parser of the engine: the loader's
+  * batches and streams and the reference queries (RefQueries q01–q04, q07)
+  * all run it.
   *
   * Input: a DataFrame with a `line: string` column (already UTF-8 decoded,
   * reference Processing.scala:102,116).
@@ -19,6 +21,8 @@ import graft.model.SchemaKey
   *                              reference Processing.scala:152)
   *   bad_error                — NULL for good rows; error message for bad
   *                              (reference Processing.scala:181-182)
+  *   schema_uri               — SDJ only: the `$.schema` string as read,
+  *                              NULL when absent or the line is not JSON
   *
   * Each transform is one `select` per level of dependency, never a chain of
   * `withColumn`s (each of which re-analyzes the whole plan). A column that
@@ -28,7 +32,8 @@ import graft.model.SchemaKey
   */
 object EventParser {
 
-  val IgluRegex: String = Synth.IgluRegex
+  /** `iglu:<vendor>/<name>/<format>/<model>-<revision>-<addition>` */
+  val IgluRegex: String = "^iglu:([^/]+)/([^/]+)/([^/]+)/(\\d+)-(\\d+)-(\\d+)$"
 
   /** Enriched purpose: TSV, collector_tstamp is field 3 (0-based), format
     * `yyyy-MM-dd HH:mm:ss[.SSS]`; every row maps to the atomic schema and
@@ -55,20 +60,23 @@ object EventParser {
       lit(null).cast("string").as("bad_error")): _*)
   }
 
-  /** SDJ purpose: parse `$.schema`, extract the Iglu key; malformed JSON or
-    * non-Iglu schema ⇒ bad row with the reference's message prefixes
-    * (Processing.scala:181-182; golden ProcessingSpec.scala:315-319).
+  /** SDJ purpose: parse `$.schema`, extract the Iglu key; malformed JSON,
+    * a non-Iglu schema or a model past `Int` ⇒ bad row with the reference's
+    * message prefixes (Processing.scala:181-182; golden
+    * ProcessingSpec.scala:315-319).
     *
     * Three selects: the JSON read and the JSON-shape test; the route, one
     * struct of (bad_error, key) chosen by the single Iglu regex pass; then
-    * the struct's fields as columns, which later selects can inline.
+    * the struct's fields as columns, which later selects can inline. The
+    * `$.schema` string rides through as `schema_uri`; a select that does
+    * not name it prunes it.
     */
   def parseSdj(lines: DataFrame): DataFrame = {
     val in = lines.columns.map(col)
     val parsed = lines.select(in ++ Seq(
-      get_json_object(col("line"), "$.schema").as("_uri"),
+      get_json_object(col("line"), "$.schema").as("schema_uri"),
       col("line").rlike("^\\s*\\{").as("_json")): _*)
-    val uri = col("_uri")
+    val uri = col("schema_uri")
     // extraction is substring_index over the already-validated URI — the
     // rlike is the single regex pass per line; regexp_extract ×4 measured
     // ~10× slower at sf0.1
@@ -79,14 +87,18 @@ object EventParser {
         format.as("format"), model.as("model"))
     val none = lit(null).cast("string")
     def rejected(error: String) = route(lit(error), none, none, none, lit(null).cast("int"))
-    val routed = parsed.select(in :+
+    // NULL past Int: the regex admits any digit run, and a plain cast
+    // throws under ANSI, failing the whole batch
+    val model = substring_index(substring_index(path, "/", -1), "-", 1).try_cast("int")
+    val routed = parsed.select(in ++ Seq(uri,
       when(!col("_json"), rejected("Can't parse JSON holding self-describing event"))
-        .when(uri.rlike(IgluRegex), route(none, segment(1), segment(2), segment(3),
-          substring_index(substring_index(path, "/", -1), "-", 1).cast("int")))
+        .when(uri.rlike(IgluRegex) && model.isNotNull,
+          route(none, segment(1), segment(2), segment(3), model))
         .otherwise(rejected("Can't extract schema from self-describing event: INVALID_IGLUURI"))
-        .as("_route"): _*)
+        .as("_route")): _*)
     routed.select(in ++ Seq("vendor", "name", "format", "model").map(f => col(s"_route.$f").as(f)) ++
-      Seq(lit(null).cast("timestamp").as("collector_tstamp"), col("_route.bad_error").as("bad_error")): _*)
+      Seq(lit(null).cast("timestamp").as("collector_tstamp"), col("_route.bad_error").as("bad_error"),
+        uri): _*)
   }
 
   def parse(lines: DataFrame, enriched: Boolean): DataFrame =

@@ -25,42 +25,40 @@ object RefQueries extends QueryFamily {
 
   private val DuckIglu = "^iglu:([^/]+)/([^/]+)/([^/]+)/(\\d+)-(\\d+)-(\\d+)$"
 
+  /** The SDJ rendering of every event, fanned out and parsed by
+    * [[EventParser.parseSdj]] — the loader's own parser. `cols` ride along.
+    */
+  private def sdj(s: SparkSession, dir: String, cols: String*): DataFrame =
+    EventParser.parseSdj(Synth.fanOut(Synth.events(s, dir)
+      .select(cols.map(col) :+ Synth.sdjLine().as("line"): _*), "event_id"))
+
+  private val good = col("bad_error").isNull
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Q1 — P1/P2: enriched decode, collector_tstamp from TSV col index 3
     // (reference: Processing.scala:143-154; NULL on malformed, silent).
     "q01_enriched_tstamp" -> { (s, dir) =>
       // fanOut: the timestamp parse below is the query's cost and the
       // single-file scan is one task (Synth.fanOut scaladoc)
-      val lines = Synth.fanOut(Synth.events(s, dir).select(
-        col("event_id"), Synth.enrichedLine().as("line")), "event_id")
-      lines
-        .select(
-          col("event_id"),
-          date_format(
-            to_timestamp(element_at(split(col("line"), "\t", -1), 4),
-              "yyyy-MM-dd HH:mm:ss.SSS"),
-            "yyyy-MM-dd HH:mm:ss.SSS").as("collector_tstamp"))
+      EventParser.parseEnriched(Synth.fanOut(Synth.events(s, dir).select(
+        col("event_id"), Synth.enrichedLine().as("line")), "event_id"))
+        .select(col("event_id"),
+          date_format(col("collector_tstamp"), "yyyy-MM-dd HH:mm:ss.SSS").as("collector_tstamp"))
         .orderBy("event_id")
     },
 
     // Q2 — P3/P4: SDJ good/bad split, good side with extracted schema URI
     // (reference: Processing.scala:114-141,175-187).
     "q02_sdj_good" -> { (s, dir) =>
-      Synth.fanOut(Synth.events(s, dir)
-        .select(col("event_id"), Synth.sdjLine().as("line")), "event_id")
-        .select(col("event_id"),
-          get_json_object(col("line"), "$.schema").as("schema_uri"))
-        .filter(col("schema_uri").rlike(Synth.IgluRegex))
+      sdj(s, dir, "event_id").filter(good)
+        .select(col("event_id"), col("schema_uri"))
         .orderBy("event_id")
     },
 
     // Q2b — the complement: bad rows carry Base64 of the raw payload
     // (reference: Processing.scala:189-204, payload Base64 at :198).
     "q02_sdj_bad" -> { (s, dir) =>
-      Synth.fanOut(Synth.events(s, dir)
-        .select(col("event_id"), Synth.sdjLine().as("line")), "event_id")
-        .filter(!coalesce(get_json_object(col("line"), "$.schema"), lit(""))
-          .rlike(Synth.IgluRegex))
+      sdj(s, dir, "event_id").filter(!good)
         .select(col("event_id"), base64(col("line").cast("binary")).as("payload_b64"))
         .orderBy("event_id")
     },
@@ -69,37 +67,16 @@ object RefQueries extends QueryFamily {
     // (reference: SchemaKey.extract call at Processing.scala:182,
     //  component access DynamicPath.scala:24-30).
     "q03_iglu_parse" -> { (s, dir) =>
-      // One regex pass (the validity filter) — component extraction is
-      // split/substring over the already-validated URI. The 4-regex
-      // regexp_extract form measured 10× slower at sf0.1 once the bench
-      // stopped letting Catalyst prune the projections.
-      Synth.fanOut(Synth.events(s, dir)
-        .select(col("event_id"), Synth.sdjLine().as("line")), "event_id")
-        .select(col("event_id"),
-          get_json_object(col("line"), "$.schema").as("u"))
-        .filter(col("u").rlike(Synth.IgluRegex))
-        .withColumn("parts", split(substring(col("u"), 6, 1000000), "/"))
-        .select(
-          col("event_id"),
-          col("parts").getItem(0).as("vendor"),
-          col("parts").getItem(1).as("name"),
-          col("parts").getItem(2).as("format"),
-          split(col("parts").getItem(3), "-").getItem(0).cast("int").as("model"))
+      sdj(s, dir, "event_id").filter(good)
+        .select("event_id", "vendor", "name", "format", "model")
         .orderBy("event_id")
     },
 
     // Q4 — A1+A2: group by schema key, count per group
     // (reference: Processing.scala:106,121-123 map-merge monoid).
     "q04_group_by_schema" -> { (s, dir) =>
-      Synth.fanOut(Synth.events(s, dir)
-        .select(col("event_id"), Synth.sdjLine().as("line")), "event_id")
-        .select(get_json_object(col("line"), "$.schema").as("u"))
-        .filter(col("u").rlike(Synth.IgluRegex))
-        .withColumn("parts", split(substring(col("u"), 6, 1000000), "/"))
-        .groupBy(
-          col("parts").getItem(0).as("vendor"),
-          col("parts").getItem(1).as("name"),
-          split(col("parts").getItem(3), "-").getItem(0).cast("int").as("model"))
+      sdj(s, dir, "event_id").filter(good)
+        .groupBy("vendor", "name", "model")
         .agg(count(lit(1)).as("n_events"))
         .orderBy("vendor", "name", "model")
     },
@@ -136,19 +113,13 @@ object RefQueries extends QueryFamily {
     // (reference: DynamicPath.scala:80-97; SDJ default template
     //  DynamicPath.scala:46-49).
     "q07_partition_path" -> { (s, dir) =>
-      Synth.fanOut(Synth.events(s, dir)
-        .select(col("event_id"), col("ts"), Synth.sdjLine().as("line")), "event_id")
-        .select(col("event_id"), col("ts"),
-          get_json_object(col("line"), "$.schema").as("u"))
-        .filter(col("u").rlike(Synth.IgluRegex))
-        .withColumn("parts", split(substring(col("u"), 6, 1000000), "/"))
+      sdj(s, dir, "event_id", "ts").filter(good)
         .select(
           col("event_id"),
           concat(
-            col("parts").getItem(0), lit("."),
-            col("parts").getItem(1), lit("/model="),
-            split(col("parts").getItem(3), "-").getItem(0), lit("/date="),
-            date_format(col("ts"), "yyyy-MM-dd")).as("partition_path"))
+            col("vendor"), lit("."), col("name"),
+            lit("/model="), col("model").cast("string"),
+            lit("/date="), date_format(col("ts"), "yyyy-MM-dd")).as("partition_path"))
         .orderBy("event_id")
     },
 

@@ -54,8 +54,6 @@ object Synth {
           lit("}")
         ))
 
-  val IgluRegex = "^iglu:([^/]+)/([^/]+)/([^/]+)/(\\d+)-(\\d+)-(\\d+)$"
-
   /** events.ts has shipped as parquet TIMESTAMP(NANOS) (which Spark's
     * vectorized reader rejects — read as raw nanos, floor-divide to micros,
     * matching DuckDB's epoch_us truncation) and as tz-naive timestamp[us]

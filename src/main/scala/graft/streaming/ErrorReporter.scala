@@ -23,14 +23,21 @@ final case class ErrorReport(
     message: String,
     atMillis: Long) {
 
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "'")
-      .replace("\n", " ").replace("\r", " ")
+  import ErrorReport.esc
 
   def json: String =
     s"""{"query":"${esc(queryName)}","runId":"$runId","batchId":$batchId,""" +
       s""""exception":"${esc(exceptionClass)}","message":"${esc(message)}",""" +
       s""""atMillis":$atMillis}"""
+}
+
+object ErrorReport {
+  /** Text made safe inside a JSON string: backslashes doubled, quotes
+    * turned to `'`, and every control character (a stack trace's newlines
+    * and tabs) turned to a space.
+    */
+  def esc(s: String): String =
+    s.replace("\\", "\\\\").replace("\"", "'").replaceAll("[\\x00-\\x1f]", " ")
 }
 
 /** Error-report hook (the Sentry-equivalent): a StreamingQueryListener

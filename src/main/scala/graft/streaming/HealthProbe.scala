@@ -85,7 +85,7 @@ final class HealthProbe(
     val age = lastProgressMs.get()
       .map(t => System.currentTimeMillis() - t).getOrElse(-1L)
     val svc = services.problems.toSeq.sorted
-      .map { case (k, v) => s""""$k":"${v.replace("\"", "'")}"""" }
+      .map { case (k, v) => s""""$k":"${ErrorReport.esc(v)}"""" }
       .mkString("{", ",", "}")
     // structured last-error from the ErrorReporter hook (the
     // Sentry-equivalent surface): exception class, query, batch id
@@ -93,7 +93,7 @@ final class HealthProbe(
       .map(_.json).getOrElse("null")
     s"""{"healthy":$healthy,"lastProgressAgeMs":$age,"services":$svc,""" +
       s""""lastError":$lastErr,""" +
-      s""""terminated":${terminated.get().map("\"" + _ + "\"").getOrElse("null")}}"""
+      s""""terminated":${terminated.get().map(t => "\"" + ErrorReport.esc(t) + "\"").getOrElse("null")}}"""
   }
 
   def start(): HealthProbe = {

@@ -305,7 +305,7 @@ object LoaderPipeline {
           if (w == null) {
             val k = (key._1.toString, key._2.toString, key._3.toString, key._4)
             w = new RollingGzipWriter.GroupWriter(goodStore, sinkCfg,
-              SchemaKey(k._1, k._2, k._3, k._4, 0, 0), wallClock,
+              SchemaKey(k._1, k._2, k._3, k._4), wallClock,
               uuidFactory(nameSeed, k), deflateThreads)
             writers.put((key._1.clone(), key._2.clone(), key._3.clone(), key._4), w)
           }

@@ -86,9 +86,10 @@ class HealthProbeSpec extends AnyFunSuite with SparkSuite {
         }.start()
       intercept[Exception](q.awaitTermination())
 
-      // the listener bus delivers asynchronously — poll for the report
+      // the listener bus delivers asynchronously, to the reporter and then
+      // to the probe — poll until both have seen the termination
       val deadline = System.currentTimeMillis() + 10000
-      while (reporter.lastError.get().isEmpty &&
+      while ((reporter.lastError.get().isEmpty || probe.healthy) &&
         System.currentTimeMillis() < deadline) Thread.sleep(50)
       val report = reporter.lastError.get()
         .getOrElse(fail("no error report captured"))
@@ -146,6 +147,42 @@ class HealthProbeSpec extends AnyFunSuite with SparkSuite {
       assert(reporter.lastError.get().isEmpty)
       q2.stop()
     } finally { spark.streams.removeListener(reporter); reporter.close() }
+  }
+
+  test("/health stays valid JSON after a failure with newlines, quotes and backslashes") {
+    val port = 18769
+    val services = new ServiceHealth
+    val reporter = new ErrorReporter()
+    val probe = new HealthProbe(unhealthyLatency = 1.hour, port = port,
+      services = services, errors = Some(reporter)).start()
+    spark.streams.addListener(reporter)
+    spark.streams.addListener(probe)
+    try {
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
+      mem.addData(1)
+      val q = mem.toDF().writeStream.queryName("escaping-loader")
+        .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+          throw new IllegalStateException("first line\nsaid \"no\" at C:\\tmp")
+        }.start()
+      intercept[Exception](q.awaitTermination())
+      services.markUnhealthy(ServiceHealth.BlobSink, "put failed:\n\tcaused by \"refused\"\r\nend")
+
+      val deadline = System.currentTimeMillis() + 10000
+      while ((reporter.lastError.get().isEmpty || get(port)._2.contains("\"terminated\":null")) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+      val (code, body) = get(port)
+      assert(code == 503)
+      val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+      assert(!json.get("healthy").asBoolean())
+      assert(json.get("services").get("BlobSink").asText().contains("caused by 'refused'"))
+      assert(json.get("terminated").asText().contains("said 'no' at C:\\tmp"))
+      assert(json.get("lastError").get("query").asText() == "escaping-loader")
+    } finally {
+      spark.streams.removeListener(reporter); spark.streams.removeListener(probe)
+      probe.stop(); reporter.close()
+    }
   }
 
   test("GET /metrics serves the prometheus scrape when built with metrics") {

@@ -7,30 +7,57 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.{LoaderConfig, Output, BadOutput, Purpose}
 import graft.model.{BadRow, SchemaKey}
+import graft.operators.EventParser
 import graft.sinks.DynamicPath
 
-/** Pure-function layer: SchemaKey / DynamicPath / BadRow / config
-  * validation — ports of the reference's DynamicPathSpec (12 cases) and
-  * ConfigSpec golden behaviors.
+/** Model layer: SchemaKey as cut by the loader's parser
+  * ([[EventParser.parseSdj]]), DynamicPath / BadRow / config validation —
+  * ports of the reference's DynamicPathSpec (12 cases) and ConfigSpec
+  * golden behaviors.
   */
-class ModelSpec extends AnyFunSuite {
+class ModelSpec extends AnyFunSuite with SparkSuite {
+
+  override protected def sparkConf = Map("spark.app.name" -> "model-spec")
 
   private val t = Instant.parse("2023-12-25T15:30:45Z")
-  private val key = SchemaKey("com.example", "event1", "jsonschema", 1, 0, 0)
+  private val key = SchemaKey("com.example", "event1", "jsonschema", 1)
   private val uuid = UUID.fromString("00000000-0000-0000-0000-000000000000")
 
+  private val invalidUri = "Can't extract schema from self-describing event: INVALID_IGLUURI"
+
+  private def toIgluUri(k: SchemaKey): String =
+    s"iglu:${k.vendor}/${k.name}/${k.format}/${k.model}-0-0"
+
+  /** Each schema string's (bad_error, key) as `parseSdj` routes an SDJ
+    * line carrying it.
+    */
+  private def parseUris(schemas: Seq[String]): Map[String, (Option[String], Option[SchemaKey])] = {
+    import spark.implicits._
+    EventParser.parseSdj(schemas.map(u => s"""{"schema":"$u","data":{}}""").toDF("line"))
+      .select("schema_uri", "bad_error", "vendor", "name", "format", "model")
+      .as[(String, Option[String], Option[String], Option[String], Option[String], Option[Int])]
+      .collect().map { case (u, e, v, n, f, m) =>
+        u -> (e, for (v <- v; n <- n; f <- f; m <- m) yield SchemaKey(v, n, f, m))
+      }.toMap
+  }
+
   test("SchemaKey parses a full iglu URI") {
-    assert(SchemaKey.parse("iglu:com.example/event1/jsonschema/1-0-0").contains(key))
+    val uri = "iglu:com.example/event1/jsonschema/1-0-0"
+    assert(parseUris(Seq(uri)) == Map(uri -> (None, Some(key))))
   }
 
   test("SchemaKey rejects malformed URIs") {
-    assert(SchemaKey.parse("iglu:com.example/event1/jsonschema/1-0").isEmpty)
-    assert(SchemaKey.parse("schema:com.example/event1/jsonschema/1-0-0").isEmpty)
-    assert(SchemaKey.parse("").isEmpty)
+    val malformed = Seq(
+      "iglu:com.example/event1/jsonschema/1-0",
+      "schema:com.example/event1/jsonschema/1-0-0",
+      "",
+      "iglu:com.example/event1/jsonschema/99999999999-0-0") // model past Int
+    assert(parseUris(malformed) == malformed.map(_ -> (Some(invalidUri), None)).toMap)
   }
 
   test("SchemaKey round-trips through toIgluUri") {
-    assert(SchemaKey.parse(key.toIgluUri).contains(key))
+    val keys = Seq(key, SchemaKey.Atomic, SchemaKey("com.acme", "x-y_z", "jsonschema", 12))
+    assert(parseUris(keys.map(toIgluUri)) == keys.map(k => toIgluUri(k) -> (None, Some(k))).toMap)
   }
 
   // Reference DynamicPathSpec golden: year=..月 template at a fixed instant.

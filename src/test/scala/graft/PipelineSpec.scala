@@ -143,6 +143,19 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     } == 1, plan.treeString)
   }
 
+  test("an Iglu model past Int is a bad row, not a failed batch") {
+    val cfg = LoaderConfig.validate(LoaderConfig(
+      Purpose.Sdj, Output("mem://path"), BadOutput("mem://bad"))).toOption.get
+    val overflow =
+      """{"schema":"iglu:com.example/event1/jsonschema/99999999999-0-0","data":{}}"""
+    val (store, metrics) = run(cfg, sdjLines(1) :+ overflow)
+    assert(metrics.count.get() == 1)
+    assert(metrics.badCount.get() == 1)
+    val badContent = store.paths.filter(_.startsWith("mem://bad"))
+      .map(p => gunzip(store.objects.get(p))).mkString
+    assert(badContent.contains("INVALID_IGLUURI"))
+  }
+
   test("e2: SDJ grouping by schema + bad rows (reference ProcessingSpec:80-101)") {
     val cfg = LoaderConfig.validate(LoaderConfig(
       Purpose.Sdj, Output("mem://path"), BadOutput("mem://bad"))).toOption.get
