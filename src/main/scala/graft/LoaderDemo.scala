@@ -6,7 +6,7 @@ import graft.config._
 import graft.operators.Synth
 import graft.sinks.HadoopBlobStore
 import graft.sources.RecordSources
-import graft.streaming.{ErrorReporter, HealthProbe, LoaderPipeline, MetricsEmitter, ServiceHealth}
+import graft.streaming.{HealthProbe, LoaderPipeline, MetricsEmitter, ServiceHealth}
 
 /** Demo/ops entrypoint: run the loader end-to-end over lines synthesized
   * from the events table, writing real gzip objects through the
@@ -15,8 +15,12 @@ import graft.streaming.{ErrorReporter, HealthProbe, LoaderPipeline, MetricsEmitt
   * Usage:
   *   runMain graft.LoaderDemo <sfDir> <outDir> [ENRICHED_EVENTS|SELF_DESCRIBING]
   *   runMain graft.LoaderDemo --stream <inDir> <outDir> [purpose]
-  *     — streaming mode: tails <inDir> for text files (RecordSources),
-  *       health probe on :8000, Ctrl-C (or SPARK_GRAFT_STREAM_SECONDS) to stop.
+  *     — streaming mode: tails <inDir> for text files (RecordSources) with
+  *       one HealthProbe as its only query listener (/health with
+  *       lastError and /metrics on :8000, stream latency, and a
+  *       stream_error statsd event on a crash), an optional statsd push
+  *       (SPARK_GRAFT_STATSD=host:port), and Ctrl-C (or
+  *       SPARK_GRAFT_STREAM_SECONDS) to stop.
   *   runMain graft.LoaderDemo --config <path.hocon> <sfDir>
   *     — batch run configured from a HOCON file (the reference's
   *       Run.fromConfigPath entry shape, reference Run.scala:44-65).
@@ -56,25 +60,19 @@ object LoaderDemo {
     ).fold(e => throw new IllegalArgumentException(e), identity)
     val spark = GraftSession()
 
-    // full monitoring stack: per-service health + /health + /metrics
-    // scrape, stream latency from query progress, optional statsd push
-    // (SPARK_GRAFT_STATSD=host:port)
+    // full monitoring stack: per-service health, optional statsd push
+    // (SPARK_GRAFT_STATSD=host:port), and one listener for /health,
+    // /metrics, stream latency and crash reports
     val services = new ServiceHealth
     val metrics = new LoaderPipeline.Metrics
-    val statsdCfg = sys.env.get("SPARK_GRAFT_STATSD").map { hp =>
+    val reporter = sys.env.get("SPARK_GRAFT_STATSD").map { hp =>
       val Array(h, p) = hp.split(":", 2)
-      MetricsEmitter.StatsdConfig(h, p.toInt)
+      new MetricsEmitter.StatsdReporter(metrics,
+        MetricsEmitter.StatsdConfig(h, p.toInt)).start()
     }
-    // Sentry-equivalent: structured crash reports (statsd counter +
-    // /health lastError) registered FIRST, the reference's resource order
-    val errors = new ErrorReporter(statsdCfg)
     val probe = new HealthProbe(services = services,
-      metrics = Some(metrics), errors = Some(errors)).start()
-    spark.streams.addListener(errors)
+      metrics = Some(metrics), statsd = reporter).start()
     spark.streams.addListener(probe)
-    spark.streams.addListener(new MetricsEmitter.StreamLatencyListener(metrics))
-    val reporter = statsdCfg.map(
-      new MetricsEmitter.StatsdReporter(metrics, _).start())
 
     val raw = RecordSources.build(spark, RecordSources.TextFiles(inDir))
     val cfg = LoaderConfig.validate(LoaderConfig(
@@ -97,7 +95,6 @@ object LoaderDemo {
       case None => q.awaitTermination()
     }
     reporter.foreach(_.close())
-    errors.close()
     probe.stop()
     spark.stop()
   }

@@ -23,7 +23,12 @@ sealed trait BadRow {
 }
 
 object BadRow {
-  private def esc(s: String): String = {
+  /** Text made safe inside a JSON string: quotes and backslashes escaped,
+    * newline, CR and tab by their short escapes, every other control
+    * character by its four-digit escape. The project's one JSON string
+    * escaper (bad rows, /health, Verify's oracle_sql.json).
+    */
+  def esc(s: String): String = {
     val sb = new StringBuilder(s.length + 8)
     var i = 0
     while (i < s.length) {

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicReference
 
 import scala.concurrent.duration._
@@ -11,6 +13,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 import graft.config.HealthProbeConfig
+import graft.model.BadRow.esc
 
 /** Per-service health registry (reference RuntimeService: BlobSink /
   * BadSink / source are marked unhealthy INDIVIDUALLY on failure —
@@ -37,43 +40,111 @@ object ServiceHealth {
   val Source = "Source"
 }
 
-/** Liveness probe (reference operator T9 — Environment.scala:71-74,
-  * HealthProbe on :8000 with unhealthyLatency=2min): the engine is healthy
-  * while micro-batches keep completing AND no individual service
-  * (BlobSink / BadSink / source) is marked failed; if progress stalls past
-  * `unhealthyLatency`, a service degrades, or the query terminates with an
-  * error, the probe flips to 503.
+/** Structured crash report for a terminally-failed stream — what the
+  * reference wires Sentry for, first in its resource order
+  * (reference core/Environment.scala:61-98):
+  * a 24/7 loader must say WHAT died, WHERE, and on WHICH batch, not just
+  * flip a liveness bit.
+  */
+final case class ErrorReport(
+    queryName: String,
+    runId: String,
+    batchId: Long,
+    exceptionClass: String,
+    message: String,
+    atMillis: Long) {
+
+  def json: String =
+    s"""{"query":"${esc(queryName)}","runId":"$runId","batchId":$batchId,""" +
+      s""""exception":"${esc(exceptionClass)}","message":"${esc(message)}",""" +
+      s""""atMillis":$atMillis}"""
+}
+
+/** The loader monitor (reference operators T9 and T10, and the crash
+  * reports of Environment.scala:61-98), and the loader's only
+  * StreamingQueryListener, so one object keeps each query's lifecycle:
   *
-  * Implemented as a StreamingQueryListener (the Spark-native signal — a
-  * progress event per micro-batch) plus the JDK's built-in HTTP server.
+  *  - liveness (T9 — Environment.scala:71-74, HealthProbe on :8000 with
+  *    unhealthyLatency=2min): healthy while micro-batches keep completing
+  *    AND no individual service (BlobSink / BadSink / source) is marked
+  *    failed; if progress stalls past `unhealthyLatency`, a service
+  *    degrades, or the query terminates, GET /health flips to 503;
+  *  - stream latency (T10's `latency_millis`): each micro-batch's
+  *    `triggerExecution` duration, set on `metrics`;
+  *  - crash reports (the Sentry equivalent): on a terminal failure, an
+  *    [[ErrorReport]] with the query name (from the start event), the last
+  *    batch id (from progress events; the terminated event carries none)
+  *    and the exception class, served as `lastError` in /health and
+  *    counted as a `<prefix>.stream_error` statsd event tagged with the
+  *    query and exception class.
+  *
+  * A later start of the SAME query name clears both its termination and
+  * its report — the recovery contract ServiceHealth applies per service.
   * Also serves the prometheus scrape at GET /metrics when built with a
-  * metrics handle (reference Metrics.scrape).
+  * metrics handle (reference Metrics.scrape). The handlers accept the
+  * null start and progress events of a probe driven by hand.
   */
 final class HealthProbe(
     unhealthyLatency: FiniteDuration = HealthProbeConfig().unhealthyLatency,
     port: Int = HealthProbeConfig().port,
     services: ServiceHealth = new ServiceHealth,
     metrics: Option[LoaderPipeline.Metrics] = None,
-    errors: Option[ErrorReporter] = None)
+    statsd: Option[MetricsEmitter.StatsdReporter] = None)
     extends StreamingQueryListener {
 
+  val lastError = new AtomicReference[Option[ErrorReport]](None)
   private val lastProgressMs = new AtomicReference[Option[Long]](None)
-  private val terminated = new AtomicReference[Option[String]](None)
+  /** (query name, exception text or "clean shutdown") of the last end. */
+  private val terminated = new AtomicReference[Option[(String, String)]](None)
   private val started = new AtomicReference[Boolean](false)
+  private val names = new ConcurrentHashMap[UUID, String]()
+  private val batches = new ConcurrentHashMap[UUID, java.lang.Long]()
   private var server: HttpServer = _
 
   override def onQueryStarted(e: QueryStartedEvent): Unit = {
+    Option(e).foreach { e =>
+      val name = Option(e.name).getOrElse(e.id.toString)
+      names.put(e.runId, name)
+      // restart of a query that ended: clear its report and termination
+      lastError.getAndUpdate {
+        case Some(r) if r.queryName == name => None
+        case other => other
+      }
+      terminated.getAndUpdate {
+        case Some((q, _)) if q == name => None
+        case other => other
+      }
+    }
     started.set(true)
     lastProgressMs.set(Some(System.currentTimeMillis()))
   }
 
-  override def onQueryProgress(e: QueryProgressEvent): Unit =
+  override def onQueryProgress(e: QueryProgressEvent): Unit = {
+    Option(e).map(_.progress).foreach { p =>
+      batches.put(p.runId, p.batchId)
+      Option(p.durationMs).flatMap(d => Option(d.get("triggerExecution")))
+        .foreach(d => metrics.foreach(_.latencyMillis.set(Some(d.longValue()))))
+    }
     lastProgressMs.set(Some(System.currentTimeMillis()))
+  }
 
-  override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-    terminated.set(Some(e.exception.getOrElse("clean shutdown")))
+  override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
+    val name = Option(names.remove(e.runId)).getOrElse(e.id.toString)
+    val batchId = Option(batches.remove(e.runId)).fold(-1L)(_.longValue())
+    // set before the report, so /health never reads healthy with a report
+    terminated.set(Some((name, e.exception.getOrElse("clean shutdown"))))
+    e.exception.foreach { exc =>
+      val firstLine = exc.linesIterator.find(_.nonEmpty).getOrElse(exc)
+      // "org.example.SomeException: message..." → class prefix
+      val report = ErrorReport(name, e.runId.toString, batchId,
+        firstLine.takeWhile(_ != ':').trim, firstLine, System.currentTimeMillis())
+      lastError.set(Some(report))
+      statsd.foreach(_.increment("stream_error",
+        Map("query" -> report.queryName, "exception" -> report.exceptionClass)))
+    }
+  }
 
-  /** Healthy = started, not errored, progressed recently, and every
+  /** Healthy = started, not terminated, progressed recently, and every
     * service individually healthy.
     */
   def healthy: Boolean =
@@ -85,15 +156,12 @@ final class HealthProbe(
     val age = lastProgressMs.get()
       .map(t => System.currentTimeMillis() - t).getOrElse(-1L)
     val svc = services.problems.toSeq.sorted
-      .map { case (k, v) => s""""$k":"${ErrorReport.esc(v)}"""" }
+      .map { case (k, v) => s""""$k":"${esc(v)}"""" }
       .mkString("{", ",", "}")
-    // structured last-error from the ErrorReporter hook (the
-    // Sentry-equivalent surface): exception class, query, batch id
-    val lastErr = errors.flatMap(_.lastError.get())
-      .map(_.json).getOrElse("null")
+    val lastErr = lastError.get().map(_.json).getOrElse("null")
+    val term = terminated.get().map { case (_, t) => "\"" + esc(t) + "\"" }
     s"""{"healthy":$healthy,"lastProgressAgeMs":$age,"services":$svc,""" +
-      s""""lastError":$lastErr,""" +
-      s""""terminated":${terminated.get().map(t => "\"" + ErrorReport.esc(t) + "\"").getOrElse("null")}}"""
+      s""""lastError":$lastErr,"terminated":${term.getOrElse("null")}}"""
   }
 
   def start(): HealthProbe = {

@@ -60,8 +60,8 @@ import graft.sources.Decompression
 object LoaderPipeline {
 
   /** Pluggable metrics (reference Metrics.scala:35-49): counts, stream
-    * latency (micro-batch triggerExecution, via
-    * [[MetricsEmitter.StreamLatencyListener]]) and e2e lag. Emission to
+    * latency (micro-batch triggerExecution, set by [[HealthProbe]]) and
+    * e2e lag. Emission to
     * statsd/prometheus is [[MetricsEmitter]]'s job. Good objects are
     * counted over the life of the metrics; only the last batch's
     * [[RollingGzipWriter.WriteAction]]s are kept, so a long-running stream

@@ -6,9 +6,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.streaming.StreamingQueryListener
-import org.apache.spark.sql.streaming.StreamingQueryListener._
-
 /** Metrics emission (reference operator T10 — core/Metrics.scala:25-49):
   * the reference pushes `count`, `latency_millis`, `e2e_latency_millis`
   * and the legacy `latency_collector_to_load` gauge to statsd on a period,
@@ -21,11 +18,14 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   *  - prometheus: the text exposition format with cumulative counters and
   *    `{k="v"}` labels, served by [[HealthProbe]] at GET /metrics
   *
+  * Each metric is declared once, in `exported`, and both surfaces render
+  * from that list.
+  *
   * Stream latency (`latency_millis`) comes from the Spark-native signal:
   * each micro-batch's `triggerExecution` duration in
-  * StreamingQueryProgress — how long the batch's records waited inside the
-  * engine, the closest analogue of the reference's
-  * `sourceAndAck.currentStreamLatency` (Metrics.scala:40).
+  * StreamingQueryProgress, which [[HealthProbe]] records — how long the
+  * batch's records waited inside the engine, the closest analogue of the
+  * reference's `sourceAndAck.currentStreamLatency` (Metrics.scala:40).
   *
   * Beyond the reference's set, the sink counters `objects_written` (good
   * objects), `put_millis` and `bad_put_millis` (time spent in the good and
@@ -43,18 +43,49 @@ object MetricsEmitter {
       period: FiniteDuration = 1.minute,
       prefix: String = "graft.loader")
 
-  /** DogStatsD `|#k:v,...` tags, sorted by key; empty for no tags. */
-  private[streaming] def tagSuffix(tags: Map[String, String]): String =
-    if (tags.isEmpty) ""
-    else tags.toSeq.sorted.map { case (k, v) => s"$k:$v" }
-      .mkString("|#", ",", "")
-
-  /** The sink counters (`objects_written`, `put_millis`,
-    * `bad_put_millis`) are reported once the loader has written an object,
-    * good or bad: before that there is no put to count or time.
+  /** DogStatsD `|#k:v,...` tags, sorted by key; empty for no tags. The
+    * line protocol's separators `,|#:` in a key or value become `_`.
     */
-  private def hasWritten(m: LoaderPipeline.Metrics): Boolean =
-    m.objectsWritten.get() > 0 || m.badCount.get() > 0
+  private def tagSuffix(tags: Map[String, String]): String = {
+    def clean(s: String) = s.replaceAll("[,|#:]", "_")
+    if (tags.isEmpty) ""
+    else tags.toSeq.sorted.map { case (k, v) => s"${clean(k)}:${clean(v)}" }
+      .mkString("|#", ",", "")
+  }
+
+  /** How a metric is exported: its statsd type and its Prometheus type. A
+    * counter names its cell in [[LoaderPipeline.Metrics]], so statsd can
+    * send the delta since the last report.
+    */
+  private sealed abstract class Kind(val statsd: String, val prometheus: String)
+  private final case class Counter(cell: LoaderPipeline.Metrics => AtomicLong)
+      extends Kind("c", "counter")
+  private case object Timer extends Kind("ms", "gauge")
+  private case object Gauge extends Kind("g", "gauge")
+
+  /** The exported metrics of `m`, declared once for statsd and Prometheus:
+    * (name, kind, value) in report order, counters cumulative. Latencies
+    * appear once measured. The sink counters (`objects_written`,
+    * `put_millis`, `bad_put_millis`) appear once the loader has written an
+    * object, good or bad: before that there is no put to count or time.
+    */
+  private def exported(m: LoaderPipeline.Metrics): Seq[(String, Kind, Long)] = {
+    def counter(name: String, cell: LoaderPipeline.Metrics => AtomicLong) =
+      (name, Counter(cell), cell(m).get())
+    val hasWritten = m.objectsWritten.get() > 0 || m.badCount.get() > 0
+    Seq(counter("count", _.count), counter("bad_count", _.badCount)) ++
+      m.latencyMillis.get().map(v => ("latency_millis", Timer, v)) ++
+      m.e2eLatencyMillis.get().toSeq.flatMap { v =>
+        Seq(
+          ("e2e_latency_millis", Timer, v),
+          // legacy gauge, seconds (reference Metrics.scala:43)
+          ("latency_collector_to_load", Gauge, v / 1000))
+      } ++
+      (if (!hasWritten) Nil
+       else Seq(counter("objects_written", _.objectsWritten),
+         counter("put_millis", _.putMillis),
+         counter("bad_put_millis", _.badPutMillis)))
+  }
 
   /** One report's datagrams. Counters are DELTAS vs `last`, the counter
     * values at the previous report (statsd `|c` semantics), which are
@@ -65,23 +96,13 @@ object MetricsEmitter {
       cfg: StatsdConfig,
       last: LoaderPipeline.Metrics): Seq[String] = {
     val t = tagSuffix(cfg.tags)
-    val p = cfg.prefix
-    def counter(name: String, of: LoaderPipeline.Metrics => AtomicLong): String = {
-      val v = of(m).get()
-      s"$p.$name:${v - of(last).getAndSet(v)}|c$t"
+    exported(m).map { case (name, kind, v) =>
+      val sent = kind match {
+        case Counter(cell) => v - cell(last).getAndSet(v)
+        case _ => v
+      }
+      s"${cfg.prefix}.$name:$sent|${kind.statsd}$t"
     }
-    Seq(counter("count", _.count), counter("bad_count", _.badCount)) ++
-      m.latencyMillis.get().map(v => s"$p.latency_millis:$v|ms$t") ++
-      m.e2eLatencyMillis.get().toSeq.flatMap { v =>
-        Seq(
-          s"$p.e2e_latency_millis:$v|ms$t",
-          // legacy gauge, seconds (reference Metrics.scala:43)
-          s"$p.latency_collector_to_load:${v / 1000}|g$t")
-      } ++
-      (if (!hasWritten(m)) Nil
-       else Seq(counter("objects_written", _.objectsWritten),
-         counter("put_millis", _.putMillis),
-         counter("bad_put_millis", _.badPutMillis)))
   }
 
   /** Prometheus text exposition of the same metrics (cumulative values). */
@@ -92,24 +113,9 @@ object MetricsEmitter {
       if (tags.isEmpty) ""
       else tags.toSeq.sorted.map { case (k, v) => s"""$k="$v"""" }
         .mkString("{", ",", "}")
-    val sb = new StringBuilder
-    def metric(name: String, mtype: String, value: Long): Unit = {
-      sb.append(s"# TYPE $name $mtype\n")
-      sb.append(s"$name$labels $value\n")
-    }
-    metric("graft_count", "counter", m.count.get())
-    metric("graft_bad_count", "counter", m.badCount.get())
-    m.latencyMillis.get().foreach(v => metric("graft_latency_millis", "gauge", v))
-    m.e2eLatencyMillis.get().foreach { v =>
-      metric("graft_e2e_latency_millis", "gauge", v)
-      metric("graft_latency_collector_to_load", "gauge", v / 1000)
-    }
-    if (hasWritten(m)) {
-      metric("graft_objects_written", "counter", m.objectsWritten.get())
-      metric("graft_put_millis", "counter", m.putMillis.get())
-      metric("graft_bad_put_millis", "counter", m.badPutMillis.get())
-    }
-    sb.toString
+    exported(m).map { case (name, kind, v) =>
+      s"# TYPE graft_$name ${kind.prometheus}\ngraft_$name$labels $v\n"
+    }.mkString
   }
 
   /** Periodic statsd pusher — a daemon thread sending one UDP datagram per
@@ -125,11 +131,18 @@ object MetricsEmitter {
     private val last = new LoaderPipeline.Metrics
     @volatile private var running = true
 
-    def flush(): Unit =
-      statsdDatagrams(m, cfg, last).foreach { line =>
-        val bytes = line.getBytes(StandardCharsets.UTF_8)
-        socket.send(new DatagramPacket(bytes, bytes.length, address, cfg.port))
-      }
+    private def send(line: String): Unit = {
+      val bytes = line.getBytes(StandardCharsets.UTF_8)
+      socket.send(new DatagramPacket(bytes, bytes.length, address, cfg.port))
+    }
+
+    def flush(): Unit = statsdDatagrams(m, cfg, last).foreach(send)
+
+    /** One `<prefix>.<name>:1|c` event, tagged with `tags` on top of the
+      * configured tags.
+      */
+    def increment(name: String, tags: Map[String, String]): Unit =
+      send(s"${cfg.prefix}.$name:1|c${tagSuffix(cfg.tags ++ tags)}")
 
     private val thread = new Thread(() => {
       while (running) {
@@ -147,21 +160,6 @@ object MetricsEmitter {
       thread.interrupt()
       flush() // final report so shutdown never drops counted events
       socket.close()
-    }
-  }
-
-  /** Wires `latency_millis` from StreamingQueryProgress — register with
-    * `spark.streams.addListener`.
-    */
-  final class StreamLatencyListener(m: LoaderPipeline.Metrics)
-      extends StreamingQueryListener {
-    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(e: QueryProgressEvent): Unit = {
-      val d = e.progress.durationMs
-      if (d != null && d.containsKey("triggerExecution")) {
-        m.latencyMillis.set(Some(d.get("triggerExecution").longValue()))
-      }
     }
   }
 }

@@ -6,7 +6,7 @@ import scala.concurrent.duration._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{ErrorReporter, HealthProbe, LoaderPipeline, MetricsEmitter, ServiceHealth}
+import graft.streaming.{HealthProbe, LoaderPipeline, MetricsEmitter, ServiceHealth}
 
 /** Liveness probe semantics (reference T9): healthy only while progress
   * events keep arriving within unhealthyLatency; HTTP surface returns
@@ -69,11 +69,10 @@ class HealthProbeSpec extends AnyFunSuite with SparkSuite {
     val port = 18768
     val udp = new java.net.DatagramSocket() // ephemeral receiver
     udp.setSoTimeout(10000)
-    val reporter = new ErrorReporter(Some(MetricsEmitter.StatsdConfig(
-      "localhost", udp.getLocalPort)))
+    val reporter = new MetricsEmitter.StatsdReporter(new LoaderPipeline.Metrics,
+      MetricsEmitter.StatsdConfig("localhost", udp.getLocalPort))
     val probe = new HealthProbe(unhealthyLatency = 1.hour, port = port,
-      errors = Some(reporter)).start()
-    spark.streams.addListener(reporter)
+      statsd = Some(reporter)).start()
     spark.streams.addListener(probe)
     try {
       import spark.implicits._
@@ -86,12 +85,12 @@ class HealthProbeSpec extends AnyFunSuite with SparkSuite {
         }.start()
       intercept[Exception](q.awaitTermination())
 
-      // the listener bus delivers asynchronously, to the reporter and then
-      // to the probe — poll until both have seen the termination
+      // the listener bus delivers asynchronously — poll until the probe
+      // has seen the termination
       val deadline = System.currentTimeMillis() + 10000
-      while ((reporter.lastError.get().isEmpty || probe.healthy) &&
+      while ((probe.lastError.get().isEmpty || probe.healthy) &&
         System.currentTimeMillis() < deadline) Thread.sleep(50)
-      val report = reporter.lastError.get()
+      val report = probe.lastError.get()
         .getOrElse(fail("no error report captured"))
       assert(report.queryName == "failing-loader")
       assert(report.exceptionClass.nonEmpty)
@@ -111,14 +110,15 @@ class HealthProbeSpec extends AnyFunSuite with SparkSuite {
       assert(line.contains("query:failing-loader"))
       assert(line.contains("exception:"))
     } finally {
-      spark.streams.removeListener(reporter); spark.streams.removeListener(probe)
+      spark.streams.removeListener(probe)
       probe.stop(); reporter.close(); udp.close()
     }
   }
 
   test("error-report hook: restarting the failed query clears lastError") {
-    val reporter = new ErrorReporter()
-    spark.streams.addListener(reporter)
+    val port = 18770
+    val probe = new HealthProbe(unhealthyLatency = 1.hour, port = port).start()
+    spark.streams.addListener(probe)
     try {
       import spark.implicits._
       implicit val sqlCtx = spark.sqlContext
@@ -130,9 +130,9 @@ class HealthProbeSpec extends AnyFunSuite with SparkSuite {
         }.start()
       intercept[Exception](q.awaitTermination())
       val deadline = System.currentTimeMillis() + 10000
-      while (reporter.lastError.get().isEmpty &&
+      while (probe.lastError.get().isEmpty &&
         System.currentTimeMillis() < deadline) Thread.sleep(50)
-      assert(reporter.lastError.get().nonEmpty)
+      assert(probe.lastError.get().nonEmpty)
 
       // recovered: same query name restarts cleanly → report cleared
       val mem2 = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
@@ -142,20 +142,24 @@ class HealthProbeSpec extends AnyFunSuite with SparkSuite {
         .start()
       q2.processAllAvailable()
       val d2 = System.currentTimeMillis() + 10000
-      while (reporter.lastError.get().nonEmpty &&
+      while ((probe.lastError.get().nonEmpty || !probe.healthy) &&
         System.currentTimeMillis() < d2) Thread.sleep(50)
-      assert(reporter.lastError.get().isEmpty)
+      assert(probe.lastError.get().isEmpty)
+      // ... and so is the termination: /health is back to 200 while the
+      // restarted query runs (a clean stop would end it again)
+      val (code, body) = get(port)
+      assert(code == 200)
+      assert(body.contains("\"terminated\":null"))
+      assert(body.contains("\"lastError\":null"))
       q2.stop()
-    } finally { spark.streams.removeListener(reporter); reporter.close() }
+    } finally { spark.streams.removeListener(probe); probe.stop() }
   }
 
   test("/health stays valid JSON after a failure with newlines, quotes and backslashes") {
     val port = 18769
     val services = new ServiceHealth
-    val reporter = new ErrorReporter()
     val probe = new HealthProbe(unhealthyLatency = 1.hour, port = port,
-      services = services, errors = Some(reporter)).start()
-    spark.streams.addListener(reporter)
+      services = services).start()
     spark.streams.addListener(probe)
     try {
       import spark.implicits._
@@ -170,19 +174,16 @@ class HealthProbeSpec extends AnyFunSuite with SparkSuite {
       services.markUnhealthy(ServiceHealth.BlobSink, "put failed:\n\tcaused by \"refused\"\r\nend")
 
       val deadline = System.currentTimeMillis() + 10000
-      while ((reporter.lastError.get().isEmpty || get(port)._2.contains("\"terminated\":null")) &&
+      while ((probe.lastError.get().isEmpty || get(port)._2.contains("\"terminated\":null")) &&
         System.currentTimeMillis() < deadline) Thread.sleep(50)
       val (code, body) = get(port)
       assert(code == 503)
       val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
       assert(!json.get("healthy").asBoolean())
-      assert(json.get("services").get("BlobSink").asText().contains("caused by 'refused'"))
-      assert(json.get("terminated").asText().contains("said 'no' at C:\\tmp"))
+      assert(json.get("services").get("BlobSink").asText().contains("caused by \"refused\""))
+      assert(json.get("terminated").asText().contains("said \"no\" at C:\\tmp"))
       assert(json.get("lastError").get("query").asText() == "escaping-loader")
-    } finally {
-      spark.streams.removeListener(reporter); spark.streams.removeListener(probe)
-      probe.stop(); reporter.close()
-    }
+    } finally { spark.streams.removeListener(probe); probe.stop() }
   }
 
   test("GET /metrics serves the prometheus scrape when built with metrics") {

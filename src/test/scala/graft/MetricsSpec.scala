@@ -54,6 +54,11 @@ class MetricsSpec extends AnyFunSuite {
     val lines = MetricsEmitter.statsdDatagrams(m,
       StatsdConfig("localhost"), new LoaderPipeline.Metrics)
     assert(lines == Seq("graft.loader.count:1|c", "graft.loader.bad_count:0|c"))
+    // a tag holding the line protocol's separators is sanitized
+    val tagged = MetricsEmitter.statsdDatagrams(m,
+      StatsdConfig("localhost", tags = Map("team" -> "a,b|c")),
+      new LoaderPipeline.Metrics)
+    assert(tagged.head == "graft.loader.count:1|c|#team:a_b_c")
   }
 
   test("StatsdReporter delivers datagrams over real UDP") {

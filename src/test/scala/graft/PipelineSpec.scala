@@ -19,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.config._
 import graft.operators.EventParser
 import graft.sinks.{BlobStore, InMemoryBlobStore}
-import graft.streaming.{LoaderPipeline, MetricsEmitter, ServiceHealth}
+import graft.streaming.{HealthProbe, LoaderPipeline, ServiceHealth}
 
 /** End-to-end pipeline goldens — ports of reference ProcessingSpec e1–e4
   * against the in-memory recording store (the reference's MockEnvironment
@@ -301,7 +301,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
       checkpointLocation = Some(
         java.nio.file.Files.createTempDirectory("ckpt").toString))
     val metrics = new LoaderPipeline.Metrics
-    val listener = new MetricsEmitter.StreamLatencyListener(metrics)
+    val listener = new HealthProbe(metrics = Some(metrics))
     spark.streams.addListener(listener)
     val q = LoaderPipeline.stream(
       mem.toDF(), cfg, new InMemoryBlobStore, metrics, () => fixedNow).start()
