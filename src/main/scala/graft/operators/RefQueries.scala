@@ -27,10 +27,19 @@ object RefQueries extends QueryFamily {
 
   /** The SDJ rendering of every event, fanned out and parsed by
     * [[EventParser.parseSdj]] — the loader's own parser. `cols` ride along.
+    *
+    * The parse ends in an observation (a row count, the query's
+    * `sdj_parse` observed metric), which keeps the parse above the
+    * fan-out: the optimizer pushes a deterministic filter such as
+    * `bad_error IS NULL` through every `select` and through the
+    * repartition, inlining the whole parse into the one-task scan stage and
+    * running it twice per row, but it does not push a filter below an
+    * observation.
     */
   private def sdj(s: SparkSession, dir: String, cols: String*): DataFrame =
     EventParser.parseSdj(Synth.fanOut(Synth.events(s, dir)
       .select(cols.map(col) :+ Synth.sdjLine().as("line"): _*), "event_id"))
+      .observe("sdj_parse", count(lit(1)).as("rows"))
 
   private val good = col("bad_error").isNull
 

@@ -1,8 +1,6 @@
 package graft.sinks
 
 import java.net.URI
-import java.nio.file.{Files, StandardCopyOption, Path => JPath}
-import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.conf.Configuration
@@ -38,13 +36,11 @@ trait BlobStore extends Serializable {
   * Hadoop native library, `LocalFileSystem.create` writes a `.crc` sidecar
   * beside every object and `RawLocalFileSystem.setPermission` forks a
   * `chmod` process for each of the two files — about 11 ms per put against
-  * 0.2 ms for one NIO write of a small object. The bytes go to a hidden
-  * sibling, `.<name>.<uuid>.tmp`, which is then renamed over the target
-  * with `ATOMIC_MOVE`, so a local put appears whole or not at all, like an
-  * S3 PUT: a task killed mid-write leaves only a dot-prefixed `.tmp` file,
-  * which Hadoop and Spark input formats skip and no `*.gz` glob matches,
-  * never a truncated object under the real name. The uuid keeps
-  * concurrent attempts at the same idempotent name apart. Every other
+  * 0.2 ms for one NIO write of a small object. The put is a [[StagedFile]]
+  * published by an atomic rename over the target, so a local put appears
+  * whole or not at all, like an S3 PUT: a task killed mid-write leaves
+  * only a dot-prefixed `.tmp` file, never a truncated object under the
+  * real name. Every other
   * filesystem — s3a, hdfs, an `fs.file.impl` that is not a
   * `LocalFileSystem` (e.g. `RawLocalFileSystem`), the `s3x://` test
   * double — takes the Hadoop put; a task death there leaves at most a
@@ -52,24 +48,22 @@ trait BlobStore extends Serializable {
   * (fault-injected in FaultInjectionSpec).
   *
   * The Hadoop `Configuration` (with `confSerde` applied) is built once per
-  * store instance, not per put: a fresh one re-parses Hadoop's default
-  * XML resources on first lookup, about as costly as a small put. It is
-  * transient, so each deserialized copy in a task builds its own. The
-  * `FileSystem` is still resolved per path: good and bad paths may use
-  * different schemes.
+  * JVM and `confSerde`, not per put nor per task: a fresh one re-parses
+  * Hadoop's default XML resources on first lookup, 15–30 ms, which each
+  * write task of every micro-batch paid on its first put while the store
+  * (deserialized per task) built its own. The `FileSystem` is still
+  * resolved per path: good and bad paths may use different schemes.
   */
 final class HadoopBlobStore(confSerde: Map[String, String]) extends BlobStore {
-  @transient private lazy val conf: Configuration = {
-    val c = new Configuration()
-    confSerde.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
+  @transient private lazy val conf: Configuration = HadoopBlobStore.conf(confSerde)
 
   def write(path: String, bytes: Array[Byte]): Unit = {
     val p = new Path(new URI(path))
     FileSystem.get(p.toUri, conf) match {
       case local: LocalFileSystem =>
-        HadoopBlobStore.putLocal(local.pathToFile(p).toPath, bytes)
+        val file = new StagedFile(local.pathToFile(p).toPath, replace = true)
+        try file.out.write(bytes) catch { case e: Throwable => file.discard(); throw e }
+        file.publish()
       case fs =>
         val out = fs.create(p, true)
         try out.write(bytes) finally out.close()
@@ -78,22 +72,15 @@ final class HadoopBlobStore(confSerde: Map[String, String]) extends BlobStore {
 }
 
 object HadoopBlobStore {
-  /** Write `bytes` to a hidden sibling of `target`, then rename it over
-    * `target` atomically; a failed write removes its temp file.
-    */
-  private def putLocal(target: JPath, bytes: Array[Byte]): Unit = {
-    val dir = target.getParent
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".${target.getFileName}.${UUID.randomUUID()}.tmp")
-    try {
-      Files.write(tmp, bytes)
-      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    } catch { case e: Throwable =>
-      Files.deleteIfExists(tmp)
-      throw e
-    }
-  }
+  private val confs = new ConcurrentHashMap[Map[String, String], Configuration]()
+
+  /** The JVM's one read-only `Configuration` for `confSerde`. */
+  private def conf(confSerde: Map[String, String]): Configuration =
+    confs.computeIfAbsent(confSerde, _ => {
+      val c = new Configuration()
+      confSerde.foreach { case (k, v) => c.set(k, v) }
+      c
+    })
 }
 
 /** In-memory recording store for tests (the analogue of the reference's

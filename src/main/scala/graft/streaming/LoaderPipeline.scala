@@ -7,12 +7,15 @@ import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.Partitioner
-import org.apache.spark.rdd.ShuffledRDD
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.UnsafeRowSerializer
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, UnsafeRowSerializer}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.config.{LoaderConfig, Purpose}
@@ -27,13 +30,15 @@ import graft.sources.Decompression
   *   decompress → parse → good/bad split → grouped gzip write → metrics
   *
   * Stage mapping:
-  *  - decompressedStream + parseBytes → [[writeRows]], one pass per
-  *    record: `decode` (Dataset.flatMap over binary rows), then
-  *    [[EventParser.parse]] (codegen'd column ops, one select per level of
-  *    dependency) over every decoded row, then the select that adds each
-  *    row's shuffle partition; a decompression error takes the place of the
-  *    parser's `bad_error`, so both failure kinds reach the same bad-row
-  *    output. The batch is planned once
+  *  - decompressedStream + parseBytes → [[PreparedWrite]], one pass per
+  *    record in the write job's map side: plain-Scala
+  *    [[Decompression.decode]] of each source row's `value`, then the
+  *    compiled layers of [[writeRows]] — [[EventParser.parse]] (one select
+  *    per level of dependency) and the select that adds each row's shuffle
+  *    partition; a decompression error takes the place of the parser's
+  *    `bad_error`, so both failure kinds reach the same bad-row output.
+  *    Catalyst plans [[writeRows]] once per query (once per [[runBatch]]
+  *    call); a micro-batch plans only its own source rows
   *  - batchUpAndCompress  → micro-batch boundary + RollingGzipWriter
   *    (maxDelay ⇒ Trigger.ProcessingTime; maxBytes ⇒ compressed rolling)
   *  - writeToStorage + sendBadEvents → one shared write, 1 Spark job per
@@ -51,7 +56,9 @@ import graft.sources.Decompression
   *    siblings leave idle
   *  - emitTokens          → Structured Streaming checkpoint commit: offsets
   *    commit only after foreachBatch returns ⇒ same at-least-once contract
-  *    (reference Processing.scala:74-77,333-336)
+  *    (reference Processing.scala:74-77,333-336). A local checkpoint's
+  *    files are written by [[LocalCheckpointFileManager]], without the
+  *    process forks of Hadoop's local filesystem
   *
   * Batch mode falls out for free: [[runBatch]] applies the identical
   * transforms to a static DataFrame (an upgrade over the streaming-only
@@ -81,28 +88,20 @@ object LoaderPipeline {
     val e2eLatencyMillis = new AtomicReference[Option[Long]](None)
   }
 
-  /** Decompression front-end: binary `value` column → one row per framed
-    * record (`payload`, `decompressError`, and `line`, the payload read as
-    * UTF-8); a corrupt frame becomes one row of its raw bytes with a
-    * non-null error.
+  /** The decoded record [[writeRows]] reads: `payload`, `decompressError`
+    * (NULL unless the frame is corrupt) and `line`, the payload read as
+    * UTF-8; a corrupt frame is one record of its raw bytes.
     */
-  private def decode(df: DataFrame, limits: Decompression.Limits): DataFrame =
-    df.select(col("value").cast("binary")).as(Encoders.BINARY).flatMap { bytes =>
-      val d = Decompression.decode(bytes, limits)
-      d.records.map((_, null: String)) ++ d.error.map((bytes, _))
-    }(Decoded).select(col("_1").as("payload"), col("_2").as("decompressError"),
-      col("_1").cast("string").as("line"))
-
-  /** The encoder of [[decode]]'s records, derived once. */
-  private val Decoded = Encoders.tuple(Encoders.BINARY, Encoders.STRING)
+  private val Decoded = StructType(Seq(StructField("payload", BinaryType),
+    StructField("decompressError", StringType), StructField("line", StringType)))
 
   /** The rows one batch writes, each with the shuffle partition it goes
-    * to: decode, then [[EventParser.parse]], then this select, which the
-    * optimizer folds into the parser's last layer. Every decoded row is
-    * parsed once, and a decompression error takes the place of the parser's
-    * verdict (reference Processing.scala:101-134,156-165: one fold, one
-    * bad-row output); a corrupt frame starts with gzip or zstd magic bytes,
-    * never `{`, so the SDJ parser cannot call it good either.
+    * to: [[EventParser.parse]] over the decoded records, then this select,
+    * which the optimizer folds into the parser's last layer. Every decoded
+    * row is parsed once, and a decompression error takes the place of the
+    * parser's verdict (reference Processing.scala:101-134,156-165: one
+    * fold, one bad-row output); a corrupt frame starts with gzip or zstd
+    * magic bytes, never `{`, so the SDJ parser cannot call it good either.
     *
     * A good row goes to hash(schema key) mod `maxTasks`, a bad row to
     * hash(payload) mod `maxTasks`. A row carries `line` only if good and
@@ -110,8 +109,8 @@ object LoaderPipeline {
     * row must carry them unchanged to be replayable). The columns are in
     * [[WriteRow]]'s order.
     */
-  private[graft] def writeRows(df: DataFrame, cfg: LoaderConfig, maxTasks: Int): DataFrame = {
-    val parsed = EventParser.parse(decode(df, cfg.decompression), cfg.purpose == Purpose.Enriched)
+  private def writeRows(decoded: DataFrame, cfg: LoaderConfig, maxTasks: Int): DataFrame = {
+    val parsed = EventParser.parse(decoded, cfg.purpose == Purpose.Enriched)
     val badError = coalesce(col("decompressError"), col("bad_error"))
     val isBad = badError.isNotNull
     val key = Seq(col("vendor"), col("name"), col("format"), col("model"))
@@ -122,6 +121,90 @@ object LoaderPipeline {
       badError.as("bad_error"),
       pmod(when(isBad, hash(col("payload"))).otherwise(hash(key: _*)), lit(maxTasks))
         .as("partition")): _*)
+  }
+
+  /** [[writeRows]], planned once: the bound expressions of each `Project`
+    * layer of its optimized plan, innermost first. [[rows]] runs them over
+    * a batch's decoded records as compiled projections, so a batch plans
+    * nothing but its own source: Catalyst analyzes, optimizes and plans the
+    * decode → parse → route plan once per query ([[stream]]) or per
+    * [[runBatch]] call, not per micro-batch. The layers keep the plan's
+    * shape, so each `get_json_object` and `rlike` still runs once per row.
+    */
+  private[graft] final class PreparedWrite(
+      val layers: Seq[Seq[Expression]],
+      val maxTasks: Int,
+      limits: Decompression.Limits) extends Serializable {
+    private val id = java.util.UUID.randomUUID()
+
+    /** The layers as compiled projections, built by a task thread's first
+      * task of this write and reused by its later ones: an executor's task
+      * threads outlive their tasks, so a micro-batch's tasks neither
+      * generate nor compile code (about 15 ms a task otherwise). A thread
+      * keeps one prepared write's projections; they hold no row state.
+      */
+    private def projections(index: Int): Seq[UnsafeProjection] = {
+      val held = PreparedWrite.compiled.get
+      val ps = if (held != null && held._1 == id) held._2 else {
+        val built = layers.map(UnsafeProjection.create(_))
+        PreparedWrite.compiled.set((id, built))
+        built
+      }
+      ps.foreach(_.initialize(index))
+      ps
+    }
+
+    /** The batch's rows to write: each source row's `value` is decoded in
+      * plain Scala, then every record goes through the layers. Read once.
+      * A `foreachBatch` frame is a `LogicalRDD` over the micro-batch's
+      * already planned rows, which are read as they are; any other frame
+      * is planned to its RDD.
+      */
+    def rows(batch: DataFrame): RDD[InternalRow] = {
+      val source = if (batch.schema("value").dataType == BinaryType) batch
+        else batch.select(col("value").cast("binary").as("value"))
+      val value = source.schema.fieldIndex("value")
+      val limits = this.limits
+      val input = source.queryExecution.analyzed match {
+        case planned: LogicalRDD => planned.rdd
+        case _ => source.queryExecution.toRdd
+      }
+      input.mapPartitionsWithIndex { (index, rows) =>
+        val projections = this.projections(index)
+        val record = new GenericInternalRow(Decoded.length)
+        def project(payload: Array[Byte], error: String): InternalRow = {
+          record.update(0, payload)
+          record.update(1, UTF8String.fromString(error))
+          record.update(2, UTF8String.fromBytes(payload))
+          projections.foldLeft(record: InternalRow)((r, p) => p(r))
+        }
+        rows.flatMap { r =>
+          val bytes = r.getBinary(value)
+          val d = Decompression.decode(bytes, limits)
+          d.records.iterator.map(project(_, null)) ++ d.error.iterator.map(project(bytes, _))
+        }
+      }
+    }
+  }
+
+  private object PreparedWrite {
+    private val compiled = new ThreadLocal[(java.util.UUID, Seq[UnsafeProjection])]
+  }
+
+  /** Plans [[writeRows]] once over a placeholder relation of [[Decoded]]
+    * records (an empty RDD, which the optimizer cannot fold away).
+    */
+  private[graft] def prepare(spark: SparkSession, cfg: LoaderConfig): PreparedWrite = {
+    val maxTasks = math.max(1, spark.sparkContext.defaultParallelism)
+    val placeholder = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Decoded)
+    def layers(plan: LogicalPlan): Vector[Seq[Expression]] = plan match {
+      case Project(list, child) => layers(child) :+ BindReferences.bindReferences(list, child.output)
+      case _: LogicalRDD => Vector.empty
+      case other => throw new IllegalStateException(
+        s"the loader's write plan has a ${other.nodeName} node:\n${plan.treeString}")
+    }
+    new PreparedWrite(layers(writeRows(placeholder, cfg, maxTasks).queryExecution.optimizedPlan),
+      maxTasks, cfg.decompression)
   }
 
   /** Column ordinals of a [[writeRows]] row. */
@@ -141,6 +224,7 @@ object LoaderPipeline {
     */
   private def writeBatch(
       df: DataFrame,
+      prepared: PreparedWrite,
       cfg: LoaderConfig,
       store: BlobStore,
       metrics: Metrics,
@@ -168,16 +252,17 @@ object LoaderPipeline {
       math.min(cfg.batching.maxBytes, cfg.bad.byteLimit),
       cfg.bad.recordLimit.toLong, timestampedNames = nameSeed.isEmpty)
 
-    // Write parallelism. The shuffle always has `maxTasks` partitions, so a
-    // batch's schema groups hash over every core even when the batch is
-    // small. Each schema group is one task's run, rolling at maxBytes like
-    // the reference's one writer per group per window; a hot group (the
-    // enriched path maps EVERY event to one key, SURVEY §1.2) deflates its
-    // blocks on a pool sized to one executor JVM's task slots, shared by
-    // its write tasks, so it uses the cores its empty siblings leave idle.
-    // Read per batch, so a local[1] session deflates inline.
+    // Write parallelism. The shuffle always has `maxTasks` partitions (the
+    // default parallelism when the write was prepared), so a batch's schema
+    // groups hash over every core even when the batch is small. Each schema
+    // group is one task's run, rolling at maxBytes like the reference's one
+    // writer per group per window; a hot group (the enriched path maps
+    // EVERY event to one key, SURVEY §1.2) deflates its blocks on a pool
+    // sized to one executor JVM's task slots, shared by its write tasks, so
+    // it uses the cores its empty siblings leave idle. Read per batch, so a
+    // local[1] session deflates inline.
     val sc = df.sparkSession.sparkContext
-    val maxTasks = math.max(1, sc.defaultParallelism)
+    val maxTasks = prepared.maxTasks
     val deflateThreads =
       if (sc.isLocal) maxTasks
       else sc.getConf.getInt("spark.executor.cores", 1) / sc.getConf.getInt("spark.task.cpus", 1)
@@ -191,11 +276,13 @@ object LoaderPipeline {
     // Good and bad rows share one shuffle and one Spark job (reference
     // Processing.scala:101-134,315-331: one fold writes both): the map
     // stage decodes and parses each record once, the result stage writes.
-    // The planned rows are shuffled as an RDD by the partition id they
+    // The prepared rows are shuffled as an RDD by the partition id they
     // carry, so adaptive execution, whatever the session's setting, has no
     // exchange to re-plan and submits no job of its own. The rows stay
     // UnsafeRows end to end; each is serialized as the shuffle writer takes
     // it (bypass or serialized sort), so the reused row need not be copied.
+    // The job runs with the session's SQL conf in its tasks' properties, so
+    // the projections compile under the session's codegen settings.
     // Count + earliest tstamp accumulate inside the write itself (reference
     // A2/A3, Processing.scala:108,167-173) — no stats pre-job.
     //
@@ -205,15 +292,16 @@ object LoaderPipeline {
     // SparkException cause chain; a successful write marks both healthy.
     val actions: Array[(String, RollingGzipWriter.WriteAction)] =
       try {
-        val rows = writeRows(df, cfg, maxTasks).queryExecution.toRdd
-          .map(r => (r.getInt(WriteRow.Partition), r))
-        new ShuffledRDD[Int, InternalRow, InternalRow](rows, new PartitionIdPassthrough(maxTasks))
-          .setSerializer(new UnsafeRowSerializer(WriteRow.Partition + 1))
-          .mapPartitions { rows =>
-            writePartition(rows.map(_._2), store, sinkCfg, badSinkCfg, badJson,
-              wallClock, nameSeed, deflateThreads)
-          }
-          .collect()
+        val rows = prepared.rows(df).map(r => (r.getInt(WriteRow.Partition), r))
+        SQLExecution.withSQLConfPropagated(df.queryExecution.sparkSession) {
+          new ShuffledRDD[Int, InternalRow, InternalRow](rows, new PartitionIdPassthrough(maxTasks))
+            .setSerializer(new UnsafeRowSerializer(WriteRow.Partition + 1))
+            .mapPartitions { rows =>
+              writePartition(rows.map(_._2), store, sinkCfg, badSinkCfg, badJson,
+                wallClock, nameSeed, deflateThreads)
+            }
+            .collect()
+        }
       } catch { case e: Throwable =>
         Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
           .collectFirst { case f: SinkFailure => f.sink }
@@ -335,11 +423,15 @@ object LoaderPipeline {
       metrics: Metrics,
       now: () => Instant = () => Instant.now(),
       batchId: Option[Long] = None): Unit =
-    writeBatch(df, cfg, store, metrics, now, new ServiceHealth, batchId)
+    writeBatch(df, prepare(df.sparkSession, cfg), cfg, store, metrics, now, new ServiceHealth,
+      batchId)
 
   /** Streaming entry: micro-batches flush at maxDelay — the reference's
     * time-bound batch emission (T3); offsets commit after each batch ⇒
-    * at-least-once (T7).
+    * at-least-once (T7). The write is prepared once for the query. Unless
+    * the session already names one, its checkpoint file manager becomes
+    * [[LocalCheckpointFileManager]], so a `file://` checkpoint commits
+    * without forking processes.
     */
   def stream(
       df: DataFrame,
@@ -348,9 +440,13 @@ object LoaderPipeline {
       metrics: Metrics,
       now: () => Instant = () => Instant.now(),
       health: ServiceHealth = new ServiceHealth): DataStreamWriter[Row] = {
+    val spark = df.sparkSession
+    if (spark.conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty)
+      spark.conf.set(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
+    val prepared = prepare(spark, cfg)
     val w = df.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        writeBatch(batch, cfg, store, metrics, now, health, Some(id))
+        writeBatch(batch, prepared, cfg, store, metrics, now, health, Some(id))
       }
       .trigger(Trigger.ProcessingTime(cfg.batching.maxDelay.toMillis))
     cfg.checkpointLocation.fold(w)(p => w.option("checkpointLocation", p))

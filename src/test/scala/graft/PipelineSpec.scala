@@ -133,14 +133,62 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   test("plan guard: an SDJ batch reads $.schema once and runs the Iglu regex once per row") {
     val cfg = LoaderConfig.validate(LoaderConfig(
       Purpose.Sdj, Output("mem://path"), BadOutput("mem://bad"))).toOption.get
-    val plan = LoaderPipeline.writeRows(rawDf(sdjLines(3) :+ "not json"), cfg, 4)
-      .queryExecution.optimizedPlan
-    val exprs = plan.flatMap(_.expressions)
+    // the prepared projections a batch runs, every layer
+    val exprs = LoaderPipeline.prepare(spark, cfg).layers.flatten
+    val shown = exprs.mkString("\n")
     def count(pf: PartialFunction[Expression, Expression]) = exprs.map(_.collect(pf).size).sum
-    assert(count { case e: GetJsonObject => e } == 1, plan.treeString)
+    assert(count { case e: GetJsonObject => e } == 1, shown)
     assert(count {
       case e @ RLike(_, Literal(p, _)) if String.valueOf(p) == EventParser.IgluRegex => e
-    } == 1, plan.treeString)
+    } == 1, shown)
+  }
+
+  test("plan once: a micro-batch plans only its source, not the parse") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Array[Byte]]
+    val cfg = LoaderConfig.validate(LoaderConfig(Purpose.Sdj, Output("mem://path"),
+      BadOutput("mem://bad"), Batching(maxDelay = 50.millis), checkpointLocation = Some(
+        java.nio.file.Files.createTempDirectory("ckpt-plan").toString))).toOption.get
+    val metrics = new LoaderPipeline.Metrics
+    val q = LoaderPipeline.stream(mem.toDF(), cfg, new InMemoryBlobStore, metrics,
+      () => fixedNow).start()
+    val batches = 4
+    try {
+      mem.addData(sdjLines(2).map(_.getBytes): _*)
+      q.processAllAvailable()
+      val firstBatch = q.lastProgress.batchId
+      // QueryExecution ids come from one JVM-wide counter
+      val before = spark.range(1).queryExecution.id
+      (1 to batches).foreach { i =>
+        mem.addData((sdjLines(3).map(_.getBytes) :+ s"not json $i".getBytes): _*)
+        q.processAllAvailable()
+      }
+      val after = spark.range(1).queryExecution.id
+      assert(q.lastProgress.batchId == firstBatch + batches)
+      assert(metrics.count.get() == 2 + 3 * batches && metrics.badCount.get() == batches)
+      // 4: the stream's own, with the loader's write adding none; building
+      // the decode, every parser select and the write select per batch
+      // made 12
+      val perBatch = (after - before - 1).toDouble / batches
+      assert(perBatch <= 4, s"$perBatch QueryExecutions per micro-batch")
+    } finally q.stop()
+  }
+
+  test("prepared projections compile: a batch runs under CODEGEN_ONLY") {
+    val mode = "spark.sql.codegen.factoryMode"
+    val saved = spark.conf.getOption(mode)
+    spark.conf.set(mode, "CODEGEN_ONLY")
+    try {
+      val sdj = LoaderConfig.validate(LoaderConfig(
+        Purpose.Sdj, Output("mem://path"), BadOutput("mem://bad"))).toOption.get
+      val (_, m) = run(sdj, sdjLines(5) ++ Seq("not json",
+        """{"schema":"iglu:com.example/e/jsonschema/99999999999-0-0","data":{}}"""))
+      assert(m.count.get() == 5 && m.badCount.get() == 2)
+      val enriched = LoaderConfig(Purpose.Enriched, Output("mem://path"), BadOutput("mem://bad"))
+      val (_, e) = run(enriched, Seq(tsv("1970-01-01 00:00:42.000"), "short"))
+      assert(e.count.get() == 2 && e.e2eLatencyMillis.get().contains(-42000L))
+    } finally saved.fold(spark.conf.unset(mode))(spark.conf.set(mode, _))
   }
 
   test("an Iglu model past Int is a bad row, not a failed batch") {

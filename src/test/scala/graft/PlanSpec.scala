@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.GetJsonObject
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, SortMergeJoinExec}
@@ -19,6 +21,14 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
 
   private def plan(q: String) =
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
+
+  test("q03: the SDJ parse stays above the fan-out; the one-task scan stage reads no JSON") {
+    val p = SparkEntry.queries("q03_iglu_parse")(spark, sf).queryExecution.optimizedPlan
+    val scanSide = p.collect { case r: RepartitionByExpression => r.child }
+    assert(scanSide.nonEmpty, p.treeString)
+    val json = scanSide.flatMap(_.flatMap(_.expressions)).flatMap(_.collect { case g: GetJsonObject => g })
+    assert(json.isEmpty, p.treeString)
+  }
 
   test("q10: the l_shipdate filter is pushed down to the lineitem scan") {
     val scans = plan("q10_pricing_summary").collect {
