@@ -45,8 +45,15 @@ object Hocon {
       case Str("true") => true
       case Str("false") => false
     }
+    /** The duration at `path`, if set; throws, naming the key, if it does
+      * not parse.
+      */
     def duration(path: String*): Option[FiniteDuration] =
-      str(path: _*).map(parseDuration)
+      str(path: _*).map { s =>
+        try parseDuration(s)
+        catch { case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"${path.mkString(".")}: ${e.getMessage}", e) }
+      }
   }
   final case class Arr(items: List[Value]) extends Value
   final case class Str(s: String) extends Value
@@ -54,14 +61,16 @@ object Hocon {
   final case class Bool(b: Boolean) extends Value
   case object Null extends Value
 
-  /** "1500 millis", "10 seconds", "2 minutes", "1 hour" → FiniteDuration. */
+  /** "1500 millis", "10 seconds", "2 minutes", "1 hour" → FiniteDuration;
+    * a bare number is milliseconds, as in HOCON.
+    */
   def parseDuration(s: String): FiniteDuration = {
-    val m = "^\\s*(\\d+)\\s*([a-zA-Z]+)\\s*$".r
+    val m = "^\\s*(\\d+)\\s*([a-zA-Z]*)\\s*$".r
     s match {
       case m(n, unit) =>
         val v = n.toLong
         unit.toLowerCase match {
-          case "ms" | "milli" | "millis" | "millisecond" | "milliseconds" => v.millis
+          case "" | "ms" | "milli" | "millis" | "millisecond" | "milliseconds" => v.millis
           case "s" | "second" | "seconds" => v.seconds
           case "m" | "minute" | "minutes" => v.minutes
           case "h" | "hour" | "hours" => v.hours

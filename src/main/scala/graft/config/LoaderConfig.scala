@@ -1,6 +1,7 @@
 package graft.config
 
 import scala.concurrent.duration._
+import scala.util.Try
 
 import graft.sinks.{DynamicPath, RollingGzipWriter}
 import graft.sources.Decompression
@@ -100,6 +101,7 @@ object LoaderConfig {
       goodPath <- root.str("output", "good", "path")
         .orElse(root.str("output", "good"))
         .toRight("Missing required field: output.good.path")
+      maxDelay <- Try(root.duration("batching", "maxDelay")).toEither.left.map(_.getMessage)
       cfg <- validate(LoaderConfig(
         purpose = purpose,
         output = Output(
@@ -120,7 +122,7 @@ object LoaderConfig {
         batching = Batching(
           maxBytes = root.num("batching", "maxBytes")
             .map(_.toLong).getOrElse(batching.maxBytes),
-          maxDelay = root.duration("batching", "maxDelay").getOrElse(batching.maxDelay)),
+          maxDelay = maxDelay.getOrElse(batching.maxDelay)),
         decompression = Decompression.Limits(
           maxBytesInBatch = root.num("decompression", "maxBytesInBatch")
             .map(_.toLong).getOrElse(limits.maxBytesInBatch),

@@ -11,6 +11,8 @@ import java.util.zip.{CRC32, Deflater}
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.SparkEnv
+
 import graft.model.SchemaKey
 
 /** Rolling gzip batch writer (reference operators T2 + F14 + S5).
@@ -35,9 +37,11 @@ import graft.model.SchemaKey
   * still reach back across the cut) and ended with a sync flush, except the
   * object's last block, which finishes the stream. The blocks are appended
   * in order behind one gzip header; the trailer's CRC32 and length are
-  * computed serially over the raw bytes. With `threads` > 1 the blocks are
-  * deflated on a JVM-wide daemon pool, at most 2 × `threads` in flight per
-  * writer; with 1 they are deflated inline, by the same code.
+  * computed serially over the raw bytes. A writer given `threads` > 1
+  * deflates its blocks on the JVM's one daemon pool, sized to the cores of
+  * the executor it runs in, with at most 2 × min(`threads`, pool size) in
+  * flight; with 1 (or a one-thread pool) they are deflated inline, by the
+  * same code.
   *
   * Near the bound: while the object's size so far plus the worst-case
   * deflate output of every byte not yet appended (blocks in flight and the
@@ -68,7 +72,7 @@ import graft.model.SchemaKey
   * over the keys it holds open, which is the reference's memory model; each
   * group still rolls its own files at maxBytes with no coordination, which
   * is what matters at 1000 executors. A hot group's blocks deflate on the
-  * task slots its batch leaves idle.
+  * executor's cores that its sibling tasks leave idle.
   */
 object RollingGzipWriter {
 
@@ -109,7 +113,8 @@ object RollingGzipWriter {
     * open object and its blocks in flight. An object is put as soon as its
     * gzip stream's byte count passes maxBytes (or it holds maxRecords), so
     * the writer holds at most one object at a time. `threads` > 1 deflates
-    * blocks of a large group on the shared pool; the objects are the same at
+    * a large group's blocks on the JVM's [[DeflatePool]], with at most
+    * 2 × min(`threads`, pool size) in flight; the objects are the same at
     * any value.
     *
     * Count and min-event-time metrics accumulate as records arrive, so the
@@ -123,7 +128,8 @@ object RollingGzipWriter {
       now: Instant,
       newUuid: () => UUID = () => UUID.randomUUID(),
       threads: Int = 1) {
-    private val pool = if (threads > 1) Some(DeflatePool(threads)) else None
+    private val lanes = if (threads > 1) math.min(threads, DeflatePool.size) else 1
+    private val pool = if (lanes > 1) Some(DeflatePool.pool) else None
     private val actions = ArrayBuffer.empty[WriteAction]
     private var obj: GzipObject = null // null between objects
     private var count = 0L
@@ -134,7 +140,7 @@ object RollingGzipWriter {
       */
     def add(line: Array[Byte], tsUs: Long): Unit = {
       if (obj == null) {
-        obj = new GzipObject(cfg.maxBytes, pool, 2 * threads)
+        obj = new GzipObject(cfg.maxBytes, pool, 2 * lanes)
         count = 0L
         minTs = Long.MaxValue
       }
@@ -376,29 +382,22 @@ object RollingGzipWriter {
 
   /** One daemon deflate pool per JVM, shared by every writer, so
     * concurrent write tasks share its threads instead of multiplying them.
-    * It is resized to each caller's `threads` — the write stage's slots,
-    * read per batch — and idle threads exit after 30 s.
+    * It is built on first use with one thread per core of the executor it
+    * runs in: the executor's `spark.executor.cores` when set, else the
+    * JVM's processor count (also outside Spark). Idle threads exit after
+    * 30 s.
     */
-  private object DeflatePool {
+  private[graft] object DeflatePool {
+    val size: Int = Option(SparkEnv.get).flatMap(_.conf.getOption("spark.executor.cores"))
+      .map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
     private val ids = new AtomicInteger
-    private val pool = new ThreadPoolExecutor(1, 1, 30, TimeUnit.SECONDS,
+    val pool = new ThreadPoolExecutor(size, size, 30, TimeUnit.SECONDS,
       new LinkedBlockingQueue[Runnable], { (r: Runnable) =>
         val t = new Thread(r, s"gzip-deflate-${ids.incrementAndGet()}")
         t.setDaemon(true)
         t
       })
     pool.allowCoreThreadTimeOut(true)
-
-    def apply(threads: Int): ThreadPoolExecutor = synchronized {
-      if (threads > pool.getMaximumPoolSize) {
-        pool.setMaximumPoolSize(threads)
-        pool.setCorePoolSize(threads)
-      } else if (threads < pool.getMaximumPoolSize) {
-        pool.setCorePoolSize(threads)
-        pool.setMaximumPoolSize(threads)
-      }
-      pool
-    }
   }
 
   /** Upper bound on the deflate output for `n` input bytes, sync flush

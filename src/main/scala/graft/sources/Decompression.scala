@@ -85,7 +85,7 @@ object Decompression {
             Some(s"Truncated record: declared $len bytes, got ${payload.length}"))
         total += len
         if (total > limits.maxBytesInBatch)
-          return Decoded(out.toSeq, Some(s"Decompressed batch exceeds $total bytes limit"))
+          return Decoded(out.toSeq, Some(s"Decompressed batch exceeds ${limits.maxBytesInBatch} bytes limit"))
         out += payload
       }
     }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -89,15 +91,15 @@ object RecordSources {
         case "LATEST" | "TRIM_HORIZON" | "AT_TIMESTAMP" => Right(())
         case other => Left(s"Unknown initialPosition.type: $other")
       }
+      idle <- Try(root.duration("input", "retrievalMode", "idleTimeBetweenReads"))
+        .toEither.left.map(_.getMessage)
     } yield d.copy(
       streamName = stream,
       initialPosition = pos,
       initialTimestamp = root.str("input", "initialPosition", "timestamp"),
       maxRecords = root.num("input", "retrievalMode", "maxRecords")
         .map(_.toInt).getOrElse(d.maxRecords),
-      idleTimeBetweenReadsMs =
-        root.duration("input", "retrievalMode", "idleTimeBetweenReads")
-          .map(_.toMillis).getOrElse(d.idleTimeBetweenReadsMs))
+      idleTimeBetweenReadsMs = idle.map(_.toMillis).getOrElse(d.idleTimeBetweenReadsMs))
   }
 
   /** Line files (text): each line of a file dropped into `path` becomes

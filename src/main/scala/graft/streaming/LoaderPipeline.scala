@@ -52,8 +52,8 @@ import graft.sources.Decompression
   *    reference's parTraverse per group (Processing.scala:287-289): a
   *    batch's schema groups spread over every core, each group is written
   *    by one task that rolls at maxBytes, and a hot group (the enriched
-  *    path maps EVERY event to atomic) deflates its blocks on the slots its
-  *    siblings leave idle
+  *    path maps EVERY event to atomic) deflates its blocks on the cores its
+  *    siblings leave idle, through a pool that each executor sizes itself
   *  - emitTokens          → Structured Streaming checkpoint commit: offsets
   *    commit only after foreachBatch returns ⇒ same at-least-once contract
   *    (reference Processing.scala:74-77,333-336). A local checkpoint's
@@ -252,21 +252,6 @@ object LoaderPipeline {
       math.min(cfg.batching.maxBytes, cfg.bad.byteLimit),
       cfg.bad.recordLimit.toLong, timestampedNames = nameSeed.isEmpty)
 
-    // Write parallelism. The shuffle always has `maxTasks` partitions (the
-    // default parallelism when the write was prepared), so a batch's schema
-    // groups hash over every core even when the batch is small. Each schema
-    // group is one task's run, rolling at maxBytes like the reference's one
-    // writer per group per window; a hot group (the enriched path maps
-    // EVERY event to one key, SURVEY §1.2) deflates its blocks on a pool
-    // sized to one executor JVM's task slots, shared by its write tasks, so
-    // it uses the cores its empty siblings leave idle. Read per batch, so a
-    // local[1] session deflates inline.
-    val sc = df.sparkSession.sparkContext
-    val maxTasks = prepared.maxTasks
-    val deflateThreads =
-      if (sc.isLocal) maxTasks
-      else sc.getConf.getInt("spark.executor.cores", 1) / sc.getConf.getInt("spark.task.cpus", 1)
-
     val processor = BadRow.Processor("graft-loader", "0.1.0")
     val maxSize = cfg.bad.maxRecordSize
     def badJson(payload: Array[Byte], err: String): String =
@@ -281,6 +266,9 @@ object LoaderPipeline {
     // exchange to re-plan and submits no job of its own. The rows stay
     // UnsafeRows end to end; each is serialized as the shuffle writer takes
     // it (bypass or serialized sort), so the reused row need not be copied.
+    // The shuffle always has `maxTasks` partitions (the default parallelism
+    // when the write was prepared), so a batch's schema groups hash over
+    // every core even when the batch is small.
     // The job runs with the session's SQL conf in its tasks' properties, so
     // the projections compile under the session's codegen settings.
     // Count + earliest tstamp accumulate inside the write itself (reference
@@ -294,11 +282,11 @@ object LoaderPipeline {
       try {
         val rows = prepared.rows(df).map(r => (r.getInt(WriteRow.Partition), r))
         SQLExecution.withSQLConfPropagated(df.queryExecution.sparkSession) {
-          new ShuffledRDD[Int, InternalRow, InternalRow](rows, new PartitionIdPassthrough(maxTasks))
+          new ShuffledRDD[Int, InternalRow, InternalRow](rows, new PartitionIdPassthrough(prepared.maxTasks))
             .setSerializer(new UnsafeRowSerializer(WriteRow.Partition + 1))
             .mapPartitions { rows =>
               writePartition(rows.map(_._2), store, sinkCfg, badSinkCfg, badJson,
-                wallClock, nameSeed, deflateThreads)
+                wallClock, nameSeed)
             }
             .collect()
         }
@@ -359,10 +347,13 @@ object LoaderPipeline {
     * row, as size-capped bad-row JSON, to the partition's bad writer. A
     * writer puts each object as it passes its bound and the last ones when
     * the partition ends, so memory is one open object per key held (the
-    * reference's one writer per group per window). Only the good writers
-    * deflate on `deflateThreads`; bad objects are small. Each action is
-    * returned with the sink that wrote it; on a failure every open writer
-    * is cancelled.
+    * reference's one writer per group per window). A good writer may
+    * deflate on as many threads as the write has tasks, within its
+    * executor's [[RollingGzipWriter.DeflatePool]], so a hot group (the
+    * enriched path maps EVERY event to one key, SURVEY §1.2) uses the cores
+    * its empty siblings leave idle, and a one-task write (`local[1]`)
+    * deflates inline; bad objects are small. Each action is returned with
+    * the sink that wrote it; on a failure every open writer is cancelled.
     */
   private def writePartition(
       rows: Iterator[InternalRow],
@@ -371,9 +362,9 @@ object LoaderPipeline {
       badSinkCfg: RollingGzipWriter.SinkConfig,
       badJson: (Array[Byte], String) => String,
       wallClock: Instant,
-      nameSeed: Option[String],
-      deflateThreads: Int): Iterator[(String, RollingGzipWriter.WriteAction)] = {
+      nameSeed: Option[String]): Iterator[(String, RollingGzipWriter.WriteAction)] = {
     import WriteRow._
+    val threads = org.apache.spark.TaskContext.get().numPartitions()
     def sinkStore(sink: String): BlobStore = new BlobStore {
       def write(path: String, bytes: Array[Byte]): Unit =
         try store.write(path, bytes)
@@ -394,7 +385,7 @@ object LoaderPipeline {
             val k = (key._1.toString, key._2.toString, key._3.toString, key._4)
             w = new RollingGzipWriter.GroupWriter(goodStore, sinkCfg,
               SchemaKey(k._1, k._2, k._3, k._4), wallClock,
-              uuidFactory(nameSeed, k), deflateThreads)
+              uuidFactory(nameSeed, k), threads)
             writers.put((key._1.clone(), key._2.clone(), key._3.clone(), key._4), w)
           }
           w.add(r.getUTF8String(Line).getBytes,

@@ -80,7 +80,7 @@ class DecompressionSpec extends AnyFunSuite {
       gzip(frame(Seq("aaaa".getBytes, "bbbb".getBytes, "cccc".getBytes))),
       Decompression.Limits(maxBytesInBatch = 9))
     assert(d.records.size == 2)
-    assert(d.error.exists(_.contains("exceeds")))
+    assert(d.error.contains("Decompressed batch exceeds 9 bytes limit"))
   }
 
   test("mixed plain + gzip + zstd payloads each decode independently (e8)") {

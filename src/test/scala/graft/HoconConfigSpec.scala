@@ -100,6 +100,27 @@ class HoconConfigSpec extends AnyFunSuite {
     assert(withMaxBytes(64L << 20).map(_.batching.maxBytes) == Right(64L << 20))
   }
 
+  private def withMaxDelay(v: String) = LoaderConfig.fromHocon(
+    s"""{"purpose": "ENRICHED_EVENTS", "batching": {"maxDelay": $v},
+       | "output": {"good": {"path": "s3://x/"}, "bad": {"streamName": "b"}}}""".stripMargin)
+
+  test("a duration given as a bare number is milliseconds") {
+    assert(withMaxDelay("1000").map(_.batching.maxDelay) == Right(1.second))
+    assert(withMaxDelay("\"250\"").map(_.batching.maxDelay) == Right(250.millis))
+    assert(withMaxDelay("\"90 seconds\"").map(_.batching.maxDelay) == Right(90.seconds))
+    assert(Hocon.parseDuration("15") == 15.millis)
+  }
+
+  test("an unparseable duration is a Left that names its key, not an exception") {
+    assert(withMaxDelay("\"soon\"") == Left("batching.maxDelay: Cannot parse duration: soon"))
+    assert(withMaxDelay("1.5") == Left("batching.maxDelay: Cannot parse duration: 1.5"))
+    assert(withMaxDelay("\"3 fortnights\"") ==
+      Left("batching.maxDelay: Unknown duration unit: fortnights"))
+    assert(graft.sources.RecordSources.kinesisFromHocon(
+      """{"input": {"streamName": "s", "retrievalMode": {"idleTimeBetweenReads": "soon"}}}""", "r") ==
+      Left("input.retrievalMode.idleTimeBetweenReads: Cannot parse duration: soon"))
+  }
+
   test("a config with only the required fields decodes to the case-class defaults") {
     val text =
       """{"purpose": "ENRICHED_EVENTS",

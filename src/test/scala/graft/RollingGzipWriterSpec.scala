@@ -142,6 +142,23 @@ class RollingGzipWriterSpec extends AnyFunSuite {
     }
   }
 
+  test("concurrent writers at 1, 2, 4 and 64 threads share the one pool and write the inline bytes") {
+    val inline = write(64L * 1024 * 1024, Long.MaxValue, bigGroup)._2.head
+    val callers = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val byThreads =
+      try Seq(1, 2, 4, 64)
+        .map(t => t -> callers.submit(() => write(64L * 1024 * 1024, Long.MaxValue, bigGroup, t)))
+        .map { case (t, f) => t -> f.get() }
+      finally callers.shutdown()
+    byThreads.foreach { case (t, (actions, objects)) =>
+      assert(actions.size == 1, s"threads=$t")
+      assert(java.util.Arrays.equals(objects.head, inline), s"threads=$t")
+    }
+    assert(RollingGzipWriter.DeflatesPending.get == 0)
+    val pool = RollingGzipWriter.DeflatePool
+    assert(pool.pool.getLargestPoolSize <= pool.size && pool.pool.getMaximumPoolSize == pool.size)
+  }
+
   test("a failure with blocks in flight: the same exception, no deflate left behind, the pool reusable") {
     val refused = new java.io.IOException("put refused")
     val refusing = new BlobStore {
