@@ -39,7 +39,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession(GraftSession.Extensions)
+    val spark = GraftSession()
     // PrefixSum's offsets window (q06/q63) runs over #blocks rows by
     // design; Spark's blanket single-partition-window warning is noise
     // for it and would otherwise land in the recorded bench tail.

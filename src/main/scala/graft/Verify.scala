@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = GraftSession(GraftSession.Extensions)
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_QUERIES=q48,q64 — dump a subset and only its oracle
     // entries, so tools/check.py compares just those (iteration aid, same

@@ -101,6 +101,9 @@ object LoaderConfig {
       goodPath <- root.str("output", "good", "path")
         .orElse(root.str("output", "good"))
         .toRight("Missing required field: output.good.path")
+      badPath <- root.str("output", "bad", "path")
+        .orElse(root.str("output", "bad", "streamName"))
+        .toRight("Missing required field: output.bad.path")
       maxDelay <- Try(root.duration("batching", "maxDelay")).toEither.left.map(_.getMessage)
       cfg <- validate(LoaderConfig(
         purpose = purpose,
@@ -111,8 +114,7 @@ object LoaderConfig {
           idempotentNames = root.bool("output", "good", "idempotentNames")
             .getOrElse(output.idempotentNames)),
         bad = BadOutput(
-          path = root.str("output", "bad", "path")
-            .orElse(root.str("output", "bad", "streamName")).getOrElse(""),
+          path = badPath,
           maxRecordSize = root.num("output", "bad", "maxRecordSize")
             .map(_.toInt).getOrElse(bad.maxRecordSize),
           recordLimit = root.num("output", "bad", "recordLimit")

@@ -1,16 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Registration of graft's native Catalyst expressions.
-  *
-  * Production path: `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  * (SparkSessionExtensions.injectFunction). For sessions built without the
-  * conf (the driver's Verify/Bench sessions), [[GraftFunctions.register]]
-  * installs the same functions idempotently at query-construction time.
+/** graft's native Catalyst expressions and optimizer rules, installed by
+  * `spark.sql.extensions=graft.functions.GraftExtensions`
+  * (SparkSessionExtensions.injectFunction / injectOptimizerRule), which
+  * [[graft.GraftSession]] sets on every session it builds.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -99,11 +96,4 @@ object GraftFunctions {
       // the analyzer wraps AggregateFunctions in AggregateExpression
       (children: Seq[Expression]) => TopKByScore(children(0), children(1),
         intLit("graft_topk", "k", children(2)))))
-
-  /** Idempotent session-level registration. */
-  def register(spark: SparkSession): Unit =
-    descriptors.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry
-        .registerFunction(ident, info, builder)
-    }
 }

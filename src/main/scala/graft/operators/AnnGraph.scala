@@ -116,7 +116,6 @@ object AnnGraph extends QueryFamily {
     graphLock.synchronized {
       if (!s.catalog.tableExists(table)) {
         CorpusKey.prepareBuild(s, table)
-        graft.functions.GraftFunctions.register(s)
         val k = Similarity.corpusCells(s, dir)
         // repartition BEFORE the bucket/cell expressions: the corpus is
         // one parquet file = one scan task, so without the fan-out the
@@ -184,7 +183,6 @@ object AnnGraph extends QueryFamily {
     // (family, query_id, n_cand, n_hit, recall) with multi-probe LSH
     // re-reported beside it as the comparator.
     "q204_knn_graph_beam" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val k = Similarity.corpusCells(s, dir)
       // fan out before the bucket expression and the checkpoint — the
       // single-file scan is one task, and the checkpointed partitioning

@@ -29,7 +29,6 @@ object AnnIndex {
     */
   def probe(spark: SparkSession, table: String, queries: DataFrame,
       k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val cids = queries.select("cid").distinct().collect().map(_.getInt(0))
     val idx = spark.table(table).filter(col("cid").isin(cids: _*))
     val w = Window.partitionBy("query_id")

@@ -499,7 +499,6 @@ object Curation extends QueryFamily {
     // every group in full for a k-row answer. u32 hashes are exactly
     // representable in the heap's double score (negated for bottom-k).
     "q29b_reservoir_k" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val k = 20
       Synth.documents(s, dir)
         .select(col("doc_id"), col("source"))

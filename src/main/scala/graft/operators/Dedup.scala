@@ -39,7 +39,6 @@ object Dedup extends QueryFamily {
     shingled(s, dir)
 
   private[operators] def shingled(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Synth.documents(s, dir)
       .select(col("doc_id"), expr(s"graft_shingles($toks, 3)").as("sh"))
   }
@@ -291,7 +290,6 @@ object Dedup extends QueryFamily {
   private[graft] def hammingBlockPairs(rows: DataFrame, keys: Seq[String],
       maxDist: Int, width: Int, nBlocks: Int,
       cap: Int = PostingCap): DataFrame = {
-    graft.functions.GraftFunctions.register(rows.sparkSession)
     require(keys.head == "blk", "first key must be the block index")
     require(maxDist < nBlocks,
       "hammingBlockPairs: maxDist must be < nBlocks or the " +
@@ -450,7 +448,6 @@ object Dedup extends QueryFamily {
   private[graft] def prefixJaccardPairs(sh: DataFrame, p: Int = 1,
       q: Int = 2, minJaccard: Double = 0.5): DataFrame = {
     require(0 < p && p < q, "threshold p/q must lie in (0, 1)")
-    graft.functions.GraftFunctions.register(sh.sparkSession)
     // checkpoint the (doc_id, sh) frame itself, SORTED once per document:
     // it feeds the token explode below AND both verify sides at the end
     // — without this the scan+shingling runs three times, and the sorted
@@ -778,7 +775,6 @@ object Dedup extends QueryFamily {
     // buckets stay sparse; this one remains the oracle-anchored small
     // geometry.
     "q33b_simhash_pairs" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val lng = Synth.documents(s, dir)
         .select(col("doc_id"), expr(s"graft_simhash($toks)").as("sim"))
         .select(col("doc_id"), col("sim"),
@@ -801,7 +797,6 @@ object Dedup extends QueryFamily {
     // n/16). The fingerprint pass is map-only native codegen
     // (graft_simhash64); plan shape is q33b's.
     "q33c_simhash64_pairs" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val lng = Synth.documents(s, dir)
         .select(col("doc_id"), expr(s"graft_simhash64($toks)").as("sim"))
         .select(col("doc_id"), col("sim"),
@@ -1374,7 +1369,6 @@ object Dedup extends QueryFamily {
     // (the composed form exploded doc × token × bit through two hash
     // aggregations; the oracle still uses that rendering).
     "q33_simhash" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       Synth.documents(s, dir)
         .select(col("doc_id"), expr(s"graft_simhash($toks)").as("simhash16"))
         .orderBy("doc_id")
@@ -1384,7 +1378,6 @@ object Dedup extends QueryFamily {
     // candidate pairs (q34's edges) → one canonical vector per duplicate
     // group. The step after pair generation in every dedup pipeline.
     "q35_dedup_clusters" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir).select(col("vec_id"), col("embedding"), col("label"))
       val a = e.toDF("id_a", "emb_a", "label")
       val b = e.toDF("id_b", "emb_b", "label")
@@ -1413,7 +1406,6 @@ object Dedup extends QueryFamily {
     // block on a cheap key — cluster id, LSH bucket — then exact cosine
     // inside blocks; never all-pairs at scale).
     "q34_embedding_neardup" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir)
         .select(col("vec_id"), col("embedding"), col("label"))
       val a = e.toDF("id_a", "emb_a", "label")

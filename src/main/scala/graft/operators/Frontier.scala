@@ -81,7 +81,6 @@ object Frontier extends QueryFamily {
     },
 
     "q145_priority_sample" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val p = Synth.documents(s, dir)
         .select(col("doc_id"),
           size(expr(Dedup.toks)).cast("long").as("w"))

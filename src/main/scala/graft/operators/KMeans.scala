@@ -84,7 +84,6 @@ object KMeans extends QueryFamily {
     // then the final assignment — the list of (vector, cluster) pairs an
     // IVF index would partition by.
     "q43_kmeans" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = base(s, dir)
       val centroids = train(e)
       assign(e, centroids)
@@ -97,7 +96,6 @@ object KMeans extends QueryFamily {
     // cluster column is the partition key a real IVF index would bucket
     // the vectors by; the probe touches ~n/k of the data.
     "q43b_ivf_trained" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = base(s, dir)
       val assigned = assign(e, train(e))
         .select(col("vec_id"), col("embedding"), col("cid").as("cluster"))
@@ -124,7 +122,6 @@ object KMeans extends QueryFamily {
     // 100 TB, k grows with the corpus so cluster sizes stay bounded and
     // no partition ever sees more than one cluster's pairs.
     "q34b_semdedup" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = base(s, dir)
       val assigned = assign(e, train(e))
         .select(col("vec_id"), col("embedding"), col("cid").as("cluster"))

@@ -266,7 +266,6 @@ object ProductQuantization extends QueryFamily {
     // Encode every vector (map-only), broadcast the queries WITH their
     // ADC tables, score candidates by M table lookups, rank top-k.
     "q48_pq_ann" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir)
       val encoded = (0 until nSub).foldLeft(e.select(col("vec_id"), col("embedding"))) {
         (df, m) => df.withColumn(s"code$m", expr(codeSpark("embedding", m)))
@@ -296,7 +295,6 @@ object ProductQuantization extends QueryFamily {
     // candidate count AND bytes-per-candidate both shrink. Ranking is
     // the bounded-heap aggregate, so only k rows per query shuffle.
     "q48b_ivf_pq" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir)
       val encoded = (0 until nSub).foldLeft(
           e.select(col("vec_id"), col("embedding"))
@@ -331,7 +329,6 @@ object ProductQuantization extends QueryFamily {
     // per subspace (the q43 pattern), so the hash match covers training,
     // encode, and search end-to-end.
     "q48c_pq_trained" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       // codebooks are per-corpus INDEX state (1024 doubles), not
       // per-query work — memoized on the corpus content fingerprint
@@ -378,7 +375,6 @@ object ProductQuantization extends QueryFamily {
     // arithmetic. At 100 TB: assignment streams (no shuffle), the
     // residual aggregation is map-side combinable into 8 rows.
     "q199_pq_append" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       // fanOut: the per-row argmin over 8x256 sub-codebooks below is the
       // query cost and the single-file scan is one task
       val e = Synth.fanOut(Synth.embeddings(s, dir), "vec_id")

@@ -289,7 +289,6 @@ object Relational extends QueryFamily {
     // sorts every group in full. Same deterministic (score DESC, id ASC)
     // order — the oracle IS the window rendering.
     "q74_topk_per_group" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       Synth.orders(s, dir)
         .groupBy("o_orderpriority")
         .agg(expr("graft_topk(o_totalprice, o_orderkey, 3)").as("top"))

@@ -65,7 +65,6 @@ object Series extends QueryFamily {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q130_series_similarity" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val u = userSeries(s, dir)
       val probe = broadcast(u.filter(col("user_id") === probeUser)
         .select(col("series").as("p_series"), col("sx").as("p_sx"),

@@ -308,14 +308,12 @@ object Similarity extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = queriesNormalized ++ Map(
     // Brute-force cosine top-k: broadcast queries × all vectors.
     "q40_knn_brute" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       rankTopK(Synth.embeddings(s, dir), None).orderBy("query_id", "rk")
     },
 
     // LSH-bucketed ANN: assign every vector its hyperplane bucket
     // (map-only), then rank true cosine only inside the query's bucket.
     "q41_knn_lsh" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir)
         .withColumn("bucket", expr(bucketExprSpark("embedding")))
       rankTopK(e, Some("bucket")).orderBy("query_id", "rk")
@@ -329,7 +327,6 @@ object Similarity extends QueryFamily {
     // (9·|queries| rows), and no dedup is needed because every vector
     // lives in exactly one bucket and the 9 probe buckets are distinct.
     "q41b_knn_multiprobe" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir)
         .withColumn("bucket", expr(bucketExprSpark("embedding")))
       val flips = (0 until nPlanes).map { i =>
@@ -357,7 +354,6 @@ object Similarity extends QueryFamily {
     // this runs on a sampled probe set: cost = one exact pass for the
     // sample + the index probes, never index-wide.
     "q46_ann_recall" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir)
       val exact = rankTopK(e, None).select("query_id", "vec_id")
       val approx = rankTopK(
@@ -387,7 +383,6 @@ object Similarity extends QueryFamily {
     // checkpoint. Integer candidate counts and hit counts keep the
     // report hash-exact; only recall divides.
     "q192_ann_frontier" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       import ProductQuantization.{nSub => pqSub}
       val base = (0 until pqSub).foldLeft(
           Synth.embeddings(s, dir).select(col("vec_id"), col("embedding"))
@@ -471,7 +466,6 @@ object Similarity extends QueryFamily {
     // cell as the corpus scales; CC contracts to touched vertices only,
     // exactly as q187.
     "q195_semantic_dedup" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val tau = 0.35 // the synthetic table's dup band (max pairwise 0.51)
       val k = corpusCells(s, dir)
       // repartition BEFORE the argmax-of-k-dots cell expression: the
@@ -526,7 +520,6 @@ object Similarity extends QueryFamily {
     // on the shortlist. Signs are md5-derived so both engines compute
     // bit-identical projections.
     "q107_random_projection" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir)
       val pr = e.withColumn("proj", expr(projExprSpark("embedding")))
       val q = broadcast(pr.filter(col("vec_id") < nQueries)
@@ -592,7 +585,6 @@ object Similarity extends QueryFamily {
     // signs), and at 100 TB the 16-dim prefix scan is 4× smaller in
     // bytes, shuffle, and cache.
     "q167_matryoshka_recall" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir)
       val tr = e.withColumn("trunc", expr("slice(embedding, 1, 16)"))
       val q = broadcast(tr.filter(col("vec_id") < nQueries)
@@ -627,7 +619,6 @@ object Similarity extends QueryFamily {
     // cosine. Everything up to the final cosine is integer arithmetic —
     // hash-exact across engines.
     "q118_binary_hamming" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir)
         .withColumn("w0", expr(packHalfSpark(0)))
         .withColumn("w1", expr(packHalfSpark(1)))
@@ -664,7 +655,6 @@ object Similarity extends QueryFamily {
     // r10 verdict #2) and emitted as n_cells — both engines compute it,
     // so the derivation itself is oracle-checked.
     "q42_knn_ivf" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val k = corpusCells(s, dir)
       val e = Synth.embeddings(s, dir)
         .withColumn("cluster", expr(clusterExprSparkK("embedding", k)))
@@ -687,7 +677,6 @@ object Similarity extends QueryFamily {
     // query token routes through an ANN probe (q43b/q175) and this
     // same MaxSim tail scores the union of shortlists.
     "q180_late_interaction" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir)
       val q = broadcast(e.filter(col("vec_id") < 3)
         .select(col("vec_id").as("q_idx"), col("embedding").as("q_emb")))
@@ -716,7 +705,6 @@ object Similarity extends QueryFamily {
     // bounded-heap graft_topk — only shortlist·|queries| rows ever reach
     // a shuffle, and the corpus side adds NO new shuffle over q42's.
     "q175_tiered_ann" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir)
         .withColumn("trunc", expr("slice(embedding, 1, 16)"))
         .withColumn("cl", expr(cluster16ExprSpark("trunc")))
@@ -794,7 +782,6 @@ object Similarity extends QueryFamily {
     // neighbors of one broadcast query vector under dot/(‖a‖‖b‖).
     // Map-only scan + one broadcast row + bounded-heap ranking.
     "q53_true_cosine" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir)
       val q = broadcast(e.filter(col("vec_id") === 0)
         .select(col("embedding").as("q_emb")))
@@ -824,7 +811,6 @@ object Similarity extends QueryFamily {
     // crossJoin swaps for an ANN index probe (q43b/q48b) with this same
     // filter+rank tail.
     "q105_hard_negatives" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir)
       val q = broadcast(e.filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),

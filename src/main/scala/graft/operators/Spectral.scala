@@ -68,7 +68,6 @@ object Spectral extends QueryFamily {
     // projection is map-only over the corpus with v broadcast as
     // literals.
     "q113_power_iteration" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Synth.embeddings(s, dir)
         .select(col("vec_id"), col("label"), col("embedding"))
       val v = train(e.select(col("vec_id"), col("embedding")))

@@ -63,7 +63,6 @@ object TextAnalysis extends QueryFamily {
     * (dense rerank) and q54b (reciprocal-rank fusion).
     */
   private def hybridShortlist(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = Synth.documents(s, dir)
     val sh = docs
       .select(col("doc_id"),
@@ -298,7 +297,6 @@ object TextAnalysis extends QueryFamily {
     // Map-only per doc; the selection arithmetic is list ops identical
     // in both engines.
     "q28_winnowing" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       Synth.documents(s, dir)
         .withColumn("fps", expr(s"graft_winnow($toks, 3, 4)"))
         .select(
@@ -321,7 +319,6 @@ object TextAnalysis extends QueryFamily {
     // corpus-common fingerprints (boilerplate n-grams) capped out before
     // the join — the q31 guard, same Σdf² argument.
     "q55_verbatim_spans" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val fps = Synth.documents(s, dir)
         .select(col("doc_id"), explode(expr(s"graft_winnow($toks, 3, 4)")).as("fp"))
       val rare = fps.groupBy("fp").agg(count(lit(1)).as("df"))
@@ -624,7 +621,6 @@ object TextAnalysis extends QueryFamily {
     // the division is one exactly-rounded IEEE op, so the doubles are
     // engine-portable. Map-only — at 100 TB this runs at scan speed.
     "q37_repetition_filter" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       Synth.documents(s, dir)
         .select(col("doc_id"),
           expr(s"size($toks)").as("n_tokens"),
@@ -852,7 +848,6 @@ object TextAnalysis extends QueryFamily {
     // safe without a df cap. Exact integer set algebra; one fixed-order
     // divide for the Jaccard.
     "q83_source_overlap" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val ss = Synth.documents(s, dir)
         .select(col("source"),
           explode(expr(s"graft_shingles($toks, 3)")).as("sh"))
@@ -887,7 +882,6 @@ object TextAnalysis extends QueryFamily {
     // integer rounding). Register max-merge makes both estimates
     // deterministic functions of the shingle sets — stable verdicts.
     "q83b_source_overlap_hll" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       // NO fanOut/checkpoint on the shingle pass (A/B-measured r11:
       // 0.97→1.74 s WITH it — materializing 200k shingle rows costs more
       // than the per-consumer recompute; same verdict as q49's pass)
@@ -1125,7 +1119,6 @@ object TextAnalysis extends QueryFamily {
     // graft_gram_stats at n=1), distinct ratio ≥ 20%. One map pass +
     // one #sources-row aggregation — at 100 TB this is scan speed.
     "q193_gopher_rules" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val d = Synth.documents(s, dir).select(
         col("source"),
         expr(s"size($toks)").as("nw"),
@@ -1168,7 +1161,6 @@ object TextAnalysis extends QueryFamily {
     // reference side when it is KB-scale (a benchmark) and shuffle it
     // when it is corpus-scale (a snapshot).
     "q194_ngram_novelty" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val isRef = col("doc_id") % 7 === 0
       val sh = Synth.documents(s, dir)
         .select(col("doc_id"), expr(s"graft_shingles($toks, 5)").as("g"))
@@ -1262,7 +1254,6 @@ object TextAnalysis extends QueryFamily {
       // sf0.1); this plan is map-only up to the presentation orderBy,
       // same hashes (GramStats replicates max(struct(cnt, g)) ordering
       // including ties).
-      graft.functions.GraftFunctions.register(s)
       Synth.documents(s, dir)
         .select(col("doc_id"), expr(toks).as("t"))
         .withColumn("n_tokens", expr("size(t)"))

@@ -87,8 +87,13 @@ object RecordSources {
       stream <- root.str("input", "streamName")
         .toRight("Missing required field: input.streamName")
       pos = root.str("input", "initialPosition", "type").getOrElse(d.initialPosition)
+      ts = root.str("input", "initialPosition", "timestamp")
       _ <- pos match {
-        case "LATEST" | "TRIM_HORIZON" | "AT_TIMESTAMP" => Right(())
+        case "LATEST" | "TRIM_HORIZON" => Right(())
+        case "AT_TIMESTAMP" =>
+          Either.cond(ts.exists(t => Try(java.time.Instant.parse(t)).isSuccess), (),
+            "AT_TIMESTAMP needs an ISO-8601 input.initialPosition.timestamp, got: " +
+              ts.getOrElse("none"))
         case other => Left(s"Unknown initialPosition.type: $other")
       }
       idle <- Try(root.duration("input", "retrievalMode", "idleTimeBetweenReads"))
@@ -96,7 +101,7 @@ object RecordSources {
     } yield d.copy(
       streamName = stream,
       initialPosition = pos,
-      initialTimestamp = root.str("input", "initialPosition", "timestamp"),
+      initialTimestamp = ts,
       maxRecords = root.num("input", "retrievalMode", "maxRecords")
         .map(_.toInt).getOrElse(d.maxRecords),
       idleTimeBetweenReadsMs = idle.map(_.toMillis).getOrElse(d.idleTimeBetweenReadsMs))

@@ -34,7 +34,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    AT_TIMESTAMP (+ `initialTimestamp`, ISO-8601) keys off each shard
   *    FILE's mtime — the arrival granularity the file backing has: a
   *    shard touched at/after the timestamp replays from its horizon,
-  *    an older one reads only future appends.
+  *    an older one reads only future appends; without a parseable
+  *    timestamp `load()` fails.
   *  - `maxFetchRecordsPerShard` bounds each micro-batch via the
   *    admission-control API ([[SupportsAdmissionControl]]) — the same
   *    mechanism the Kafka source uses for maxOffsetsPerTrigger.
@@ -164,6 +165,18 @@ class KinesisFileTable(options: CaseInsensitiveStringMap)
     opt("initialTimestamp", "kinesis.startingPosition.timestamp")
       .orElse(jsonTs)
 
+  /** AT_TIMESTAMP's cut in epoch ms, defined exactly when the position is
+    * AT_TIMESTAMP. A missing or unparseable timestamp is rejected here,
+    * at `load()`: it must never quietly become a full replay.
+    */
+  private val atTimestampMs: Option[Long] =
+    if (initialPosition != "AT_TIMESTAMP") None
+    else Some(initialTimestamp
+      .flatMap(t => scala.util.Try(java.time.Instant.parse(t).toEpochMilli).toOption)
+      .getOrElse(throw new IllegalArgumentException(
+        "AT_TIMESTAMP needs an ISO-8601 initialTimestamp (or " +
+          s"kinesis.startingPosition.timestamp), got: ${initialTimestamp.getOrElse("none")}")))
+
   private val maxFetchRecordsPerShard: Int =
     opt("maxFetchRecordsPerShard", "kinesis.maxFetchRecordsPerShard")
       .map(_.toInt).getOrElse(Int.MaxValue)
@@ -179,8 +192,7 @@ class KinesisFileTable(options: CaseInsensitiveStringMap)
         override def readSchema(): StructType = KinesisFileSource.Schema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new KinesisFileMicroBatchStream(
-            streamName, initialPosition, maxFetchRecordsPerShard,
-            initialTimestamp)
+            streamName, initialPosition, maxFetchRecordsPerShard, atTimestampMs)
       }
     }
 }
@@ -189,33 +201,26 @@ class KinesisFileMicroBatchStream(
     streamName: String,
     initialPosition: String,
     maxRecordsPerShard: Int,
-    initialTimestamp: Option[String] = None)
+    atTimestampMs: Option[Long] = None)
     extends MicroBatchStream with SupportsAdmissionControl {
   import KinesisFileSource._
 
   private val dir = Paths.get(streamName)
 
-  override def initialOffset(): Offset = initialPosition match {
-    case "LATEST" => ShardOffsets(shardEnds(dir))
+  override def initialOffset(): Offset = atTimestampMs match {
     // AT_TIMESTAMP: the double's arrival time is the shard file's mtime
     // (one arrival stamp per shard — the granularity the file backing
     // has): a shard whose records arrived at/after the timestamp replays
     // from its horizon; one whose records predate it starts at its
     // current end (only future appends are read) — per-shard, exactly
     // how the real position filters by approximateArrivalTimestamp.
-    // A missing/unparseable timestamp falls back to the horizon.
-    case "AT_TIMESTAMP" =>
-      val cutMs = initialTimestamp.flatMap(t =>
-        scala.util.Try(java.time.Instant.parse(t).toEpochMilli).toOption)
-      cutMs match {
-        case None => ShardOffsets(shardEnds(dir).map { case (s, _) => s -> 0L })
-        case Some(cut) =>
-          ShardOffsets(shardEnds(dir).map { case (s, end) =>
-            val mtime = Files.getLastModifiedTime(dir.resolve(s)).toMillis
-            s -> (if (mtime >= cut) 0L else end)
-          })
-      }
-    case _ => ShardOffsets(shardEnds(dir).map { case (s, _) => s -> 0L })
+    case Some(cut) =>
+      ShardOffsets(shardEnds(dir).map { case (s, end) =>
+        val mtime = Files.getLastModifiedTime(dir.resolve(s)).toMillis
+        s -> (if (mtime >= cut) 0L else end)
+      })
+    case None if initialPosition == "LATEST" => ShardOffsets(shardEnds(dir))
+    case None => ShardOffsets(shardEnds(dir).map { case (s, _) => s -> 0L })
   }
 
   override def deserializeOffset(json: String): Offset = parseOffsets(json)

@@ -91,7 +91,6 @@ object EventTimeAggregates {
     * vec_id, embedding, cid.
     */
   def streamingAnnProbe(queries: DataFrame, index: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     queries.join(index, "cid")
       .withColumn("cosine", expr(graft.operators.Dedup.dot("q_emb", "embedding")))
       .groupBy("query_id")
@@ -122,7 +121,6 @@ object EventTimeAggregates {
       index: DataFrame,
       corpusShingles: DataFrame,
       threshold: Double = 0.8): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // the shingle array rides along with the band rows: verifying via a
     // join back to the stream's own shingle pass would be a stream-stream
     // self-join (unsupported in Update mode); carrying the column keeps
@@ -190,7 +188,6 @@ object EventTimeAggregates {
       bucketCap: Int = 1024): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val bands = graft.operators.Dedup.bandBucketsWithShingles(
       docs.select(col("doc_id"),
         expr(s"graft_shingles(${graft.operators.Dedup.toks}, 3)").as("sh")))
@@ -316,7 +313,6 @@ object EventTimeAggregates {
       nCells: Int = 8): DataFrame = {
     val s = vecs.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // nCells must match the cell count the corpus index was built with
     // (batch q195 derives it from corpus cardinality — Similarity
     // .cellCountFor); pass the same value or cells disagree and the
@@ -458,7 +454,6 @@ object EventTimeAggregates {
       eventTime: Option[String] = None,
       windowDur: String = "10 minutes",
       delay: String = "10 minutes"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val src = eventTime.fold(docs)(c => docs.withWatermark(c, delay))
     val grams = src.select(
       col("doc_id") +: eventTime.map(col).toSeq :+ explode(
@@ -495,7 +490,6 @@ object EventTimeAggregates {
     */
   def streamingQuantDrift(vecs: DataFrame,
       cb: Array[Array[Array[Double]]], base: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     vecs
       .select(graft.operators.ProductQuantization.residExplode(cb).as("sub"))
       .select(col("sub.m").as("m"), col("sub.rfp").as("rfp"))
@@ -595,8 +589,6 @@ object EventTimeAggregates {
       windowDur: String = "10 minutes",
       delay: String = "10 minutes",
       nCells: Int = 8): DataFrame = {
-    val s = vecs.sparkSession
-    graft.functions.GraftFunctions.register(s)
     import graft.operators.AnnGraph
     val src0 = eventTime.fold(vecs)(c => vecs.withWatermark(c, delay))
     val et = eventTime.map(col).toSeq
@@ -760,7 +752,6 @@ object EventTimeAggregates {
     * `docs` columns: doc_id (bigint), w (bigint weight > 0).
     */
   def streamingPrioritySample(docs: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .withColumn("h", expr(graft.operators.Curation
         .u32Spark("priority:", "cast(doc_id as string)")))

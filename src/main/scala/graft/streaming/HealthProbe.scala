@@ -15,10 +15,12 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
 import graft.config.HealthProbeConfig
 import graft.model.BadRow.esc
 
-/** Per-service health registry (reference RuntimeService: BlobSink /
-  * BadSink / source are marked unhealthy INDIVIDUALLY on failure —
+/** Per-service health registry (reference RuntimeService: the BlobSink
+  * and BadSink are marked unhealthy INDIVIDUALLY on failure —
   * Processing.scala:327-329 — and healthy again on recovery). Shared
   * between the pipeline (which marks) and [[HealthProbe]] (which reports).
+  * A failed source is not marked here: it ends the query, which
+  * [[HealthProbe]] reports as `terminated`.
   */
 final class ServiceHealth extends Serializable {
   private val problemsMap =
@@ -37,7 +39,6 @@ final class ServiceHealth extends Serializable {
 object ServiceHealth {
   val BlobSink = "BlobSink"
   val BadSink = "BadSink"
-  val Source = "Source"
 }
 
 /** Structured crash report for a terminally-failed stream — what the
@@ -66,9 +67,9 @@ final case class ErrorReport(
   *
   *  - liveness (T9 — Environment.scala:71-74, HealthProbe on :8000 with
   *    unhealthyLatency=2min): healthy while micro-batches keep completing
-  *    AND no individual service (BlobSink / BadSink / source) is marked
-  *    failed; if progress stalls past `unhealthyLatency`, a service
-  *    degrades, or the query terminates, GET /health flips to 503;
+  *    AND neither sink (BlobSink / BadSink) is marked failed; if progress
+  *    stalls past `unhealthyLatency`, a sink degrades, or the query
+  *    terminates (a failed source ends it), GET /health flips to 503;
   *  - stream latency (T10's `latency_millis`): each micro-batch's
   *    `triggerExecution` duration, set on `metrics`;
   *  - crash reports (the Sentry equivalent): on a terminal failure, an

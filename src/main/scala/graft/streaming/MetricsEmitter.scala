@@ -106,17 +106,10 @@ object MetricsEmitter {
   }
 
   /** Prometheus text exposition of the same metrics (cumulative values). */
-  def prometheusScrape(
-      m: LoaderPipeline.Metrics,
-      tags: Map[String, String] = Map.empty): String = {
-    val labels =
-      if (tags.isEmpty) ""
-      else tags.toSeq.sorted.map { case (k, v) => s"""$k="$v"""" }
-        .mkString("{", ",", "}")
+  def prometheusScrape(m: LoaderPipeline.Metrics): String =
     exported(m).map { case (name, kind, v) =>
-      s"# TYPE graft_$name ${kind.prometheus}\ngraft_$name$labels $v\n"
+      s"# TYPE graft_$name ${kind.prometheus}\ngraft_$name $v\n"
     }.mkString
-  }
 
   /** Periodic statsd pusher — a daemon thread sending one UDP datagram per
     * metric every `cfg.period` (reference `report`, Metrics via

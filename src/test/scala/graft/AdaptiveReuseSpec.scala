@@ -13,8 +13,6 @@ class AdaptiveReuseSpec extends AnyFunSuite with SparkSuite {
     .orElse(sys.env.get("GRAFT_TESTDATA"))
     .getOrElse("/root/testdata") + "/sf0.001"
 
-  override protected def sparkConf = Map(GraftSession.Extensions)
-
   test("q31b: one prefix pass feeds the posting arrays; the verify attaches via hash joins") {
     // r7 asserted ReusedExchange on the posting SELF-JOIN's shared
     // prefix subtree; r8's bucketPairs array route runs the prefix

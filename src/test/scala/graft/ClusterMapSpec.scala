@@ -14,7 +14,7 @@ class ClusterMapSpec extends AnyFunSuite with SparkSuite {
     .orElse(sys.env.get("GRAFT_TESTDATA"))
     .getOrElse("/root/testdata") + "/sf0.001"
 
-  override protected def sparkConf = Map(GraftSession.Extensions, NoAqe)
+  override protected def sparkConf = Map(NoAqe)
 
   test("the cluster map materializes once; consumers probe the bucketed table") {
     // first consumer triggers the build

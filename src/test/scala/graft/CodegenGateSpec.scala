@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.GraftFunctions
-
 /** Codegen COMPILE gate for every native expression.
   *
   * Round 7 shipped a `doGenCode` whose generated Java did not compile
@@ -35,7 +33,6 @@ class CodegenGateSpec extends AnyFunSuite with SparkSuite {
     * the first run surfaces as a thrown SparkException, not a fallback.
     */
   private def gate(sql: String, df: => DataFrame): Unit = {
-    GraftFunctions.register(spark)
     def run(): Seq[String] =
       df.repartition(1).selectExpr(sql + " AS v")
         .collect().map(r => String.valueOf(r.get(0))).toSeq.sorted
@@ -126,7 +123,6 @@ class CodegenGateSpec extends AnyFunSuite with SparkSuite {
     // beyond explode/stack run interpreted inside GenerateExec); this
     // pins that the SURROUNDING stages still compile and the plan
     // executes when interpreted projection fallback is disabled
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rows = (0L until 40L).map(id => (0, id % 3, id, id % 7))
       .toDF("blk", "block", "doc_id", "sim")
@@ -155,7 +151,6 @@ class CodegenGateSpec extends AnyFunSuite with SparkSuite {
     // this gates the surrounding hash-aggregate stage under
     // CODEGEN_ONLY so a regression in its serializer/projection
     // interaction with compiled stages still surfaces.
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = (0 until 40).map(i => (i % 4, i.toDouble, i.toLong))
       .toDF("g", "score", "payload")

@@ -326,7 +326,6 @@ class EventTimeSpec extends AnyFunSuite with SparkSuite {
   test("streaming incremental dedup: arriving docs verify against the persisted band index") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     // static corpus: three docs, band index persisted via DedupIndex
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog today"),
@@ -367,7 +366,6 @@ class EventTimeSpec extends AnyFunSuite with SparkSuite {
   test("streaming novelty equals batch q194 point-for-point across micro-batches") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     def run(a: Int, b: Int) = (a to b).map(i => s"t$i").mkString(" ")
     // reference corpus: two docs; their distinct 5-grams are the static side
     val ref = Seq((1L, run(1, 30)), (2L, run(50, 80))).toDF("doc_id", "text")
@@ -411,7 +409,6 @@ class EventTimeSpec extends AnyFunSuite with SparkSuite {
   test("watermarked streaming novelty: identical scores, closed-window state evicted (r9 advice)") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     def run(a: Int, b: Int) = (a to b).map(i => s"t$i").mkString(" ")
     val refGrams = Seq((1L, run(1, 30))).toDF("doc_id", "text")
       .select(explode(expr(
@@ -450,7 +447,6 @@ class EventTimeSpec extends AnyFunSuite with SparkSuite {
   test("streaming LM scoring equals batch q201 point-for-point across micro-batches") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     def run(a: Int, b: Int) = (a to b).map(i => s"w${i % 40}").mkString(" ")
     // offline training on the reference corpus (the batch q201 recipe)
     val ref = Seq((1L, run(1, 60)), (2L, run(20, 90))).toDF("doc_id", "text")
@@ -497,7 +493,6 @@ class EventTimeSpec extends AnyFunSuite with SparkSuite {
   test("streaming kNN-graph append equals fixed-corpus batch edges (q204 incremental twin)") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     import graft.operators.{AnnGraph, Similarity}
     val all = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -572,7 +567,6 @@ class EventTimeSpec extends AnyFunSuite with SparkSuite {
   test("streaming DSIR importance equals the batch q203 kernel point-for-point (r10 verdict #6)") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     def run(a: Int, b: Int) = (a to b).map(i => s"w${i % 40}").mkString(" ")
     // target = curated reference; raw = the candidate-pool snapshot
     // (exactly batch q203's two training slices: at-ingestion DSIR uses
@@ -647,7 +641,6 @@ class EventTimeSpec extends AnyFunSuite with SparkSuite {
   test("streaming quantization drift equals the batch q199 computation across micro-batches") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     // deterministic codebook + vectors (the op takes the codebook as a
     // parameter, so the test controls the geometry end to end)
     val cb = Array.tabulate(8, 16, 8)((m, k, d) =>

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{IntersectSize, VectorCosine, VectorDot}
 
-/** `spark.sql.extensions=graft.functions.GraftExtensions` end-to-end: the
-  * native functions resolve without a manual register() call, and the
+/** The `spark.sql.extensions=graft.functions.GraftExtensions` that every
+  * [[GraftSession]] carries, end-to-end: the native functions resolve with
+  * no registration step and no suite conf, and the
   * NativeDotProduct optimizer rule rewrites the composed
   * aggregate(zip_with(...)) dot product into the codegen'd VectorDot —
   * exactly where bit-identical, and nowhere else.
@@ -17,7 +18,6 @@ import graft.functions.{IntersectSize, VectorCosine, VectorDot}
 class ExtensionsSpec extends AnyFunSuite with SparkSuite {
 
   override protected def cores = 2
-  override protected def sparkConf = Map(GraftSession.Extensions)
 
   private def hasVectorDot(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.expressions

@@ -1,8 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
-
-import graft.functions.GraftFunctions
 
 /** Native expression semantics: graft_dot's fold order, null contract
   * (length mismatch ⇒ NULL, matching the zip_with/list_zip composed form),
@@ -12,9 +11,24 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
 
   override protected def cores = 2
 
+  /** `df`'s rows with IntersectSizeFusion excluded: Spark's own
+    * `size(array_intersect)`, never graft's rewrite of it. Fails if the
+    * optimized plan still holds a graft expression.
+    */
+  private def unfused(df: => DataFrame): Array[Row] = {
+    val key = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(key, "graft.functions.IntersectSizeFusion")
+    try {
+      val d = df
+      val native = d.queryExecution.optimizedPlan.flatMap(_.expressions).flatMap(
+        _.collect { case e if e.getClass.getName.startsWith("graft.") => e })
+      assert(native.isEmpty, s"reference plan holds $native")
+      d.collect()
+    } finally spark.conf.unset(key)
+  }
+
   private def dotOf(a: Seq[Float], b: Seq[Float]): Option[Double] = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val r = Seq((a, b)).toDF("a", "b")
       .selectExpr("graft_dot(a, b) AS d").collect()(0)
     if (r.isNullAt(0)) None else Some(r.getDouble(0))
@@ -32,14 +46,12 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
 
   test("graft_dot: NULL array propagates NULL") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val r = Seq(Tuple1(Seq(1f, 2f))).toDF("a")
       .selectExpr("graft_dot(a, cast(null as array<float>)) AS d").collect()(0)
     assert(r.isNullAt(0))
   }
 
   test("graft_minhash: slots match the composed array_min/transform form") {
-    GraftFunctions.register(spark)
     val composed = (0 until 12).map { i =>
       val (j, off) = (i / 2, 1 + 16 * (i % 2))
       s"array_min(transform(sh, x -> " +
@@ -55,7 +67,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_minhash: empty shingle array is NULL (array_min semantics)") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT graft_minhash(cast(array() as array<string>), 12) AS mhs")
       .collect()(0)
@@ -63,7 +74,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_simhash: matches the exploded md5-bit-vote form") {
-    GraftFunctions.register(spark)
     // composed reference rendering (the DuckDB oracle's shape)
     val both = spark.sql(
       """WITH t AS (SELECT array('alpha', 'beta', 'alpha', 'gamma!') AS toks),
@@ -82,7 +92,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_simhash64: bits 0-15 are exactly graft_simhash (prefix property), width fills 64") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT graft_simhash(t) AS s16, graft_simhash64(t) AS s64
         |FROM (SELECT array('alpha', 'beta', 'alpha', 'gamma!', 'x9') AS t)""".stripMargin)
@@ -93,7 +102,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_simhash64: null and empty contracts match graft_simhash") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT graft_simhash64(cast(null as array<string>)) AS n,
         |  graft_simhash64(cast(array() as array<string>)) AS e""".stripMargin).collect()(0)
@@ -102,7 +110,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_winnow: matches the composed slice/array_min winnowing form") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """WITH t AS (SELECT split('the quick brown fox jumps over the lazy dog and the quick cat', ' ') AS toks),
         |h AS (SELECT toks, transform(sequence(1, greatest(size(toks) - 2, 1)),
@@ -117,14 +124,12 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_winnow: short input (fewer tokens than n) yields one fingerprint") {
-    GraftFunctions.register(spark)
     val r = spark.sql("SELECT graft_winnow(array('only', 'two'), 3, 4) AS fps")
       .collect()(0).getSeq[String](0)
     assert(r.size == 1)
   }
 
   test("graft_shingles: distinct 3-gram shingles over a token array") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT graft_shingles(array('a','b','c','d','a','b','c','d'), 3) AS sh")
       .collect()(0).getSeq[String](0)
@@ -133,7 +138,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_sorted_intersect_size ≡ size(array_intersect) on sorted random arrays") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     // random string arrays WITH duplicates (dedup semantics must match),
@@ -143,26 +147,22 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
       (arr(), arr())
     } :+ ((Seq.empty[String], Seq("a", "b"))) :+
       ((Seq("a", "a", "b"), Seq("a", "b", "b")))
-    val df = rows.toDF("a", "b")
-    val bad = df.selectExpr(
-      "graft_sorted_intersect_size(a, b) AS merged",
-      "size(array_intersect(a, b)) AS composed")
-      .filter("merged != composed")
-    assert(bad.count() == 0)
+    def check(df: DataFrame): Unit = {
+      val merged = df.selectExpr("graft_sorted_intersect_size(a, b)")
+        .collect().map(_.getInt(0)).toSeq
+      val composed = unfused(df.selectExpr("size(array_intersect(a, b))"))
+        .map(_.getInt(0)).toSeq
+      assert(merged == composed)
+    }
+    check(rows.toDF("a", "b"))
     // long arrays too (the codegen comparator differs by element type)
-    val lrows = (0 until 100).map { _ =>
+    check((0 until 100).map { _ =>
       def arr() = Seq.fill(rnd.nextInt(20))(rnd.nextInt(9).toLong).sorted
       (arr(), arr())
-    }
-    val lbad = lrows.toDF("a", "b").selectExpr(
-      "graft_sorted_intersect_size(a, b) AS merged",
-      "size(array_intersect(a, b)) AS composed")
-      .filter("merged != composed")
-    assert(lbad.count() == 0)
+    }.toDF("a", "b"))
   }
 
   test("graft_gram_stats ≡ the composed zip_with/array_distinct/argmax form") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(23)
     // small vocab forces duplicate grams AND top-count ties (the
@@ -189,7 +189,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_gram_stats: null and short-input contracts") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT graft_gram_stats(cast(null as array<string>), 2) AS n,
         | graft_gram_stats(array('one'), 2) AS short""".stripMargin).collect()(0)
@@ -199,7 +198,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_sorted_intersect_size: null contract (null array in, null out)") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT graft_sorted_intersect_size(cast(null as array<string>), array('a'))")
       .collect()(0)
@@ -207,7 +205,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("literal parameters: non-literal / non-integer args fail with a named error (r8 advice)") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Seq("a", "b", "c"), 2)).toDF("toks", "n")
     df.createOrReplaceTempView("lit_check")
@@ -246,7 +243,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
     assert(Similarity.cellCountFor(2_000_000_000L) == 4096)
     // the k=63 literal-argmax expression evaluates and agrees with a
     // Scala-side argmax over the same md5 centroids
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val vecs = (0 until 20).map { i =>
       (i.toLong, Array.tabulate(64)(d => (((i * 31 + d * 7) % 13) - 6) / 6.0f))

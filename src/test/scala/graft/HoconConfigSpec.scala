@@ -121,6 +121,24 @@ class HoconConfigSpec extends AnyFunSuite {
       Left("input.retrievalMode.idleTimeBetweenReads: Cannot parse duration: soon"))
   }
 
+  test("a config without output.bad is rejected, not written to the working directory") {
+    assert(LoaderConfig.fromHocon(
+      """{"purpose": "ENRICHED_EVENTS", "output": {"good": {"path": "s3://x/"}}}""") ==
+      Left("Missing required field: output.bad.path"))
+  }
+
+  test("AT_TIMESTAMP without a parseable input.initialPosition.timestamp is a Left") {
+    def at(ts: String) = graft.sources.RecordSources.kinesisFromHocon(
+      s"""{"input": {"streamName": "s",
+         |  "initialPosition": {"type": "AT_TIMESTAMP"$ts}}}""".stripMargin, "r")
+    assert(at("") == Left(
+      "AT_TIMESTAMP needs an ISO-8601 input.initialPosition.timestamp, got: none"))
+    assert(at(""", "timestamp": "yesterday"""") == Left(
+      "AT_TIMESTAMP needs an ISO-8601 input.initialPosition.timestamp, got: yesterday"))
+    assert(at(""", "timestamp": "2020-07-17T10:00:00Z"""").map(_.initialTimestamp) ==
+      Right(Some("2020-07-17T10:00:00Z")))
+  }
+
   test("a config with only the required fields decodes to the case-class defaults") {
     val text =
       """{"purpose": "ENRICHED_EVENTS",

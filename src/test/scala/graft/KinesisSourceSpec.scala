@@ -292,6 +292,21 @@ class KinesisSourceSpec extends AnyFunSuite with SparkSuite {
     } finally q.stop()
   }
 
+  test("S1: AT_TIMESTAMP without a parseable initialTimestamp fails at load(), never a full replay") {
+    val streamDir = newDir("kinesis-at-ts-bad")
+    writeShard(streamDir, "shard-0000", (0 until 3).map(tsv))
+    def load(ts: Option[String]) = {
+      val r = spark.readStream.format("graft-kinesis")
+        .option("streamName", streamDir.toString)
+        .option("initialPosition", "AT_TIMESTAMP")
+      ts.fold(r)(r.option("initialTimestamp", _)).load()
+    }
+    for (ts <- Seq(None, Some("last tuesday"))) {
+      val e = intercept[IllegalArgumentException](load(ts))
+      assert(e.getMessage.contains("initialTimestamp"), e.getMessage)
+    }
+  }
+
   test("S1: the published connector's option spelling (kinesis.*) decodes identically") {
     // the awslabs spark-sql-kinesis-connector spelling — see the
     // conformance table on RecordSources.kinesisOptions; a production

@@ -79,22 +79,22 @@ class MetricsSpec extends AnyFunSuite {
     } finally { reporter.close(); receiver.close() }
   }
 
-  test("prometheus scrape: cumulative counters, labels, latency gauges") {
+  test("prometheus scrape: cumulative counters and latency gauges") {
     val m = metricsWith(100, 5, Some(80), Some(12000))
     m.objectsWritten.set(9); m.putMillis.set(40); m.badPutMillis.set(2)
-    val text = MetricsEmitter.prometheusScrape(m, Map("env" -> "prod"))
+    val text = MetricsEmitter.prometheusScrape(m)
     assert(text.contains("# TYPE graft_count counter"))
-    assert(text.contains("""graft_count{env="prod"} 100"""))
-    assert(text.contains("""graft_bad_count{env="prod"} 5"""))
-    assert(text.contains("""graft_latency_millis{env="prod"} 80"""))
-    assert(text.contains("""graft_e2e_latency_millis{env="prod"} 12000"""))
-    assert(text.contains("""graft_latency_collector_to_load{env="prod"} 12"""))
+    assert(text.contains("graft_count 100"))
+    assert(text.contains("graft_bad_count 5"))
+    assert(text.contains("graft_latency_millis 80"))
+    assert(text.contains("graft_e2e_latency_millis 12000"))
+    assert(text.contains("graft_latency_collector_to_load 12"))
     assert(text.contains("# TYPE graft_objects_written counter"))
-    assert(text.contains("""graft_objects_written{env="prod"} 9"""))
+    assert(text.contains("graft_objects_written 9"))
     assert(text.contains("# TYPE graft_put_millis counter"))
-    assert(text.contains("""graft_put_millis{env="prod"} 40"""))
+    assert(text.contains("graft_put_millis 40"))
     assert(text.contains("# TYPE graft_bad_put_millis counter"))
-    assert(text.contains("""graft_bad_put_millis{env="prod"} 2"""))
+    assert(text.contains("graft_bad_put_millis 2"))
   }
 
   test("monitoring.metrics.statsd HOCON block parses to StatsdConfig") {

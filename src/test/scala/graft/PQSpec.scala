@@ -46,7 +46,6 @@ class PQSpec extends AnyFunSuite with SparkSuite {
     // entries are not exactly representable (trained-like doubles), so
     // any accumulation-order or tiebreak drift shows.
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val cb = Array.tabulate(8, 16, 8) { (m, k, d) =>
       (((m * 37 + k * 11 + d * 3) % 29) - 14) / 7.3
     }

@@ -50,7 +50,6 @@ class PropertySpec extends AnyFunSuite with SparkSuite {
 
   test("graft_topk ≡ window row_number for random scores (ties included)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val gen = for {
       rows <- Gen.nonEmptyListOf(for {
         g <- Gen.oneOf("x", "y")
@@ -128,7 +127,6 @@ class PropertySpec extends AnyFunSuite with SparkSuite {
 
   test("q31b prefix/length/positional filters find EVERY Jaccard ≥ 1/2 pair on random docs") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // local mirror of graft_shingles: distinct token-3-grams, short-input
     // edge = one whole-doc shingle
     def shingles(toks: List[String]): Set[String] =
@@ -174,7 +172,6 @@ class PropertySpec extends AnyFunSuite with SparkSuite {
 
   test("winnowing guarantee: docs sharing a ≥6-token verbatim run always share a fingerprint (q55 soundness)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // window+ngram−1 = 4+3−1 = 6: a planted 6-token run yields exactly
     // one hash window fully inside the match in BOTH docs, whose min is
     // the same selected fingerprint — whatever surrounds it

@@ -136,7 +136,6 @@ class RocksDbStateSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     implicit val ctx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val theta = 0.3
 
     // word-run texts: A and C overlap too little to cluster (J = 0.2 at
@@ -163,8 +162,9 @@ class RocksDbStateSpec extends AnyFunSuite with SparkSuite {
     val index = spark.table("ic_band_idx")
 
     // full-rebuild truth over a doc set: band-collision candidates
-    // verified at exact Jaccard (the q61/q187 semantics), then
-    // union-find — the same theorem batch q187's oracle checks
+    // verified at exact Jaccard (the q61/q187 semantics, computed here in
+    // Scala so the truth does not run the intersect-size rewrite it
+    // checks), then union-find — the same theorem batch q187's oracle checks
     def fullRebuild(docs: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
       val sh = docs.select(col("doc_id"),
         expr(s"graft_shingles(${graft.operators.Dedup.toks}, 3)").as("sh"))
@@ -174,11 +174,12 @@ class RocksDbStateSpec extends AnyFunSuite with SparkSuite {
         .filter(col("id_a") < col("id_b")).select("id_a", "id_b").distinct()
         .join(sh.toDF("id_a", "sh_a"), "id_a")
         .join(sh.toDF("id_b", "sh_b"), "id_b")
-        .withColumn("inter", expr("size(array_intersect(sh_a, sh_b))"))
-        .withColumn("j", col("inter").cast("double") /
-          (expr("size(sh_a)") + expr("size(sh_b)") - col("inter")))
-        .filter(col("j") >= theta).select("id_a", "id_b")
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+        .select("id_a", "id_b", "sh_a", "sh_b").collect()
+        .filter { r =>
+          val (a, b) = (r.getSeq[String](2), r.getSeq[String](3))
+          val inter = a.toSet.intersect(b.toSet).size
+          inter.toDouble / (a.size + b.size - inter) >= theta
+        }.map(r => (r.getLong(0), r.getLong(1)))
       val ids = docs.select("doc_id").collect().map(_.getLong(0))
       val root = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
       def find(x: Long): Long =
@@ -253,7 +254,6 @@ class RocksDbStateSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     implicit val ctx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val tau = 0.35
     val dim = 64
 
@@ -380,7 +380,6 @@ class RocksDbStateSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     implicit val ctx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     // one direction, four ids: every pair lands in the same IVF cell with
     // cosine 0.49 >= tau, so absent a cap all six edges would emit
     val dim = 64
@@ -425,7 +424,6 @@ class RocksDbStateSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     implicit val ctx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     import graft.operators.{AnnGraph, Similarity}
     val all = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")

@@ -33,8 +33,6 @@ class SketchErrorSpec extends AnyFunSuite with SparkSuite {
     .orElse(sys.env.get("GRAFT_TESTDATA"))
     .getOrElse("/root/testdata") + "/sf0.001"
 
-  override protected def sparkConf = Map(GraftSession.Extensions)
-
   private def run(q: String): DataFrame = SparkEntry.queries(q)(spark, sf)
 
   test("every bound-verdict column of the five sketch queries is 1") {
@@ -105,7 +103,6 @@ class SketchErrorSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("q83b: per-source and pairwise-union HLL(lgK=14) within 3·1.04/√2^14") {
-    graft.functions.GraftFunctions.register(spark)
     val eps = 3 * 1.04 / math.sqrt(1 << 14) // ≈ 0.0244
     val toks = "split(trim(text), '\\\\s+')"
     val ss = graft.operators.Synth.documents(spark, sf)

@@ -17,8 +17,6 @@ class SpectralSpec extends AnyFunSuite with SparkSuite {
     .orElse(sys.env.get("GRAFT_TESTDATA"))
     .getOrElse("/root/testdata") + "/sf0.001"
 
-  override protected def sparkConf = Map(GraftSession.Extensions)
-
   private def embeddings() =
     Synth.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
 

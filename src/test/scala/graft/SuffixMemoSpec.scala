@@ -16,7 +16,7 @@ class SuffixMemoSpec extends AnyFunSuite with SparkSuite {
     .orElse(sys.env.get("GRAFT_TESTDATA"))
     .getOrElse("/root/testdata") + "/sf0.001"
 
-  override protected def sparkConf = Map(GraftSession.Extensions, NoAqe)
+  override protected def sparkConf = Map(NoAqe)
 
   test("suffix ranks materialize once; q111/q111b probe the bucketed table") {
     // first consumer triggers the build

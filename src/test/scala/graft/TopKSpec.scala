@@ -11,7 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class TopKSpec extends AnyFunSuite with SparkSuite {
 
   private def viaAgg(df: org.apache.spark.sql.DataFrame, k: Int) = {
-    graft.functions.GraftFunctions.register(spark)
     df.groupBy("g")
       .agg(expr(s"graft_topk(s, i, $k)").as("top"))
       .select(col("g"), posexplode(col("top")))
@@ -46,7 +45,6 @@ class TopKSpec extends AnyFunSuite with SparkSuite {
 
   test("plans as an object hash aggregate — no per-group full sort") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = (1 to 1000).map(i => (s"g${i % 7}", i.toDouble, i.toLong))
       .toDF("g", "s", "i")
       .groupBy("g").agg(expr("graft_topk(s, i, 3)"))
