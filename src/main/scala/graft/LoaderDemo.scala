@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.config._
 import graft.operators.Synth
@@ -8,124 +12,76 @@ import graft.sinks.HadoopBlobStore
 import graft.sources.RecordSources
 import graft.streaming.{HealthProbe, LoaderPipeline, MetricsEmitter, ServiceHealth}
 
-/** Demo/ops entrypoint: run the loader end-to-end over lines synthesized
-  * from the events table, writing real gzip objects through the
-  * production Hadoop blob store.
+/** The loader's entrypoint, configured from the reference's HOCON surface
+  * (the reference's Run.fromConfigPath entry shape, reference
+  * Run.scala:44-65), writing real gzip objects through the production
+  * Hadoop blob store.
   *
   * Usage:
-  *   runMain graft.LoaderDemo <sfDir> <outDir> [ENRICHED_EVENTS|SELF_DESCRIBING]
-  *   runMain graft.LoaderDemo --stream <inDir> <outDir> [purpose]
-  *     — streaming mode: tails <inDir> for text files (RecordSources) with
-  *       one HealthProbe as its only query listener (/health with
-  *       lastError and /metrics on :8000, stream latency, and a
-  *       stream_error statsd event on a crash), an optional statsd push
-  *       (SPARK_GRAFT_STATSD=host:port), and Ctrl-C (or
-  *       SPARK_GRAFT_STREAM_SECONDS) to stop.
-  *   runMain graft.LoaderDemo --config <path.hocon> <sfDir>
-  *     — batch run configured from a HOCON file (the reference's
-  *       Run.fromConfigPath entry shape, reference Run.scala:44-65).
+  *   runMain graft.LoaderDemo <config.hocon> <dir>
+  *
+  *  - With an `input` block, streams from `input.streamName` through the
+  *    file-backed `graft-kinesis` double until stopped (Ctrl-C), with
+  *    `<dir>` as the checkpoint directory (the reference keeps its
+  *    checkpoints in DynamoDB, not in HOCON). One [[HealthProbe]] is the
+  *    query's only listener (/health and /metrics on
+  *    `monitoring.healthProbe.port`, stream latency, crash reports), and
+  *    metrics are pushed to statsd when `monitoring.metrics.statsd` is set.
+  *  - Without one, runs one batch over the events synthesized from the
+  *    events table in `<dir>`.
   */
 object LoaderDemo {
-  def main(args: Array[String]): Unit =
-    if (args.headOption.contains("--stream")) streamMain(args.drop(1))
-    else if (args.headOption.contains("--config")) configMain(args.drop(1))
-    else batchMain(args)
-
-  private def configMain(args: Array[String]): Unit = {
-    val path = args.headOption.getOrElse(
-      throw new IllegalArgumentException("--config requires a path"))
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val text = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
-    val cfg = LoaderConfig.fromHocon(text)
+  def main(args: Array[String]): Unit = {
+    if (args.length != 2)
+      throw new IllegalArgumentException("usage: LoaderDemo <config.hocon> <dir>")
+    val Array(configPath, dir) = args
+    val cfg = LoaderConfig.fromHocon(Files.readString(Paths.get(configPath)))
       .fold(e => throw new IllegalArgumentException(e), identity)
     println(s"[demo] config: purpose=${cfg.purpose} out=${cfg.output.path} " +
       s"partition=${cfg.output.partitionFormat} maxBytes=${cfg.batching.maxBytes} " +
       s"maxDelay=${cfg.batching.maxDelay}")
     val spark = GraftSession()
-    val line = if (cfg.purpose == Purpose.Enriched) Synth.enrichedLine() else Synth.sdjLine()
-    val raw = Synth.events(spark, sfDir).select(encode(line, "utf-8").as("value"))
-    val store = new HadoopBlobStore(Map.empty)
-    val metrics = new LoaderPipeline.Metrics
-    LoaderPipeline.runBatch(raw, cfg, store, metrics)
-    println(s"[demo] good=${metrics.count.get()} bad=${metrics.badCount.get()} " +
-      s"objects=${metrics.objectsWritten.get()}")
-    spark.stop()
+    try cfg.input match {
+      case Some(k) =>
+        val running = startStream(spark, cfg, dir)
+        println(s"[demo] streaming from ${k.streamName}; " +
+          s"health probe on :${cfg.healthProbe.port}")
+        try running.query.awaitTermination()
+        finally running.stop()
+      case None =>
+        val line = if (cfg.purpose == Purpose.Enriched) Synth.enrichedLine() else Synth.sdjLine()
+        val raw = Synth.events(spark, dir).select(encode(line, "utf-8").as("value"))
+        val metrics = new LoaderPipeline.Metrics
+        LoaderPipeline.runBatch(raw, cfg, new HadoopBlobStore(Map.empty), metrics)
+        println(s"[demo] good=${metrics.count.get()} bad=${metrics.badCount.get()} " +
+          s"objects=${metrics.objectsWritten.get()}")
+    } finally spark.stop()
   }
 
-  private def streamMain(args: Array[String]): Unit = {
-    val inDir = args.headOption.getOrElse("/tmp/loader_in")
-    val outDir = if (args.length > 1) args(1) else "/tmp/loader_stream"
-    val purpose = Purpose.parse(
-      if (args.length > 2) args(2) else "SELF_DESCRIBING"
-    ).fold(e => throw new IllegalArgumentException(e), identity)
-    val spark = GraftSession()
+  /** A started stream; `stop` ends it and the monitoring around it. */
+  final case class Running(query: StreamingQuery, metrics: LoaderPipeline.Metrics, stop: () => Unit)
 
-    // full monitoring stack: per-service health, optional statsd push
-    // (SPARK_GRAFT_STATSD=host:port), and one listener for /health,
-    // /metrics, stream latency and crash reports
+  /** Start the loader's stream from `cfg.input` through `graft-kinesis`,
+    * checkpointing in `checkpointDir`, with the health probe and the
+    * optional statsd push that `cfg` configures.
+    */
+  def startStream(spark: SparkSession, cfg: LoaderConfig, checkpointDir: String): Running = {
+    val k = cfg.input.getOrElse(
+      throw new IllegalArgumentException("Missing required field: input.streamName"))
     val services = new ServiceHealth
     val metrics = new LoaderPipeline.Metrics
-    val reporter = sys.env.get("SPARK_GRAFT_STATSD").map { hp =>
-      val Array(h, p) = hp.split(":", 2)
-      new MetricsEmitter.StatsdReporter(metrics,
-        MetricsEmitter.StatsdConfig(h, p.toInt)).start()
-    }
-    val probe = new HealthProbe(services = services,
-      metrics = Some(metrics), statsd = reporter).start()
+    val reporter = cfg.statsd.map(new MetricsEmitter.StatsdReporter(metrics, _).start())
+    val probe = new HealthProbe(cfg.healthProbe.unhealthyLatency, cfg.healthProbe.port,
+      services, Some(metrics), reporter).start()
     spark.streams.addListener(probe)
-
-    val raw = RecordSources.build(spark, RecordSources.TextFiles(inDir))
-    val cfg = LoaderConfig.validate(LoaderConfig(
-      purpose,
-      Output(s"file://$outDir/good"),
-      BadOutput(s"file://$outDir/bad"),
-      batching = Batching(maxDelay = scala.concurrent.duration.DurationInt(2).seconds),
-      checkpointLocation = Some(s"$outDir/ckpt")))
-      .fold(e => throw new IllegalArgumentException(e), identity)
-
-    val store = new HadoopBlobStore(Map.empty)
-    val q = LoaderPipeline.stream(raw, cfg, store, metrics,
-      health = services).start()
-    println(s"[demo] streaming from $inDir; health probe on :8000")
-    sys.env.get("SPARK_GRAFT_STREAM_SECONDS") match {
-      case Some(s) =>
-        q.awaitTermination(s.toLong * 1000)
-        q.stop()
-        println(s"[demo] stopped; good=${metrics.count.get()} bad=${metrics.badCount.get()}")
-      case None => q.awaitTermination()
-    }
-    reporter.foreach(_.close())
-    probe.stop()
-    spark.stop()
-  }
-
-  private def batchMain(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val outDir = if (args.length > 1) args(1) else "/tmp/loader_demo"
-    val purpose = Purpose.parse(
-      if (args.length > 2) args(2) else "SELF_DESCRIBING"
-    ).fold(e => throw new IllegalArgumentException(e), identity)
-
-    val spark = GraftSession()
-
-    val line = if (purpose == Purpose.Enriched) Synth.enrichedLine() else Synth.sdjLine()
-    val raw = Synth.events(spark, sfDir)
-      .select(encode(line, "utf-8").as("value"))
-
-    val cfg = LoaderConfig.validate(LoaderConfig(
-      purpose,
-      Output(s"file://$outDir/good"),
-      BadOutput(s"file://$outDir/bad"))).fold(e => throw new IllegalArgumentException(e), identity)
-
-    val store = new HadoopBlobStore(Map.empty)
-    val metrics = new LoaderPipeline.Metrics
-    LoaderPipeline.runBatch(raw, cfg, store, metrics)
-
-    println(s"[demo] good=${metrics.count.get()} bad=${metrics.badCount.get()} " +
-      s"objects=${metrics.objectsWritten.get()} " +
-      s"e2eLatencyMillis=${metrics.e2eLatencyMillis.get()}")
-    metrics.lastActions.get().foreach(a =>
-      println(s"[demo] wrote ${a.path} records=${a.recordCount} bytes=${a.compressedBytes}"))
-    spark.stop()
+    val raw = RecordSources.build(spark, k.copy(connectorFormat = "graft-kinesis"))
+    val query = LoaderPipeline.stream(raw, cfg.copy(checkpointLocation = Some(checkpointDir)),
+      new HadoopBlobStore(Map.empty), metrics, health = services).start()
+    Running(query, metrics, () => {
+      query.stop()
+      spark.streams.removeListener(probe)
+      probe.stop()
+      reporter.foreach(_.close())
+    })
   }
 }

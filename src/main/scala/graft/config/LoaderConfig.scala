@@ -4,7 +4,8 @@ import scala.concurrent.duration._
 import scala.util.Try
 
 import graft.sinks.{DynamicPath, RollingGzipWriter}
-import graft.sources.Decompression
+import graft.sources.{Decompression, RecordSources}
+import graft.streaming.MetricsEmitter
 
 /** Typed config tree — same shape and defaults as the reference's HOCON
   * surface (reference Config.scala:38-92 and reference.conf:21-29), with
@@ -55,7 +56,10 @@ final case class LoaderConfig(
     bad: BadOutput,
     batching: Batching = Batching(),
     decompression: Decompression.Limits = Decompression.Limits(),
-    checkpointLocation: Option[String] = None)
+    checkpointLocation: Option[String] = None,
+    input: Option[RecordSources.Kinesis] = None,
+    statsd: Option[MetricsEmitter.StatsdConfig] = None,
+    healthProbe: HealthProbeConfig = HealthProbeConfig())
 
 final case class HealthProbeConfig(
     port: Int = 8000,
@@ -67,10 +71,21 @@ object LoaderConfig {
     * tokens; SDJ defaults to "{vendor}.{schema}" (reference
     * DynamicPath.scala:38-51, ConfigSpec.scala:42-87). `batching.maxBytes`
     * may not exceed what one in-memory object can hold
-    * (`RollingGzipWriter.MaxObjectBytes`).
+    * (`RollingGzipWriter.MaxObjectBytes`), and every size or limit must be
+    * positive: a negative `maxRecordSize` fails every bad row, and a zero
+    * object bound writes one object per record.
     */
   def validate(c: LoaderConfig): Either[String, LoaderConfig] =
     for {
+      _ <- Seq(
+        "batching.maxBytes" -> c.batching.maxBytes,
+        "output.bad.maxRecordSize" -> c.bad.maxRecordSize.toLong,
+        "output.bad.recordLimit" -> c.bad.recordLimit.toLong,
+        "output.bad.byteLimit" -> c.bad.byteLimit,
+        "decompression.maxBytesInBatch" -> c.decompression.maxBytesInBatch,
+        "decompression.maxBytesSinglePayload" -> c.decompression.maxBytesSinglePayload)
+        .collectFirst { case (k, v) if v <= 0 => s"$k must be positive, got $v" }
+        .toLeft(())
       _ <- Either.cond(c.batching.maxBytes <= RollingGzipWriter.MaxObjectBytes, (),
         s"batching.maxBytes ${c.batching.maxBytes} exceeds " +
           s"${RollingGzipWriter.MaxObjectBytes}: each object is built in one " +
@@ -80,9 +95,13 @@ object LoaderConfig {
     } yield c.copy(output = c.output.copy(partitionFormat = pf))
 
   /** Decode the reference's HOCON surface (config.aws.*.hocon shape) into
-    * the typed tree, applying the reference.conf defaults
+    * the typed tree in one parse, applying the reference.conf defaults
     * (reference modules/core/src/main/resources/reference.conf:19-42) and
     * the cross-field validation. Every default is the case classes' own.
+    * Optional blocks: `input` (the Kinesis polling surface; the starting
+    * position is checked by [[RecordSources.startingPosition]]),
+    * `monitoring.metrics.statsd` (absent = no metrics push) and
+    * `monitoring.healthProbe`.
     */
   def fromHocon(
       text: String,
@@ -94,6 +113,7 @@ object LoaderConfig {
     val bad = BadOutput("")
     val batching = Batching()
     val limits = Decompression.Limits()
+    val probe = HealthProbeConfig()
 
     for {
       purposeStr <- root.str("purpose").toRight("Missing required field: purpose")
@@ -104,7 +124,10 @@ object LoaderConfig {
       badPath <- root.str("output", "bad", "path")
         .orElse(root.str("output", "bad", "streamName"))
         .toRight("Missing required field: output.bad.path")
-      maxDelay <- Try(root.duration("batching", "maxDelay")).toEither.left.map(_.getMessage)
+      maxDelay <- duration(root, "batching", "maxDelay")
+      input <- kinesis(root)
+      statsd <- statsdConfig(root)
+      unhealthyLatency <- duration(root, "monitoring", "healthProbe", "unhealthyLatency")
       cfg <- validate(LoaderConfig(
         purpose = purpose,
         output = Output(
@@ -129,42 +152,65 @@ object LoaderConfig {
           maxBytesInBatch = root.num("decompression", "maxBytesInBatch")
             .map(_.toLong).getOrElse(limits.maxBytesInBatch),
           maxBytesSinglePayload = root.num("decompression", "maxBytesSinglePayload")
-            .map(_.toLong).getOrElse(limits.maxBytesSinglePayload))))
+            .map(_.toLong).getOrElse(limits.maxBytesSinglePayload)),
+        input = input,
+        statsd = statsd,
+        healthProbe = HealthProbeConfig(
+          port = root.num("monitoring", "healthProbe", "port").map(_.toInt).getOrElse(probe.port),
+          unhealthyLatency = unhealthyLatency.getOrElse(probe.unhealthyLatency))))
     } yield cfg
   }
 
-  /** monitoring.metrics.statsd settings (reference
-    * config.aws.reference.hocon metrics block); None when the block is
-    * absent (metrics emission off).
+  /** The duration at `path`, if set; a Left naming the key if it does not
+    * parse.
     */
-  def statsdFromHocon(text: String,
-      env: String => Option[String] = sys.env.get)
-      : Option[graft.streaming.MetricsEmitter.StatsdConfig] = {
-    val root = Hocon.parse(text, env)
-    root.str("monitoring", "metrics", "statsd", "hostname").map { host =>
-      val d = graft.streaming.MetricsEmitter.StatsdConfig(host)
-      d.copy(
-        port = root.num("monitoring", "metrics", "statsd", "port")
-          .map(_.toInt).getOrElse(d.port),
-        tags = root.get("monitoring", "metrics", "statsd", "tags") match {
-          case Some(o: Hocon.Obj) =>
-            o.fields.keys.map(k => k -> o.str(k).getOrElse("")).toMap
-          case _ => d.tags
-        },
-        period = root.duration("monitoring", "metrics", "statsd", "period")
-          .getOrElse(d.period),
-        prefix = root.str("monitoring", "metrics", "statsd", "prefix").getOrElse(d.prefix))
-    }
-  }
+  private def duration(root: Hocon.Obj, path: String*)
+      : Either[String, Option[FiniteDuration]] =
+    Try(root.duration(path: _*)).toEither.left.map(_.getMessage)
 
-  /** Health-probe settings (reference reference.conf:39-42). */
-  def healthProbeFromHocon(text: String,
-      env: String => Option[String] = sys.env.get): HealthProbeConfig = {
-    val root = Hocon.parse(text, env)
-    val d = HealthProbeConfig()
-    HealthProbeConfig(
-      port = root.num("monitoring", "healthProbe", "port").map(_.toInt).getOrElse(d.port),
-      unhealthyLatency = root.duration("monitoring", "healthProbe", "unhealthyLatency")
-        .getOrElse(d.unhealthyLatency))
-  }
+  /** The `input` block (streamName, initialPosition{type,timestamp},
+    * retrievalMode{maxRecords, idleTimeBetweenReads}); None without one.
+    */
+  private def kinesis(root: Hocon.Obj): Either[String, Option[RecordSources.Kinesis]] =
+    if (root.get("input").isEmpty) Right(None)
+    else {
+      val d = RecordSources.Kinesis(streamName = "")
+      for {
+        stream <- root.str("input", "streamName")
+          .toRight("Missing required field: input.streamName")
+        pos = root.str("input", "initialPosition", "type").getOrElse(d.initialPosition)
+        ts = root.str("input", "initialPosition", "timestamp")
+        _ <- RecordSources.startingPosition(
+          pos, ts, "initialPosition.type", "input.initialPosition.timestamp")
+        idle <- duration(root, "input", "retrievalMode", "idleTimeBetweenReads")
+      } yield Some(d.copy(
+        streamName = stream,
+        initialPosition = pos,
+        initialTimestamp = ts,
+        maxRecords = root.num("input", "retrievalMode", "maxRecords")
+          .map(_.toInt).getOrElse(d.maxRecords),
+        idleTimeBetweenReadsMs = idle.map(_.toMillis).getOrElse(d.idleTimeBetweenReadsMs)))
+    }
+
+  /** The `monitoring.metrics.statsd` block (reference
+    * config.aws.reference.hocon metrics block); None without a hostname
+    * (metrics push off).
+    */
+  private def statsdConfig(root: Hocon.Obj)
+      : Either[String, Option[MetricsEmitter.StatsdConfig]] =
+    root.str("monitoring", "metrics", "statsd", "hostname") match {
+      case None => Right(None)
+      case Some(host) =>
+        val d = MetricsEmitter.StatsdConfig(host)
+        duration(root, "monitoring", "metrics", "statsd", "period").map(period => Some(d.copy(
+          port = root.num("monitoring", "metrics", "statsd", "port")
+            .map(_.toInt).getOrElse(d.port),
+          tags = root.get("monitoring", "metrics", "statsd", "tags") match {
+            case Some(o: Hocon.Obj) =>
+              o.fields.keys.map(k => k -> o.str(k).getOrElse("")).toMap
+            case _ => d.tags
+          },
+          period = period.getOrElse(d.period),
+          prefix = root.str("monitoring", "metrics", "statsd", "prefix").getOrElse(d.prefix))))
+    }
 }

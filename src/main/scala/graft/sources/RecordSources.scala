@@ -8,27 +8,58 @@ import org.apache.spark.sql.functions._
 /** Source construction (reference operator S1). The reference consumes
   * Kinesis via the KCL (config surface at
   * config/config.aws.reference.hocon:7-64); in Spark the same stream
-  * arrives as a streaming DataFrame with a binary `value` column — the
-  * shape shared by Kinesis DSv2 connectors and the in-repo file/memory
-  * sources. Everything downstream of [[build]] is source-agnostic.
+  * arrives as a streaming DataFrame with a binary `value` column, the
+  * shape of the Kinesis DSv2 connectors and of the in-repo `graft-kinesis`
+  * double. The HOCON `input` block decodes to a [[Kinesis]] in
+  * `LoaderConfig.fromHocon`; everything downstream of [[build]] is
+  * source-agnostic.
   */
 object RecordSources {
-
-  sealed trait SourceConfig
 
   /** Kinesis (production): requires a Kinesis DSv2 connector on the
     * classpath (e.g. spark-sql-kinesis). Options mirror the reference's
     * polling surface: maxRecords per poll, idle time between reads,
-    * initial position (config.aws.reference.hocon input block).
+    * initial position (config.aws.reference.hocon input block). An empty
+    * `region` is left to the connector (the AWS SDK resolves it, as the
+    * reference's HOCON, which has no region key, does).
     */
   final case class Kinesis(
       streamName: String,
-      region: String,
+      region: String = "",
       initialPosition: String = "LATEST",
       initialTimestamp: Option[String] = None, // AT_TIMESTAMP only
       maxRecords: Int = 750,
       idleTimeBetweenReadsMs: Long = 1500,
-      connectorFormat: String = "aws-kinesis") extends SourceConfig
+      connectorFormat: String = "aws-kinesis")
+
+  /** Where a shard's reading starts when the query has no checkpoint. */
+  sealed trait StartingPosition
+  object StartingPosition {
+    case object Latest extends StartingPosition
+    case object TrimHorizon extends StartingPosition
+    final case class AtTimestamp(epochMs: Long) extends StartingPosition
+  }
+
+  /** The one decoder of a starting position: `LATEST`, `TRIM_HORIZON`, or
+    * `AT_TIMESTAMP` with an ISO-8601 `timestamp`, spelled exactly so. Any
+    * other value, and AT_TIMESTAMP without a parseable timestamp, is a
+    * `Left` naming `positionKey` or `timestampKey`: a position that is not
+    * understood must never quietly become a full replay.
+    */
+  def startingPosition(
+      position: String,
+      timestamp: Option[String],
+      positionKey: String,
+      timestampKey: String): Either[String, StartingPosition] = position match {
+    case "LATEST" => Right(StartingPosition.Latest)
+    case "TRIM_HORIZON" => Right(StartingPosition.TrimHorizon)
+    case "AT_TIMESTAMP" =>
+      timestamp.flatMap(t => Try(java.time.Instant.parse(t).toEpochMilli).toOption)
+        .map(StartingPosition.AtTimestamp(_))
+        .toRight(s"AT_TIMESTAMP needs an ISO-8601 $timestampKey, got: " +
+          timestamp.getOrElse("none"))
+    case other => Left(s"Unknown $positionKey: $other")
+  }
 
   /** The connector option map — split from [[build]] so the mapping is
     * unit-testable without a connector on the classpath.
@@ -57,7 +88,8 @@ object RecordSources {
     *  | minFetchPeriodMillis      | kinesis.minFetchPeriod (duration)  |
     *
     * Position VALUES (LATEST / TRIM_HORIZON / AT_TIMESTAMP) are spelled
-    * identically in both. The KCL lease/DynamoDB knobs the reference
+    * identically in both, and both sides decode them with
+    * [[startingPosition]]. The KCL lease/DynamoDB knobs the reference
     * tunes (config.aws.reference.hocon:39-57 leaseDuration,
     * maxLeasesToStealAtOneTimeFactor, checkpointThrottledBackoffPeriod)
     * have no DSv2 equivalent — the micro-batch offset log replaces the
@@ -67,60 +99,16 @@ object RecordSources {
   def kinesisOptions(k: Kinesis): Map[String, String] =
     Map(
       "streamName" -> k.streamName,
-      "region" -> k.region,
       "initialPosition" -> k.initialPosition,
       "maxFetchRecordsPerShard" -> k.maxRecords.toString,
       "minFetchPeriodMillis" -> k.idleTimeBetweenReadsMs.toString) ++
+      Some(k.region).filter(_.nonEmpty).map("region" -> _) ++
       k.initialTimestamp.map("initialTimestamp" -> _)
 
-  /** Decode the reference's `input` HOCON block (streamName,
-    * initialPosition{type,timestamp}, retrievalMode{maxRecords,
-    * idleTimeBetweenReads}) into a [[Kinesis]] config.
-    */
-  def kinesisFromHocon(
-      text: String,
-      region: String,
-      env: String => Option[String] = sys.env.get): Either[String, Kinesis] = {
-    val root = graft.config.Hocon.parse(text, env)
-    val d = Kinesis(streamName = "", region = region)
-    for {
-      stream <- root.str("input", "streamName")
-        .toRight("Missing required field: input.streamName")
-      pos = root.str("input", "initialPosition", "type").getOrElse(d.initialPosition)
-      ts = root.str("input", "initialPosition", "timestamp")
-      _ <- pos match {
-        case "LATEST" | "TRIM_HORIZON" => Right(())
-        case "AT_TIMESTAMP" =>
-          Either.cond(ts.exists(t => Try(java.time.Instant.parse(t)).isSuccess), (),
-            "AT_TIMESTAMP needs an ISO-8601 input.initialPosition.timestamp, got: " +
-              ts.getOrElse("none"))
-        case other => Left(s"Unknown initialPosition.type: $other")
-      }
-      idle <- Try(root.duration("input", "retrievalMode", "idleTimeBetweenReads"))
-        .toEither.left.map(_.getMessage)
-    } yield d.copy(
-      streamName = stream,
-      initialPosition = pos,
-      initialTimestamp = ts,
-      maxRecords = root.num("input", "retrievalMode", "maxRecords")
-        .map(_.toInt).getOrElse(d.maxRecords),
-      idleTimeBetweenReadsMs = idle.map(_.toMillis).getOrElse(d.idleTimeBetweenReadsMs))
-  }
-
-  /** Line files (text): each line of a file dropped into `path` becomes
-    * one record payload — the replay path.
-    */
-  final case class TextFiles(path: String) extends SourceConfig
-
-  def build(spark: SparkSession, conf: SourceConfig): DataFrame = conf match {
-    case k: Kinesis =>
-      spark.readStream
-        .format(k.connectorFormat)
-        .options(kinesisOptions(k))
-        .load()
-        .select(col("data").cast("binary").as("value"))
-    case t: TextFiles =>
-      spark.readStream.format("text").load(t.path)
-        .select(encode(col("value"), "utf-8").as("value"))
-  }
+  def build(spark: SparkSession, k: Kinesis): DataFrame =
+    spark.readStream
+      .format(k.connectorFormat)
+      .options(kinesisOptions(k))
+      .load()
+      .select(col("data").cast("binary").as("value"))
 }

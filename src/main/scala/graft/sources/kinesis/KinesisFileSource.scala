@@ -1,6 +1,5 @@
 package graft.sources.kinesis
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import java.util
 
@@ -16,26 +15,34 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.RecordSources
+import graft.sources.RecordSources.StartingPosition
+
 /** File-backed Kinesis emulator — a real DataSource V2 `MicroBatchStream`
   * registered under the short name `graft-kinesis`, shaped like the public
-  * Kinesis connectors so [[graft.sources.RecordSources.build]]'s Kinesis
-  * branch (the reference's only production source,
+  * Kinesis connectors so [[graft.sources.RecordSources.build]] (the
+  * reference's only production source,
   * /root/reference/config/config.aws.reference.hocon:7-64) executes for
   * real in an offline environment:
   *
   *  - `streamName` is a DIRECTORY; each regular file in it is one shard
-  *    (shardId = file name), each line one record — the record model the
-  *    reference documents (README.md:11-12, records are UTF-8 lines).
+  *    (shardId = file name), each line that ends in `\n` one record, its
+  *    bytes passed through undecoded — the record model the reference
+  *    documents (README.md:11-12, records are lines). A final line
+  *    without its `\n` is an append in progress and is not read yet.
   *  - sequence numbers are per-shard line indexes; offsets are the
   *    per-shard next-line cursor, checkpointed/restored through the
   *    standard offset log (at-least-once replay contract T7).
-  *  - `initialPosition` TRIM_HORIZON starts every shard at 0; LATEST
-  *    starts at the line count observed when the query starts;
-  *    AT_TIMESTAMP (+ `initialTimestamp`, ISO-8601) keys off each shard
-  *    FILE's mtime — the arrival granularity the file backing has: a
-  *    shard touched at/after the timestamp replays from its horizon,
-  *    an older one reads only future appends; without a parseable
-  *    timestamp `load()` fails.
+  *  - `initialPosition` is decoded by
+  *    [[graft.sources.RecordSources.startingPosition]], as the HOCON
+  *    `input` block is: TRIM_HORIZON starts every shard at 0; LATEST
+  *    (the default when no position is given) starts at the line count
+  *    observed when the query starts; AT_TIMESTAMP (+ `initialTimestamp`,
+  *    ISO-8601) keys off each shard FILE's mtime — the arrival granularity
+  *    the file backing has: a shard touched at/after the timestamp
+  *    replays from its horizon, an older one reads only future appends.
+  *    Any other value, and AT_TIMESTAMP without a parseable timestamp,
+  *    fails at `load()`.
   *  - `maxFetchRecordsPerShard` bounds each micro-batch via the
   *    admission-control API ([[SupportsAdmissionControl]]) — the same
   *    mechanism the Kafka source uses for maxOffsetsPerTrigger.
@@ -83,14 +90,31 @@ object KinesisFileSource {
         part.substring(0, i) -> part.substring(i + 1).toLong
       }.toMap)
 
-  /** Current per-shard line counts — one directory listing + line scan
+  /** The complete records of a shard file's bytes, as (start, end) byte
+    * ranges without the `\n`: only a line that ends in `\n` is a record.
+    * A final line without one is an append still being written; it
+    * becomes a record, whole, once its `\n` lands, so the same offsets
+    * always name the same bytes. Records are raw bytes, never decoded
+    * here: a payload that is not UTF-8 reaches the loader's parser.
+    */
+  def records(bytes: Array[Byte]): Iterator[(Int, Int)] =
+    Iterator.iterate((0, newline(bytes, 0))) { case (_, end) => (end + 1, newline(bytes, end + 1)) }
+      .takeWhile(_._2 < bytes.length)
+
+  private def newline(bytes: Array[Byte], from: Int): Int = {
+    var i = from
+    while (i < bytes.length && bytes(i) != '\n') i += 1
+    i
+  }
+
+  /** Current per-shard record counts — one directory listing + byte scan
     * (the double's analogue of DescribeStream + GetRecords).
     */
   def shardEnds(dir: Path): Map[String, Long] = {
     if (!Files.isDirectory(dir)) return Map.empty
     val files = Files.list(dir).iterator().asScala.filter(Files.isRegularFile(_)).toSeq
     files.map { f =>
-      f.getFileName.toString -> Files.readAllLines(f, StandardCharsets.UTF_8).size.toLong
+      f.getFileName.toString -> records(Files.readAllBytes(f)).size.toLong
     }.toMap
   }
 }
@@ -113,8 +137,11 @@ class KinesisFileTable(options: CaseInsensitiveStringMap)
       throw new IllegalArgumentException(
         "Missing required option: streamName (or kinesis.streamName)"))
 
+  /** The position as given, kept when empty: an empty position is
+    * rejected by [[RecordSources.startingPosition]], not defaulted.
+    */
   private val rawStartingPosition: Option[String] =
-    opt("initialPosition", "kinesis.startingPosition")
+    Option(options.get("initialPosition")).orElse(Option(options.get("kinesis.startingPosition")))
 
   /** The published connector embeds the starting position as a JSON
     * object INSIDE `kinesis.startingPosition` (see the conformance table
@@ -165,17 +192,15 @@ class KinesisFileTable(options: CaseInsensitiveStringMap)
     opt("initialTimestamp", "kinesis.startingPosition.timestamp")
       .orElse(jsonTs)
 
-  /** AT_TIMESTAMP's cut in epoch ms, defined exactly when the position is
-    * AT_TIMESTAMP. A missing or unparseable timestamp is rejected here,
-    * at `load()`: it must never quietly become a full replay.
+  /** Decided by [[RecordSources.startingPosition]], as the HOCON `input`
+    * block is; anything it rejects fails here, at `load()`, and never
+    * becomes a full replay.
     */
-  private val atTimestampMs: Option[Long] =
-    if (initialPosition != "AT_TIMESTAMP") None
-    else Some(initialTimestamp
-      .flatMap(t => scala.util.Try(java.time.Instant.parse(t).toEpochMilli).toOption)
-      .getOrElse(throw new IllegalArgumentException(
-        "AT_TIMESTAMP needs an ISO-8601 initialTimestamp (or " +
-          s"kinesis.startingPosition.timestamp), got: ${initialTimestamp.getOrElse("none")}")))
+  private val startingPosition: StartingPosition =
+    RecordSources.startingPosition(initialPosition, initialTimestamp,
+      "initialPosition (or kinesis.startingPosition)",
+      "initialTimestamp (or kinesis.startingPosition.timestamp)")
+      .fold(e => throw new IllegalArgumentException(e), identity)
 
   private val maxFetchRecordsPerShard: Int =
     opt("maxFetchRecordsPerShard", "kinesis.maxFetchRecordsPerShard")
@@ -192,35 +217,34 @@ class KinesisFileTable(options: CaseInsensitiveStringMap)
         override def readSchema(): StructType = KinesisFileSource.Schema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new KinesisFileMicroBatchStream(
-            streamName, initialPosition, maxFetchRecordsPerShard, atTimestampMs)
+            streamName, startingPosition, maxFetchRecordsPerShard)
       }
     }
 }
 
 class KinesisFileMicroBatchStream(
     streamName: String,
-    initialPosition: String,
-    maxRecordsPerShard: Int,
-    atTimestampMs: Option[Long] = None)
+    position: StartingPosition,
+    maxRecordsPerShard: Int)
     extends MicroBatchStream with SupportsAdmissionControl {
   import KinesisFileSource._
 
   private val dir = Paths.get(streamName)
 
-  override def initialOffset(): Offset = atTimestampMs match {
+  override def initialOffset(): Offset = position match {
     // AT_TIMESTAMP: the double's arrival time is the shard file's mtime
     // (one arrival stamp per shard — the granularity the file backing
     // has): a shard whose records arrived at/after the timestamp replays
     // from its horizon; one whose records predate it starts at its
     // current end (only future appends are read) — per-shard, exactly
     // how the real position filters by approximateArrivalTimestamp.
-    case Some(cut) =>
+    case StartingPosition.AtTimestamp(cut) =>
       ShardOffsets(shardEnds(dir).map { case (s, end) =>
         val mtime = Files.getLastModifiedTime(dir.resolve(s)).toMillis
         s -> (if (mtime >= cut) 0L else end)
       })
-    case None if initialPosition == "LATEST" => ShardOffsets(shardEnds(dir))
-    case None => ShardOffsets(shardEnds(dir).map { case (s, _) => s -> 0L })
+    case StartingPosition.Latest => ShardOffsets(shardEnds(dir))
+    case StartingPosition.TrimHorizon => ShardOffsets(shardEnds(dir).map { case (s, _) => s -> 0L })
   }
 
   override def deserializeOffset(json: String): Offset = parseOffsets(json)
@@ -279,16 +303,16 @@ class KinesisShardReaderFactory extends PartitionReaderFactory {
     new PartitionReader[InternalRow] {
       private val file = Paths.get(p.filePath)
       private val arrivalMicros = Files.getLastModifiedTime(file).toMillis * 1000L
-      private val lines = Files.readAllLines(file, StandardCharsets.UTF_8)
-        .asScala.slice(p.startLine.toInt, p.endLine.toInt).iterator
+      private val bytes = Files.readAllBytes(file)
+      private val lines = KinesisFileSource.records(bytes).slice(p.startLine.toInt, p.endLine.toInt)
       private var seq = p.startLine - 1
 
       override def next(): Boolean = lines.hasNext
       override def get(): InternalRow = {
-        val line = lines.next()
+        val (start, end) = lines.next()
         seq += 1
         InternalRow(
-          line.getBytes(StandardCharsets.UTF_8),
+          java.util.Arrays.copyOfRange(bytes, start, end),
           UTF8String.fromString(p.streamName),
           UTF8String.fromString(p.shardId),
           UTF8String.fromString(seq.toString),

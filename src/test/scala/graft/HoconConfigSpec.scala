@@ -49,23 +49,21 @@ class HoconConfigSpec extends AnyFunSuite {
           "{vendor}.{schema}/model={model}/date={yyyy}-{MM}-{dd}/time={HH}{mm}{ss}"))
         assert(c.batching.maxDelay == 1.minute)
         assert(c.batching.maxBytes == 67108864L)
-        val hp = LoaderConfig.healthProbeFromHocon(text)
+        val hp = c.healthProbe
         assert(hp.port == 8000)
         assert(hp.unhealthyLatency == 2.minutes)
         // bad-sink chunking limits (PutRecords bounds)
         assert(c.bad.recordLimit == 500)
         assert(c.bad.byteLimit == 5242880L)
         // statsd metrics block
-        val sd = LoaderConfig.statsdFromHocon(text, _ => Some("testWorkerId")).get
+        val sd = c.statsd.get
         assert(sd.hostname == "127.0.0.1")
         assert(sd.port == 8125)
         assert(sd.tags == Map("env" -> "prod"))
         assert(sd.period == 1.minute)
         assert(sd.prefix == "snowplow.blob.loader.aws")
         // kinesis input block (polling surface)
-        val k = graft.sources.RecordSources
-          .kinesisFromHocon(text, "eu-central-1", _ => Some("testWorkerId"))
-          .toOption.get
+        val k = c.input.get
         assert(k.streamName == "snowplow-sdjs")
         assert(k.initialPosition == "TRIM_HORIZON")
         assert(k.maxRecords == 750)
@@ -100,6 +98,11 @@ class HoconConfigSpec extends AnyFunSuite {
     assert(withMaxBytes(64L << 20).map(_.batching.maxBytes) == Right(64L << 20))
   }
 
+  /** The fields every config must set, as the body of a HOCON object. */
+  private val Required =
+    """"purpose": "ENRICHED_EVENTS",
+      | "output": {"good": {"path": "s3://x/"}, "bad": {"streamName": "b"}}""".stripMargin
+
   private def withMaxDelay(v: String) = LoaderConfig.fromHocon(
     s"""{"purpose": "ENRICHED_EVENTS", "batching": {"maxDelay": $v},
        | "output": {"good": {"path": "s3://x/"}, "bad": {"streamName": "b"}}}""".stripMargin)
@@ -116,8 +119,9 @@ class HoconConfigSpec extends AnyFunSuite {
     assert(withMaxDelay("1.5") == Left("batching.maxDelay: Cannot parse duration: 1.5"))
     assert(withMaxDelay("\"3 fortnights\"") ==
       Left("batching.maxDelay: Unknown duration unit: fortnights"))
-    assert(graft.sources.RecordSources.kinesisFromHocon(
-      """{"input": {"streamName": "s", "retrievalMode": {"idleTimeBetweenReads": "soon"}}}""", "r") ==
+    assert(LoaderConfig.fromHocon(
+      s"""{$Required, "input": {"streamName": "s",
+         | "retrievalMode": {"idleTimeBetweenReads": "soon"}}}""".stripMargin) ==
       Left("input.retrievalMode.idleTimeBetweenReads: Cannot parse duration: soon"))
   }
 
@@ -128,14 +132,14 @@ class HoconConfigSpec extends AnyFunSuite {
   }
 
   test("AT_TIMESTAMP without a parseable input.initialPosition.timestamp is a Left") {
-    def at(ts: String) = graft.sources.RecordSources.kinesisFromHocon(
-      s"""{"input": {"streamName": "s",
-         |  "initialPosition": {"type": "AT_TIMESTAMP"$ts}}}""".stripMargin, "r")
+    def at(ts: String) = LoaderConfig.fromHocon(
+      s"""{$Required, "input": {"streamName": "s",
+         |  "initialPosition": {"type": "AT_TIMESTAMP"$ts}}}""".stripMargin)
     assert(at("") == Left(
       "AT_TIMESTAMP needs an ISO-8601 input.initialPosition.timestamp, got: none"))
     assert(at(""", "timestamp": "yesterday"""") == Left(
       "AT_TIMESTAMP needs an ISO-8601 input.initialPosition.timestamp, got: yesterday"))
-    assert(at(""", "timestamp": "2020-07-17T10:00:00Z"""").map(_.initialTimestamp) ==
+    assert(at(""", "timestamp": "2020-07-17T10:00:00Z"""").map(_.input.get.initialTimestamp) ==
       Right(Some("2020-07-17T10:00:00Z")))
   }
 
@@ -146,18 +150,91 @@ class HoconConfigSpec extends AnyFunSuite {
         | "input": {"streamName": "s"},
         | "monitoring": {"metrics": {"statsd": {"hostname": "h"}}}}""".stripMargin
     val c = LoaderConfig.fromHocon(text).toOption.get
-    assert(c == LoaderConfig(Purpose.Enriched, Output("s3://x/"), BadOutput("b")))
-    assert(LoaderConfig.healthProbeFromHocon(text) == HealthProbeConfig())
-    assert(LoaderConfig.statsdFromHocon(text).contains(
-      graft.streaming.MetricsEmitter.StatsdConfig("h")))
-    assert(graft.sources.RecordSources.kinesisFromHocon(text, "r") ==
-      Right(graft.sources.RecordSources.Kinesis("s", "r")))
+    assert(c == LoaderConfig(Purpose.Enriched, Output("s3://x/"), BadOutput("b"),
+      input = Some(graft.sources.RecordSources.Kinesis("s")),
+      statsd = Some(graft.streaming.MetricsEmitter.StatsdConfig("h"))))
+    assert(c.healthProbe == HealthProbeConfig())
     // the defaults are the reference.conf values
     assert(c.batching.maxBytes == 67108864L && c.batching.maxDelay == 2.minutes)
     assert(c.bad.maxRecordSize == 1000000 && c.bad.recordLimit == 500)
     assert(c.bad.byteLimit == 5242880L)
     assert(c.decompression.maxBytesInBatch == 5242880L)
     assert(HealthProbeConfig() == HealthProbeConfig(8000, 2.minutes))
+  }
+
+  test("an inline config with every block decodes each field") {
+    val text =
+      """{
+        |  "purpose": "SELF_DESCRIBING"
+        |  "input": {
+        |    "appName": "snowplow-s3-loader"
+        |    "streamName": "snowplow-sdjs"
+        |    "initialPosition": { "type": "AT_TIMESTAMP", "timestamp": "2020-07-17T10:00:00Z" }
+        |    "retrievalMode": { "type": "Polling", "maxRecords": 500, "idleTimeBetweenReads": "2 seconds" }
+        |  }
+        |  "output": {
+        |    "good": {
+        |      "path": "s3://snowplow-events/"
+        |      "partitionFormat": "{vendor}.{schema}/date={yyyy}-{MM}-{dd}"
+        |      "filenamePrefix": "pre-"
+        |      "idempotentNames": true
+        |    }
+        |    "bad": {
+        |      "streamName": "snowplow-bad"
+        |      "maxRecordSize": 50000
+        |      "recordLimit": 100
+        |      "byteLimit": 1048576
+        |    }
+        |  }
+        |  "batching": { "maxBytes": 1048576, "maxDelay": "30 seconds" }
+        |  "decompression": { "maxBytesInBatch": 2097152, "maxBytesSinglePayload": 4194304 }
+        |  "monitoring": {
+        |    "metrics": {
+        |      "statsd": {
+        |        "hostname": "statsd.local"
+        |        "port": 9125
+        |        "tags": { "env": "prod", "app": "loader" }
+        |        "period": "10 seconds"
+        |        "prefix": "snowplow.blob.loader.aws"
+        |      }
+        |    }
+        |    "healthProbe": { "port": 8081, "unhealthyLatency": "5 minutes" }
+        |  }
+        |}""".stripMargin
+    val c = LoaderConfig.fromHocon(text).fold(e => fail(e), identity)
+    assert(c.purpose == Purpose.Sdj)
+    assert(c.output == Output("s3://snowplow-events/", "pre-",
+      Some("{vendor}.{schema}/date={yyyy}-{MM}-{dd}"), idempotentNames = true))
+    assert(c.bad == BadOutput("snowplow-bad", 50000, 100, 1048576L))
+    assert(c.batching == Batching(1048576L, 30.seconds))
+    assert(c.decompression == graft.sources.Decompression.Limits(2097152L, 4194304L))
+    assert(c.input.contains(graft.sources.RecordSources.Kinesis("snowplow-sdjs",
+      initialPosition = "AT_TIMESTAMP", initialTimestamp = Some("2020-07-17T10:00:00Z"),
+      maxRecords = 500, idleTimeBetweenReadsMs = 2000L)))
+    assert(c.statsd.contains(graft.streaming.MetricsEmitter.StatsdConfig("statsd.local", 9125,
+      Map("env" -> "prod", "app" -> "loader"), 10.seconds, "snowplow.blob.loader.aws")))
+    assert(c.healthProbe == HealthProbeConfig(8081, 5.minutes))
+    assert(c.checkpointLocation.isEmpty)
+  }
+
+  test("a size or limit of zero or less is a Left that names its key") {
+    def withBlock(block: String) = LoaderConfig.fromHocon(s"{$Required, $block}")
+    def withBad(field: String) = LoaderConfig.fromHocon(
+      s"""{"purpose": "ENRICHED_EVENTS", "output": {"good": {"path": "s3://x/"},
+         | "bad": {"streamName": "b", $field}}}""".stripMargin)
+    assert(withBad(""""maxRecordSize": -10""") ==
+      Left("output.bad.maxRecordSize must be positive, got -10"))
+    assert(withBad(""""recordLimit": 0""") ==
+      Left("output.bad.recordLimit must be positive, got 0"))
+    assert(withBad(""""byteLimit": -1""") ==
+      Left("output.bad.byteLimit must be positive, got -1"))
+    assert(withBlock(""""batching": {"maxBytes": 0}""") ==
+      Left("batching.maxBytes must be positive, got 0"))
+    assert(withBlock(""""decompression": {"maxBytesInBatch": 0}""") ==
+      Left("decompression.maxBytesInBatch must be positive, got 0"))
+    assert(withBlock(""""decompression": {"maxBytesSinglePayload": -5}""") ==
+      Left("decompression.maxBytesSinglePayload must be positive, got -5"))
+    assert(withBad(""""maxRecordSize": 1""").map(_.bad.maxRecordSize) == Right(1))
   }
 
   test("HOCON subset: comments, key-brace syntax, duplicate-key merge, env substitution") {

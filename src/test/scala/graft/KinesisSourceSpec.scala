@@ -232,28 +232,96 @@ class KinesisSourceSpec extends AnyFunSuite with SparkSuite {
 
   test("S1: the HOCON input block drives the connector end-to-end") {
     val streamDir = newDir("kinesis-hocon")
+    val outDir = newDir("kinesis-hocon-out")
     writeShard(streamDir, "shard-0000", (0 until 3).map(tsv))
-    // the reference's config surface (config.aws.reference.hocon input
-    // block), streamName pointing at the double's backing directory
+    val port = { val s = new java.net.ServerSocket(0); try s.getLocalPort finally s.close() }
+    // the reference's config surface (config.aws.reference.hocon), with
+    // input.streamName pointing at the double's backing directory, run
+    // through the demo's own start code
     val hocon =
       s"""{
+         |  "purpose": "ENRICHED_EVENTS",
          |  "input": {
          |    "streamName": "$streamDir",
          |    "initialPosition": { "type": "TRIM_HORIZON" },
          |    "retrievalMode": { "maxRecords": 100 }
-         |  }
+         |  },
+         |  "output": {
+         |    "good": { "path": "file://$outDir/good" },
+         |    "bad": { "streamName": "file://$outDir/bad" }
+         |  },
+         |  "batching": { "maxDelay": "50 millis" },
+         |  "monitoring": { "healthProbe": { "port": $port } }
          |}""".stripMargin
-    val k = RecordSources.kinesisFromHocon(hocon, region = "local")
-      .fold(e => fail(e), identity)
-      .copy(connectorFormat = "graft-kinesis")
+    val configFile = outDir.resolve("loader.hocon")
+    Files.writeString(configFile, hocon)
+    val cfg = LoaderConfig.fromHocon(Files.readString(configFile)).fold(e => fail(e), identity)
+    val running = LoaderDemo.startStream(spark, cfg, newDir("kinesis-ckpt").toString)
+    try {
+      running.query.processAllAvailable()
+      assert(running.metrics.count.get() == 3)
+      val conn = new java.net.URL(s"http://localhost:$port/health").openConnection()
+        .asInstanceOf[java.net.HttpURLConnection]
+      try assert(conn.getResponseCode == 200)
+      finally conn.disconnect()
+    } finally running.stop()
+  }
+
+  test("S1: a bare position other than LATEST, TRIM_HORIZON or AT_TIMESTAMP fails at load(), never a full replay") {
+    val streamDir = newDir("kinesis-bad-pos")
+    writeShard(streamDir, "shard-0000", (0 until 3).map(tsv))
+    for (pos <- Seq("latest", "EARLIEST", "")) {
+      val e = intercept[IllegalArgumentException] {
+        spark.readStream.format("graft-kinesis")
+          .option("streamName", streamDir.toString)
+          .option("initialPosition", pos)
+          .load()
+      }
+      assert(e.getMessage == s"Unknown initialPosition (or kinesis.startingPosition): $pos",
+        e.getMessage)
+    }
+  }
+
+  test("S1: a final line without its newline is not a record until the newline lands") {
+    val streamDir = newDir("kinesis-torn")
+    Files.write(streamDir.resolve("shard-0000"),
+      "first\nsecond\npar".getBytes(StandardCharsets.UTF_8))
+    val got = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val q = spark.readStream.format("graft-kinesis")
+      .option("streamName", streamDir.toString)
+      .option("initialPosition", "TRIM_HORIZON")
+      .load()
+      .selectExpr("cast(data as string)", "sequenceNumber")
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        got.synchronized { got ++= b.collect().map(r => (r.getString(0), r.getString(1))) }
+        ()
+      }.start()
+    try {
+      q.processAllAvailable()
+      assert(got.toSeq == Seq("first" -> "0", "second" -> "1"))
+      Files.write(streamDir.resolve("shard-0000"),
+        "tial\n".getBytes(StandardCharsets.UTF_8), StandardOpenOption.APPEND)
+      q.processAllAvailable()
+      assert(got.toSeq == Seq("first" -> "0", "second" -> "1", "partial" -> "2"))
+    } finally q.stop()
+  }
+
+  test("S1: a record that is not UTF-8 reaches the loader as a payload") {
+    val streamDir = newDir("kinesis-not-utf8")
+    def utf8(s: String) = s.getBytes(StandardCharsets.UTF_8)
+    Files.write(streamDir.resolve("shard-0000"),
+      utf8(s"${tsv(0)}\napp") ++ Array(0xFF.toByte) ++ utf8(s"\tx\n${tsv(1)}\n"))
+
     val store = new InMemoryBlobStore
     val metrics = new LoaderPipeline.Metrics
     val q = LoaderPipeline.stream(
-      RecordSources.build(spark, k),
+      RecordSources.build(spark, kinesisConfig(streamDir, "TRIM_HORIZON", 100)),
       loaderCfg(newDir("kinesis-ckpt")), store, metrics, () => fixedNow).start()
     try {
       q.processAllAvailable()
-      assert(metrics.count.get() == 3)
+      assert(metrics.count.get() + metrics.badCount.get() == 3)
+      assert(metrics.count.get() >= 2)
     } finally q.stop()
   }
 

@@ -112,10 +112,13 @@ class MetricsSpec extends AnyFunSuite {
         |  }
         |}
       """.stripMargin
-    val cfg = LoaderConfig.statsdFromHocon(hocon)
-    assert(cfg.contains(StatsdConfig("127.0.0.1", 8125,
-      Map("env" -> "prod"), 1.minute, "snowplow.blob.loader.aws")))
+    val required =
+      """purpose = "ENRICHED_EVENTS"
+        |output { good { path = "s3://x/" }, bad { streamName = "b" } }""".stripMargin
+    val cfg = LoaderConfig.fromHocon(required + hocon).map(_.statsd)
+    assert(cfg == Right(Some(StatsdConfig("127.0.0.1", 8125,
+      Map("env" -> "prod"), 1.minute, "snowplow.blob.loader.aws"))))
     // absent block → emission off
-    assert(LoaderConfig.statsdFromHocon("""purpose = "ENRICHED_EVENTS"""").isEmpty)
+    assert(LoaderConfig.fromHocon(required).map(_.statsd) == Right(None))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.config.LoaderConfig
 import graft.sources.RecordSources
 
 /** Kinesis source option surface (reference S1 — config.aws.reference
@@ -9,6 +10,14 @@ import graft.sources.RecordSources
   * mapping, testable without a Kinesis connector on the classpath.
   */
 class RecordSourcesSpec extends AnyFunSuite {
+
+  /** The `input` block as `LoaderConfig.fromHocon` decodes it, next to the
+    * fields every config must set.
+    */
+  private def input(block: String) = LoaderConfig.fromHocon(
+    s"""purpose = "ENRICHED_EVENTS"
+       |output { good { path = "s3://x/" }, bad { streamName = "b" } }
+       |$block""".stripMargin).map(_.input)
 
   private val hocon =
     """
@@ -25,8 +34,7 @@ class RecordSourcesSpec extends AnyFunSuite {
     """.stripMargin
 
   test("reference input block parses to the Kinesis polling surface") {
-    val k = RecordSources.kinesisFromHocon(hocon, region = "eu-central-1")
-      .toOption.get
+    val k = input(hocon).toOption.flatten.get
     assert(k.streamName == "snowplow-sdjs")
     assert(k.initialPosition == "TRIM_HORIZON")
     assert(k.maxRecords == 750)
@@ -44,15 +52,16 @@ class RecordSourcesSpec extends AnyFunSuite {
     assert(opts("initialTimestamp") == "2023-01-01T00:00:00Z")
     assert(opts("maxFetchRecordsPerShard") == "750")
     assert(opts("minFetchPeriodMillis") == "1500")
+    // no region: the connector's SDK resolves it
+    assert(!RecordSources.kinesisOptions(RecordSources.Kinesis("s")).contains("region"))
   }
 
   test("defaults and validation: missing stream / bad position are errors") {
-    assert(RecordSources.kinesisFromHocon("{}", "r").isLeft)
-    assert(RecordSources.kinesisFromHocon(
-      """input { streamName = "s", initialPosition { type = "NOPE" } }""",
-      "r").isLeft)
-    val k = RecordSources.kinesisFromHocon(
-      """input { streamName = "s" }""", "r").toOption.get
+    assert(input("input {}") == Left("Missing required field: input.streamName"))
+    assert(input("""input { streamName = "s", initialPosition { type = "NOPE" } }""") ==
+      Left("Unknown initialPosition.type: NOPE"))
+    assert(input("") == Right(None))
+    val k = input("""input { streamName = "s" }""").toOption.flatten.get
     assert(k.initialPosition == "LATEST")
     assert(k.maxRecords == 750 && k.idleTimeBetweenReadsMs == 1500L)
   }
